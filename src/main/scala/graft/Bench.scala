@@ -323,9 +323,14 @@ object Bench {
     results("batch_qps") = 32.0 / tBatch32
     // batch block-skip evidence: shared-cache decode/skip partition of
     // the batch's matched blocks (a block decodes only if some query of
-    // the batch lands on it — Wand.topKMany)
+    // the batch lands on it — Wand.topKMany). Below the batch-split
+    // floor the whole batch takes the exhaustive replay and decodes no
+    // WAND block, so this stats-only call (and only it: the timed calls
+    // above keep default routing) lowers the floor to 0
     val bStats = graft.query.Wand.Stats.register(spark)
-    engine.searchManyF32(batch32, 10, wandStats = Some(bStats)).collect()
+    EagerPlanConfs.withConfs(spark, Seq("graft.batch.splitMinDocs" -> "0")) {
+      engine.searchManyF32(batch32, 10, wandStats = Some(bStats)).collect()
+    }
     results("batch_blocks_decoded") = bStats.decodedBlocks.value.toDouble
     results("batch_blocks_skipped") = bStats.skippedBlocks.value.toDouble
 

@@ -23,9 +23,14 @@ import org.apache.spark.sql.SparkSession
   * serving shaped.
   */
 object EagerPlanConfs {
-  def scoped[T](spark: SparkSession)(body: => T): T = {
-    val pins = Seq("spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.maxPlanStringLength" -> "8192")
+  def scoped[T](spark: SparkSession)(body: => T): T =
+    withConfs(spark, Seq("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.maxPlanStringLength" -> "8192"))(body)
+
+  /** Set `pins` on the session for `body`'s duration; each key gets its
+    * prior value back afterwards (or is unset if it had none).
+    */
+  def withConfs[T](spark: SparkSession, pins: Seq[(String, String)])(body: => T): T = {
     val saved = pins.map { case (k, v) =>
       val old = try spark.conf.getOption(k) catch { case _: Throwable => None }
       spark.conf.set(k, v)

@@ -3,8 +3,15 @@ package graft.index
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SaveMode, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.io.LocalInputFile
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Persistent multi-segment index layout — the Spark-native analogue of
@@ -13,8 +20,17 @@ import org.apache.spark.storage.StorageLevel
   *   dir/seg-NNNNN/{postings,docs,termstats}.parquet   segment data
   *   dir/_deletes/epoch=N/                              upsert tombstones
   *   dir/_lineage/epoch=N/                              per-partition metrics
-  *   dir/_manifest/vNNNNN/{epochs,config,checkpoints}.parquet
+  *   dir/_manifest/vNNNNN/manifest.json                 one version's metadata
   *   dir/_manifest/LATEST                               atomic pointer
+  *
+  * A version's manifest.json holds everything a reader or the next
+  * writer needs: epochs, index config, checkpoints, the tombstone dirs
+  * the version reads (with their row counts), the config KV and the doc
+  * store's schema. It is a driver-local file (tmp + atomic move), so
+  * reading or committing metadata runs no Spark job, and segment reads
+  * pass their known schemas instead of inferring them per file — the
+  * Iceberg shape of one metadata file per snapshot plus a version
+  * pointer.
   *
   * Commit ordering mirrors the reference's write path (data durable
   * first, then the metastore record, bucket.rs:223-237): segment files
@@ -40,6 +56,50 @@ object IndexStore {
       tokenizers: Map[String, String] = Map.empty,
       analyzerVersion: Int = graft.analyze.Tokenizers.AnalyzerVersion,
       docIdStrategy: String = DocIdStrategy.KeyRange)
+  /** One `_deletes/epoch=N` dir a manifest version reads, and its rows. */
+  final case class TombstoneDir(epoch: Int, rows: Long)
+
+  /** The whole content of one version's manifest.json. `tombstones` is
+    * the set of tombstone dirs readers of THIS version apply (the
+    * Iceberg-manifest analogue: physical deletion is deferred to
+    * retention-aware gc()); `docSchema` is the doc store's schema as
+    * segment reads see it, in `StructType.json` form.
+    */
+  final case class Manifest(format: Int, epochs: Seq[EpochMeta], config: ConfigRow,
+      checkpoints: Seq[CheckpointRow], tombstones: Seq[TombstoneDir],
+      kv: Map[String, String], docSchema: String)
+
+  /** Bumped when manifest.json changes shape; readers reject other values. */
+  private[index] final val ManifestFormat = 2
+  private final val ManifestFile = "manifest.json"
+  private val Json = new ObjectMapper().registerModule(DefaultScalaModule)
+
+  /** The schema a parquet read of a written frame reports: file sources
+    * read every field, array element and map value as nullable.
+    */
+  private def readBack(dt: DataType): DataType = dt match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = readBack(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(readBack(a.elementType), containsNull = true)
+    case m: MapType => MapType(readBack(m.keyType), readBack(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  // the fixed schemas of the segment and tombstone files: reads pass
+  // them instead of paying one schema-inference job per file set
+  private[index] val PostingsSchema =
+    readBack(Encoders.product[PostingRow].schema).asInstanceOf[StructType]
+  private[index] val TermStatsSchema = StructType.fromDDL("field STRING, term STRING, df BIGINT")
+  private[index] val SymSpellSchema =
+    StructType.fromDDL("field STRING, variant STRING, term STRING, df BIGINT")
+  private[index] val TombstoneSchema = StructType.fromDDL("docId BIGINT")
+
+  private def docSchemaOf(m: Manifest): StructType =
+    DataType.fromJson(m.docSchema).asInstanceOf[StructType]
+
+  private def configOf(c: ConfigRow): IndexConfig =
+    IndexConfig(c.keyCols, c.fields, c.shardDocs, c.buildPartitions, c.fastFuzzy,
+      c.tokenizers, c.docIdStrategy)
 
   private def latestPath(dir: String) = Paths.get(dir, "_manifest", "LATEST")
 
@@ -50,6 +110,8 @@ object IndexStore {
   }
 
   private def manifestDir(dir: String, v: Int) = f"$dir/_manifest/v$v%05d"
+
+  private def deletesDir(dir: String, epoch: Int) = s"$dir/_deletes/epoch=$epoch"
 
   /** Atomically advance the LATEST pointer (tmp file + rename). */
   private[index] def commitVersion(dir: String, v: Int): Unit = {
@@ -73,47 +135,92 @@ object IndexStore {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  private def writeManifest(spark: SparkSession, dir: String, v: Int,
-      epochs: Seq[EpochMeta], config: IndexConfig, checkpoints: Seq[CheckpointRow],
-      tombstoneEpochs: Seq[Int], kv: Map[String, String] = Map.empty): Unit = {
-    // CAS BEFORE the content writes, not only at commit: version v may
-    // already be COMMITTED by a concurrent writer, and the Overwrite
-    // writes below would clobber its manifest content before
-    // commitVersion's check ever fires — the losing writer must fail
-    // without touching the winner's committed dir (commitVersion keeps
-    // its own check for the residual window)
+  /** Write version v's manifest.json as a tmp file plus an atomic move,
+    * so a reader never sees a half-written file. A crashed writer's
+    * file at an uncommitted version is simply replaced by the next
+    * writer of that version — only LATEST makes a version visible.
+    */
+  private[index] def writeManifestFile(dir: String, v: Int, m: Manifest): Unit = {
+    val md = Paths.get(manifestDir(dir, v))
+    Files.createDirectories(md)
+    val tmp = md.resolve(s".$ManifestFile.tmp")
+    Files.write(tmp, Json.writerWithDefaultPrettyPrinter().writeValueAsBytes(m))
+    Files.move(tmp, md.resolve(ManifestFile), StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** Version v's manifest.json exactly as written (no analyzer check). */
+  private[index] def readManifestFile(dir: String, v: Int): Manifest = {
+    require(v > 0, s"manifest versions start at 1, got v$v")
+    val md = Paths.get(manifestDir(dir, v))
+    require(Files.isDirectory(md),
+      s"manifest v$v at $dir does not exist (never committed, or expired by gc retention)")
+    val p = md.resolve(ManifestFile)
+    if (!Files.exists(p))
+      throw new IllegalStateException(
+        s"manifest v$v at $dir has no $ManifestFile: the store was written with the older " +
+        "parquet manifest (epochs/config/checkpoints.parquet per version), which this " +
+        "version no longer reads; rebuild the index")
+    val m = Json.readValue(Files.readAllBytes(p), classOf[Manifest])
+    if (m.format != ManifestFormat)
+      throw new IllegalStateException(
+        s"manifest v$v at $dir has format ${m.format}, this version reads format " +
+        s"$ManifestFormat; rebuild the index")
+    m
+  }
+
+  /** The manifest at `atVersion` (0 = LATEST) and the version it was
+    * read at — mutators must commit at basis+1 (the CAS checks it) so a
+    * concurrent writer's manifest can never be silently overwritten by
+    * content derived from a stale read.
+    */
+  private def manifestAt(dir: String, atVersion: Int = 0): (Int, Manifest) = {
+    val v = if (atVersion > 0) atVersion else currentVersion(dir)
+    require(v > 0, s"no committed manifest at $dir")
+    val m = readManifestFile(dir, v)
+    checkAnalyzer(dir, m.config)
+    (v, m)
+  }
+
+  /** Query-time tokenization must match the persisted terms exactly: if
+    * any of this store's tokenizers changed semantics since the store
+    * was written (e.g. en_stem's Porter1980 -> Snowball switch), queries
+    * would silently miss the dictionary — fail loudly instead. Indexed
+    * fields ABSENT from the map use the default analyzer, so the default
+    * participates in the check too (a future default-analyzer change
+    * must not slip past a store with an empty map).
+    */
+  private def checkAnalyzer(dir: String, c: ConfigRow): Unit = {
+    val changed = graft.analyze.Tokenizers.changedSince(c.analyzerVersion)
+    val usedTokenizers = (c.fields.map(f =>
+      c.tokenizers.getOrElse(f, graft.analyze.Tokenizers.Default)) ++
+      c.tokenizers.values).distinct
+    val affected = usedTokenizers.filter(changed)
+    if (affected.nonEmpty)
+      throw new IllegalStateException(
+        s"store at $dir was built with analyzer v${c.analyzerVersion} and uses " +
+        s"tokenizer(s) ${affected.mkString(", ")} whose output changed in " +
+        s"v${graft.analyze.Tokenizers.AnalyzerVersion}; rebuild the index " +
+        "(query-time terms would no longer match the persisted dictionary)")
+  }
+
+  /** Commit `m` as version v: CAS, manifest.json, then the LATEST swap. */
+  private def commit(dir: String, v: Int, m: Manifest): Unit = {
+    // CAS BEFORE the content write, not only at commit: version v may
+    // already be COMMITTED by a concurrent writer, and the write below
+    // would clobber its manifest before commitVersion's check ever
+    // fires — the losing writer must fail without touching the
+    // winner's committed file (commitVersion keeps its own check for
+    // the residual window)
     val cur = currentVersion(dir)
     if (cur != v - 1)
       throw new IllegalStateException(
         s"concurrent manifest writer at $dir: writing v$v but LATEST is v$cur " +
         s"(expected v${v - 1}); the store supports one writer at a time")
-    val md = manifestDir(dir, v)
-    spark.createDataset(epochs)(Encoders.product[EpochMeta])
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$md/epochs.parquet")
-    spark.createDataset(Seq(ConfigRow(config.keyCols, config.fields, config.shardDocs,
-      config.buildPartitions, config.fastFuzzy, config.tokenizers,
-      docIdStrategy = config.docIdStrategy)))(Encoders.product[ConfigRow])
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$md/config.parquet")
-    spark.createDataset(checkpoints)(Encoders.product[CheckpointRow])
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$md/checkpoints.parquet")
-    // the manifest OWNS its tombstone-dir set (Iceberg-manifest
-    // analogue): readers of THIS version apply exactly these
-    // _deletes/epoch=K dirs, so physical dir deletion can be deferred
-    // to retention-aware gc() without post-compact readers re-reading
-    // absorbed tombstones. Plain text like the LATEST pointer, NOT
-    // parquet: the list is a handful of ints, and a coalesce(1)
-    // parquet write + read added TWO Spark jobs to every mutator
-    // (measured ~1.5 s per append at 200k in EpochBench)
-    Files.createDirectories(Paths.get(md))
-    Files.write(Paths.get(md, "tombstones.txt"),
-      tombstoneEpochs.distinct.sorted.mkString("\n").getBytes(StandardCharsets.UTF_8))
-    // kv is written even when EMPTY: a crashed updateConfig may have
-    // left a stale kv.parquet at this version number, and skipping the
-    // write would adopt those never-committed overrides verbatim when
-    // this version commits (ghost config resurrection)
-    spark.createDataset(kv.toSeq)(Encoders.tuple(Encoders.STRING, Encoders.STRING))
-      .toDF("key", "value")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$md/kv.parquet")
+    writeManifestFile(dir, v, m.copy(
+      epochs = m.epochs.sortBy(e => (e.epoch, e.field)),
+      checkpoints = m.checkpoints.sortBy(_.epoch),
+      tombstones = m.tombstones.sortBy(_.epoch)))
     commitVersion(dir, v)
   }
 
@@ -121,14 +228,8 @@ object IndexStore {
     * tri-state config store, lnx-fs/src/config.rs:44-148): explicit
     * overrides live here; an absent key reads as its default.
     */
-  def configKv(spark: SparkSession, dir: String, atVersion: Int = 0): Map[String, String] = {
-    val v = if (atVersion > 0) atVersion else currentVersion(dir)
-    require(v > 0, s"no committed manifest at $dir")
-    val p = Paths.get(manifestDir(dir, v), "kv.parquet")
-    if (!Files.exists(p)) Map.empty
-    else spark.read.parquet(p.toString).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-  }
+  def configKv(spark: SparkSession, dir: String, atVersion: Int = 0): Map[String, String] =
+    manifestAt(dir, atVersion)._2.kv
 
   /** Tri-state read: Some(override) if set, else the supplied default
     * (config.rs: `get` falls back to the bucket default when unset).
@@ -146,30 +247,14 @@ object IndexStore {
     */
   def updateConfig(spark: SparkSession, dir: String,
       set: Map[String, String] = Map.empty, unset: Seq[String] = Nil): Map[String, String] = {
-    val (basis, epochs, config, cps) = readManifestV(spark, dir)
-    val kv = (configKv(spark, dir) ++ set) -- unset
-    writeManifest(spark, dir, basis + 1, epochs, config, cps,
-      manifestTombstones(spark, dir, basis, epochs, cps).toSeq.sorted, kv)
+    val (basis, m) = manifestAt(dir)
+    val kv = (m.kv ++ set) -- unset
+    commit(dir, basis + 1, m.copy(kv = kv))
     kv
   }
 
-  def readManifest(spark: SparkSession, dir: String): (Seq[EpochMeta], IndexConfig, Seq[CheckpointRow]) = {
-    val (_, epochs, config, cps) = readManifestV(spark, dir)
-    (epochs, config, cps)
-  }
-
-  /** readManifest plus the manifest VERSION the content was read at —
-    * mutators must commit at basis+1 (commitVersion CAS-checks it) so
-    * a concurrent writer's manifest can never be silently overwritten
-    * by content derived from a stale read.
-    */
-  private[index] def readManifestV(spark: SparkSession,
-      dir: String): (Int, Seq[EpochMeta], IndexConfig, Seq[CheckpointRow]) = {
-    val v = currentVersion(dir)
-    require(v > 0, s"no committed manifest at $dir")
-    val (epochs, config, cps) = readManifestAt(spark, dir, v)
-    (v, epochs, config, cps)
-  }
+  def readManifest(spark: SparkSession, dir: String): (Seq[EpochMeta], IndexConfig, Seq[CheckpointRow]) =
+    readManifestAt(spark, dir, currentVersion(dir))
 
   /** Manifest content at a PINNED version — the reader half of snapshot
     * retention (the Iceberg time-travel analogue of the reference's
@@ -180,51 +265,9 @@ object IndexStore {
     */
   def readManifestAt(spark: SparkSession, dir: String,
       v: Int): (Seq[EpochMeta], IndexConfig, Seq[CheckpointRow]) = {
-    require(v > 0, s"manifest versions start at 1, got v$v")
-    require(Files.isDirectory(Paths.get(manifestDir(dir, v))),
-      s"manifest v$v at $dir does not exist (never committed, or expired by gc retention)")
-    val md = manifestDir(dir, v)
-    val epochs = spark.read.parquet(s"$md/epochs.parquet")
-      .as(Encoders.product[EpochMeta]).collect().toSeq.sortBy(e => (e.epoch, e.field))
-    // manifests written before the tokenizers column existed read as
-    // default-analyzer-everywhere (the old behavior); manifests written
-    // before analysis semantics were versioned read as analyzer v1;
-    // manifests written before the strategy was persisted read keyRange
-    // (the only strategy that existed then)
-    val rawConf = spark.read.parquet(s"$md/config.parquet")
-    val withToks =
-      if (rawConf.columns.contains("tokenizers")) rawConf
-      else rawConf.withColumn("tokenizers", typedLit(Map.empty[String, String]))
-    val withVer =
-      if (withToks.columns.contains("analyzerVersion")) withToks
-      else withToks.withColumn("analyzerVersion", lit(1))
-    val confDf =
-      if (withVer.columns.contains("docIdStrategy")) withVer
-      else withVer.withColumn("docIdStrategy", lit(DocIdStrategy.KeyRange))
-    val c = confDf.as(Encoders.product[ConfigRow]).collect().head
-    // Query-time tokenization must match the persisted terms exactly:
-    // if any of this store's tokenizers changed semantics since the
-    // store was written (e.g. en_stem's Porter1980 -> Snowball switch),
-    // queries would silently miss the dictionary — fail loudly instead.
-    // Indexed fields ABSENT from the map use the default analyzer, so
-    // the default participates in the check too (a future default-
-    // analyzer change must not slip past a store with an empty map).
-    val changed = graft.analyze.Tokenizers.changedSince(c.analyzerVersion)
-    val usedTokenizers = (c.fields.map(f =>
-      c.tokenizers.getOrElse(f, graft.analyze.Tokenizers.Default)) ++
-      c.tokenizers.values).distinct
-    val affected = usedTokenizers.filter(changed)
-    if (affected.nonEmpty)
-      throw new IllegalStateException(
-        s"store at $dir was built with analyzer v${c.analyzerVersion} and uses " +
-        s"tokenizer(s) ${affected.mkString(", ")} whose output changed in " +
-        s"v${graft.analyze.Tokenizers.AnalyzerVersion}; rebuild the index " +
-        "(query-time terms would no longer match the persisted dictionary)")
-    val config = IndexConfig(c.keyCols, c.fields, c.shardDocs, c.buildPartitions, c.fastFuzzy,
-      c.tokenizers, c.docIdStrategy)
-    val cps = spark.read.parquet(s"$md/checkpoints.parquet")
-      .as(Encoders.product[CheckpointRow]).collect().toSeq.sortBy(_.epoch)
-    (epochs, config, cps)
+    require(v > 0, s"no committed manifest at $dir")
+    val m = manifestAt(dir, v)._2
+    (m.epochs, configOf(m.config), m.checkpoints)
   }
 
   /** Write one epoch's segment data (no manifest commit yet):
@@ -339,7 +382,11 @@ object IndexStore {
     writeLineage(idx, dir, 0)
     val epochs = config.fields.map(f =>
       EpochMeta(0, "seg-00000", idx.numDocs, 0L, idx.numDocs, f, idx.fieldTokens.getOrElse(f, 0L)))
-    writeManifest(idx.spark, dir, 1, epochs, config, Seq(CheckpointRow(0, snapshotId, 0L)), Nil)
+    val configRow = ConfigRow(config.keyCols, config.fields, config.shardDocs,
+      config.buildPartitions, config.fastFuzzy, config.tokenizers,
+      docIdStrategy = config.docIdStrategy)
+    commit(dir, 1, Manifest(ManifestFormat, epochs, configRow,
+      Seq(CheckpointRow(0, snapshotId, 0L)), Nil, Map.empty, readBack(idx.docs.schema).json))
     idx.unpersist()
     load(df.sparkSession, dir)
   }
@@ -360,75 +407,65 @@ object IndexStore {
     *   later compactions (snapshot-retention reader contract).
     */
   def load(spark: SparkSession, dir: String, cacheDocs: Boolean = true,
-      atVersion: Int = 0): BuiltIndex = {
-    val v = if (atVersion > 0) atVersion else currentVersion(dir)
-    require(v > 0, s"no committed manifest at $dir")
-    val (epochs, config, cps) = readManifestAt(spark, dir, v)
-    val segPaths = epochs.map(_.path).distinct
-    val postings = segPaths.map(p => spark.read.parquet(s"$dir/$p/postings.parquet"))
-      .reduce(_ unionByName _).as(Encoders.product[PostingRow])
-    val docsAll = segPaths.map(p => spark.read.parquet(s"$dir/$p/docs.parquet"))
+      atVersion: Int = 0): BuiltIndex =
+    loadManifest(spark, dir, manifestAt(dir, atVersion)._2, cacheDocs)
+
+  /** Union of the segments' files of one kind, read with their known schema. */
+  private def readSegments(spark: SparkSession, dir: String, segPaths: Seq[String],
+      file: String, schema: StructType): DataFrame =
+    segPaths.map(p => spark.read.schema(schema).parquet(s"$dir/$p/$file"))
       .reduce(_ unionByName _)
-    val deletes = loadDeletes(spark, dir, manifestTombstones(spark, dir, v, epochs, cps))
-    val docs = deletes match {
-      case Some(d) =>
+
+  /** Every docId the manifest's tombstone dirs hold (not deduplicated). */
+  private def tombstoneScan(spark: SparkSession, dir: String,
+      tombs: Seq[TombstoneDir]): Option[DataFrame] =
+    if (tombs.isEmpty) None
+    else Some(tombs.map(t => spark.read.schema(TombstoneSchema).parquet(deletesDir(dir, t.epoch)))
+      .reduce(_ unionByName _))
+
+  private def loadManifest(spark: SparkSession, dir: String, m: Manifest,
+      cacheDocs: Boolean): BuiltIndex = {
+    val config = configOf(m.config)
+    val segPaths = m.epochs.map(_.path).distinct
+    val postings = readSegments(spark, dir, segPaths, "postings.parquet", PostingsSchema)
+      .as(Encoders.product[PostingRow])
+    val docsAll = readSegments(spark, dir, segPaths, "docs.parquet", docSchemaOf(m))
+    val scan = tombstoneScan(spark, dir, m.tombstones)
+    val deletes = scan.map(_.distinct())
+    val docs = scan match {
+      case Some(s) =>
         // the anti-join sits INSIDE the frame persist() may freeze, and
         // a cached plan never gets AQE's runtime broadcast conversion
         // (CLAUDE.md): make the broadcast decision explicitly, gated —
         // tombstones are slim docId longs, so 4M rows ≈ 32 MB. The
-        // gate collects ONCE (limit gate+1): a count() + broadcast
-        // would execute the tombstone union+distinct plan twice per
-        // load (the broadcast build re-scans the parquet). Under the
-        // gate the collected ids become a driver-local frame; above it
-        // fall back to a plain shuffle join rather than sort-merging
-        // the whole doc store against the delete set.
-        val gate = 4000000
-        val ids = d.limit(gate + 1).collect().map(_.getLong(0))
+        // manifest's row counts decide the gate without a job; under
+        // it ONE plain scan collects the ids (deduplicated driver-side)
+        // into a driver-local frame, above it fall back to a plain
+        // shuffle join rather than sort-merging the whole doc store
+        // against the delete set.
+        val gate = 4000000L
         val rhs =
-          if (ids.length <= gate)
+          if (m.tombstones.map(_.rows).sum <= gate) {
+            val ids = s.collect().map(_.getLong(0)).distinct
             broadcast(spark.createDataset(ids.toSeq)(Encoders.scalaLong).toDF("docId"))
-          else d
+          } else deletes.get
         docsAll.join(rhs, Seq("docId"), "left_anti")
       case None => docsAll
     }
-    val termStats = segPaths.map(p => spark.read.parquet(s"$dir/$p/termstats.parquet"))
-      .reduce(_ unionByName _)
+    val termStats = readSegments(spark, dir, segPaths, "termstats.parquet", TermStatsSchema)
       .groupBy("field", "term").agg(sum("df").as("df"))
-    val byField = epochs.groupBy(_.field)
+    val byField = m.epochs.groupBy(_.field)
     val fieldTokens = byField.map { case (f, es) => f -> es.map(_.fieldTokens).sum }
-    val numDocs = epochs.groupBy(_.epoch).map(_._2.head.numDocs).sum
+    val numDocs = m.epochs.groupBy(_.epoch).map(_._2.head.numDocs).sum
     // fast-fuzzy segments carry the precomputed correction dictionary;
     // per-(field, variant, term) df re-aggregates across segments just
     // like the term dictionary
     val symspell =
       if (!config.fastFuzzy) None
-      else Some(segPaths.map(p => spark.read.parquet(s"$dir/$p/symspell.parquet"))
-        .reduce(_ unionByName _)
+      else Some(readSegments(spark, dir, segPaths, "symspell.parquet", SymSpellSchema)
         .groupBy("field", "variant", "term").agg(sum("df").as("df")))
     new BuiltIndex(docs, postings, termStats, numDocs, fieldTokens, config,
       deletes, symspell).persist(cacheDocs)
-  }
-
-  /** Epochs whose tombstones are committed: manifest segment epochs
-    * PLUS checkpoint-row epochs — a delete-only epoch
-    * (deleteByQuery) commits a tombstone dir and a checkpoint row
-    * with no segment at all.
-    */
-  private def committedEpochs(epochs: Seq[EpochMeta], cps: Seq[CheckpointRow]): Set[Int] =
-    epochs.map(_.epoch).toSet ++ cps.map(_.epoch)
-
-  /** Epochs whose _deletes/epoch=K dirs manifest version v READS —
-    * authoritative from the version's tombstones.txt. Manifests
-    * written before the list existed fall back to the legacy inference
-    * (every committed epoch): a superset, safe because re-applying a
-    * tombstone is idempotent and loadDeletes skips absent dirs.
-    */
-  private def manifestTombstones(spark: SparkSession, dir: String, v: Int,
-      epochs: Seq[EpochMeta], cps: Seq[CheckpointRow]): Set[Int] = {
-    val p = Paths.get(manifestDir(dir, v), "tombstones.txt")
-    if (!Files.exists(p)) committedEpochs(epochs, cps)
-    else new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      .split("\n").filter(_.nonEmpty).map(_.trim.toInt).toSet
   }
 
   /** Next epoch number, clearing BOTH sets: delete-only epochs exist
@@ -436,36 +473,35 @@ object IndexStore {
     * collide a later append/compact with a pending delete epoch's
     * tombstone dir.
     */
-  private def nextEpoch(epochs: Seq[EpochMeta], cps: Seq[CheckpointRow]): Int =
-    (epochs.map(_.epoch) ++ cps.map(_.epoch)).max + 1
+  private def nextEpoch(m: Manifest): Int =
+    (m.epochs.map(_.epoch) ++ m.checkpoints.map(_.epoch)).max + 1
 
-  /** Tombstones of committed epochs only: appendEpoch writes
-    * _deletes/epoch=N before the manifest commit, so a crash in between
-    * leaves an orphan tombstone dir. Applying it against the old
-    * committed view would vanish upserted docs with no replacement —
-    * the same 'data without a manifest entry is invisible' contract as
-    * segment files.
+  /** Rows of the parquet files just written under `path`, summed from
+    * their footers on the driver — no Spark job, no data read.
     */
-  def loadDeletes(spark: SparkSession, dir: String,
-      committedEpochs: Set[Int]): Option[DataFrame] = {
-    val p = Paths.get(dir, "_deletes")
-    if (!Files.exists(p)) None
-    else {
-      val listing = Files.list(p)
-      var dirs = List.empty[String]
-      try {
-        val sub = listing.iterator()
-        while (sub.hasNext) {
-          val d = sub.next()
-          val name = d.getFileName.toString
-          val committed = name.startsWith("epoch=") &&
-            scala.util.Try(name.stripPrefix("epoch=").toInt).toOption.exists(committedEpochs)
-          if (Files.isDirectory(d) && committed) dirs ::= d.toString
-        }
-      } finally listing.close()
-      if (dirs.isEmpty) None
-      else Some(dirs.map(spark.read.parquet(_)).reduce(_ unionByName _).select("docId").distinct())
-    }
+  private def parquetRows(path: String): Long = {
+    val listing = Files.list(Paths.get(path))
+    try listing.iterator().asScala
+      .filter { p =>
+        val name = p.getFileName.toString
+        name.startsWith("part-") && name.endsWith(".parquet")
+      }
+      .map { p =>
+        val r = ParquetFileReader.open(new LocalInputFile(p))
+        try r.getRecordCount finally r.close()
+      }.sum
+    finally listing.close()
+  }
+
+  /** Count the tombstone dir just written for `epoch`: its manifest
+    * entry, or None after deleting it when empty — an empty dir would
+    * make every later load pay the tombstone scan and anti-join for
+    * zero rows.
+    */
+  private def keepTombstones(dir: String, epoch: Int): Option[TombstoneDir] = {
+    val rows = parquetRows(deletesDir(dir, epoch))
+    if (rows > 0L) Some(TombstoneDir(epoch, rows))
+    else { deleteTree(Paths.get(deletesDir(dir, epoch))); None }
   }
 
   /** Recursively delete a directory tree, closing the walk stream (it
@@ -497,13 +533,12 @@ object IndexStore {
     */
   def info(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (v, epochs, _, cps) = readManifestV(spark, dir)
+    val (v, m) = manifestAt(dir)
     val pendingDeletes =
-      loadDeletes(spark, dir, manifestTombstones(spark, dir, v, epochs, cps))
-        .map(_.count()).getOrElse(0L)
-    val liveDocs = epochs.groupBy(_.epoch).map(_._2.head.numDocs).sum - pendingDeletes
-    Seq((v, epochs.map(_.epoch).distinct.size,
-      epochs.map(_.path).distinct.size, liveDocs, pendingDeletes, cps.size))
+      tombstoneScan(spark, dir, m.tombstones).map(_.distinct().count()).getOrElse(0L)
+    val liveDocs = m.epochs.groupBy(_.epoch).map(_._2.head.numDocs).sum - pendingDeletes
+    Seq((v, m.epochs.map(_.epoch).distinct.size,
+      m.epochs.map(_.path).distinct.size, liveDocs, pendingDeletes, m.checkpoints.size))
       .toDF("manifestVersion", "epochs", "segments", "liveDocs", "pendingDeletes", "checkpoints")
   }
 
@@ -521,23 +556,23 @@ object IndexStore {
     // checkpoint and silently no-op one of the two operations
     require(!snapshotId.startsWith("delete:"),
       s"snapshotId '$snapshotId' uses the reserved 'delete:' checkpoint namespace")
-    val (basis, epochs, config, cps) = readManifestV(spark, dir)
-    if (cps.exists(_.snapshotId == snapshotId)) return false // already committed: resume no-op
+    val (basis, m) = manifestAt(dir)
+    if (m.checkpoints.exists(_.snapshotId == snapshotId)) return false // already committed: resume no-op
+    val config = configOf(m.config)
     // schema gate BEFORE any write: a mismatched batch would otherwise
     // COMMIT a segment the per-segment docs union can never read again
     // (unionByName AnalysisException on every later load — the store
     // is bricked until manual surgery). Nullability is not compared;
     // unionByName doesn't care.
-    val storedDocs = spark.read.parquet(s"$dir/${epochs.map(_.path).head}/docs.parquet").schema
-    val expected = storedDocs.fields.filter(_.name != "docId")
+    val expected = docSchemaOf(m).fields.filter(_.name != "docId")
       .map(f => f.name -> f.dataType).toSet
     val got = newDocs.schema.fields.map(f => f.name -> f.dataType).toSet
     if (got != expected)
       throw new IllegalArgumentException(
         s"appendEpoch($dir): batch schema ${got.toSeq.sortBy(_._1).mkString(", ")} does not " +
         s"match the store's ${expected.toSeq.sortBy(_._1).mkString(", ")}")
-    val epoch = nextEpoch(epochs, cps)
-    val base = epochs.map(_.docIdEnd).max
+    val epoch = nextEpoch(m)
+    val base = m.epochs.map(_.docIdEnd).max
     val idx = IndexBuilder.build(newDocs, config, base)
     val segName = f"seg-$epoch%05d"
     writeSegment(idx, s"$dir/$segName")
@@ -547,47 +582,42 @@ object IndexStore {
     // columns out of the committed doc store — the cacheDocs default
     // would pin the ENTIRE corpus's stored fields in executor memory on
     // every incremental append, which cannot hold at store scale
-    val old = load(spark, dir, cacheDocs = false)
+    val old = loadManifest(spark, dir, m, cacheDocs = false)
     val keyCols = config.keyCols
-    // the epoch's key set, SLIM and materialized exactly once: Catalyst
-    // pushes the left-semi join below through the store's per-segment
-    // union (one join per segment branch), so an unmaterialized right
-    // side is re-derived from the FULL-WIDTH epoch docs cache once per
-    // segment — measured O(segments) extra full passes per append
-    // (AQE doesn't reuse the exchange across the pushed-down branches)
-    val newKeys = idx.docs.select(keyCols.map(col): _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // explicit count-gated broadcast (a persisted plan never gets AQE's
-    // runtime join conversion — CLAUDE.md): broadcasting the epoch keys
-    // makes upsert detection EXCHANGE-FREE on the store side — its slim
-    // (docId, key) columns stream through the pruned parquet scan and
-    // never shuffle, so the per-append exchange is O(epoch), not
-    // O(corpus). Above the gate (~200 MB of keys) fall back to the
-    // shuffle join rather than risk the driver. The gate cardinality is
+    // Catalyst pushes the left-semi join below through the store's
+    // per-segment union (one join per segment branch), and AQE builds
+    // each branch's broadcast separately. So the epoch's key set is
+    // LANDED once on the driver and broadcast as a local relation: the
+    // branches' broadcast builds then serialize driver rows and start
+    // no job, and the append's job count does not grow with the segment
+    // count. Upsert detection stays EXCHANGE-FREE on the store side —
+    // its slim (docId, key) columns stream through the pruned parquet
+    // scan and never shuffle, so the per-append exchange is O(epoch),
+    // not O(corpus). Above the gate (~200 MB of keys) fall back to a
+    // shuffle join over the keys, materialized once (an unmaterialized
+    // right side would be re-derived from the FULL-WIDTH epoch docs
+    // cache once per segment branch). The gate cardinality is
     // idx.numDocs (keys are one-per-doc by construction), so no extra
-    // full-width counting pass over the epoch cache is needed.
-    val rhs = if (idx.numDocs <= 2000000L) broadcast(newKeys) else newKeys
+    // counting pass over the epoch cache is needed.
+    val newKeys = idx.docs.select(keyCols.map(col): _*)
+    val rhs =
+      if (idx.numDocs <= 2000000L)
+        broadcast(spark.createDataFrame(newKeys.collect().toSeq.asJava, newKeys.schema))
+      else newKeys.persist(StorageLevel.MEMORY_AND_DISK)
     val tombstones = old.docs.select((col("docId") +: keyCols.map(col)): _*)
       .join(rhs, keyCols, "left_semi")
       .select("docId")
-    val delDir = s"$dir/_deletes/epoch=$epoch"
-    tombstones.write.mode(SaveMode.Overwrite).parquet(delDir)
-    // pure-insert appends (no key overlap) must not commit an EMPTY
-    // tombstone dir: every later load would pay the tombstone
-    // union+distinct job and install the anti-join for tombstones that
-    // do not exist (deleteByQuery has the same removed==0 guard)
-    val hasTombstones = spark.read.parquet(delDir).count() != 0L
-    if (!hasTombstones) deleteTree(Paths.get(delDir))
-    newKeys.unpersist()
+    tombstones.write.mode(SaveMode.Overwrite).parquet(deletesDir(dir, epoch))
+    // a pure-insert append (no key overlap) commits no tombstone dir
+    val newTombs = keepTombstones(dir, epoch)
+    rhs.unpersist()
     old.unpersist()
-    val newEpochs = epochs ++ config.fields.map(f =>
+    val newEpochs = m.epochs ++ config.fields.map(f =>
       EpochMeta(epoch, segName, idx.numDocs, base, base + idx.numDocs, f,
         idx.fieldTokens.getOrElse(f, 0L)))
-    val newCps = cps :+ CheckpointRow(epoch, snapshotId, 0L)
-    val tombs = manifestTombstones(spark, dir, basis, epochs, cps).toSeq.sorted ++
-      (if (hasTombstones) Seq(epoch) else Nil)
-    writeManifest(spark, dir, basis + 1, newEpochs, config, newCps, tombs,
-      configKv(spark, dir))
+    commit(dir, basis + 1, m.copy(epochs = newEpochs,
+      checkpoints = m.checkpoints :+ CheckpointRow(epoch, snapshotId, 0L),
+      tombstones = m.tombstones ++ newTombs))
     idx.unpersist()
     true
   }
@@ -596,8 +626,8 @@ object IndexStore {
     * against the live store view (prior tombstones already applied by
     * load) — the session dialect's `DELETE ... WHERE fts(...)` made
     * persistent. Committed as a TOMBSTONE-ONLY epoch: the tombstone
-    * file plus a checkpoint row, no segment (committedEpochs counts
-    * checkpoint epochs, so loadDeletes applies it) — same
+    * file plus a checkpoint row, no segment (the manifest lists the
+    * tombstone dir, so every later load applies it) — same
     * data-then-manifest crash ordering as appendEpoch, idempotent per
     * deleteId (re-running a committed delete is a no-op, returning -1).
     * A zero-match query commits NOTHING and does not consume the
@@ -619,22 +649,22 @@ object IndexStore {
 
   def deleteByQuery(spark: SparkSession, dir: String,
       clauses: Seq[graft.query.SearchClause], deleteId: String): Long = {
-    val (basis, epochs, config, cps) = readManifestV(spark, dir)
-    if (cps.exists(_.snapshotId == deleteCheckpointId(deleteId))) return -1L
-    val epoch = nextEpoch(epochs, cps)
-    val delDir = s"$dir/_deletes/epoch=$epoch"
-    val engine = new graft.query.QueryEngine(load(spark, dir, cacheDocs = false))
+    val (basis, m) = manifestAt(dir)
+    if (m.checkpoints.exists(_.snapshotId == deleteCheckpointId(deleteId))) return -1L
+    val epoch = nextEpoch(m)
+    val engine = new graft.query.QueryEngine(loadManifest(spark, dir, m, cacheDocs = false))
     try
       engine.matchF32(clauses).select("docId")
-        .write.mode(SaveMode.Overwrite).parquet(delDir)
+        .write.mode(SaveMode.Overwrite).parquet(deletesDir(dir, epoch))
     finally engine.release()
-    val removed = spark.read.parquet(delDir).count()
-    if (removed == 0L) { deleteTree(Paths.get(delDir)); return 0L }
-    writeManifest(spark, dir, basis + 1, epochs, config,
-      cps :+ CheckpointRow(epoch, deleteCheckpointId(deleteId), 0L),
-      manifestTombstones(spark, dir, basis, epochs, cps).toSeq.sorted :+ epoch,
-      configKv(spark, dir))
-    removed
+    keepTombstones(dir, epoch) match {
+      case None => 0L
+      case Some(t) =>
+        commit(dir, basis + 1, m.copy(
+          checkpoints = m.checkpoints :+ CheckpointRow(epoch, deleteCheckpointId(deleteId), 0L),
+          tombstones = m.tombstones :+ t))
+        t.rows
+    }
   }
 
   /** Segment merge / compaction (the reference's tablet compaction+GC,
@@ -663,9 +693,9 @@ object IndexStore {
     // data than the caller's documented per-pass footprint bound
     require(maxSegments >= 2,
       s"compact merges at least 2 segments per pass, got maxSegments=$maxSegments")
-    val (basis, epochs, config, cps) = readManifestV(spark, dir)
-    val kv = configKv(spark, dir)
-    val segs = epochs.groupBy(_.epoch).toSeq
+    val (basis, m) = manifestAt(dir)
+    val config = configOf(m.config)
+    val segs = m.epochs.groupBy(_.epoch).toSeq
       .map { case (ep, es) => (ep, es.head.path, es.head.numDocs) }
       .sortBy(_._1)
     // size-ranked selection: merging the smallest segments first retires
@@ -676,11 +706,11 @@ object IndexStore {
     val selectedEpochs = selected.map(_._1).toSet
     val unselected = segs.filterNot(s => selectedEpochs(s._1))
 
-    val deletes = loadDeletes(spark, dir, manifestTombstones(spark, dir, basis, epochs, cps))
-    val postingsSel = selected.map(s => spark.read.parquet(s"$dir/${s._2}/postings.parquet"))
-      .reduce(_ unionByName _)
-    val docsSelAll = selected.map(s => spark.read.parquet(s"$dir/${s._2}/docs.parquet"))
-      .reduce(_ unionByName _)
+    val deletes = tombstoneScan(spark, dir, m.tombstones).map(_.distinct())
+    val docSchema = docSchemaOf(m)
+    val postingsSel = readSegments(spark, dir, selected.map(_._2), "postings.parquet",
+      PostingsSchema)
+    val docsSelAll = readSegments(spark, dir, selected.map(_._2), "docs.parquet", docSchema)
     val docsSel = deletes match {
       case Some(d) => docsSelAll.join(d, Seq("docId"), "left_anti")
       case None => docsSelAll
@@ -729,51 +759,43 @@ object IndexStore {
             enc.bytes, enc.blockOffset, enc.blockLast, enc.blockMaxTf, enc.blockMinNorm))
         }
       }(Encoders.product[PostingRow])
-    val mergedEpoch = nextEpoch(epochs, cps)
+    val mergedEpoch = nextEpoch(m)
     val segName = f"seg-$mergedEpoch%05d"
     val parts = math.max(1, config.buildPartitions / 4)
     writePostingsParquet(merged.toDF(), parts, s"$dir/$segName/postings.parquet")
     writeDocsParquet(docsSel, parts, s"$dir/$segName/docs.parquet")
     // dictionary + stats derive from the WRITTEN postings: one merge
     // computation total instead of re-merging per aggregate
-    val mergedOnDisk = spark.read.parquet(s"$dir/$segName/postings.parquet")
+    val mergedOnDisk = readSegments(spark, dir, Seq(segName), "postings.parquet", PostingsSchema)
     writeTermstatsParquet(
       mergedOnDisk.groupBy("field", "term").agg(sum("numDocs").as("df")),
       parts, s"$dir/$segName/termstats.parquet")
     if (config.fastFuzzy)
-      writeSymspellParquet(spark.read.parquet(s"$dir/$segName/termstats.parquet"),
+      writeSymspellParquet(
+        readSegments(spark, dir, Seq(segName), "termstats.parquet", TermStatsSchema),
         parts, s"$dir/$segName/symspell.parquet")
     val newFieldTokens = mergedOnDisk.groupBy("field").agg(sum("sumTf").as("t"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val liveDocs = spark.read.parquet(s"$dir/$segName/docs.parquet").count()
+    val liveDocs = parquetRows(s"$dir/$segName/docs.parquet")
     // partial pass: tombstones targeting docs still physically present
     // in unmerged segments survive, rewritten under the merged epoch
     // (data before manifest — the dir is orphan until the commit below;
     // absorbed tombstones simply don't make the cut)
-    val retainedTombstones = unselected.nonEmpty && deletes.nonEmpty && {
-      val docsUnsel = unselected.map(s => spark.read.parquet(s"$dir/${s._2}/docs.parquet"))
-        .reduce(_ unionByName _)
-      val retained = deletes.get.join(docsUnsel.select("docId"), Seq("docId"), "left_semi")
-        .persist()
-      // only write the dir / list the epoch when rows actually survive:
-      // an empty _deletes/epoch=N would make every later load pay the
-      // tombstone union + anti-join for ZERO rows — the exact cost
-      // appendEpoch/deleteByQuery guard against with removed == 0 checks
-      val nRetained =
-        try retained.count()
-        catch { case t: Throwable => retained.unpersist(blocking = false); throw t }
-      if (nRetained > 0)
-        retained.write.mode(SaveMode.Overwrite).parquet(s"$dir/_deletes/epoch=$mergedEpoch")
-      retained.unpersist(blocking = false)
-      nRetained > 0
-    }
+    val retainedTombstones =
+      if (unselected.isEmpty || deletes.isEmpty) None
+      else {
+        val docsUnsel = readSegments(spark, dir, unselected.map(_._2), "docs.parquet", docSchema)
+        deletes.get.join(docsUnsel.select("docId"), Seq("docId"), "left_semi")
+          .write.mode(SaveMode.Overwrite).parquet(deletesDir(dir, mergedEpoch))
+        keepTombstones(dir, mergedEpoch)
+      }
     // the merged epoch keeps the id-space window of what it merged
     // (ids are never renumbered); unmerged epochs keep their rows — a
     // base of 0 would claim an id range overlapping epochs that were
     // NOT selected by a partial compaction
-    val mergedDocIdEnd = epochs.filter(e => selectedEpochs(e.epoch)).map(_.docIdEnd).max
-    val mergedDocIdBase = epochs.filter(e => selectedEpochs(e.epoch)).map(_.docIdBase).min
-    val newEpochs = epochs.filterNot(e => selectedEpochs(e.epoch)) ++
+    val mergedDocIdEnd = m.epochs.filter(e => selectedEpochs(e.epoch)).map(_.docIdEnd).max
+    val mergedDocIdBase = m.epochs.filter(e => selectedEpochs(e.epoch)).map(_.docIdBase).min
+    val newEpochs = m.epochs.filterNot(e => selectedEpochs(e.epoch)) ++
       config.fields.map(f =>
         EpochMeta(mergedEpoch, segName, liveDocs, mergedDocIdBase, mergedDocIdEnd, f,
           newFieldTokens.getOrElse(f, 0L)))
@@ -783,8 +805,7 @@ object IndexStore {
     // dirs are NOT deleted here — a reader pinned at an older manifest
     // version still needs them; retention-aware gc() owns deletion,
     // exactly like superseded segment dirs.
-    writeManifest(spark, dir, basis + 1, newEpochs, config, cps,
-      if (retainedTombstones) Seq(mergedEpoch) else Nil, kv)
+    commit(dir, basis + 1, m.copy(epochs = newEpochs, tombstones = retainedTombstones.toSeq))
   }
 
   /** Explicit storage GC with SNAPSHOT RETENTION: delete segment dirs,
@@ -814,8 +835,8 @@ object IndexStore {
     val retained = (floor to cur)
       .filter(v => Files.isDirectory(Paths.get(manifestDir(dir, v))))
       .map { v =>
-        val (epochs, _, cps) = readManifestAt(spark, dir, v)
-        (epochs.map(_.path).toSet, manifestTombstones(spark, dir, v, epochs, cps))
+        val m = manifestAt(dir, v)._2
+        (m.epochs.map(_.path).toSet, m.tombstones.map(_.epoch).toSet)
       }
     val livePaths = retained.flatMap(_._1).toSet
     val liveTombstones = retained.flatMap(_._2).toSet

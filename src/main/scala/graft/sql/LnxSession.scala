@@ -195,8 +195,10 @@ final class LnxSession(val spark: SparkSession) {
     *   since-changed schema reads with its own types.
     */
   def attach(name: String, dir: String, atVersion: Int = 0): Unit = {
-    val idx = graft.index.IndexStore.load(spark, dir, cacheDocs = false,
-      atVersion = atVersion)
+    // resolve LATEST once: the index and its column defs must come from
+    // the same manifest version even if a writer commits in between
+    val v = if (atVersion > 0) atVersion else graft.index.IndexStore.currentVersion(dir)
+    val idx = graft.index.IndexStore.load(spark, dir, cacheDocs = false, atVersion = v)
     // lnx logical types (ip, facet, unsigned ranges) are NOT derivable
     // from the Spark schema — an ip column reads back as plain
     // "string", so predicates would skip canonicalization and compare
@@ -204,7 +206,7 @@ final class LnxSession(val spark: SparkSession) {
     // Stores written by persist() carry the session ColumnDefs in the
     // config KV; restore them, falling back to schema-derived defs for
     // stores created outside a session (their columns had no lnx types).
-    val defs = graft.index.IndexStore.configKv(spark, dir, atVersion).get(ColumnsKvKey) match {
+    val defs = graft.index.IndexStore.configKv(spark, dir, v).get(ColumnsKvKey) match {
       case Some(enc) => decodeDefs(enc, idx.config.keyCols)
       case None => idx.docs.schema.fields.filterNot(_.name == "docId").toSeq.map(f =>
         ColumnDef(f.name, f.dataType.simpleString, idx.config.keyCols.contains(f.name),

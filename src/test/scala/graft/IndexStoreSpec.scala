@@ -1,5 +1,7 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.corpus.CodeCorpus
@@ -19,6 +21,8 @@ class IndexStoreSpec extends AnyFunSuite {
     e.searchF32(Seq(Fts("content", q)), k).collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
 
   val config = IndexConfig(Seq("repo", "path", "commit"), Seq("content"), shardDocs = 256, buildPartitions = 4)
+
+  private val json = new ObjectMapper()
 
   test("save/load roundtrip preserves query results exactly") {
     val dir = tmpDir()
@@ -276,18 +280,22 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(epochs.map(_.path).distinct.size === 1)
   }
 
-  /** Rewrite the committed config.parquet WITHOUT the analyzerVersion
-    * column, simulating a store persisted before analysis semantics
-    * were versioned (reads back as analyzer v1).
-    */
-  private def stripAnalyzerVersion(dir: String): Unit = {
-    val v = IndexStore.currentVersion(dir)
-    val p = f"$dir/_manifest/v$v%05d/config.parquet"
-    val old = spark.read.parquet(p).drop("analyzerVersion")
-    val rows = old.collect().toSeq
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), old.schema)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(p)
+  private def manifestPath(dir: String, v: Int) =
+    java.nio.file.Paths.get(f"$dir/_manifest/v$v%05d/manifest.json")
+
+  /** Rewrite the committed version's manifest.json through `edit`. */
+  private def editManifest(dir: String)(edit: ObjectNode => Unit): Unit = {
+    val p = manifestPath(dir, IndexStore.currentVersion(dir))
+    val root = json.readTree(java.nio.file.Files.readAllBytes(p)).asInstanceOf[ObjectNode]
+    edit(root)
+    java.nio.file.Files.write(p, json.writeValueAsBytes(root))
   }
+
+  /** Set the committed config's analyzerVersion, simulating a store
+    * persisted under older analysis semantics.
+    */
+  private def setAnalyzerVersion(dir: String, ver: Int): Unit =
+    editManifest(dir)(_.get("config").asInstanceOf[ObjectNode].put("analyzerVersion", ver))
 
   test("docIdStrategy round-trips through the manifest (scan store stays scan)") {
     val dir = tmpDir()
@@ -308,13 +316,13 @@ class IndexStoreSpec extends AnyFunSuite {
     // so load must throw instead of silently returning empty matches
     val dir = tmpDir()
     IndexStore.create(corpus, config.copy(tokenizers = Map("content" -> "en_stem")), dir)
-    stripAnalyzerVersion(dir)
+    setAnalyzerVersion(dir, 1)
     val ex = intercept[IllegalStateException](IndexStore.load(spark, dir))
     assert(ex.getMessage.contains("en_stem") && ex.getMessage.contains("rebuild"))
     // unaffected tokenizers (default analyzer) load fine from a v1 store
     val dir2 = tmpDir()
     IndexStore.create(corpus, config, dir2)
-    stripAnalyzerVersion(dir2)
+    setAnalyzerVersion(dir2, 1)
     assert(IndexStore.load(spark, dir2).numDocs === 100)
   }
 
@@ -323,24 +331,15 @@ class IndexStoreSpec extends AnyFunSuite {
     // raw/whitespace length caps (UTF-16 units -> codepoints) and the
     // persisted SymSpell variant granularity — a v2 store using those
     // tokenizers must rebuild, while default/en_stem-only v2 stores load.
-    def setVersion(dir: String, ver: Int): Unit = {
-      val v = IndexStore.currentVersion(dir)
-      val p = f"$dir/_manifest/v$v%05d/config.parquet"
-      val old = spark.read.parquet(p)
-        .withColumn("analyzerVersion", org.apache.spark.sql.functions.lit(ver))
-      val rows = old.collect().toSeq
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), old.schema)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(p)
-    }
     val corpus = CodeCorpus.generate(spark, 100, 2)
     val dir = tmpDir()
     IndexStore.create(corpus, config.copy(tokenizers = Map("path" -> "whitespace")), dir)
-    setVersion(dir, 2)
+    setAnalyzerVersion(dir, 2)
     val ex = intercept[IllegalStateException](IndexStore.load(spark, dir))
     assert(ex.getMessage.contains("whitespace") && ex.getMessage.contains("rebuild"))
     val dir2 = tmpDir()
     IndexStore.create(corpus, config.copy(tokenizers = Map("content" -> "en_stem")), dir2)
-    setVersion(dir2, 2)
+    setAnalyzerVersion(dir2, 2)
     assert(IndexStore.load(spark, dir2).numDocs === 100)
   }
 
@@ -397,17 +396,48 @@ class IndexStoreSpec extends AnyFunSuite {
     val dir = tmpDir()
     val corpus = CodeCorpus.generate(spark, 200, 2).cache()
     IndexStore.create(corpus, config, dir) // commits v1, no kv overrides
-    // simulate updateConfig crashing AFTER writing v2's kv.parquet but
-    // BEFORE the LATEST swap: the overrides were never committed
-    import spark.implicits._
-    Seq(("ghost", "value")).toDF("key", "value")
-      .coalesce(1).write.parquet(s"$dir/_manifest/v00002/kv.parquet")
+    // simulate updateConfig crashing AFTER writing v2's manifest.json
+    // but BEFORE the LATEST swap: the overrides were never committed
+    val ghost = json.readTree(java.nio.file.Files.readAllBytes(manifestPath(dir, 1)))
+      .asInstanceOf[ObjectNode]
+    ghost.putObject("kv").put("ghost", "value")
+    java.nio.file.Files.createDirectories(manifestPath(dir, 2).getParent)
+    java.nio.file.Files.write(manifestPath(dir, 2), json.writeValueAsBytes(ghost))
     assert(IndexStore.configKv(spark, dir) === Map.empty) // v1 still live
     // the next committed change lands at version 2: it must not adopt
     // the ghost overrides as its own
     IndexStore.appendEpoch(CodeCorpus.generateRange(spark, 200, 220, 2), dir, "snap-1")
     assert(IndexStore.currentVersion(dir) === 2)
     assert(IndexStore.configKv(spark, dir) === Map.empty)
+  }
+
+  test("a store holding only the old parquet manifest fails loudly and names rebuild") {
+    val dir = tmpDir()
+    IndexStore.create(CodeCorpus.generate(spark, 50, 2), config, dir, "snap-0")
+    // the older layout: per-version epochs/config/checkpoints parquet
+    // files and no manifest.json
+    val md = manifestPath(dir, 1).getParent.toString
+    val (epochs, _, cps) = IndexStore.readManifest(spark, dir)
+    java.nio.file.Files.delete(manifestPath(dir, 1))
+    spark.createDataset(epochs)(org.apache.spark.sql.Encoders.product[IndexStore.EpochMeta])
+      .write.parquet(s"$md/epochs.parquet")
+    spark.createDataset(Seq(IndexStore.ConfigRow(config.keyCols, config.fields,
+      config.shardDocs, config.buildPartitions)))(
+      org.apache.spark.sql.Encoders.product[IndexStore.ConfigRow])
+      .write.parquet(s"$md/config.parquet")
+    spark.createDataset(cps)(org.apache.spark.sql.Encoders.product[IndexStore.CheckpointRow])
+      .write.parquet(s"$md/checkpoints.parquet")
+    val reads: Seq[() => Any] = Seq(
+      () => IndexStore.load(spark, dir),
+      () => IndexStore.readManifest(spark, dir),
+      () => IndexStore.configKv(spark, dir),
+      () => IndexStore.appendEpoch(CodeCorpus.generateRange(spark, 50, 60, 2), dir, "snap-1"))
+    reads.foreach { read =>
+      val ex = intercept[IllegalStateException](read())
+      assert(ex.getMessage.contains("parquet manifest") && ex.getMessage.contains("rebuild"),
+        ex.getMessage)
+    }
+    assert(IndexStore.currentVersion(dir) === 1)
   }
 
   test("create() over a previous store dir clears stale manifests/lineage/segments") {

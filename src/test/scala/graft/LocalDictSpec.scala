@@ -33,24 +33,25 @@ class LocalDictSpec extends AnyFunSuite {
       (5L, "hello merge typo tzpo tipo"))
       .toDF("id", "content")
   }
-  lazy val index = IndexBuilder.build(docs,
+  private def buildIndex(df: org.apache.spark.sql.DataFrame) = IndexBuilder.build(df,
     IndexConfig(Seq("id"), Seq("content"), shardDocs = 4, buildPartitions = 4,
       tokenizers = Map("content" -> "whitespace")))
+  lazy val index = buildIndex(docs)
 
   lazy val engineLocal: QueryEngine = {
     val e = new QueryEngine(index)
     assert(e.localDictActive, "snapshot should fit under the default cap")
     e
   }
+  /** The same index built on a session clone whose cap is 0: the engine
+    * reads the cap from its index's session, so the shared test
+    * session's conf is never written.
+    */
   lazy val engineDist: QueryEngine = {
-    val e = new QueryEngine(index)
-    val old = spark.conf.getOption("graft.dict.localMaxTerms")
-    spark.conf.set("graft.dict.localMaxTerms", "0")
-    try assert(!e.localDictActive, "cap 0 must disable the snapshot")
-    finally old match {
-      case Some(v) => spark.conf.set("graft.dict.localMaxTerms", v)
-      case None => spark.conf.unset("graft.dict.localMaxTerms")
-    }
+    val s = spark.newSession()
+    s.conf.set("graft.dict.localMaxTerms", "0")
+    val e = new QueryEngine(buildIndex(s.createDataFrame(docs.rdd, docs.schema)))
+    assert(!e.localDictActive, "cap 0 must disable the snapshot")
     e
   }
 
