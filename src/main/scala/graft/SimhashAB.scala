@@ -3,14 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.ops.OpsSql._
-
 /** Same-session palindromic A/B for a simhash input `spread` (one
   * JVM, interleaved A,B,...,B,A — the only comparison this host's
   * regime swings permit, CLAUDE.md). Variant A = the simhash pipeline
-  * WITH a spread repartition replicated inline (the rejected shape);
-  * variant B = Dedup.simhash as shipped (no spread — the A/B's result
-  * is why). Diagnostic only; never driver-sourced.
+  * (Dedup.simhash) over a spread-repartitioned source (the rejected
+  * shape); variant B = Dedup.simhash as shipped (no spread — the A/B's
+  * result is why). Diagnostic only; never driver-sourced.
   */
 object SimhashAB {
   def main(args: Array[String]): Unit = {
@@ -29,19 +27,12 @@ object SimhashAB {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
 
     def withSpread(): Long = {
-      // the rejected variant, replicated inline: round-robin the
-      // one-split source across defaultParallelism before tokenize
-      val spreadDocs = docs.select(col("doc_id").as("id"), col("text"))
+      // the rejected variant: round-robin the one-split source across
+      // defaultParallelism, then the SAME pipeline as B, so the arms
+      // differ only by the spread
+      val spreadDocs = docs.select(col("doc_id"), col("text"))
         .repartition(spark.sparkContext.defaultParallelism)
-      val tf = spreadDocs.select(col("id"), explode(tokens(col("text"))).as("term"))
-        .groupBy("id", "term").agg(count(lit(1)).as("tf"))
-        .withColumn("h", hash60(col("term")))
-      val bitSums = (0 until 60).map(j =>
-        sum(expr(s"((shiftright(h, $j) & 1) * 2 - 1) * tf")).as(s"b$j"))
-      val agg = tf.groupBy("id").agg(bitSums.head, bitSums.tail: _*)
-      val hashExpr = (0 until 60).map(j =>
-        s"(CASE WHEN b$j > 0 THEN shiftleft(cast(1 AS BIGINT), $j) ELSE 0 END)").mkString(" + ")
-      agg.select(col("id"), expr(hashExpr).as("simhash")).orderBy("id").count()
+      graft.ops.Dedup.simhash(spreadDocs, "doc_id", "text").count()
     }
     def noSpread(): Long = graft.ops.Dedup.simhash(docs, "doc_id", "text").count()
 

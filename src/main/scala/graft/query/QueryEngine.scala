@@ -1,6 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -685,51 +685,26 @@ final class QueryEngine(val index: BuiltIndex) {
 
   /** (docId, score float) — rank-identity path. Block-max WAND handles
     * eligible queries by default — single sum-scored groups AND
-    * all-required conjunctions (the reference's flagship WHERE shape) —
-    * and is exact w.r.t. the exhaustive scorer (WandSpec).
+    * all-required conjunctions (the reference's flagship WHERE shape),
+    * behind Wand.route's cost gates — and is exact w.r.t. the
+    * exhaustive scorer (WandSpec).
     */
   def searchF32(clauses: Seq[SearchClause], k: Int = DefaultLimit, useWand: Boolean = true,
       wandStats: Option[Wand.Stats] = None): DataFrame = {
     // LIMIT 0 is legal SQL and must return zero rows, not crash the
-    // WAND tasks (PriorityQueue rejects initialCapacity < 1)
-    if (k <= 0) return emptyResultF32
+    // WAND tasks (a zero-capacity shard heap cannot take an offer)
+    if (k <= 0) return emptyResult[ScoredDocF32]
     def build: DataFrame = {
       val cq = compile(clauses)
-      if (cq.terms.isEmpty) return emptyResultF32
-      val scored =
-        if (useWand && cq.groups.size == 1 && !cq.groups.head.constScore && disjSelective(cq))
-          Wand.topK(index, cq, k, deletesDs, wandStats)
-        else if (useWand && cq.groups.size > 1 && cq.groups.forall(_.required) && conjSelective(cq))
-          Wand.topKConj(index, cq, k, deletesDs, wandStats)
-        else Scorer.scoreF32(index, cq, deletesDs)
+      if (cq.terms.isEmpty) return emptyResult[ScoredDocF32]
+      val scored = (if (useWand) Wand.route(cq, index.numDocs) else 2) match {
+        case 0 => Wand.topK(index, cq, k, deletesDs, wandStats)
+        case 1 => Wand.topKConj(index, cq, k, deletesDs, wandStats)
+        case _ => Scorer.scoreF32(index, cq, deletesDs)
+      }
       Scorer.topK(scored.toDF("docId", "score"), k)
     }
     if (wandStats.isEmpty) cachedPlan((clauses, k, useWand))(build) else build
-  }
-
-  /** Cost gate for single-group (disjunction) WAND, mirroring
-    * conjSelective: block-max skips happen when at least one term is
-    * selective — its high-idf hits push the top-k threshold above the
-    * dense terms' block maxima (93% of the hot term's blocks skipped on
-    * the rare+hot shape at 2M docs, BENCH.md). A uniformly dense
-    * disjunction (every term hot) never lifts the threshold past any
-    * block max, skips nothing, and pays pure cursor bookkeeping
-    * (measured 0.94x vs exhaustive) — route it to the exhaustive
-    * hash scorer instead.
-    */
-  private def disjSelective(cq: CompiledQuery): Boolean =
-    cq.terms.map(_.df).min * 4 <= index.numDocs
-
-  /** Cost gate for conjunction WAND: leapfrog + block-max pays off when
-    * at least one required group is selective (the intersection is
-    * sparse and the other groups' blocks get skipped between its
-    * postings — measured 1.8x at 2M docs). A dense-x-dense conjunction
-    * has nothing to skip and the per-candidate bookkeeping just loses
-    * to the exhaustive hash scorer (measured +24%), so it stays there.
-    */
-  private def conjSelective(cq: CompiledQuery): Boolean = {
-    val minGroupDf = cq.groups.map(g => cq.terms.filter(_.group == g.id).map(_.df).sum).min
-    minGroupDf * 4 <= index.numDocs
   }
 
   /** (docId, score double) — oracle-parity path. Top-k selection runs
@@ -767,7 +742,7 @@ final class QueryEngine(val index: BuiltIndex) {
     // closure — bounded here so a runaway batch degrades loudly into
     // "chunk your batch", not into silent multi-MB task binaries
     require(queries.size <= MaxBatchWidth, s"batch wider than $MaxBatchWidth: chunk it")
-    if (k <= 0) return emptyResultQF32
+    if (k <= 0) return emptyResult[ScoredQDocF32]
     // the split-floor conf resolves BEFORE the plan-cache lookup and
     // rides the key: a conf flip between identical batches must
     // re-plan, not serve the other regime's routing
@@ -781,7 +756,7 @@ final class QueryEngine(val index: BuiltIndex) {
       wandStats: Option[Wand.Stats], splitMinDocs: Long): DataFrame = {
     val cqs = queries.map(_._1).zip(compileMany(queries.map(_._2)))
     val nonEmpty = cqs.filter(_._2.terms.nonEmpty)
-    if (nonEmpty.isEmpty) return emptyResultQF32
+    if (nonEmpty.isEmpty) return emptyResult[ScoredQDocF32]
     // partition the batch by WAND routability: sparse queries take the
     // shared-cache pruned pass (Wand.topKMany), dense ones the
     // exhaustive hash replay (Scorer.scoreManyF32) — per-query WAND
@@ -824,7 +799,7 @@ final class QueryEngine(val index: BuiltIndex) {
     require(queries.size <= MaxBatchWidth, s"batch wider than $MaxBatchWidth: chunk it")
     val cqs = queries.map(_._1).zip(compileMany(queries.map(_._2)))
     val nonEmpty = cqs.filter(_._2.terms.nonEmpty)
-    if (nonEmpty.isEmpty) return emptyResultQF64
+    if (nonEmpty.isEmpty) return emptyResult[ScoredQDocF64]
     val scored = Scorer.scoreManyF64(index, nonEmpty, k, deletesDs).toDF("qid", "docId", "score")
     Scorer.topKPerQuery(scored, k, round(col("score"), 4))
   }
@@ -832,7 +807,7 @@ final class QueryEngine(val index: BuiltIndex) {
   /** Unlimited (docId, score float) match set on the rank-identity path. */
   def matchF32(clauses: Seq[SearchClause]): DataFrame = {
     val cq = compile(clauses)
-    if (cq.terms.isEmpty) return emptyResultF32
+    if (cq.terms.isEmpty) return emptyResult[ScoredDocF32]
     Scorer.scoreF32(index, cq, deletesDs).toDF("docId", "score")
   }
 
@@ -841,7 +816,7 @@ final class QueryEngine(val index: BuiltIndex) {
     */
   def matchF64(clauses: Seq[SearchClause], threshold: Option[Double] = None): DataFrame = {
     val cq = compile(clauses)
-    if (cq.terms.isEmpty) return emptyResultF64
+    if (cq.terms.isEmpty) return emptyResult[ScoredDocF64]
     val scored = Scorer.scoreF64(index, cq, deletesDs).toDF("docId", "score")
     threshold.map(t => scored.filter(col("score") > lit(t))).getOrElse(scored)
   }
@@ -895,29 +870,9 @@ final class QueryEngine(val index: BuiltIndex) {
       .groupBy(col("facet")).agg(count(lit(1)).as("cnt"))
   }
 
-  private def emptyResultF32: DataFrame = {
-    val spark = index.spark
-    import spark.implicits._
-    spark.emptyDataset[ScoredDocF32].toDF("docId", "score")
-  }
-
-  private def emptyResultF64: DataFrame = {
-    val spark = index.spark
-    import spark.implicits._
-    spark.emptyDataset[ScoredDocF64].toDF("docId", "score")
-  }
-
-  private def emptyResultQF32: DataFrame = {
-    val spark = index.spark
-    import spark.implicits._
-    spark.emptyDataset[ScoredQDocF32].toDF("qid", "docId", "score")
-  }
-
-  private def emptyResultQF64: DataFrame = {
-    val spark = index.spark
-    import spark.implicits._
-    spark.emptyDataset[ScoredQDocF64].toDF("qid", "docId", "score")
-  }
+  /** Zero-row frame with the schema of the scoring path it stands in for. */
+  private def emptyResult[T <: Product: scala.reflect.runtime.universe.TypeTag]: DataFrame =
+    index.spark.emptyDataset(Encoders.product[T]).toDF()
 }
 
 /** Builds the SymSpell delete-variant dictionary from a term-stats

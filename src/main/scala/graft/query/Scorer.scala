@@ -2,8 +2,9 @@ package graft.query
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
+import scala.reflect.runtime.universe.TypeTag
 
-import graft.index.{BuiltIndex, PostingCodec, PostingRow}
+import graft.index.{BuiltIndex, DecodedBlock, PostingCodec, PostingRow}
 
 /** A compiled search term: one dictionary term contributing to one
   * clause group. `weightF32` is the full precomputed BM25 term weight
@@ -140,52 +141,114 @@ object Scorer {
     }
   }
 
-  /** Exhaustive f32 path: tantivy-arithmetic scores, deterministic
-    * accumulation order (groups/terms sorted), exact conjunction masks.
+  /** Exhaustive f32 path: tantivy-arithmetic scores for every matching
+    * doc, accumulated by the one kernel (`replay`).
     */
   def scoreF32(index: BuiltIndex, cq: CompiledQuery,
       deletes: Option[Dataset[Long]] = None): Dataset[ScoredDocF32] = {
-    val spark = index.spark
-    import spark.implicits._
-    val weights: Map[(String, String, Int), Float] =
-      cq.terms.map(t => (t.field, t.term, t.group) -> t.weightF32).toMap
-    val groupOf: Map[(String, String), Seq[Int]] =
-      cq.terms.groupBy(t => (t.field, t.term)).map { case (k, v) => k -> v.map(_.group).sorted }
-    val constMask = cq.groups.filter(_.constScore).map(g => 1 << g.id).sum
-    val reqMask = cq.requiredMask
-    val caches: Map[String, Array[Float]] =
-      cq.terms.map(_.field).distinct.map(f => f -> Bm25.normCacheF32(index.avgFieldnormF32(f))).toMap
-    val shardDocs = index.config.shardDocs // capture: closures must not drag BuiltIndex in
-    shardGrouped(index, cq.terms, deletes) { (rows, dels) =>
-      mergeShardF32(rows, weights, groupOf, caches, constMask, reqMask, dels, shardDocs)
-    }
+    val caches = normCachesF32(index, cq.terms)
+    scoreAll(index, cq, deletes)(new AccF32(_, caches))(
+      (acc, docId, o) => ScoredDocF32(docId, acc.score(o)))
   }
 
-  private def mergeShardF32(
-      rows: Array[PostingRow],
-      weights: Map[(String, String, Int), Float],
-      groupOf: Map[(String, String), Seq[Int]],
-      caches: Map[String, Array[Float]],
+  /** Oracle-parity f64 path: the same kernel in pure double math
+    * (mirrors the DuckDB oracle SQL exactly; see SparkEntry.oracleSql).
+    */
+  def scoreF64(index: BuiltIndex, cq: CompiledQuery,
+      deletes: Option[Dataset[Long]] = None): Dataset[ScoredDocF64] = {
+    val caches = normCachesF64(index, cq.terms)
+    scoreAll(index, cq, deletes)(new AccF64(_, caches))(
+      (acc, docId, o) => ScoredDocF64(docId, acc.score(o)))
+  }
+
+  /** Batched multi-query scoring — the cluster THROUGHPUT path: ONE
+    * pass over the union of all queries' matched postings, each posting
+    * row decoded once per shard and replayed per query; shard-local
+    * per-query heaps bound the output at (#shards x #queries x k) rows,
+    * so no stage ever carries a corpus-sized per-query match set.
+    */
+  def scoreManyF32(index: BuiltIndex, queries: Seq[(Int, CompiledQuery)], k: Int,
+      deletes: Option[Dataset[Long]] = None): Dataset[ScoredQDocF32] = {
+    val caches = normCachesF32(index, queries.flatMap(_._2.terms))
+    scoreMany(index, queries, k, deletes)(new AccF32(_, caches))(
+      (qid, docId, s) => ScoredQDocF32(qid, docId, s.toFloat))
+  }
+
+  /** f64 batched path (oracle parity): shard candidates selected under
+    * the ROUNDED total order (round(score,4) desc, docId asc) the oracle
+    * presentation uses.
+    */
+  def scoreManyF64(index: BuiltIndex, queries: Seq[(Int, CompiledQuery)], k: Int,
+      deletes: Option[Dataset[Long]] = None): Dataset[ScoredQDocF64] = {
+    val caches = normCachesF64(index, queries.flatMap(_._2.terms))
+    scoreMany(index, queries, k, deletes)(new AccF64(_, caches))(ScoredQDocF64(_, _, _))
+  }
+
+  /** Global top-k with the engine's total order (score desc, docId asc
+    * — tantivy breaks score ties by doc address; we pin docId,
+    * SURVEY.md section 2.7 T1). Catalyst plans TakeOrderedAndProject:
+    * per-partition heaps + driver merge = distributed top-k.
+    */
+  def topK(scored: DataFrame, k: Int): DataFrame =
+    scored.orderBy(col("score").desc, col("docId").asc).limit(k)
+
+  // ------------------------------------------------- the exhaustive kernel
+
+  /** Driver-side replay plan for ONE query: its distinct (field, term)
+    * pairs in the exact order the kernel accumulates them — (min group,
+    * field, term) — each pair's clause groups ascending, its compiled
+    * terms, the const/required group masks and the group count.
+    */
+  private[query] final case class QueryPlan(
+      qid: Int,
+      order: Array[(String, String)],
+      groupsOf: Map[(String, String), Array[Int]],
+      terms: Map[(String, String, Int), CompiledTerm],
       constMask: Int,
       reqMask: Int,
-      deleted: Set[Long],
-      shardDocs: Int): Iterator[ScoredDocF32] = {
-    // deterministic accumulation order: (minGroup, field, term)
-    val sorted = rows.sortBy(p => (groupOf((p.field, p.term)).min, p.field, p.term))
-    if (sorted.isEmpty) return Iterator.empty
-    // a shard is a contiguous docId range of width shardDocs: dense
-    // flat arrays indexed by (docId - base) beat a boxing HashMap by
-    // an order of magnitude in the per-hit hot loop
-    val base = sorted(0).shard.toLong * shardDocs
+      nGroups: Int)
+
+  private[query] def mkPlan(qid: Int, cq: CompiledQuery): QueryPlan = {
+    val groupsOf = cq.terms.groupBy(t => (t.field, t.term))
+      .map { case (key, ts) => key -> ts.map(_.group).distinct.sorted.toArray }
+    val order = groupsOf.keys.toArray.sortBy(key => (groupsOf(key)(0), key._1, key._2))
+    QueryPlan(qid, order, groupsOf,
+      cq.terms.map(t => (t.field, t.term, t.group) -> t).toMap,
+      cq.groups.filter(_.constScore).map(g => 1 << g.id).sum,
+      cq.requiredMask, cq.groups.size)
+  }
+
+  /** Dense per-shard accumulator: a shard is a contiguous docId range
+    * of width shardDocs, so flat arrays indexed by (docId - base) beat a
+    * boxing HashMap by an order of magnitude in the per-hit loop; `mask`
+    * holds each doc's matched clause groups. Exactly two final
+    * implementations, one per precision, chosen once per (shard, query):
+    * the kernel's per-row call site is at most bimorphic and each
+    * per-block loop is monomorphic.
+    */
+  private[query] sealed abstract class ShardAcc(val shardDocs: Int) {
+    final val mask = new Array[Int](shardDocs)
+    /** Accumulate one posting row's blocks for the clause group `gBit`. */
+    def add(blocks: Array[DecodedBlock], base: Long, t: CompiledTerm, gBit: Int,
+        isConst: Boolean): Unit
+    def clear(): Unit
+    /** Offer doc offset `o` to a shard heap under this precision's order. */
+    def offer(heap: TopKHeap, docId: Long, o: Int): Unit
+    final def isHit(o: Int, reqMask: Int, docId: Long, deleted: Set[Long]): Boolean =
+      mask(o) != 0 && (mask(o) & reqMask) == reqMask && !deleted.contains(docId)
+  }
+
+  /** tantivy f32 arithmetic (rank identity); heap key = the raw score. */
+  private[query] final class AccF32(shardDocs: Int, caches: Map[String, Array[Float]])
+      extends ShardAcc(shardDocs) {
     val score = new Array[Float](shardDocs)
-    val mask = new Array[Int](shardDocs)
-    sorted.foreach { p =>
-      val cache = caches(p.field)
-      val dec = PostingCodec.decodeAll(p.bytes, p.blockOffset, p.blockLast)
-      groupOf((p.field, p.term)).foreach { g =>
-        val gBit = 1 << g
-        val isConst = (constMask & gBit) != 0
-        val w = weights((p.field, p.term, g))
+    def add(blocks: Array[DecodedBlock], base: Long, t: CompiledTerm, gBit: Int,
+        isConst: Boolean): Unit = {
+      val w = t.weightF32
+      val cache = caches(t.field)
+      var b = 0
+      while (b < blocks.length) {
+        val dec = blocks(b)
         var i = 0
         while (i < dec.docIds.length) {
           val o = (dec.docIds(i) - base).toInt
@@ -197,55 +260,27 @@ object Scorer {
           mask(o) |= gBit
           i += 1
         }
+        b += 1
       }
     }
-    (0 until shardDocs).iterator
-      .filter(o => (mask(o) & reqMask) == reqMask && mask(o) != 0 && !deleted.contains(base + o))
-      .map(o => ScoredDocF32(base + o, score(o)))
+    def clear(): Unit = { java.util.Arrays.fill(score, 0.0f); java.util.Arrays.fill(mask, 0) }
+    def offer(heap: TopKHeap, docId: Long, o: Int): Unit =
+      heap.offer(score(o).toDouble, docId, score(o).toDouble)
   }
 
-  /** Oracle-parity f64 path: identical structure, pure double math
-    * (mirrors the DuckDB oracle SQL exactly; see SparkEntry.oracleSql).
+  /** DuckDB-oracle f64 arithmetic; heap key = round4 of the score (the
+    * oracle's presentation order), raw score carried alongside.
     */
-  def scoreF64(index: BuiltIndex, cq: CompiledQuery,
-      deletes: Option[Dataset[Long]] = None): Dataset[ScoredDocF64] = {
-    val spark = index.spark
-    import spark.implicits._
-    val weights: Map[(String, String, Int), Double] =
-      cq.terms.map(t => (t.field, t.term, t.group) -> t.weightF64).toMap
-    val groupOf: Map[(String, String), Seq[Int]] =
-      cq.terms.groupBy(t => (t.field, t.term)).map { case (k, v) => k -> v.map(_.group).sorted }
-    val constMask = cq.groups.filter(_.constScore).map(g => 1 << g.id).sum
-    val reqMask = cq.requiredMask
-    val caches: Map[String, Array[Double]] =
-      cq.terms.map(_.field).distinct.map(f => f -> Bm25.normCacheF64(index.avgFieldnormF64(f))).toMap
-    val shardDocs = index.config.shardDocs
-    shardGrouped(index, cq.terms, deletes) { (rows, dels) =>
-      mergeShardF64(rows, weights, groupOf, caches, constMask, reqMask, dels, shardDocs)
-    }
-  }
-
-  private def mergeShardF64(
-      rows: Array[PostingRow],
-      weights: Map[(String, String, Int), Double],
-      groupOf: Map[(String, String), Seq[Int]],
-      caches: Map[String, Array[Double]],
-      constMask: Int,
-      reqMask: Int,
-      deleted: Set[Long],
-      shardDocs: Int): Iterator[ScoredDocF64] = {
-    val sorted = rows.sortBy(p => (groupOf((p.field, p.term)).min, p.field, p.term))
-    if (sorted.isEmpty) return Iterator.empty
-    val base = sorted(0).shard.toLong * shardDocs
+  private[query] final class AccF64(shardDocs: Int, caches: Map[String, Array[Double]])
+      extends ShardAcc(shardDocs) {
     val score = new Array[Double](shardDocs)
-    val mask = new Array[Int](shardDocs)
-    sorted.foreach { p =>
-      val cache = caches(p.field)
-      val dec = PostingCodec.decodeAll(p.bytes, p.blockOffset, p.blockLast)
-      groupOf((p.field, p.term)).foreach { g =>
-        val gBit = 1 << g
-        val isConst = (constMask & gBit) != 0
-        val w = weights((p.field, p.term, g))
+    def add(blocks: Array[DecodedBlock], base: Long, t: CompiledTerm, gBit: Int,
+        isConst: Boolean): Unit = {
+      val w = t.weightF64
+      val cache = caches(t.field)
+      var b = 0
+      while (b < blocks.length) {
+        val dec = blocks(b)
         var i = 0
         while (i < dec.docIds.length) {
           val o = (dec.docIds(i) - base).toInt
@@ -257,52 +292,124 @@ object Scorer {
           mask(o) |= gBit
           i += 1
         }
+        b += 1
       }
     }
-    (0 until shardDocs).iterator
-      .filter(o => (mask(o) & reqMask) == reqMask && mask(o) != 0 && !deleted.contains(base + o))
-      .map(o => ScoredDocF64(base + o, score(o)))
+    def clear(): Unit = { java.util.Arrays.fill(score, 0.0d); java.util.Arrays.fill(mask, 0) }
+    def offer(heap: TopKHeap, docId: Long, o: Int): Unit =
+      heap.offer(round4(score(o)), docId, score(o))
   }
 
-  /** Global top-k with the engine's total order (score desc, docId asc
-    * — tantivy breaks score ties by doc address; we pin docId,
-    * SURVEY.md section 2.7 T1). Catalyst plans TakeOrderedAndProject:
-    * per-partition heaps + driver merge = distributed top-k.
+  /** THE exhaustive accumulate loop: every score not produced by a WAND
+    * walk (scoreF32/F64, scoreManyF32/F64 and Wand.topKMany's exhaustive
+    * route) comes out of it. Replays one query's rows of one shard into
+    * `acc` in the order f32 rank identity depends on: keys in the plan's
+    * (min group, field, term) order, a key's rows in arrival order (one
+    * per epoch segment), groups ascending, docIds ascending. `blocksOf`
+    * decodes a row, or serves it from a shared cache — the caller owns
+    * decode accounting.
     */
-  def topK(scored: DataFrame, k: Int): DataFrame =
-    scored.orderBy(col("score").desc, col("docId").asc).limit(k)
-
-  // ------------------------------------------------------- batched path
-
-  /** Driver-side replay plan for ONE query of a batch: its distinct
-    * (field, term) pairs in the exact order the single-query merge
-    * accumulates them — (min group, field, term) — so per-query f32
-    * sums are bit-identical to scoreF32 (accumulation order is an
-    * engine invariant; see mergeShardF32).
-    */
-  private final case class QueryPlan[@specialized(Float, Double) W](
-      qid: Int,
-      order: Array[(String, String)],
-      groupsOf: Map[(String, String), Array[Int]],
-      weights: Map[(String, String, Int), W],
-      constMask: Int,
-      reqMask: Int)
-
-  private def mkPlan[W](qid: Int, cq: CompiledQuery,
-      weightOf: CompiledTerm => W): QueryPlan[W] = {
-    val groupsOf = cq.terms.groupBy(t => (t.field, t.term))
-      .map { case (key, ts) => key -> ts.map(_.group).distinct.sorted.toArray }
-    val order = groupsOf.keys.toArray.sortBy(key => (groupsOf(key)(0), key._1, key._2))
-    QueryPlan(qid, order, groupsOf,
-      cq.terms.map(t => (t.field, t.term, t.group) -> weightOf(t)).toMap,
-      cq.groups.filter(_.constScore).map(g => 1 << g.id).sum,
-      cq.requiredMask)
+  private[query] def replay(q: QueryPlan, rowsOfKey: Map[(String, String), Array[PostingRow]],
+      blocksOf: PostingRow => Array[DecodedBlock], base: Long, acc: ShardAcc): Unit = {
+    acc.clear()
+    q.order.foreach { key =>
+      rowsOfKey.get(key).foreach(_.foreach { p =>
+        val blocks = blocksOf(p)
+        q.groupsOf(key).foreach { g =>
+          val gBit = 1 << g
+          acc.add(blocks, base, q.terms((key._1, key._2, g)), gBit, (q.constMask & gBit) != 0)
+        }
+      })
+    }
   }
+
+  /** `replay`, then the query's shard top-k under the accumulator's
+    * total order; `emit` receives (docId, raw score) per kept doc.
+    */
+  private[query] def replayTopK(q: QueryPlan, rowsOfKey: Map[(String, String), Array[PostingRow]],
+      blocksOf: PostingRow => Array[DecodedBlock], base: Long, acc: ShardAcc,
+      deleted: Set[Long], k: Int)(emit: (Long, Double) => Unit): Unit = {
+    replay(q, rowsOfKey, blocksOf, base, acc)
+    val heap = new TopKHeap(math.max(1, math.min(k, acc.shardDocs)))
+    var o = 0
+    while (o < acc.shardDocs) {
+      if (acc.isHit(o, q.reqMask, base + o, deleted)) acc.offer(heap, base + o, o)
+      o += 1
+    }
+    heap.foreachKept(emit)
+  }
+
+  private def scoreAll[A <: ShardAcc, T <: Product: TypeTag](index: BuiltIndex, cq: CompiledQuery,
+      deletes: Option[Dataset[Long]])(newAcc: Int => A)(out: (A, Long, Int) => T): Dataset[T] = {
+    val plan = mkPlan(0, cq)
+    val shardDocs = index.config.shardDocs // capture: closures must not drag BuiltIndex in
+    shardGrouped(index, cq.terms, deletes) { (rows, dels) =>
+      if (rows.isEmpty) Iterator.empty
+      else {
+        val base = rows(0).shard.toLong * shardDocs
+        val acc = newAcc(shardDocs)
+        replay(plan, rowsByKey(rows), decodeRow, base, acc)
+        Iterator.range(0, shardDocs).filter(o => acc.isHit(o, plan.reqMask, base + o, dels))
+          .map(o => out(acc, base + o, o))
+      }
+    }(Encoders.product[T])
+  }
+
+  private def scoreMany[T <: Product: TypeTag](index: BuiltIndex,
+      queries: Seq[(Int, CompiledQuery)], k: Int,
+      deletes: Option[Dataset[Long]])(newAcc: Int => ShardAcc)(
+      out: (Int, Long, Double) => T): Dataset[T] = {
+    val plans = queries.map { case (qid, cq) => mkPlan(qid, cq) }.toArray
+    val shardDocs = index.config.shardDocs
+    shardGrouped(index, queries.flatMap(_._2.terms), deletes) { (rows, dels) =>
+      if (rows.isEmpty) Iterator.empty
+      else {
+        // each matched row decodes ONCE; every subscribing query replays it
+        val decoded = new java.util.IdentityHashMap[PostingRow, Array[DecodedBlock]]()
+        val blocksOf = (p: PostingRow) =>
+          decoded.computeIfAbsent(p, (r: PostingRow) => decodeRow(r))
+        val rowsOfKey = rowsByKey(rows)
+        val base = rows(0).shard.toLong * shardDocs
+        val acc = newAcc(shardDocs)
+        val res = Seq.newBuilder[T]
+        plans.foreach { q =>
+          if (q.order.exists(rowsOfKey.contains))
+            replayTopK(q, rowsOfKey, blocksOf, base, acc, dels, k)(
+              (d, s) => res += out(q.qid, d, s))
+        }
+        res.result().iterator
+      }
+    }(Encoders.product[T])
+  }
+
+  /** A shard's rows keyed by (field, term), each key's rows in arrival
+    * order (groupBy keeps encounter order within a group).
+    */
+  private[query] def rowsByKey(rows: Array[PostingRow]): Map[(String, String), Array[PostingRow]] =
+    rows.groupBy(p => (p.field, p.term))
+
+  private[query] def decodeBlock(p: PostingRow, b: Int): DecodedBlock =
+    PostingCodec.decodeBlock(p.bytes, p.blockOffset(b), if (b == 0) -1L else p.blockLast(b - 1))
+
+  private def decodeRow(p: PostingRow): Array[DecodedBlock] =
+    Array.tabulate(p.blockOffset.length)(decodeBlock(p, _))
+
+  /** Per-field BM25 norm caches, computed driver-side: closures carry
+    * the arrays, never the BuiltIndex.
+    */
+  private[query] def normCachesF32(index: BuiltIndex,
+      terms: Seq[CompiledTerm]): Map[String, Array[Float]] =
+    terms.map(_.field).distinct.map(f => f -> Bm25.normCacheF32(index.avgFieldnormF32(f))).toMap
+
+  private def normCachesF64(index: BuiltIndex,
+      terms: Seq[CompiledTerm]): Map[String, Array[Double]] =
+    terms.map(_.field).distinct.map(f => f -> Bm25.normCacheF64(index.avgFieldnormF64(f))).toMap
 
   /** Bounded per-(query, shard) top-k selection under the engine total
     * order (sort key desc, docId asc): a min-heap rooted at the worst
-    * kept candidate. `raw` carries the unrounded score when the sort
-    * key is a rounded form of it (f64 oracle order).
+    * kept candidate — the exhaustive kernel's and every WAND walk's.
+    * `raw` carries the unrounded score when the sort key is a rounded
+    * form of it (f64 oracle order).
     */
   private[query] final class TopKHeap(k: Int) {
     private val ks = new Array[Double](k)
@@ -335,6 +442,8 @@ object Scorer {
       val td = ds(i); ds(i) = ds(j); ds(j) = td
       val tr = raw(i); raw(i) = raw(j); raw(j) = tr
     }
+    /** Sort key of the worst kept candidate; -inf until the heap is full. */
+    def threshold: Double = if (n < k) Double.NegativeInfinity else ks(0)
     def foreachKept(f: (Long, Double) => Unit): Unit = {
       var i = 0; while (i < n) { f(ds(i), raw(i)); i += 1 }
     }
@@ -347,167 +456,6 @@ object Scorer {
     */
   @inline private def round4(x: Double): Double =
     java.math.BigDecimal.valueOf(x).setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
-
-  /** Batched multi-query scoring — the cluster THROUGHPUT path: ONE
-    * pass over the union of all queries' matched postings, each posting
-    * block decoded once per shard and replayed per query; shard-local
-    * per-query heaps bound the output at (#shards x #queries x k) rows,
-    * so no stage ever carries a corpus-sized per-query match set.
-    */
-  def scoreManyF32(index: BuiltIndex, queries: Seq[(Int, CompiledQuery)], k: Int,
-      deletes: Option[Dataset[Long]] = None): Dataset[ScoredQDocF32] = {
-    val spark = index.spark
-    import spark.implicits._
-    val plans = queries.map { case (qid, cq) => mkPlan(qid, cq, (t: CompiledTerm) => t.weightF32) }.toArray
-    val allTerms = queries.flatMap(_._2.terms)
-    val caches: Map[String, Array[Float]] =
-      allTerms.map(_.field).distinct.map(f => f -> Bm25.normCacheF32(index.avgFieldnormF32(f))).toMap
-    val shardDocs = index.config.shardDocs
-    shardGrouped(index, allTerms, deletes) { (rows, dels) =>
-      mergeShardManyF32(rows, plans, caches, dels, shardDocs, k)
-    }
-  }
-
-  private def mergeShardManyF32(
-      rows: Array[PostingRow],
-      plans: Array[QueryPlan[Float]],
-      caches: Map[String, Array[Float]],
-      deleted: Set[Long],
-      shardDocs: Int,
-      k: Int): Iterator[ScoredQDocF32] = {
-    // decode each matched posting ONCE; every subscribing query replays
-    // from this map. A (field, term) key can hold several rows (one per
-    // epoch segment) — kept in arrival order, matching the stable sort
-    // of the single-query merge.
-    val decoded = new scala.collection.mutable.LinkedHashMap[
-      (String, String), scala.collection.mutable.ArrayBuffer[graft.index.DecodedBlock]]
-    var base = -1L
-    rows.foreach { p =>
-      if (base < 0) base = p.shard.toLong * shardDocs
-      decoded.getOrElseUpdate((p.field, p.term), scala.collection.mutable.ArrayBuffer.empty) +=
-        PostingCodec.decodeAll(p.bytes, p.blockOffset, p.blockLast)
-    }
-    if (decoded.isEmpty) return Iterator.empty
-    val score = new Array[Float](shardDocs)
-    val mask = new Array[Int](shardDocs)
-    val out = Seq.newBuilder[ScoredQDocF32]
-    plans.foreach { q =>
-      if (q.order.exists(decoded.contains)) {
-        java.util.Arrays.fill(score, 0.0f)
-        java.util.Arrays.fill(mask, 0)
-        q.order.foreach { key =>
-          decoded.get(key).foreach { blocks =>
-            val cache = caches(key._1)
-            blocks.foreach { dec =>
-              q.groupsOf(key).foreach { g =>
-                val gBit = 1 << g
-                val isConst = (q.constMask & gBit) != 0
-                val w = q.weights((key._1, key._2, g))
-                var i = 0
-                while (i < dec.docIds.length) {
-                  val o = (dec.docIds(i) - base).toInt
-                  if (isConst) {
-                    if ((mask(o) & gBit) == 0) score(o) += 1.0f
-                  } else {
-                    score(o) += Bm25.tfScoreF32(w, dec.tfs(i), cache(dec.norms(i)))
-                  }
-                  mask(o) |= gBit
-                  i += 1
-                }
-              }
-            }
-          }
-        }
-        val heap = new TopKHeap(math.max(1, math.min(k, shardDocs)))
-        var o = 0
-        while (o < shardDocs) {
-          if ((mask(o) & q.reqMask) == q.reqMask && mask(o) != 0 && !deleted.contains(base + o))
-            heap.offer(score(o).toDouble, base + o, score(o).toDouble)
-          o += 1
-        }
-        heap.foreachKept((d, s) => out += ScoredQDocF32(q.qid, d, s.toFloat))
-      }
-    }
-    out.result().iterator
-  }
-
-  /** f64 batched path (oracle parity): identical replay structure, pure
-    * double math, shard candidates selected under the ROUNDED total
-    * order (round(score,4) desc, docId asc) the oracle presentation
-    * uses.
-    */
-  def scoreManyF64(index: BuiltIndex, queries: Seq[(Int, CompiledQuery)], k: Int,
-      deletes: Option[Dataset[Long]] = None): Dataset[ScoredQDocF64] = {
-    val spark = index.spark
-    import spark.implicits._
-    val plans = queries.map { case (qid, cq) => mkPlan(qid, cq, (t: CompiledTerm) => t.weightF64) }.toArray
-    val allTerms = queries.flatMap(_._2.terms)
-    val caches: Map[String, Array[Double]] =
-      allTerms.map(_.field).distinct.map(f => f -> Bm25.normCacheF64(index.avgFieldnormF64(f))).toMap
-    val shardDocs = index.config.shardDocs
-    shardGrouped(index, allTerms, deletes) { (rows, dels) =>
-      mergeShardManyF64(rows, plans, caches, dels, shardDocs, k)
-    }
-  }
-
-  private def mergeShardManyF64(
-      rows: Array[PostingRow],
-      plans: Array[QueryPlan[Double]],
-      caches: Map[String, Array[Double]],
-      deleted: Set[Long],
-      shardDocs: Int,
-      k: Int): Iterator[ScoredQDocF64] = {
-    val decoded = new scala.collection.mutable.LinkedHashMap[
-      (String, String), scala.collection.mutable.ArrayBuffer[graft.index.DecodedBlock]]
-    var base = -1L
-    rows.foreach { p =>
-      if (base < 0) base = p.shard.toLong * shardDocs
-      decoded.getOrElseUpdate((p.field, p.term), scala.collection.mutable.ArrayBuffer.empty) +=
-        PostingCodec.decodeAll(p.bytes, p.blockOffset, p.blockLast)
-    }
-    if (decoded.isEmpty) return Iterator.empty
-    val score = new Array[Double](shardDocs)
-    val mask = new Array[Int](shardDocs)
-    val out = Seq.newBuilder[ScoredQDocF64]
-    plans.foreach { q =>
-      if (q.order.exists(decoded.contains)) {
-        java.util.Arrays.fill(score, 0.0d)
-        java.util.Arrays.fill(mask, 0)
-        q.order.foreach { key =>
-          decoded.get(key).foreach { blocks =>
-            val cache = caches(key._1)
-            blocks.foreach { dec =>
-              q.groupsOf(key).foreach { g =>
-                val gBit = 1 << g
-                val isConst = (q.constMask & gBit) != 0
-                val w = q.weights((key._1, key._2, g))
-                var i = 0
-                while (i < dec.docIds.length) {
-                  val o = (dec.docIds(i) - base).toInt
-                  if (isConst) {
-                    if ((mask(o) & gBit) == 0) score(o) += 1.0d
-                  } else {
-                    score(o) += Bm25.tfScoreF64(w, dec.tfs(i), cache(dec.norms(i)))
-                  }
-                  mask(o) |= gBit
-                  i += 1
-                }
-              }
-            }
-          }
-        }
-        val heap = new TopKHeap(math.max(1, math.min(k, shardDocs)))
-        var o = 0
-        while (o < shardDocs) {
-          if ((mask(o) & q.reqMask) == q.reqMask && mask(o) != 0 && !deleted.contains(base + o))
-            heap.offer(round4(score(o)), base + o, score(o))
-          o += 1
-        }
-        heap.foreachKept((d, s) => out += ScoredQDocF64(q.qid, d, s))
-      }
-    }
-    out.result().iterator
-  }
 
   /** Per-query global top-k over the batched shard candidates: the same
     * total order as topK, partitioned by qid. The window input is

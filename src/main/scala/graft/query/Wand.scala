@@ -1,8 +1,8 @@
 package graft.query
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, Encoders}
 
-import graft.index.{BuiltIndex, DecodedBlock, PostingCodec, PostingRow}
+import graft.index.{BuiltIndex, DecodedBlock, PostingRow}
 
 /** Block-max WAND top-k pruning (SURVEY.md section 2.7 T4): the
   * performance semantics of tantivy 0.22's top-k execution, re-expressed
@@ -54,8 +54,7 @@ object Wand {
       val arr = map.get(p)
       var d = arr(b)
       if (d == null) {
-        d = PostingCodec.decodeBlock(p.bytes, p.blockOffset(b),
-          if (b == 0) -1L else p.blockLast(b - 1))
+        d = Scorer.decodeBlock(p, b)
         arr(b) = d
         decoded += 1
         stats.foreach(_.decodedBlocks.add(1L))
@@ -78,7 +77,6 @@ object Wand {
       val p: PostingRow,
       val weight: Float,
       val cache: Array[Float],
-      val ord: Int,
       val stats: Option[Stats] = None,
       val shared: BlockCache = null) {
     private var blockIdx = 0
@@ -122,11 +120,7 @@ object Wand {
     def currentBlockLast: Long = p.blockLast(blockIdx)
 
     private def decodeCurrent(): Unit = {
-      dec =
-        if (shared != null) shared.block(p, blockIdx)
-        else PostingCodec.decodeBlock(
-          p.bytes, p.blockOffset(blockIdx),
-          if (blockIdx == 0) -1L else p.blockLast(blockIdx - 1))
+      dec = if (shared != null) shared.block(p, blockIdx) else Scorer.decodeBlock(p, blockIdx)
       pos = 0
       if (shared == null) stats.foreach(_.decodedBlocks.add(1L))
     }
@@ -174,37 +168,25 @@ object Wand {
     }
   }
 
-  private final case class Hit(docId: Long, score: Float)
-
-  /** Heap entry comparison: keep the k best under (score desc, docId
-    * asc); the heap root is the *worst* kept entry.
-    */
-  private def worseThan(aScore: Float, aDoc: Long, bScore: Float, bDoc: Long): Boolean =
-    aScore < bScore || (aScore == bScore && aDoc > bDoc)
+  /** A shard heap's kept hits (f32 scores ride TopKHeap's raw doubles exactly). */
+  private def kept(heap: Scorer.TopKHeap): Iterator[ScoredDocF32] = {
+    val out = Array.newBuilder[ScoredDocF32]
+    heap.foreachKept((d, s) => out += ScoredDocF32(d, s.toFloat))
+    out.result().iterator
+  }
 
   /** Exact per-shard top-k via WAND with block-max skipping. */
-  private def wandShard(rows: Array[PostingRow], weights: Map[(String, String), Float],
+  private def wandShard(rows: Array[PostingRow], q: Scorer.QueryPlan,
       caches: Map[String, Array[Float]], k: Int, deleted: Set[Long],
       stats: Option[Stats] = None, shared: BlockCache = null): Iterator[ScoredDocF32] = {
     // scoring order must match the exhaustive scorer: (field, term) sorted
     val sortedRows = rows.sortBy(p => (p.field, p.term))
-    val cursors = sortedRows.zipWithIndex.map { case (p, i) =>
-      new Cursor(p, weights((p.field, p.term)), caches(p.field), i,
+    val cursors = sortedRows.map { p =>
+      val g = q.groupsOf((p.field, p.term))(0)
+      new Cursor(p, q.terms((p.field, p.term, g)).weightF32, caches(p.field),
         if (shared == null) stats else None, shared)
     }
-    val heap = new java.util.PriorityQueue[Hit](k, (a: Hit, b: Hit) =>
-      if (worseThan(a.score, a.docId, b.score, b.docId)) -1
-      else if (worseThan(b.score, b.docId, a.score, a.docId)) 1
-      else 0)
-
-    def thresholdScore: Float = if (heap.size() < k) Float.NegativeInfinity else heap.peek().score
-
-    def offer(docId: Long, score: Float): Unit = {
-      if (heap.size() < k) heap.add(Hit(docId, score))
-      else if (worseThan(heap.peek().score, heap.peek().docId, score, docId)) {
-        heap.poll(); heap.add(Hit(docId, score))
-      }
-    }
+    val heap = new Scorer.TopKHeap(k)
 
     // working order: kept nearly-sorted by curDoc across iterations, so
     // the per-iteration insertion sort is ~O(n) and the driver loop is
@@ -234,7 +216,7 @@ object Wand {
         i = 0
         while (i < nLive && p < 0) {
           ubSum += byDoc(i).remainingUB
-          if (ubSum >= thresholdScore) p = i
+          if (ubSum >= heap.threshold) p = i
           i += 1
         }
         if (p < 0) {
@@ -251,7 +233,7 @@ object Wand {
             var bmSum = 0.0f
             var j = 0
             while (j <= p) { bmSum += byDoc(j).currentBlockUB; j += 1 }
-            if (bmSum < thresholdScore) {
+            if (bmSum < heap.threshold) {
               // no doc up to the nearest block boundary can win: skip
               var boundary = Long.MaxValue
               j = 0
@@ -272,7 +254,7 @@ object Wand {
                   if (!c.done && c.curDoc == pivotDoc) s += c.curScore
                   ci += 1
                 }
-                offer(pivotDoc, s)
+                heap.offer(s, pivotDoc, s)
               }
               // all cursors at pivotDoc are the sorted prefix 0..p
               j = 0
@@ -285,8 +267,7 @@ object Wand {
         }
       }
     }
-    import scala.jdk.CollectionConverters._
-    heap.iterator().asScala.map(h => ScoredDocF32(h.docId, h.score)).toArray.iterator
+    kept(heap)
   }
 
   /** Exact per-shard top-k for multi-group ALL-REQUIRED conjunctions:
@@ -302,20 +283,18 @@ object Wand {
     * within a row; const groups contribute 1.0 once).
     */
   private def wandShardConj(rows: Array[PostingRow],
-      weights: Map[(String, String, Int), Float],
-      groupOf: Map[(String, String), Seq[Int]],
+      q: Scorer.QueryPlan,
       caches: Map[String, Array[Float]],
-      constMask: Int,
-      nGroups: Int,
       k: Int,
       deleted: Set[Long],
       stats: Option[Stats],
       shared: BlockCache = null): Iterator[ScoredDocF32] = {
-    val sortedRows = rows.sortBy(p => (groupOf((p.field, p.term)).min, p.field, p.term))
+    val constMask = q.constMask
+    val nGroups = q.nGroups
+    val sortedRows = rows.sortBy(p => (q.groupsOf((p.field, p.term))(0), p.field, p.term))
     if (sortedRows.isEmpty) return Iterator.empty
-    val rowGroups: Array[Array[Int]] =
-      sortedRows.map(p => groupOf((p.field, p.term)).sorted.toArray)
-    val cursors = sortedRows.zipWithIndex.map { case (p, i) =>
+    val rowGroups: Array[Array[Int]] = sortedRows.map(p => q.groupsOf((p.field, p.term)))
+    val cursors = sortedRows.map { p =>
       // cursor UB weight = the row's total non-const BM25 weight (its
       // whole contribution to any one doc); const groups add flat 1.0s.
       // Inflate by 1e-6 relative: the exact score sums per-group f32
@@ -325,10 +304,10 @@ object Wand {
       // could be wrongly pruned (exactness contract). ~8 ULPs of slack
       // dominates the <=3 ULPs of rounding hazard and only makes
       // pruning infinitesimally more conservative.
-      val wSum = groupOf((p.field, p.term)).iterator
+      val wSum = q.groupsOf((p.field, p.term)).iterator
         .filter(g => (constMask & (1 << g)) == 0)
-        .map(g => weights((p.field, p.term, g)).toDouble).sum
-      new Cursor(p, (wSum * (1.0 + 1e-6)).toFloat, caches(p.field), i,
+        .map(g => q.terms((p.field, p.term, g)).weightF32.toDouble).sum
+      new Cursor(p, (wSum * (1.0 + 1e-6)).toFloat, caches(p.field),
         if (shared == null) stats else None, shared)
     }
     val cursorsOfGroup: Array[Array[Int]] =
@@ -337,17 +316,7 @@ object Wand {
       cursors.foreach(_.skipRemaining()) // a required group has no terms here
       return Iterator.empty
     }
-    val heap = new java.util.PriorityQueue[Hit](k, (a: Hit, b: Hit) =>
-      if (worseThan(a.score, a.docId, b.score, b.docId)) -1
-      else if (worseThan(b.score, b.docId, a.score, a.docId)) 1
-      else 0)
-    def thresholdScore: Float = if (heap.size() < k) Float.NegativeInfinity else heap.peek().score
-    def offer(docId: Long, score: Float): Unit = {
-      if (heap.size() < k) heap.add(Hit(docId, score))
-      else if (worseThan(heap.peek().score, heap.peek().docId, score, docId)) {
-        heap.poll(); heap.add(Hit(docId, score))
-      }
-    }
+    val heap = new Scorer.TopKHeap(k)
     val constSeen = new Array[Boolean](nGroups)
 
     var done = false
@@ -374,7 +343,7 @@ object Wand {
           if ((constMask & (1 << g)) != 0) ub += 1.0f
           g += 1
         }
-        if (ub < thresholdScore) {
+        if (ub < heap.threshold) {
           cursors.foreach(_.skipRemaining())
           done = true
         } else {
@@ -414,7 +383,7 @@ object Wand {
                 }
                 ci += 1
               }
-              if (bub >= thresholdScore) {
+              if (bub >= heap.threshold) {
                 // exact f32 score, exhaustive accumulation order
                 var s = 0.0f
                 java.util.Arrays.fill(constSeen, false)
@@ -431,14 +400,14 @@ object Wand {
                         if (!constSeen(gg)) { s += 1.0f; constSeen(gg) = true }
                       } else {
                         s += Bm25.tfScoreF32(
-                          weights((p.field, p.term, gg)), c.curTf, c.cache(c.curNorm))
+                          q.terms((p.field, p.term, gg)).weightF32, c.curTf, c.cache(c.curNorm))
                       }
                       gi += 1
                     }
                   }
                   ci += 1
                 }
-                offer(cand, s)
+                heap.offer(s, cand, s)
               }
             }
             ci = 0
@@ -449,8 +418,7 @@ object Wand {
         }
       }
     }
-    import scala.jdk.CollectionConverters._
-    heap.iterator().asScala.map(h => ScoredDocF32(h.docId, h.score)).toArray.iterator
+    kept(heap)
   }
 
   /** Top-k for a multi-group all-required conjunction; exact w.r.t. the
@@ -461,122 +429,109 @@ object Wand {
       stats: Option[Stats] = None): Dataset[ScoredDocF32] = {
     require(cq.groups.nonEmpty && cq.groups.forall(_.required),
       "conjunction WAND covers all-required multi-group queries")
+    // a group with no dictionary matches anywhere → empty intersection
+    if (cq.groups.exists(g => !cq.terms.exists(_.group == g.id)))
+      return index.spark.emptyDataset(Encoders.product[ScoredDocF32])
+    walkShards(index, cq, k, deletes)(wandShardConj(_, _, _, _, _, stats))
+  }
+
+  /** One single-query WAND walk per shard. Tombstones (when present)
+    * stay cogrouped per shard inside shardGrouped's fallback: WAND must
+    * exclude them DURING scoring so the heap fills with live docs — a
+    * post-hoc anti-join would under-fill the top-k.
+    */
+  private def walkShards(index: BuiltIndex, cq: CompiledQuery, k: Int,
+      deletes: Option[Dataset[Long]])(walk: (Array[PostingRow], Scorer.QueryPlan,
+      Map[String, Array[Float]], Int, Set[Long]) => Iterator[ScoredDocF32]
+  ): Dataset[ScoredDocF32] = {
     val spark = index.spark
     import spark.implicits._
-    val weights: Map[(String, String, Int), Float] =
-      cq.terms.map(t => (t.field, t.term, t.group) -> t.weightF32).toMap
-    val groupOf: Map[(String, String), Seq[Int]] =
-      cq.terms.groupBy(t => (t.field, t.term)).map { case (kk, v) => kk -> v.map(_.group).sorted }
-    val constMask = cq.groups.filter(_.constScore).map(g => 1 << g.id).sum
-    val nGroups = cq.groups.size
-    val caches: Map[String, Array[Float]] =
-      cq.terms.map(_.field).distinct.map(f => f -> Bm25.normCacheF32(index.avgFieldnormF32(f))).toMap
-    val kk = k
-    // a group with no dictionary matches anywhere → empty intersection
-    val groupsWithTerms = cq.terms.map(_.group).toSet
-    if ((0 until nGroups).exists(g => !groupsWithTerms.contains(g)))
-      return spark.emptyDataset[ScoredDocF32]
-    Scorer.shardGrouped(index, cq.terms, deletes) { (rows, dels) =>
-      wandShardConj(rows, weights, groupOf, caches, constMask, nGroups, kk, dels, stats)
-    }
+    val plan = Scorer.mkPlan(0, cq)
+    val caches = Scorer.normCachesF32(index, cq.terms)
+    val kk = math.min(k, index.config.shardDocs) // a shard holds at most shardDocs hits
+    Scorer.shardGrouped(index, cq.terms, deletes)(walk(_, plan, caches, kk, _))
   }
 
-  /** Driver-compiled routing + replay data for ONE query of a batch.
-    * Route mirrors searchF32's cost gates exactly, so a query runs the
-    * same algorithm batched as it would alone: 0 = single-group
-    * sum-scored WAND, 1 = all-required conjunction WAND, 2 = exhaustive
-    * replay (dense or irregular shapes, where block skipping loses to
-    * the hash scorer).
+  /** The ONE WAND routing decision, taken by searchF32 and (through
+    * batchRoute) by the batch path: 0 = single-group sum-scored
+    * disjunction WAND (`topK`), 1 = all-required conjunction WAND
+    * (`topKConj`), 2 = the exhaustive scorer.
+    *
+    * Disjunction gate: block-max skips happen when at least one term is
+    * selective — its high-idf hits push the top-k threshold above the
+    * dense terms' block maxima (93% of the hot term's blocks skipped on
+    * the rare+hot shape at 2M docs, BENCH.md). A uniformly dense
+    * disjunction (every term hot) never lifts the threshold past any
+    * block max, skips nothing, and pays pure cursor bookkeeping
+    * (measured 0.94x vs exhaustive).
+    *
+    * Conjunction gate: leapfrog + block-max pays off when at least one
+    * required group is selective (the intersection is sparse and the
+    * other groups' blocks get skipped between its postings — measured
+    * 1.8x at 2M docs). A dense-x-dense conjunction has nothing to skip
+    * and the per-candidate bookkeeping just loses to the exhaustive
+    * hash scorer (measured +24%).
     */
-  private final case class BatchPlan(
-      qid: Int,
-      route: Int,
-      order: Array[(String, String)], // (minGroup, field, term) replay order
-      weightsFT: Map[(String, String), Float], // route 0
-      weights: Map[(String, String, Int), Float],
-      groupOf: Map[(String, String), Seq[Int]],
-      constMask: Int,
-      reqMask: Int,
-      nGroups: Int)
+  private[query] def route(cq: CompiledQuery, numDocs: Long): Int =
+    if (cq.groups.size == 1 && !cq.groups.head.constScore &&
+        cq.terms.map(_.df).min * 4 <= numDocs) 0
+    else if (cq.groups.size > 1 && cq.groups.forall(_.required) &&
+        cq.groups.map(g => cq.terms.filter(_.group == g.id).map(_.df).sum).min * 4 <= numDocs) 1
+    else 2
 
-  /** Is `cq` a shape the batched WAND path should take? The single-
-    * query gates (selective disjunction / all-required selective
-    * conjunction) PLUS the batch density bound on disjunctions (see
-    * topKMany). The batch caller (searchManyF32) partitions on this:
-    * routable queries run here with shared-cache pruning, everything
-    * else runs the exhaustive Scorer batch pass — per-query
-    * WAND bookkeeping at batch-width x shard-count scale only pays on
-    * sparse match sets (27M skew leg: dense queries through per-query
-    * walks ran 3x slower than the hash replay).
+  /** `route` PLUS the batch-only bounds: a disjunction's total match
+    * set must stay under half the corpus, and every conjunction group
+    * must have terms. Per-(query, shard) WAND setup + per-doc
+    * bookkeeping is paid once in the single-query path but multiplied
+    * by batch width x shard count here, while the exhaustive replay's
+    * extra cost is one shardDocs array scan per (query, shard). A query
+    * whose terms match a large fraction of the corpus walks nearly every
+    * posting WITH bookkeeping and skips almost nothing (27M skew leg:
+    * WAND 3.1x SLOWER than exhaustive at sum-df ~ 0.6N, while sparse
+    * mixes run 1.8x FASTER) — dense queries take the replay.
     */
-  def batchWandRoutable(cq: CompiledQuery, numDocs: Long): Boolean = {
-    val groupsWithTerms = cq.terms.map(_.group).toSet
-    val disjOk = cq.groups.size == 1 && !cq.groups.head.constScore &&
-      cq.terms.map(_.df).min * 4 <= numDocs &&
-      cq.terms.map(_.df).sum * 2 <= numDocs
-    val conjOk = cq.groups.size > 1 && cq.groups.forall(_.required) &&
-      cq.groups.forall(g => groupsWithTerms.contains(g.id)) && {
-        val minGroupDf =
-          cq.groups.map(g => cq.terms.filter(_.group == g.id).map(_.df).sum).min
-        minGroupDf * 4 <= numDocs
-      }
-    disjOk || conjOk
+  private def batchRoute(cq: CompiledQuery, numDocs: Long): Int = route(cq, numDocs) match {
+    case 0 if cq.terms.map(_.df).sum * 2 <= numDocs => 0
+    case 1 if cq.groups.forall(g => cq.terms.exists(_.group == g.id)) => 1
+    case _ => 2
   }
+
+  /** Is `cq` a shape the batched WAND path should take? The batch
+    * caller (searchManyF32) partitions on this: routable queries run
+    * here with shared-cache pruning, everything else runs the
+    * exhaustive Scorer batch pass.
+    */
+  def batchWandRoutable(cq: CompiledQuery, numDocs: Long): Boolean = batchRoute(cq, numDocs) != 2
+
+  /** ONE query of a batch: its batchRoute and its replay plan (read by
+    * both WAND walks and by the exhaustive kernel).
+    */
+  private final case class BatchPlan(route: Int, plan: Scorer.QueryPlan)
 
   /** Batched multi-query top-k with SHARED lazy block decoding — the
     * serving-throughput path with single-query WAND's pruning grafted
     * on. Each query replays via the exact algorithm the single-query
-    * path would pick for it (same cost gates), but all queries of a
+    * path would pick for it (batchRoute), but all queries of a
     * shard draw decoded blocks from one BlockCache: a block decodes at
     * most once per shard, and ONLY if some query's WAND walk (or an
     * exhaustive-shape query subscribed to its term) actually needs it —
     * blocks beyond every subscribing query's threshold horizon are
     * never touched. Per-query results stay bit-identical to searchF32
     * (BatchSearchSpec): WAND routes are exact by the WandSpec
-    * invariant, and the exhaustive route accumulates in the
-    * single-query order. Reference semantics: tantivy BlockWAND
-    * (Cargo.lock:242) applied per query of lnx's concurrent search
-    * load.
+    * invariant, and the exhaustive route runs Scorer's kernel.
+    * Reference semantics: tantivy BlockWAND (Cargo.lock:242) applied
+    * per query of lnx's concurrent search load.
     */
   def topKMany(index: BuiltIndex, queries: Seq[(Int, CompiledQuery)], k: Int,
       deletes: Option[Dataset[Long]] = None,
       stats: Option[Stats] = None): Dataset[ScoredQDocF32] = {
     val spark = index.spark
     import spark.implicits._
-    val numDocs = index.numDocs
     val plans = queries.map { case (qid, cq) =>
-      val groupOf: Map[(String, String), Seq[Int]] = cq.terms
-        .groupBy(t => (t.field, t.term)).map { case (kk, v) => kk -> v.map(_.group).distinct.sorted }
-      val order = groupOf.keys.toArray.sortBy(kk => (groupOf(kk).min, kk._1, kk._2))
-      val constMask = cq.groups.filter(_.constScore).map(g => 1 << g.id).sum
-      val groupsWithTerms = cq.terms.map(_.group).toSet
-      // the same selectivity gates as searchF32, PLUS a batch-specific
-      // density bound on the total match set: per-(query, shard) WAND
-      // setup + per-doc bookkeeping is paid once in the single-query
-      // path but multiplied by batch width x shard count here, while
-      // the exhaustive replay's extra cost is one shardDocs array scan
-      // per (query, shard). A query whose terms match a large fraction
-      // of the corpus walks nearly every posting WITH bookkeeping and
-      // skips almost nothing (27M skew leg: WAND 3.1x SLOWER than
-      // exhaustive at sum-df ~ 0.6N, while sparse mixes run 1.8x
-      // FASTER) — route dense queries to the replay.
-      val disjOk = cq.groups.size == 1 && !cq.groups.head.constScore &&
-        cq.terms.map(_.df).min * 4 <= numDocs &&
-        cq.terms.map(_.df).sum * 2 <= numDocs
-      val conjOk = cq.groups.size > 1 && cq.groups.forall(_.required) &&
-        cq.groups.forall(g => groupsWithTerms.contains(g.id)) && {
-          val minGroupDf =
-            cq.groups.map(g => cq.terms.filter(_.group == g.id).map(_.df).sum).min
-          minGroupDf * 4 <= numDocs
-        }
-      BatchPlan(qid, if (disjOk) 0 else if (conjOk) 1 else 2, order,
-        cq.terms.map(t => (t.field, t.term) -> t.weightF32).toMap,
-        cq.terms.map(t => (t.field, t.term, t.group) -> t.weightF32).toMap,
-        groupOf, constMask, cq.requiredMask, cq.groups.size)
+      BatchPlan(batchRoute(cq, index.numDocs), Scorer.mkPlan(qid, cq))
     }.toArray
     val allTerms = queries.flatMap(_._2.terms)
-    val caches: Map[String, Array[Float]] =
-      allTerms.map(_.field).distinct.map(f => f -> Bm25.normCacheF32(index.avgFieldnormF32(f))).toMap
+    val caches = Scorer.normCachesF32(index, allTerms)
     val shardDocs = index.config.shardDocs
     val kk = k
     Scorer.shardGrouped(index, allTerms, deletes) { (rows, dels) =>
@@ -590,76 +545,26 @@ object Wand {
     if (rows.isEmpty || k <= 0) return Iterator.empty
     val cache = new BlockCache(stats)
     rows.foreach(cache.register)
-    // arrival-order rows per key (one row per epoch segment): replay
-    // order within a key is arrival order, matching the single-query
-    // merge's STABLE sort over equal keys
-    val rowsOfKey = new scala.collection.mutable.LinkedHashMap[(String, String),
-      scala.collection.mutable.ArrayBuffer[PostingRow]]
-    rows.foreach(p => rowsOfKey.getOrElseUpdate((p.field, p.term),
-      scala.collection.mutable.ArrayBuffer.empty) += p)
+    val rowsOfKey = Scorer.rowsByKey(rows)
     val base = rows(0).shard.toLong * shardDocs
-    // scratch arrays shared by every exhaustive-replay query of the shard
-    var score: Array[Float] = null
-    var mask: Array[Int] = null
+    val shardK = math.min(k, shardDocs)
+    // one accumulator shared by every exhaustive-route query of the shard
+    lazy val acc = new Scorer.AccF32(shardDocs, caches)
     val out = Seq.newBuilder[ScoredQDocF32]
     plans.foreach { q =>
-      val qRows = q.order.iterator.flatMap(rowsOfKey.getOrElse(_, Nil)).toArray
+      val qid = q.plan.qid
+      val qRows = q.plan.order.flatMap(rowsOfKey.getOrElse(_, Array.empty[PostingRow]))
       if (qRows.nonEmpty) q.route match {
         case 0 =>
-          wandShard(qRows, q.weightsFT, caches, k, deleted, stats, cache)
-            .foreach(h => out += ScoredQDocF32(q.qid, h.docId, h.score))
+          wandShard(qRows, q.plan, caches, shardK, deleted, stats, cache)
+            .foreach(h => out += ScoredQDocF32(qid, h.docId, h.score))
         case 1 =>
-          wandShardConj(qRows, q.weights, q.groupOf, caches, q.constMask, q.nGroups,
-            k, deleted, stats, cache)
-            .foreach(h => out += ScoredQDocF32(q.qid, h.docId, h.score))
+          wandShardConj(qRows, q.plan, caches, shardK, deleted, stats, cache)
+            .foreach(h => out += ScoredQDocF32(qid, h.docId, h.score))
         case _ =>
-          // exhaustive replay, bit-identical accumulation order to
-          // Scorer.mergeShardF32: keys (minGroup, field, term) sorted,
-          // rows within a key in arrival order, groups ascending,
-          // docIds ascending — every decode through the shared cache
-          if (score == null) {
-            score = new Array[Float](shardDocs); mask = new Array[Int](shardDocs)
-          } else {
-            java.util.Arrays.fill(score, 0.0f); java.util.Arrays.fill(mask, 0)
-          }
-          q.order.foreach { key =>
-            rowsOfKey.get(key).foreach { prs =>
-              val fcache = caches(key._1)
-              prs.foreach { p =>
-                val blocks = cache.decodeRow(p)
-                q.groupOf(key).foreach { g =>
-                  val gBit = 1 << g
-                  val isConst = (q.constMask & gBit) != 0
-                  val w = q.weights((key._1, key._2, g))
-                  var bi = 0
-                  while (bi < blocks.length) {
-                    val dec = blocks(bi)
-                    var i = 0
-                    while (i < dec.docIds.length) {
-                      val o = (dec.docIds(i) - base).toInt
-                      if (isConst) {
-                        if ((mask(o) & gBit) == 0) score(o) += 1.0f
-                      } else {
-                        score(o) += Bm25.tfScoreF32(w, dec.tfs(i), fcache(dec.norms(i)))
-                      }
-                      mask(o) |= gBit
-                      i += 1
-                    }
-                    bi += 1
-                  }
-                }
-              }
-            }
-          }
-          val heap = new Scorer.TopKHeap(math.max(1, math.min(k, shardDocs)))
-          var o = 0
-          while (o < shardDocs) {
-            if ((mask(o) & q.reqMask) == q.reqMask && mask(o) != 0 &&
-                !deleted.contains(base + o))
-              heap.offer(score(o).toDouble, base + o, score(o).toDouble)
-            o += 1
-          }
-          heap.foreachKept((d, s) => out += ScoredQDocF32(q.qid, d, s.toFloat))
+          // the exhaustive kernel, every decode through the shared cache
+          Scorer.replayTopK(q.plan, rowsOfKey, cache.decodeRow, base, acc, deleted, k)(
+            (d, s) => out += ScoredQDocF32(qid, d, s.toFloat))
       }
     }
     cache.finish()
@@ -674,19 +579,6 @@ object Wand {
       stats: Option[Stats] = None): Dataset[ScoredDocF32] = {
     require(cq.groups.size == 1 && !cq.groups.head.constScore,
       "WAND path covers single-group sum-scored queries; use Scorer for the rest")
-    val spark = index.spark
-    import spark.implicits._
-    val weights: Map[(String, String), Float] =
-      cq.terms.map(t => (t.field, t.term) -> t.weightF32).toMap
-    val caches: Map[String, Array[Float]] =
-      cq.terms.map(_.field).distinct.map(f => f -> Bm25.normCacheF32(index.avgFieldnormF32(f))).toMap
-    val kk = k
-    // tombstones (when present) stay cogrouped per shard inside
-    // shardGrouped's fallback: WAND must exclude them DURING scoring so
-    // the heap fills with live docs — a post-hoc anti-join would
-    // under-fill the top-k
-    Scorer.shardGrouped(index, cq.terms, deletes) { (rows, dels) =>
-      wandShard(rows, weights, caches, kk, dels, stats)
-    }
+    walkShards(index, cq, k, deletes)(wandShard(_, _, _, _, _, stats))
   }
 }

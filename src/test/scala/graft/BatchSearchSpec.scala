@@ -281,6 +281,19 @@ class BatchSearchSpec extends AnyFunSuite {
       val solo = rowsF32(e.searchF32(clauses, 10, useWand = false))
       assert(got.getOrElse(qid, Nil) === solo, s"qid=$qid diverged on the multi-epoch store")
     }
+    // f64 through the same kernel on the cogroup fallback: the shard
+    // heaps (round4 order) keep exactly the per-query oracle top-k, with
+    // bit-equal raw doubles
+    val got64 = e.searchManyF64(b, 10).collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
+      .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSet).toMap
+    b.foreach { case (qid, clauses) =>
+      val solo = e.matchF64(clauses)
+        .orderBy(round(col("score"), 4).desc, col("docId").asc).limit(10)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
+      assert(solo.nonEmpty, s"test premise: qid=$qid matches")
+      assert(got64.getOrElse(qid, Set.empty) === solo, s"qid=$qid f64 diverged on the multi-epoch store")
+    }
     e.release()
   }
 

@@ -64,11 +64,22 @@ class SearchSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
 
   test("fts top-k is rank- and score-identical to the analytic oracle") {
-    for (q <- Seq("binary search", "fn return license", "merge segment posting list", "checkpoint epoch")) {
+    val qs = Seq("binary search", "fn return license", "merge segment posting list", "checkpoint epoch")
+    // the exhaustive kernel is pinned to the oracle too, not only to the
+    // other engine paths: the forced-exhaustive single query and ONE
+    // batch (below the split floor the whole batch replays through the
+    // same kernel), so an accumulation-order change there must fail here
+    val batched = engine.searchManyF32(qs.zipWithIndex.map { case (q, i) => i -> Seq(Fts("content", q)) }, 10)
+      .collect().map(r => (r.getInt(0), (r.getLong(1), r.getFloat(2))))
+      .groupBy(_._1).view.mapValues(_.map(_._2).toSeq.sortBy { case (id, s) => (-s, id) }).toMap
+    for ((q, i) <- qs.zipWithIndex) {
       val terms = engine.tokenizeQuery("content", q)
       val expected = BruteOracle.topK(BruteOracle.ftsScores(rawDocs, terms), 10)
-      val got = engineTopK(q, 10)
-      assert(got === expected, s"query '$q'")
+      assert(engineTopK(q, 10) === expected, s"query '$q'")
+      val exhaustive = engine.searchF32(Seq(Fts("content", q)), 10, useWand = false)
+        .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
+      assert(exhaustive === expected, s"exhaustive, query '$q'")
+      assert(batched.getOrElse(i, Nil) === expected, s"batched, query '$q'")
     }
   }
 
