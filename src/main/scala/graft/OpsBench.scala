@@ -92,20 +92,9 @@ object OpsBench {
 
   def main(args: Array[String]): Unit = {
     val nDocs = if (args.nonEmpty) args(0).toLong else 1000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    // shared policy: SPARK_GRAFT_LOCAL_DIR honored (the sibling
-    // harnesses' disk escape hatch applies to the 1M-doc LSH exchanges
-    // too), stale leftovers purged
-    val localDir = Bench.benchLocalDir()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.local.dir", localDir)
-      .config("spark.sql.shuffle.partitions", (cpus * 4).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+    val cpus = BenchSession.cpus
     val parts = cpus * 4
+    val spark = BenchSession(cpus, parts)
     val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
 
     // regime markers BRACKET the run like graft.Bench's: a mid-run host

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -12,8 +11,8 @@ import graft.query._
   * operators, every executed plan the action triggered, via a
   * QueryExecutionListener) for the queries touched this round, into
   * `<outDir>/<name>_<suffix>.txt`. Run once on the pre-change tree with
-  * suffix "before" and once after with "after" — the committed files
-  * are the judge's plan evidence (plans/r06/).
+  * suffix "before" and once after with "after". plans/r06/ keeps the
+  * round-6 "after" dumps; its NODES.md has both sides' node counts.
   *
   * Usage: runMain graft.PlanDump <outDir> <suffix>
   */
@@ -23,16 +22,9 @@ object PlanDump {
     val outDir = args(0)
     val suffix = args(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = BenchSession.cpus
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.local.dir", Bench.benchLocalDir())
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchSession(cpus, cpus)
 
     val captured = new scala.collection.mutable.ArrayBuffer[(String, String)]()
     val listener = new QueryExecutionListener {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.corpus.CodeCorpus
 import graft.index.{IndexBuilder, IndexConfig}
 import graft.query._
@@ -71,17 +69,9 @@ object QpsBench {
   def main(args: Array[String]): Unit = {
     val nDocs = if (args.length > 0) args(0).toLong else 2000000L
     val nQueries = if (args.length > 1) args(1).toInt else 64
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = BenchSession.cpus
     val parts = sys.env.get("SPARK_GRAFT_SCALE_PARTS").map(_.toInt).getOrElse(128)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-qps-$cpus")
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/tmp"))
-      .config("spark.sql.shuffle.partitions", parts.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchSession(cpus, parts)
 
     val calibStart = Bench.calibrate()
     val memCalibStart = Bench.calibrateMem()

@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.corpus.CodeCorpus
 import graft.index.{IndexBuilder, IndexConfig}
 import graft.query._
@@ -14,7 +12,7 @@ import graft.query._
   * runs at local[8] and local[32] on the identical deterministic input
   * (the corpus generator is seeded per docId, so both levels index the
   * same files), and efficiency = throughput(32) / (4 x throughput(8)).
-  * Writes SCALING.md and prints one JSON line.
+  * Prints one line per run; the no-arg run also writes SCALING_AUTO.md.
   */
 object ScalingBench {
 
@@ -22,23 +20,8 @@ object ScalingBench {
       queryBatchSec: Double, calibSec: Double, memCalibSec: Double,
       traffic: BuildTraffic.Snap)
 
-  def runLevel(cores: Int, nDocs: Long,
-      docIdStrategy: String = graft.index.DocIdStrategy.KeyRange,
-      partsOverride: Option[Int] = None): LevelResult = {
-    // 4 task waves per level: 2 waves (cores*2) left the build straggler-
-    // bound at 32 threads — measured 56s -> 39s at 8M files with 128 parts
-    val parts = partsOverride
-      .orElse(sys.env.get("SPARK_GRAFT_SCALE_PARTS").map(_.toInt))
-      .getOrElse(cores * 4)
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-scaling-$cores")
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/tmp"))
-      .config("spark.sql.shuffle.partitions", parts.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  def runLevel(cores: Int, nDocs: Long, docIdStrategy: String, parts: Int): LevelResult = {
+    val spark = BenchSession(cores, parts)
     try {
       val config = IndexConfig(Seq("repo", "path", "commit"), Seq("content"),
         shardDocs = 8192, buildPartitions = parts, docIdStrategy = docIdStrategy)
@@ -83,14 +66,16 @@ object ScalingBench {
     */
   def main(args: Array[String]): Unit = {
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_SCALE_DOCS", "80000").toLong
+    // partitions PINNED across levels (128, the default scaling.sh
+    // exports, = the 32-core level x 4 task waves): letting them scale
+    // with cores makes the levels run DIFFERENT jobs — the first
+    // traffic-instrumented drive measured 59.9 vs 70.2 shuffle-write MB
+    // for "the same" 80k build at 32 vs 128 partitions, which is exactly
+    // the non-comparability the traffic columns exist to catch
+    val pinned = sys.env.get("SPARK_GRAFT_SCALE_PARTS").map(_.toInt).getOrElse(128)
     if (args.length >= 1) {
       val strategy = if (args.length > 1) args(1) else graft.index.DocIdStrategy.KeyRange
-      // CLI levels run one JVM each, back-to-back — partitions must be
-      // PINNED (128, same default scaling.sh exports) or each level
-      // runs a DIFFERENT job (59.9 vs 70.2 shuffle-write MB measured
-      // at 32 vs 128 parts) and the efficiency curve is invalid
-      val pinnedCli = Some(sys.env.get("SPARK_GRAFT_SCALE_PARTS").map(_.toInt).getOrElse(128))
-      val r = runLevel(args(0).toInt, nDocs, strategy, partsOverride = pinnedCli)
+      val r = runLevel(args(0).toInt, nDocs, strategy, pinned)
       val t = r.traffic
       // LEVEL <cores> <buildSec> <filesPerSec> <queryBatchSec> <calibSec>
       //   <memCalibSec> <inputMB> <shufWriteMB> <shufReadMB> <spillMB>
@@ -104,15 +89,8 @@ object ScalingBench {
         f"${t.spilledBytes / 1e6}%.1f")
       return
     }
-    // partitions PINNED across both levels (high level x 4 waves):
-    // letting them scale with cores makes the two levels run DIFFERENT
-    // jobs — the first traffic-instrumented drive measured 59.9 vs
-    // 70.2 shuffle-write MB for "the same" 80k build at 32 vs 128
-    // partitions, which is exactly the non-comparability the traffic
-    // columns exist to catch (tools/scaling.sh has always pinned)
-    val pinned = Some(sys.env.get("SPARK_GRAFT_SCALE_PARTS").map(_.toInt).getOrElse(128))
-    val lo = runLevel(8, nDocs, partsOverride = pinned)
-    val hi = runLevel(32, nDocs, partsOverride = pinned)
+    val lo = runLevel(8, nDocs, graft.index.DocIdStrategy.KeyRange, pinned)
+    val hi = runLevel(32, nDocs, graft.index.DocIdStrategy.KeyRange, pinned)
     val eff = hi.filesPerSec / (4.0 * lo.filesPerSec)
     val qSpeedup = lo.queryBatchSec / hi.queryBatchSec
     val md =

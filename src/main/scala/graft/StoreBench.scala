@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.corpus.CodeCorpus
 import graft.index.{IndexConfig, IndexStore}
 import graft.query._
@@ -27,18 +25,10 @@ object StoreBench {
 
   def main(args: Array[String]): Unit = {
     val nDocs = if (args.nonEmpty) args(0).toLong else 8000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    // shared policy (override -> tmpfs -> tmpdir, stale dirs purged):
-    // a 27M keyRange exchange (~20 GB) must be routable to disk
-    // instead of meeting the OOM killer
-    val localDir = Bench.benchLocalDir()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.local.dir", localDir)
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = BenchSession.cpus
+    // SPARK_GRAFT_LOCAL_DIR routes a 27M keyRange exchange (~20 GB) to
+    // disk instead of the OOM killer
+    val spark = BenchSession(cpus, cpus)
 
     // SPARK_GRAFT_STORE_PARTS pins docs/task independently of cpu count:
     // the partial-postings accumulator is sized per task, so corpus-size

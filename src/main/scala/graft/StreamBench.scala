@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.corpus.CodeCorpus
 import graft.index.{IndexConfig, IndexStore}
 import graft.streaming.StreamingIndexer
@@ -34,15 +32,8 @@ object StreamBench {
     val batchDocs = if (args.length > 1) args(1).toLong else 10000L
     val nBatches = if (args.length > 2) args(2).toInt else 20
     val compactEvery = if (args.length > 3) args(3).toInt else 0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val localDir = Bench.benchLocalDir()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.local.dir", localDir)
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = BenchSession.cpus
+    val spark = BenchSession(cpus, cpus)
 
     val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     results("calib_sec_start") = Bench.calibrate()

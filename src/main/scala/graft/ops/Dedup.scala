@@ -557,10 +557,11 @@ object Dedup {
     */
   def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     // NO spread here, unlike the shingle ops: measured same-session
-    // palindromic A/B (SimhashAB, sf0.1) lost 0.34 -> 0.59 s with a
-    // spread repartition — the serial tokenize+partial-count slice is
-    // far lighter than the minhash shingle+md5 chain, and the extra
-    // full-text exchange + stage costs more than it parallelizes.
+    // palindromic A/B (sf0.1, OPTIMIZATION_r06.md §16) lost 0.34 ->
+    // 0.59 s with a spread repartition — the serial tokenize+partial-
+    // count slice is far lighter than the minhash shingle+md5 chain,
+    // and the extra full-text exchange + stage costs more than it
+    // parallelizes.
     val tf = df.select(col(idCol).as("id"), explode(tokens(col(textCol))).as("term"))
       .groupBy("id", "term").agg(count(lit(1)).as("tf"))
       .withColumn("h", hash60(col("term")))

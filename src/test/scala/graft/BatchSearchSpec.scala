@@ -45,10 +45,8 @@ class BatchSearchSpec extends AnyFunSuite {
     * suite's tiny test corpus — below graft.batch.splitMinDocs the
     * engine routes the whole batch exhaustive in one job.
     */
-  private def withSplit[T](body: => T): T = {
-    spark.conf.set("graft.batch.splitMinDocs", "0")
-    try body finally spark.conf.unset("graft.batch.splitMinDocs")
-  }
+  private def withSplit[T](body: => T): T =
+    EagerPlanConfs.withConfs(spark, Seq("graft.batch.splitMinDocs" -> "0"))(body)
 
   test("batched f32 results are bit-identical to per-query searchF32 (both split regimes)") {
     val k = 10

@@ -189,18 +189,10 @@ class VectorOpsSpec extends AnyFunSuite {
       .withColumn("c", Similarity.cosine(col("a"), col("b")))
       .withColumn("s", Similarity.lshSignature(col("a"), 16))
     val codegenOn = withCols.collect().map(r => r.getLong(0) -> ((r.getDouble(3), r.getLong(4)))).toMap
-    val prev = spark.conf.getOption("spark.sql.codegen.wholeStage")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try {
+    EagerPlanConfs.withConfs(spark, Seq("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")) {
       val interp = withCols.collect().map(r => r.getLong(0) -> ((r.getDouble(3), r.getLong(4)))).toMap
       assert(codegenOn == interp)
-    } finally {
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.codegen.wholeStage", v)
-        case None => spark.conf.unset("spark.sql.codegen.wholeStage")
-      }
     }
   }
 }
