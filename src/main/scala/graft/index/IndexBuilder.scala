@@ -98,6 +98,13 @@ final case class PartialRow(
   * SURVEY.md section 1.3/1.4). All members are lazy Spark datasets;
   * `persist()` pins them for repeated queries (plays the role of lnx's
   * mmap'd searcher + reader cache, bucket.rs:24-25).
+  *
+  * `postings` holds live docs only and is co-partitioned by docId shard
+  * (`IndexBuilder.shardLocal`): the scorers run over it with no
+  * exchange and never see a delete set. A store applies its tombstones
+  * to the postings (and `docs`) once, at load; `termStats`, `numDocs`
+  * and `fieldTokens` still count deleted docs until compaction, as
+  * Lucene/tantivy segment statistics do.
   */
 final class BuiltIndex(
     val docs: DataFrame, // source columns + docId
@@ -106,19 +113,9 @@ final class BuiltIndex(
     val numDocs: Long,
     val fieldTokens: Map[String, Long],
     val config: IndexConfig,
-    val deletes: Option[DataFrame] = None, // upsert tombstones (docId)
     /** build-time SymSpell dictionary (field, variant, term, df) when
       * the segment was written in fast-fuzzy mode. */
-    val symspell: Option[DataFrame] = None,
-    /** True iff `postings` is physically co-partitioned by docId shard
-      * with EXACTLY ONE PostingRow per (field, term, shard) — the
-      * in-memory single-segment build guarantees both by hashing the
-      * merged postings on `shard` before the persist. Scorers then take
-      * the exchange-free mapPartitions path (every cursor of a shard is
-      * already in one task). Store-loaded indexes stay `false`: their
-      * per-epoch segment reads are unioned with no co-location, and the
-      * multi-epoch replay-order contract lives on the cogroup path. */
-    val postingsShardLocal: Boolean = false) {
+    val symspell: Option[DataFrame] = None) {
 
   def spark: SparkSession = docs.sparkSession
 
@@ -360,19 +357,49 @@ object IndexBuilder {
     val tfs = new Array[Int](n)
     val norms = new Array[Int](n)
     var off = 0
-    var sumTf = 0L
     sorted.foreach { p =>
       val dec = PostingCodec.decodeAll(p.bytes, p.blockOffset, p.blockLast)
       System.arraycopy(dec.docIds, 0, docIds, off, p.numDocs)
       System.arraycopy(dec.tfs, 0, tfs, off, p.numDocs)
       System.arraycopy(dec.norms, 0, norms, off, p.numDocs)
       off += p.numDocs
-      sumTf += p.sumTf
     }
+    encodeRow(key._1, key._2, key._3, docIds, tfs, norms)
+  }
+
+  /** The PostingRow of one (field, term, shard) from its docId-sorted postings. */
+  private[index] def encodeRow(field: String, term: String, shard: Int, docIds: Array[Long],
+      tfs: Array[Int], norms: Array[Int]): PostingRow = {
     val enc = PostingCodec.encode(docIds, tfs, norms)
-    PostingRow(key._1, key._2, key._3, n, sumTf,
+    var sumTf = 0L
+    tfs.foreach(sumTf += _)
+    PostingRow(field, term, shard, docIds.length, sumTf,
       enc.bytes, enc.blockOffset, enc.blockLast, enc.blockMaxTf, enc.blockMinNorm)
   }
+
+  /** The one physical layout of every index's postings cache:
+    * co-partitioned by docId shard, so every posting row of a shard sits
+    * in one partition and the scorers run as a mapPartitions over the
+    * cache scan with NO exchange (Scorer.shardGrouped) — the §2.4
+    * bucketing trade: pay one shard-keyed shuffle when the index is
+    * built or loaded, not one per query.
+    *
+    * Partition count = min(buildPartitions, shards in a docId span of
+    * `span`), known driver-side — a build's doc count, a store's max
+    * docIdEnd: a 7-shard corpus in 32+ partitions would leave every
+    * query's scan stage launching mostly-empty tasks. Rows sort by
+    * (field, term) within each partition so the columnar cache's
+    * per-batch min/max stats can prune term-filtered scans once
+    * partitions span many batches.
+    */
+  private[index] def shardLocal(postings: Dataset[PostingRow], config: IndexConfig,
+      span: Long): Dataset[PostingRow] =
+    postings
+      .repartition(
+        math.min(config.buildPartitions.toLong,
+          math.max(1L, (span + config.shardDocs - 1) / config.shardDocs)).toInt,
+        col("shard"))
+      .sortWithinPartitions(col("field"), col("term"))
 
   /** Full build: docs -> map-side encoded partials -> one compact
     * shuffle on (field, term, shard) -> concat-merge -> postings +
@@ -406,33 +433,16 @@ object IndexBuilder {
     // postings pass scanning it (one build = two passes total: the
     // count pass over the shared shuffle output, then postings+cache)
     val docs = withIds.persist(StorageLevel.MEMORY_AND_DISK)
-    val postings = partialPostings(docs, config)
-      .groupByKey(p => (p.field, p.term, p.shard))(
-        Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.scalaInt))
+    // one merge shuffle keyed on the partials' own (field, term, shard)
+    // columns (no appended key copy), so merge parallelism never
+    // collapses to the shard count (7 shards at sf0.1); then the
+    // persisted layout every scorer reads
+    val merged = partialPostings(docs, config)
+      .groupBy(col("field"), col("term"), col("shard"))
+      .as(Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.scalaInt),
+        Encoders.product[PartialRow])
       .mapGroups { (key, parts) => mergePartials(key, parts) }(Encoders.product[PostingRow])
-      // co-partition the FINAL compact postings by shard before the
-      // persist: one extra exchange of the encoded index per build (the
-      // §2.4 bucketing trade — pay the shuffle once at write time) buys
-      // every subsequent query an exchange-free shard-local scoring
-      // pass (Scorer.shardGrouped fast path). The merge shuffle above
-      // stays keyed on (field, term, shard) so merge parallelism never
-      // collapses to the shard count (7 shards at sf0.1).
-      //
-      // Partition count = min(buildPartitions, shard count), derived
-      // from the corpus (numDocs is already known driver-side): a
-      // 7-shard corpus in 32+ partitions would leave every query's
-      // scan stage launching mostly-empty tasks. Rows sort by
-      // (field, term) within each partition so the columnar cache's
-      // per-batch min/max stats can prune term-filtered scans once
-      // partitions span many batches (order within a (field, term,
-      // shard) key is irrelevant: single segment = one row per key,
-      // and every scorer re-sorts its shard's rows).
-      .repartition(
-        math.min(config.buildPartitions.toLong,
-          math.max(1L, (numDocs + config.shardDocs - 1) / config.shardDocs)).toInt,
-        col("shard"))
-      .sortWithinPartitions(col("field"), col("term"))
-    val pPersisted = postings.persist(StorageLevel.MEMORY_AND_DISK)
+    val pPersisted = shardLocal(merged, config, numDocs).persist(StorageLevel.MEMORY_AND_DISK)
     val termStats = pPersisted.groupBy(col("field"), col("term"))
       .agg(sum(col("numDocs")).as("df"))
     // exact per-field token totals (tantivy: total_num_tokens) from the
@@ -440,7 +450,6 @@ object IndexBuilder {
     val fieldTokens = pPersisted
       .groupBy(col("field")).agg(sum(col("sumTf")).as("t"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    new BuiltIndex(docs, pPersisted, termStats, numDocs, fieldTokens, config,
-      postingsShardLocal = true).persist()
+    new BuiltIndex(docs, pPersisted, termStats, numDocs, fieldTokens, config).persist()
   }
 }

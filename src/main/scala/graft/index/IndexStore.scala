@@ -9,7 +9,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.io.LocalInputFile
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import org.apache.spark.storage.StorageLevel
@@ -391,10 +391,15 @@ object IndexStore {
     load(df.sparkSession, dir)
   }
 
-  /** Load the committed view: union of all segments, with upsert
-    * tombstones applied. df/avgdl statistics include not-yet-compacted
-    * deleted docs — the same semantics as Lucene/tantivy segment
-    * deletes before a merge.
+  /** Load the committed view: union of all segments, with every
+    * tombstone (upsert and delete-by-query) applied HERE, once — deleted
+    * docs leave both the doc store and the postings, which are
+    * co-partitioned by docId shard like an in-memory build's
+    * (IndexBuilder.shardLocal), so no scorer ever sees a delete set and
+    * no query pays an exchange. df/avgdl statistics include
+    * not-yet-compacted deleted docs — the same semantics as
+    * Lucene/tantivy segment deletes before a merge — so every live doc
+    * scores as if the deleted ones were still filtered per query.
     *
     * @param cacheDocs false = the SCALE default: stored fields stream
     *   from the docId-sorted segment parquet (top-k lookups prune to k
@@ -423,35 +428,87 @@ object IndexStore {
     else Some(tombs.map(t => spark.read.schema(TombstoneSchema).parquet(deletesDir(dir, t.epoch)))
       .reduce(_ unionByName _))
 
-  private def loadManifest(spark: SparkSession, dir: String, m: Manifest,
-      cacheDocs: Boolean): BuiltIndex = {
+  /** One docId shard's tombstones, sorted. */
+  private[index] final case class ShardDels(shard: Int, dels: Array[Long])
+
+  /** Tombstones gathered per docId shard — the delete set stays
+    * distributed (each row bounded by the shard width) instead of a
+    * driver-collected closure Set. Shared by load (above its broadcast
+    * gate) and compact.
+    */
+  private def delsByShard(deletes: DataFrame, shardDocs: Int) =
+    deletes
+      // DIV = integral division, the one shard definition everything
+      // shares ((docId / shardDocs).toInt in IndexBuilder); `/` on longs
+      // is DOUBLE division, which can land on the wrong shard once
+      // docIds pass double precision
+      .select(expr(s"CAST(docId DIV $shardDocs AS INT)").as("shard"), col("docId"))
+      .groupBy("shard").agg(sort_array(collect_list("docId")).as("dels"))
+      .as(Encoders.product[ShardDels])
+
+  /** Each posting row with its shard's tombstoned docs dropped: rows of
+    * tombstone-free shards pass untouched, the rest decode, filter and
+    * re-encode, and a row left empty is dropped.
+    */
+  private def withoutDeleted(postings: Dataset[PostingRow],
+      dels: Dataset[ShardDels]): Dataset[PostingRow] =
+    postings.joinWith(dels, postings("shard") === dels("shard"), "left_outer")
+      .flatMap { case (p, d) => if (d == null) Some(p) else liveRow(p, d.dels) }(
+        Encoders.product[PostingRow])
+
+  /** `p` without the docs in `dels` (sorted): `p` itself when it holds
+    * none of them, None when none of its docs survives.
+    */
+  private def liveRow(p: PostingRow, dels: Array[Long]): Option[PostingRow] = {
+    val dec = PostingCodec.decodeAll(p.bytes, p.blockOffset, p.blockLast)
+    val keep = dec.docIds.indices
+      .filter(i => java.util.Arrays.binarySearch(dels, dec.docIds(i)) < 0).toArray
+    if (keep.length == dec.docIds.length) Some(p)
+    else if (keep.isEmpty) None
+    else Some(IndexBuilder.encodeRow(p.field, p.term, p.shard,
+      keep.map(dec.docIds), keep.map(dec.tfs), keep.map(dec.norms)))
+  }
+
+  /** Tombstone rows up to which load collects the ids driver-side and
+    * broadcasts them (slim docId longs: 4M rows ≈ 32 MB).
+    */
+  private[index] final val BroadcastTombstones = 4000000L
+
+  private[index] def loadManifest(spark: SparkSession, dir: String, m: Manifest,
+      cacheDocs: Boolean, broadcastTombstones: Long = BroadcastTombstones): BuiltIndex = {
     val config = configOf(m.config)
     val segPaths = m.epochs.map(_.path).distinct
-    val postings = readSegments(spark, dir, segPaths, "postings.parquet", PostingsSchema)
+    val stored = readSegments(spark, dir, segPaths, "postings.parquet", PostingsSchema)
       .as(Encoders.product[PostingRow])
     val docsAll = readSegments(spark, dir, segPaths, "docs.parquet", docSchemaOf(m))
-    val scan = tombstoneScan(spark, dir, m.tombstones)
-    val deletes = scan.map(_.distinct())
-    val docs = scan match {
+    val (docs, live) = tombstoneScan(spark, dir, m.tombstones) match {
       case Some(s) =>
-        // the anti-join sits INSIDE the frame persist() may freeze, and
-        // a cached plan never gets AQE's runtime broadcast conversion
-        // (CLAUDE.md): make the broadcast decision explicitly, gated —
-        // tombstones are slim docId longs, so 4M rows ≈ 32 MB. The
-        // manifest's row counts decide the gate without a job; under
+        // both joins sit INSIDE the frames persist() may freeze, and a
+        // cached plan never gets AQE's runtime broadcast conversion
+        // (CLAUDE.md): make the broadcast decision explicitly, gated.
+        // The manifest's row counts decide the gate without a job; under
         // it ONE plain scan collects the ids (deduplicated driver-side)
-        // into a driver-local frame, above it fall back to a plain
-        // shuffle join rather than sort-merging the whole doc store
-        // against the delete set.
-        val gate = 4000000L
-        val rhs =
-          if (m.tombstones.map(_.rows).sum <= gate) {
-            val ids = s.collect().map(_.getLong(0)).distinct
-            broadcast(spark.createDataset(ids.toSeq)(Encoders.scalaLong).toDF("docId"))
-          } else deletes.get
-        docsAll.join(rhs, Seq("docId"), "left_anti")
-      case None => docsAll
+        // into driver-local frames — the ids for the doc store's
+        // anti-join, each shard's sorted ids for the postings — above it
+        // fall back to plain shuffle joins rather than sort-merging the
+        // whole doc store against the delete set.
+        if (m.tombstones.map(_.rows).sum <= broadcastTombstones) {
+          val ids = s.collect().map(_.getLong(0)).distinct
+          val byShard = ids.groupBy(id => (id / config.shardDocs).toInt)
+            .map { case (shard, d) => ShardDels(shard, d.sorted) }.toSeq
+          (docsAll.join(broadcast(spark.createDataset(ids.toSeq)(Encoders.scalaLong).toDF("docId")),
+            Seq("docId"), "left_anti"),
+            withoutDeleted(stored, broadcast(spark.createDataset(byShard)(Encoders.product[ShardDels]))))
+        } else {
+          val deletes = s.distinct()
+          (docsAll.join(deletes, Seq("docId"), "left_anti"),
+            withoutDeleted(stored, delsByShard(deletes, config.shardDocs)))
+        }
+      case None => (docsAll, stored)
     }
+    // shards over the whole docId space: after compaction the store's
+    // numDocs falls below its highest docId (ids are never renumbered)
+    val postings = IndexBuilder.shardLocal(live, config, m.epochs.map(_.docIdEnd).max)
     val termStats = readSegments(spark, dir, segPaths, "termstats.parquet", TermStatsSchema)
       .groupBy("field", "term").agg(sum("df").as("df"))
     val byField = m.epochs.groupBy(_.field)
@@ -464,8 +521,8 @@ object IndexStore {
       if (!config.fastFuzzy) None
       else Some(readSegments(spark, dir, segPaths, "symspell.parquet", SymSpellSchema)
         .groupBy("field", "variant", "term").agg(sum("df").as("df")))
-    new BuiltIndex(docs, postings, termStats, numDocs, fieldTokens, config,
-      deletes, symspell).persist(cacheDocs)
+    new BuiltIndex(docs, postings, termStats, numDocs, fieldTokens, config, symspell)
+      .persist(cacheDocs)
   }
 
   /** Next epoch number, clearing BOTH sets: delete-only epochs exist
@@ -622,6 +679,12 @@ object IndexStore {
     true
   }
 
+  /** deleteByQuery checkpoint ids live in their own namespace: a bare
+    * deleteId equal to an ingest snapshotId (or vice versa) must never
+    * make the OTHER operation a silent resume no-op.
+    */
+  private def deleteCheckpointId(deleteId: String) = s"delete:$deleteId"
+
   /** Durable delete-by-query: tombstone the FULL match set of `clauses`
     * against the live store view (prior tombstones already applied by
     * load) — the session dialect's `DELETE ... WHERE fts(...)` made
@@ -633,20 +696,14 @@ object IndexStore {
     * A zero-match query commits NOTHING and does not consume the
     * deleteId, so a corrected retry under the same id still runs.
     * Matched postings are physically dropped at the next compact();
-    * until then the scorer skips tombstoned docIds (P7
-    * tombstones-until-merge). The match is computed distributed and
+    * until then every load drops the tombstoned docIds from its postings
+    * cache (P7 tombstones-until-merge). The match is computed distributed and
     * only slim docId longs are written — documents never cross the
     * shuffle.
     *
     * @return number of docs tombstoned, or -1 if deleteId was already
     *         committed
     */
-  /** deleteByQuery checkpoint ids live in their own namespace: a bare
-    * deleteId equal to an ingest snapshotId (or vice versa) must never
-    * make the OTHER operation a silent resume no-op.
-    */
-  private def deleteCheckpointId(deleteId: String) = s"delete:$deleteId"
-
   def deleteByQuery(spark: SparkSession, dir: String,
       clauses: Seq[graft.query.SearchClause], deleteId: String): Long = {
     val (basis, m) = manifestAt(dir)
@@ -668,18 +725,11 @@ object IndexStore {
   }
 
   /** Segment merge / compaction (the reference's tablet compaction+GC,
-    * bucket.rs:72-74): merge all segments' posting rows per
+    * bucket.rs:72-74): merge the selected segments' posting rows per
     * (field, term, shard), drop tombstoned docIds, rewrite as one
     * segment — postings-level, no re-tokenization.
-    */
-  /** One posting row joined with its shard's tombstones (the dels array
-    * is bounded by the shard width, never corpus-sized).
-    */
-  final case class CompactRow(field: String, term: String, shard: Int,
-      bytes: Array[Byte], blockOffset: Array[Int], blockLast: Array[Long],
-      dels: Option[Seq[Long]])
-
-  /** @param maxSegments bounds one pass (the reference's LSM tiered
+    *
+    * @param maxSegments bounds one pass (the reference's LSM tiered
     *   framing, bucket.rs:72-74): the N smallest segments by doc count
     *   merge, the rest stay untouched, so a single compaction's
     *   footprint is set by the tier size, not the index size. Tombstones
@@ -702,62 +752,36 @@ object IndexStore {
     // the most per-query segment overhead per byte rewritten
     val selected =
       if (maxSegments >= segs.size) segs
-      else segs.sortBy(s => (s._3, s._1)).take(math.max(2, maxSegments))
+      else segs.sortBy(s => (s._3, s._1)).take(maxSegments)
     val selectedEpochs = selected.map(_._1).toSet
     val unselected = segs.filterNot(s => selectedEpochs(s._1))
 
     val deletes = tombstoneScan(spark, dir, m.tombstones).map(_.distinct())
     val docSchema = docSchemaOf(m)
     val postingsSel = readSegments(spark, dir, selected.map(_._2), "postings.parquet",
-      PostingsSchema)
+      PostingsSchema).as(Encoders.product[PostingRow])
     val docsSelAll = readSegments(spark, dir, selected.map(_._2), "docs.parquet", docSchema)
     val docsSel = deletes match {
       case Some(d) => docsSelAll.join(d, Seq("docId"), "left_anti")
       case None => docsSelAll
     }
-    import org.apache.spark.sql.Encoders
-    // tombstones join the merge as a per-shard sorted array column — a
+    // tombstones meet the posting rows as a per-shard sorted array — a
     // plain shuffle join keyed on shard, so the delete set stays
     // distributed (a heavy-churn table between compactions would blow
     // a driver-collected Set / task closure)
-    val delByShard = deletes match {
-      case Some(d) => d
-        // DIV = integral division, the one shard definition everything
-        // shares ((docId / shardDocs).toInt — IndexBuilder, Scorer
-        // .deletesByShard); `/` on longs is DOUBLE division, which can
-        // land on the wrong shard once docIds pass double precision
-        .select(expr(s"CAST(docId DIV ${config.shardDocs} AS INT)").as("shard"), col("docId"))
-        .groupBy("shard").agg(sort_array(collect_list("docId")).as("dels"))
-      case None => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("shard",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("dels",
-            org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType)))))
-    }
-    val merged = postingsSel
-      .select("field", "term", "shard", "bytes", "blockOffset", "blockLast")
-      .join(delByShard, Seq("shard"), "left")
-      .as(Encoders.product[CompactRow])
+    val merged = deletes.fold(postingsSel)(d =>
+        withoutDeleted(postingsSel, delsByShard(d, config.shardDocs)))
       .groupByKey(p => (p.field, p.term, p.shard))(
         Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.scalaInt))
-      .flatMapGroups { (key, rows) =>
+      .mapGroups { (key, rows) =>
         val (field, term, shard) = key
-        var deleted: Set[Long] = Set.empty
+        // a merged segment's docId window may interleave with another's
+        // (partial passes), so the rows merge by docId, not by concat
         val all = rows.flatMap { p =>
-          if (deleted.isEmpty) deleted = p.dels.map(_.toSet).getOrElse(Set.empty)
           val dec = PostingCodec.decodeAll(p.bytes, p.blockOffset, p.blockLast)
           dec.docIds.indices.map(i => (dec.docIds(i), dec.tfs(i), dec.norms(i)))
-        }.toArray.sortBy(_._1).filter(t => !deleted.contains(t._1))
-        if (all.isEmpty) Iterator.empty
-        else {
-          var sumTf = 0L
-          all.foreach(t => sumTf += t._2)
-          val enc = PostingCodec.encode(all.map(_._1), all.map(_._2), all.map(_._3))
-          Iterator.single(PostingRow(field, term, shard, all.length, sumTf,
-            enc.bytes, enc.blockOffset, enc.blockLast, enc.blockMaxTf, enc.blockMinNorm))
-        }
+        }.toArray.sortBy(_._1)
+        IndexBuilder.encodeRow(field, term, shard, all.map(_._1), all.map(_._2), all.map(_._3))
       }(Encoders.product[PostingRow])
     val mergedEpoch = nextEpoch(m)
     val segName = f"seg-$mergedEpoch%05d"

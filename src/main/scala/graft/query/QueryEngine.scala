@@ -61,19 +61,6 @@ final case class MoreLikeThis(field: String, docId: Long, topTerms: Int = 8,
 final class QueryEngine(val index: BuiltIndex) {
   import SearchDefaults._
 
-  /** Upsert tombstones (docIds superseded by later epochs) as a typed
-    * Dataset — cogrouped with the posting shards inside the scoring
-    * plan (Lucene/tantivy delete-bitset analogue), never collected to
-    * the driver: a heavy-churn table between compactions stays a
-    * distributed column, not a task-closure Set.
-    */
-  private lazy val deletesDs: Option[org.apache.spark.sql.Dataset[Long]] =
-    index.deletes.map { d =>
-      val spark = index.spark
-      import spark.implicits._
-      d.select(col("docId")).as[Long]
-    }
-
   /** Driver-side term-dictionary snapshot (the tantivy-FST analogue —
     * see LocalTermDict). Probed ONCE per engine with a capped collect
     * (`limit(cap+1)` — bounded at any corpus scale): when the whole
@@ -698,9 +685,9 @@ final class QueryEngine(val index: BuiltIndex) {
       val cq = compile(clauses)
       if (cq.terms.isEmpty) return emptyResult[ScoredDocF32]
       val scored = (if (useWand) Wand.route(cq, index.numDocs) else 2) match {
-        case 0 => Wand.topK(index, cq, k, deletesDs, wandStats)
-        case 1 => Wand.topKConj(index, cq, k, deletesDs, wandStats)
-        case _ => Scorer.scoreF32(index, cq, deletesDs)
+        case 0 => Wand.topK(index, cq, k, wandStats)
+        case 1 => Wand.topKConj(index, cq, k, wandStats)
+        case _ => Scorer.scoreF32(index, cq)
       }
       Scorer.topK(scored.toDF("docId", "score"), k)
     }
@@ -781,10 +768,10 @@ final class QueryEngine(val index: BuiltIndex) {
       else (Nil, nonEmpty)
     val frames = Seq(
       if (sparse.nonEmpty)
-        Some(Wand.topKMany(index, sparse, k, deletesDs, wandStats).toDF("qid", "docId", "score"))
+        Some(Wand.topKMany(index, sparse, k, wandStats).toDF("qid", "docId", "score"))
       else None,
       if (dense.nonEmpty)
-        Some(Scorer.scoreManyF32(index, dense, k, deletesDs).toDF("qid", "docId", "score"))
+        Some(Scorer.scoreManyF32(index, dense, k).toDF("qid", "docId", "score"))
       else None).flatten
     Scorer.topKPerQuery(frames.reduce(_ unionByName _), k, col("score"))
   }
@@ -800,7 +787,7 @@ final class QueryEngine(val index: BuiltIndex) {
     val cqs = queries.map(_._1).zip(compileMany(queries.map(_._2)))
     val nonEmpty = cqs.filter(_._2.terms.nonEmpty)
     if (nonEmpty.isEmpty) return emptyResult[ScoredQDocF64]
-    val scored = Scorer.scoreManyF64(index, nonEmpty, k, deletesDs).toDF("qid", "docId", "score")
+    val scored = Scorer.scoreManyF64(index, nonEmpty, k).toDF("qid", "docId", "score")
     Scorer.topKPerQuery(scored, k, round(col("score"), 4))
   }
 
@@ -808,7 +795,7 @@ final class QueryEngine(val index: BuiltIndex) {
   def matchF32(clauses: Seq[SearchClause]): DataFrame = {
     val cq = compile(clauses)
     if (cq.terms.isEmpty) return emptyResult[ScoredDocF32]
-    Scorer.scoreF32(index, cq, deletesDs).toDF("docId", "score")
+    Scorer.scoreF32(index, cq).toDF("docId", "score")
   }
 
   /** Unlimited (docId, score double) match set (facet counting, custom
@@ -817,7 +804,7 @@ final class QueryEngine(val index: BuiltIndex) {
   def matchF64(clauses: Seq[SearchClause], threshold: Option[Double] = None): DataFrame = {
     val cq = compile(clauses)
     if (cq.terms.isEmpty) return emptyResult[ScoredDocF64]
-    val scored = Scorer.scoreF64(index, cq, deletesDs).toDF("docId", "score")
+    val scored = Scorer.scoreF64(index, cq).toDF("docId", "score")
     threshold.map(t => scored.filter(col("score") > lit(t))).getOrElse(scored)
   }
 

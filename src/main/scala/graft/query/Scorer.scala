@@ -42,12 +42,12 @@ final case class ScoredQDocF64(qid: Int, docId: Long, score: Double)
   *
   * Plan shape (scale rationale): the posting rows matching the query's
   * terms are a *tiny* Dataset (#terms x #shards rows) selected with a
-  * pushed-down `term IN (...)` filter against the term-sorted parquet;
-  * they are then re-grouped by docId shard so each task merges all
-  * clause postings for a disjoint docId range — per-doc aggregation
-  * happens in-task with zero per-hit shuffle, and the global top-k is a
-  * TakeOrdered over per-shard candidates. No shuffle ever scales with
-  * corpus size, only with (matched terms x shards).
+  * `term IN (...)` filter against the postings cache, which is already
+  * co-partitioned by docId shard — so each task merges all clause
+  * postings for its disjoint docId ranges with no exchange at all,
+  * per-doc aggregation happens in-task, and the global top-k is a
+  * TakeOrdered over per-shard candidates. No query-time shuffle moves
+  * posting rows; only the per-shard candidates leave their task.
   */
 object Scorer {
 
@@ -68,96 +68,56 @@ object Scorer {
     }
   }
 
-  /** Tombstones keyed by docId shard, for cogrouping with the posting
-    * shards — the delete set stays distributed (bounded per shard by the
-    * shard width) instead of a driver-collected closure Set.
-    */
-  def deletesByShard(index: BuiltIndex, deletes: Dataset[Long]) = {
-    val spark = index.spark
-    import spark.implicits._
-    val width = index.config.shardDocs
-    deletes.groupByKey(id => (id / width).toInt)
-  }
-
   /** Run a per-shard scoring function over the query's matched posting
-    * rows — the ONE place that decides between the two physical shapes:
+    * rows — the ONE physical shape every index scores in. Every index's
+    * postings cache is co-partitioned by docId shard
+    * (`IndexBuilder.shardLocal`), so every row of a shard already sits
+    * in one cache partition and the scorers run as a mapPartitions
+    * directly over the pruned cache scan — a single-stage Spark job with
+    * NO exchange (guide §2.4: the bucketing pattern — the build or load
+    * pays one shard-keyed shuffle so that no query pays one).
     *
-    * FAST PATH (exchange-free): when the index's postings cache is
-    * co-partitioned by shard (`BuiltIndex.postingsShardLocal`, set by
-    * the in-memory single-segment build) and there are no tombstones,
-    * every cursor of a shard is already in one cache partition, so the
-    * scorers run as a mapPartitions directly over the pruned cache scan
-    * — a single-stage Spark job with NO exchange at all (guide §2.4:
-    * the bucketing pattern — the build paid one shard-keyed shuffle so
-    * that every query afterwards skips its groupByKey exchange; before
-    * this, every top-k call paid one 32-partition exchange + an AQE
-    * stage boundary to move a handful of slim posting rows).
-    *
-    * FALLBACK (the r5 shape, bit-identical output): groupByKey(shard)
-    * [+ cogrouped tombstones]. Store-loaded indexes keep it — their
-    * per-segment parquet unions are not co-located and the multi-epoch
-    * replay-order contract is tied to the cogroup path — as does any
-    * index carrying deletes (tombstones arrive as a separate frame and
-    * must meet their shard's rows in one task).
-    *
-    * Exactness: `f` receives exactly the matched rows of one shard in
-    * both shapes, and every scorer sorts its rows internally before
-    * accumulating, so per-query results are bit-identical (gated by
-    * the fast-vs-fallback spec in SearchSpec/BatchSearchSpec and by
-    * every oracle row, which runs through the in-memory fast path).
+    * `f` receives exactly the matched rows of one shard. A store's shard
+    * may hold several rows per (field, term), one per segment; a docId
+    * lives in exactly one segment, so the order of a key's rows cannot
+    * change any doc's sum. Tombstones never reach `f`: they are applied
+    * to the postings once, when the store loads.
     */
-  def shardGrouped[T](index: BuiltIndex, terms: Seq[CompiledTerm],
-      deletes: Option[Dataset[Long]])(
-      f: (Array[PostingRow], Set[Long]) => Iterator[T])(
-      implicit enc: org.apache.spark.sql.Encoder[T]): Dataset[T] = {
-    val matched = matchedPostings(index, terms)
-    if (index.postingsShardLocal && deletes.isEmpty) {
-      matched.mapPartitions { it =>
-        // TreeMap: deterministic shard iteration order within a task
-        // (output ROW order feeds only order-insensitive consumers —
-        // topK / aggregates — but determinism costs nothing here)
-        val byShard = new java.util.TreeMap[Int, scala.collection.mutable.ArrayBuffer[PostingRow]]()
-        it.foreach { p =>
-          var b = byShard.get(p.shard)
-          if (b == null) {
-            b = new scala.collection.mutable.ArrayBuffer[PostingRow]()
-            byShard.put(p.shard, b)
-          }
-          b += p
+  def shardGrouped[T](index: BuiltIndex, terms: Seq[CompiledTerm])(
+      f: Array[PostingRow] => Iterator[T])(
+      implicit enc: org.apache.spark.sql.Encoder[T]): Dataset[T] =
+    matchedPostings(index, terms).mapPartitions { it =>
+      // TreeMap: deterministic shard iteration order within a task
+      // (output ROW order feeds only order-insensitive consumers —
+      // topK / aggregates — but determinism costs nothing here)
+      val byShard = new java.util.TreeMap[Int, scala.collection.mutable.ArrayBuffer[PostingRow]]()
+      it.foreach { p =>
+        var b = byShard.get(p.shard)
+        if (b == null) {
+          b = new scala.collection.mutable.ArrayBuffer[PostingRow]()
+          byShard.put(p.shard, b)
         }
-        import scala.jdk.CollectionConverters._
-        byShard.values().iterator().asScala.flatMap(rows => f(rows.toArray, Set.empty))
+        b += p
       }
-    } else {
-      val grouped = matched.groupByKey(_.shard)(Encoders.scalaInt)
-      deletes match {
-        case Some(d) =>
-          grouped.cogroup(deletesByShard(index, d)) { (_, rows, dels) =>
-            f(rows.toArray, dels.toSet)
-          }
-        case None =>
-          grouped.flatMapGroups { (_, rows) => f(rows.toArray, Set.empty) }
-      }
+      import scala.jdk.CollectionConverters._
+      byShard.values().iterator().asScala.flatMap(rows => f(rows.toArray))
     }
-  }
 
   /** Exhaustive f32 path: tantivy-arithmetic scores for every matching
     * doc, accumulated by the one kernel (`replay`).
     */
-  def scoreF32(index: BuiltIndex, cq: CompiledQuery,
-      deletes: Option[Dataset[Long]] = None): Dataset[ScoredDocF32] = {
+  def scoreF32(index: BuiltIndex, cq: CompiledQuery): Dataset[ScoredDocF32] = {
     val caches = normCachesF32(index, cq.terms)
-    scoreAll(index, cq, deletes)(new AccF32(_, caches))(
+    scoreAll(index, cq)(new AccF32(_, caches))(
       (acc, docId, o) => ScoredDocF32(docId, acc.score(o)))
   }
 
   /** Oracle-parity f64 path: the same kernel in pure double math
     * (mirrors the DuckDB oracle SQL exactly; see SparkEntry.oracleSql).
     */
-  def scoreF64(index: BuiltIndex, cq: CompiledQuery,
-      deletes: Option[Dataset[Long]] = None): Dataset[ScoredDocF64] = {
+  def scoreF64(index: BuiltIndex, cq: CompiledQuery): Dataset[ScoredDocF64] = {
     val caches = normCachesF64(index, cq.terms)
-    scoreAll(index, cq, deletes)(new AccF64(_, caches))(
+    scoreAll(index, cq)(new AccF64(_, caches))(
       (acc, docId, o) => ScoredDocF64(docId, acc.score(o)))
   }
 
@@ -167,10 +127,10 @@ object Scorer {
     * per-query heaps bound the output at (#shards x #queries x k) rows,
     * so no stage ever carries a corpus-sized per-query match set.
     */
-  def scoreManyF32(index: BuiltIndex, queries: Seq[(Int, CompiledQuery)], k: Int,
-      deletes: Option[Dataset[Long]] = None): Dataset[ScoredQDocF32] = {
+  def scoreManyF32(index: BuiltIndex, queries: Seq[(Int, CompiledQuery)],
+      k: Int): Dataset[ScoredQDocF32] = {
     val caches = normCachesF32(index, queries.flatMap(_._2.terms))
-    scoreMany(index, queries, k, deletes)(new AccF32(_, caches))(
+    scoreMany(index, queries, k)(new AccF32(_, caches))(
       (qid, docId, s) => ScoredQDocF32(qid, docId, s.toFloat))
   }
 
@@ -178,10 +138,10 @@ object Scorer {
     * the ROUNDED total order (round(score,4) desc, docId asc) the oracle
     * presentation uses.
     */
-  def scoreManyF64(index: BuiltIndex, queries: Seq[(Int, CompiledQuery)], k: Int,
-      deletes: Option[Dataset[Long]] = None): Dataset[ScoredQDocF64] = {
+  def scoreManyF64(index: BuiltIndex, queries: Seq[(Int, CompiledQuery)],
+      k: Int): Dataset[ScoredQDocF64] = {
     val caches = normCachesF64(index, queries.flatMap(_._2.terms))
-    scoreMany(index, queries, k, deletes)(new AccF64(_, caches))(ScoredQDocF64(_, _, _))
+    scoreMany(index, queries, k)(new AccF64(_, caches))(ScoredQDocF64(_, _, _))
   }
 
   /** Global top-k with the engine's total order (score desc, docId asc
@@ -234,8 +194,8 @@ object Scorer {
     def clear(): Unit
     /** Offer doc offset `o` to a shard heap under this precision's order. */
     def offer(heap: TopKHeap, docId: Long, o: Int): Unit
-    final def isHit(o: Int, reqMask: Int, docId: Long, deleted: Set[Long]): Boolean =
-      mask(o) != 0 && (mask(o) & reqMask) == reqMask && !deleted.contains(docId)
+    final def isHit(o: Int, reqMask: Int): Boolean =
+      mask(o) != 0 && (mask(o) & reqMask) == reqMask
   }
 
   /** tantivy f32 arithmetic (rank identity); heap key = the raw score. */
@@ -304,8 +264,9 @@ object Scorer {
     * walk (scoreF32/F64, scoreManyF32/F64 and Wand.topKMany's exhaustive
     * route) comes out of it. Replays one query's rows of one shard into
     * `acc` in the order f32 rank identity depends on: keys in the plan's
-    * (min group, field, term) order, a key's rows in arrival order (one
-    * per epoch segment), groups ascending, docIds ascending. `blocksOf`
+    * (min group, field, term) order, groups ascending, docIds ascending.
+    * A key's rows (one per store segment) replay in arrival order; each
+    * docId sits in one of them, so their order moves no sum. `blocksOf`
     * decodes a row, or serves it from a shared cache — the caller owns
     * decode accounting.
     */
@@ -328,40 +289,39 @@ object Scorer {
     */
   private[query] def replayTopK(q: QueryPlan, rowsOfKey: Map[(String, String), Array[PostingRow]],
       blocksOf: PostingRow => Array[DecodedBlock], base: Long, acc: ShardAcc,
-      deleted: Set[Long], k: Int)(emit: (Long, Double) => Unit): Unit = {
+      k: Int)(emit: (Long, Double) => Unit): Unit = {
     replay(q, rowsOfKey, blocksOf, base, acc)
     val heap = new TopKHeap(math.max(1, math.min(k, acc.shardDocs)))
     var o = 0
     while (o < acc.shardDocs) {
-      if (acc.isHit(o, q.reqMask, base + o, deleted)) acc.offer(heap, base + o, o)
+      if (acc.isHit(o, q.reqMask)) acc.offer(heap, base + o, o)
       o += 1
     }
     heap.foreachKept(emit)
   }
 
-  private def scoreAll[A <: ShardAcc, T <: Product: TypeTag](index: BuiltIndex, cq: CompiledQuery,
-      deletes: Option[Dataset[Long]])(newAcc: Int => A)(out: (A, Long, Int) => T): Dataset[T] = {
+  private def scoreAll[A <: ShardAcc, T <: Product: TypeTag](index: BuiltIndex,
+      cq: CompiledQuery)(newAcc: Int => A)(out: (A, Long, Int) => T): Dataset[T] = {
     val plan = mkPlan(0, cq)
     val shardDocs = index.config.shardDocs // capture: closures must not drag BuiltIndex in
-    shardGrouped(index, cq.terms, deletes) { (rows, dels) =>
+    shardGrouped(index, cq.terms) { rows =>
       if (rows.isEmpty) Iterator.empty
       else {
         val base = rows(0).shard.toLong * shardDocs
         val acc = newAcc(shardDocs)
         replay(plan, rowsByKey(rows), decodeRow, base, acc)
-        Iterator.range(0, shardDocs).filter(o => acc.isHit(o, plan.reqMask, base + o, dels))
+        Iterator.range(0, shardDocs).filter(o => acc.isHit(o, plan.reqMask))
           .map(o => out(acc, base + o, o))
       }
     }(Encoders.product[T])
   }
 
   private def scoreMany[T <: Product: TypeTag](index: BuiltIndex,
-      queries: Seq[(Int, CompiledQuery)], k: Int,
-      deletes: Option[Dataset[Long]])(newAcc: Int => ShardAcc)(
+      queries: Seq[(Int, CompiledQuery)], k: Int)(newAcc: Int => ShardAcc)(
       out: (Int, Long, Double) => T): Dataset[T] = {
     val plans = queries.map { case (qid, cq) => mkPlan(qid, cq) }.toArray
     val shardDocs = index.config.shardDocs
-    shardGrouped(index, queries.flatMap(_._2.terms), deletes) { (rows, dels) =>
+    shardGrouped(index, queries.flatMap(_._2.terms)) { rows =>
       if (rows.isEmpty) Iterator.empty
       else {
         // each matched row decodes ONCE; every subscribing query replays it
@@ -374,7 +334,7 @@ object Scorer {
         val res = Seq.newBuilder[T]
         plans.foreach { q =>
           if (q.order.exists(rowsOfKey.contains))
-            replayTopK(q, rowsOfKey, blocksOf, base, acc, dels, k)(
+            replayTopK(q, rowsOfKey, blocksOf, base, acc, k)(
               (d, s) => res += out(q.qid, d, s))
         }
         res.result().iterator
@@ -382,9 +342,7 @@ object Scorer {
     }(Encoders.product[T])
   }
 
-  /** A shard's rows keyed by (field, term), each key's rows in arrival
-    * order (groupBy keeps encounter order within a group).
-    */
+  /** A shard's rows keyed by (field, term). */
   private[query] def rowsByKey(rows: Array[PostingRow]): Map[(String, String), Array[PostingRow]] =
     rows.groupBy(p => (p.field, p.term))
 

@@ -177,7 +177,7 @@ object Wand {
 
   /** Exact per-shard top-k via WAND with block-max skipping. */
   private def wandShard(rows: Array[PostingRow], q: Scorer.QueryPlan,
-      caches: Map[String, Array[Float]], k: Int, deleted: Set[Long],
+      caches: Map[String, Array[Float]], k: Int,
       stats: Option[Stats] = None, shared: BlockCache = null): Iterator[ScoredDocF32] = {
     // scoring order must match the exhaustive scorer: (field, term) sorted
     val sortedRows = rows.sortBy(p => (p.field, p.term))
@@ -246,16 +246,14 @@ object Wand {
             } else {
               // full score of pivotDoc: f32 sum in (field, term) order —
               // the ORIGINAL cursors array preserves that order
-              if (!deleted.contains(pivotDoc)) {
-                var s = 0.0f
-                var ci = 0
-                while (ci < cursors.length) {
-                  val c = cursors(ci)
-                  if (!c.done && c.curDoc == pivotDoc) s += c.curScore
-                  ci += 1
-                }
-                heap.offer(s, pivotDoc, s)
+              var s = 0.0f
+              var ci = 0
+              while (ci < cursors.length) {
+                val c = cursors(ci)
+                if (!c.done && c.curDoc == pivotDoc) s += c.curScore
+                ci += 1
               }
+              heap.offer(s, pivotDoc, s)
               // all cursors at pivotDoc are the sorted prefix 0..p
               j = 0
               while (j <= p) { if (byDoc(j).curDoc == pivotDoc) byDoc(j).next(); j += 1 }
@@ -286,7 +284,6 @@ object Wand {
       q: Scorer.QueryPlan,
       caches: Map[String, Array[Float]],
       k: Int,
-      deleted: Set[Long],
       stats: Option[Stats],
       shared: BlockCache = null): Iterator[ScoredDocF32] = {
     val constMask = q.constMask
@@ -362,53 +359,51 @@ object Wand {
             g += 1
           }
           if (all) {
-            if (!deleted.contains(cand)) {
-              // block-max refinement: UB of cand from block metadata
-              var bub = 0.0f
+            // block-max refinement: UB of cand from block metadata
+            var bub = 0.0f
+            java.util.Arrays.fill(constSeen, false)
+            ci = 0
+            while (ci < cursors.length) {
+              val c = cursors(ci)
+              if (!c.done && c.curDoc == cand) {
+                bub += c.currentBlockUB
+                val gs = rowGroups(ci)
+                var gi = 0
+                while (gi < gs.length) {
+                  val gg = gs(gi)
+                  if ((constMask & (1 << gg)) != 0 && !constSeen(gg)) {
+                    bub += 1.0f; constSeen(gg) = true
+                  }
+                  gi += 1
+                }
+              }
+              ci += 1
+            }
+            if (bub >= heap.threshold) {
+              // exact f32 score, exhaustive accumulation order
+              var s = 0.0f
               java.util.Arrays.fill(constSeen, false)
               ci = 0
               while (ci < cursors.length) {
                 val c = cursors(ci)
                 if (!c.done && c.curDoc == cand) {
-                  bub += c.currentBlockUB
+                  val p = sortedRows(ci)
                   val gs = rowGroups(ci)
                   var gi = 0
                   while (gi < gs.length) {
                     val gg = gs(gi)
-                    if ((constMask & (1 << gg)) != 0 && !constSeen(gg)) {
-                      bub += 1.0f; constSeen(gg) = true
+                    if ((constMask & (1 << gg)) != 0) {
+                      if (!constSeen(gg)) { s += 1.0f; constSeen(gg) = true }
+                    } else {
+                      s += Bm25.tfScoreF32(
+                        q.terms((p.field, p.term, gg)).weightF32, c.curTf, c.cache(c.curNorm))
                     }
                     gi += 1
                   }
                 }
                 ci += 1
               }
-              if (bub >= heap.threshold) {
-                // exact f32 score, exhaustive accumulation order
-                var s = 0.0f
-                java.util.Arrays.fill(constSeen, false)
-                ci = 0
-                while (ci < cursors.length) {
-                  val c = cursors(ci)
-                  if (!c.done && c.curDoc == cand) {
-                    val p = sortedRows(ci)
-                    val gs = rowGroups(ci)
-                    var gi = 0
-                    while (gi < gs.length) {
-                      val gg = gs(gi)
-                      if ((constMask & (1 << gg)) != 0) {
-                        if (!constSeen(gg)) { s += 1.0f; constSeen(gg) = true }
-                      } else {
-                        s += Bm25.tfScoreF32(
-                          q.terms((p.field, p.term, gg)).weightF32, c.curTf, c.cache(c.curNorm))
-                      }
-                      gi += 1
-                    }
-                  }
-                  ci += 1
-                }
-                heap.offer(s, cand, s)
-              }
+              heap.offer(s, cand, s)
             }
             ci = 0
             while (ci < cursors.length) {
@@ -425,31 +420,28 @@ object Wand {
     * exhaustive scorer under the (score desc, docId asc) total order.
     */
   def topKConj(index: BuiltIndex, cq: CompiledQuery, k: Int,
-      deletes: Option[Dataset[Long]] = None,
       stats: Option[Stats] = None): Dataset[ScoredDocF32] = {
     require(cq.groups.nonEmpty && cq.groups.forall(_.required),
       "conjunction WAND covers all-required multi-group queries")
     // a group with no dictionary matches anywhere → empty intersection
     if (cq.groups.exists(g => !cq.terms.exists(_.group == g.id)))
       return index.spark.emptyDataset(Encoders.product[ScoredDocF32])
-    walkShards(index, cq, k, deletes)(wandShardConj(_, _, _, _, _, stats))
+    walkShards(index, cq, k)(wandShardConj(_, _, _, _, stats))
   }
 
-  /** One single-query WAND walk per shard. Tombstones (when present)
-    * stay cogrouped per shard inside shardGrouped's fallback: WAND must
-    * exclude them DURING scoring so the heap fills with live docs — a
-    * post-hoc anti-join would under-fill the top-k.
+  /** One single-query WAND walk per shard. A store's tombstoned docs
+    * were dropped from the postings at load, so the walk never meets
+    * them and every heap fills with live docs only.
     */
-  private def walkShards(index: BuiltIndex, cq: CompiledQuery, k: Int,
-      deletes: Option[Dataset[Long]])(walk: (Array[PostingRow], Scorer.QueryPlan,
-      Map[String, Array[Float]], Int, Set[Long]) => Iterator[ScoredDocF32]
-  ): Dataset[ScoredDocF32] = {
+  private def walkShards(index: BuiltIndex, cq: CompiledQuery, k: Int)(
+      walk: (Array[PostingRow], Scorer.QueryPlan, Map[String, Array[Float]], Int) =>
+        Iterator[ScoredDocF32]): Dataset[ScoredDocF32] = {
     val spark = index.spark
     import spark.implicits._
     val plan = Scorer.mkPlan(0, cq)
     val caches = Scorer.normCachesF32(index, cq.terms)
     val kk = math.min(k, index.config.shardDocs) // a shard holds at most shardDocs hits
-    Scorer.shardGrouped(index, cq.terms, deletes)(walk(_, plan, caches, kk, _))
+    Scorer.shardGrouped(index, cq.terms)(walk(_, plan, caches, kk))
   }
 
   /** The ONE WAND routing decision, taken by searchF32 and (through
@@ -523,7 +515,6 @@ object Wand {
     * per query of lnx's concurrent search load.
     */
   def topKMany(index: BuiltIndex, queries: Seq[(Int, CompiledQuery)], k: Int,
-      deletes: Option[Dataset[Long]] = None,
       stats: Option[Stats] = None): Dataset[ScoredQDocF32] = {
     val spark = index.spark
     import spark.implicits._
@@ -534,14 +525,12 @@ object Wand {
     val caches = Scorer.normCachesF32(index, allTerms)
     val shardDocs = index.config.shardDocs
     val kk = k
-    Scorer.shardGrouped(index, allTerms, deletes) { (rows, dels) =>
-      batchShard(rows, plans, caches, shardDocs, kk, dels, stats)
-    }
+    Scorer.shardGrouped(index, allTerms)(batchShard(_, plans, caches, shardDocs, kk, stats))
   }
 
   private def batchShard(rows: Array[PostingRow], plans: Array[BatchPlan],
       caches: Map[String, Array[Float]], shardDocs: Int, k: Int,
-      deleted: Set[Long], stats: Option[Stats]): Iterator[ScoredQDocF32] = {
+      stats: Option[Stats]): Iterator[ScoredQDocF32] = {
     if (rows.isEmpty || k <= 0) return Iterator.empty
     val cache = new BlockCache(stats)
     rows.foreach(cache.register)
@@ -556,14 +545,14 @@ object Wand {
       val qRows = q.plan.order.flatMap(rowsOfKey.getOrElse(_, Array.empty[PostingRow]))
       if (qRows.nonEmpty) q.route match {
         case 0 =>
-          wandShard(qRows, q.plan, caches, shardK, deleted, stats, cache)
+          wandShard(qRows, q.plan, caches, shardK, stats, cache)
             .foreach(h => out += ScoredQDocF32(qid, h.docId, h.score))
         case 1 =>
-          wandShardConj(qRows, q.plan, caches, shardK, deleted, stats, cache)
+          wandShardConj(qRows, q.plan, caches, shardK, stats, cache)
             .foreach(h => out += ScoredQDocF32(qid, h.docId, h.score))
         case _ =>
           // the exhaustive kernel, every decode through the shared cache
-          Scorer.replayTopK(q.plan, rowsOfKey, cache.decodeRow, base, acc, deleted, k)(
+          Scorer.replayTopK(q.plan, rowsOfKey, cache.decodeRow, base, acc, k)(
             (d, s) => out += ScoredQDocF32(qid, d, s.toFloat))
       }
     }
@@ -575,10 +564,9 @@ object Wand {
     * scorer under the (score desc, docId asc) total order.
     */
   def topK(index: BuiltIndex, cq: CompiledQuery, k: Int,
-      deletes: Option[Dataset[Long]] = None,
       stats: Option[Stats] = None): Dataset[ScoredDocF32] = {
     require(cq.groups.size == 1 && !cq.groups.head.constScore,
       "WAND path covers single-group sum-scored queries; use Scorer for the rest")
-    walkShards(index, cq, k, deletes)(wandShard(_, _, _, _, _, stats))
+    walkShards(index, cq, k)(wandShard(_, _, _, _, stats))
   }
 }

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.corpus.CodeCorpus
-import graft.index.{BuiltIndex, IndexBuilder, IndexConfig}
+import graft.index.{IndexBuilder, IndexConfig}
 import graft.query._
 
 /** Batched multi-query search (QueryEngine.searchManyF32/F64): scoring
@@ -161,29 +161,35 @@ class BatchSearchSpec extends AnyFunSuite {
       s"decoded=$decoded skipped=$skipped total=$total must partition the matched blocks")
   }
 
-  test("shard-local fast path == cogroup fallback, bit-identical per clause shape") {
-    // the in-memory build sets postingsShardLocal (exchange-free
-    // mapPartitions scoring); the same frames with the flag OFF run the
-    // r5 groupByKey shape — every scorer must agree bit-for-bit
-    val flagOff = new BuiltIndex(index.docs, index.postings, index.termStats,
-      index.numDocs, index.fieldTokens, index.config)
-    assert(index.postingsShardLocal && !flagOff.postingsShardLocal, "test premise")
-    val eOff = new QueryEngine(flagOff)
-    batch.foreach { case (_, clauses) =>
-      assert(rowsF32(engine.searchF32(clauses, 10)) === rowsF32(eOff.searchF32(clauses, 10)),
-        s"$clauses diverged on the WAND-gated path")
-      assert(rowsF32(engine.searchF32(clauses, 10, useWand = false)) ===
-        rowsF32(eOff.searchF32(clauses, 10, useWand = false)),
-        s"$clauses diverged on the exhaustive path")
+  test("store scoring == brute-force oracle over live docs only") {
+    // StoreFixture's tombstones are applied once at load; BM25
+    // statistics (N, df, avgdl) still count every doc version in the
+    // segments until compaction, and only live docs may score
+    import graft.index.IndexStore
+    val dir = StoreFixture.dir
+    val segs = IndexStore.readManifest(spark, dir)._1.map(_.path).distinct
+    val allVersions = segs.flatMap(seg => spark.read.parquet(s"$dir/$seg/docs.parquet")
+      .selectExpr("docId", "content").collect().map(r => (r.getLong(0), r.getString(1))))
+    val e = new QueryEngine(IndexStore.load(spark, dir))
+    val live = e.index.docs.select("docId").collect().map(_.getLong(0)).toSet
+    assert(live.size < allVersions.size, "test premise: the store holds tombstoned versions")
+    val qs = Seq("binary search needle", "fn return", "freshterm upserted", "search")
+    val batched = withSplit(e.searchManyF32(qs.indices.map(i => i -> Seq(Fts("content", qs(i)))), 10)
+      .collect()).map(r => (r.getInt(0), (r.getLong(1), r.getFloat(2))))
+      .groupBy(_._1).view.mapValues(_.map(_._2).toSeq.sortBy { case (d, s) => (-s, d) }).toMap
+    qs.zipWithIndex.foreach { case (q, i) =>
+      val terms = e.tokenizeQuery("content", q)
+      val all = BruteOracle.ftsScores(allVersions, terms)
+      val expected = BruteOracle.topK(BruteOracle.ftsScores(allVersions, terms, live), 10)
+      assert(expected.nonEmpty, s"test premise: '$q' matches live docs")
+      assert(rowsF32(e.searchF32(Seq(Fts("content", q)), 10)) === expected, s"routed '$q'")
+      assert(rowsF32(e.searchF32(Seq(Fts("content", q)), 10, useWand = false)) === expected,
+        s"exhaustive '$q'")
+      assert(batched.getOrElse(i, Nil) === expected, s"batched '$q'")
+      if (i == 0) assert(BruteOracle.topK(all, 10) != expected,
+        "test premise: tombstoned versions would rank in the top-10")
     }
-    // batched, both routes
-    def perQid(rows: Array[org.apache.spark.sql.Row]) = rows
-      .map(r => (r.getInt(0), r.getLong(1), r.getFloat(2))).groupBy(_._1).view
-      .mapValues(_.map(t => (t._2, t._3)).toSeq.sortBy { case (d, s) => (-s, d) }).toMap
-    assert(perQid(engine.searchManyF32(batch, 10).collect()) ===
-      perQid(eOff.searchManyF32(batch, 10).collect()))
-    assert(withSplit(perQid(engine.searchManyF32(batch, 10).collect())) ===
-      withSplit(perQid(eOff.searchManyF32(batch, 10).collect())))
+    e.release()
   }
 
   test("plan LRU: repeated stats-free searches reuse the planned frame, results recompute") {
@@ -227,29 +233,31 @@ class BatchSearchSpec extends AnyFunSuite {
     assert(got.count() === 0)
   }
 
-  test("batched scoring honors delete tombstones (cogroup path)") {
-    import spark.implicits._
-    // tombstone the top result of query 0, then re-run both paths
-    val solo = engine.searchF32(Seq(Fts("content", "fn return")), 3).collect()
-    assert(solo.nonEmpty)
-    val deadId = solo(0).getLong(0)
-    val withDeletes = new BuiltIndex(
-      index.docs, index.postings, index.termStats, index.numDocs,
-      index.fieldTokens, index.config,
-      deletes = Some(Seq(deadId).toDF("docId")))
-    val e = new QueryEngine(withDeletes)
-    val got = e.searchManyF32(Seq(0 -> Seq(Fts("content", "fn return"))), 3)
+  test("batched scoring honors delete tombstones (store)") {
+    // StoreFixture's deleteByQuery tombstoned every doc holding the
+    // planted `needle`: the term's posting rows are still in the
+    // segments, but a load drops them before any scorer runs
+    import graft.index.IndexStore
+    val dir = StoreFixture.dir
+    val e = new QueryEngine(IndexStore.load(spark, dir))
+    val q = Seq(Fts("content", "needle"))
+    assert(e.compile(q).terms.map(_.df).sum > 0L, "test premise: 'needle' is in the dictionary")
+    assert(e.searchManyF32(Seq(0 -> q), 3).count() === 0L)
+    val mixed = Seq(Fts("content", "needle binary"))
+    val got = e.searchManyF32(Seq(0 -> mixed), 3)
       .collect().map(r => (r.getLong(1), r.getFloat(2))).toSeq
       .sortBy { case (d, s) => (-s, d) }
-    assert(!got.exists(_._1 == deadId))
-    assert(got === rowsF32(e.searchF32(Seq(Fts("content", "fn return")), 3, useWand = false)))
+    assert(got.nonEmpty)
+    assert(got === rowsF32(e.searchF32(mixed, 3, useWand = false)))
+    assert(e.matchF32(q).count() === 0L, "no needle doc survives the load")
+    e.release()
   }
 
   test("batched == single-query on a MULTI-EPOCH store (several posting rows per term + tombstones)") {
     // an upserted store carries one PostingRow per (field, term, shard)
-    // PER EPOCH plus delete tombstones — the batched merge must replay
-    // every epoch's rows in the same (stable-sort) arrival order the
-    // single-query merge uses, or f32 sums diverge
+    // PER EPOCH plus delete tombstones — the batched merge must sum
+    // every epoch's rows into the same per-doc f32 scores the
+    // single-query merge gets
     import graft.index.IndexStore
     val dir = java.nio.file.Files.createTempDirectory("graftbatch").toString
     val base = CodeCorpus.generate(spark, 600, 4).cache()
@@ -279,7 +287,7 @@ class BatchSearchSpec extends AnyFunSuite {
       val solo = rowsF32(e.searchF32(clauses, 10, useWand = false))
       assert(got.getOrElse(qid, Nil) === solo, s"qid=$qid diverged on the multi-epoch store")
     }
-    // f64 through the same kernel on the cogroup fallback: the shard
+    // f64 through the same kernel on the store: the shard
     // heaps (round4 order) keep exactly the per-query oracle top-k, with
     // bit-equal raw doubles
     val got64 = e.searchManyF64(b, 10).collect()
@@ -301,7 +309,7 @@ class BatchSearchSpec extends AnyFunSuite {
     // match-set size
     val k = 5
     val cq = engine.compile(Seq(Fts("content", "fn")))
-    val cand = Scorer.scoreManyF32(index, Seq(0 -> cq), k, None)
+    val cand = Scorer.scoreManyF32(index, Seq(0 -> cq), k)
     val nShards = math.ceil(index.numDocs.toDouble / index.config.shardDocs).toInt
     val n = cand.count()
     val full = engine.matchF32(Seq(Fts("content", "fn"))).count()

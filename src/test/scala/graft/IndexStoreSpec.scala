@@ -20,6 +20,10 @@ class IndexStoreSpec extends AnyFunSuite {
   private def topDocs(e: QueryEngine, q: String, k: Int = 10): Seq[(Long, Float)] =
     e.searchF32(Seq(Fts("content", q)), k).collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
 
+  /** Distinct tombstoned docIds the LATEST manifest still applies. */
+  private def pendingDeletes(dir: String): Long =
+    IndexStore.info(spark, dir).collect()(0).getAs[Long]("pendingDeletes")
+
   val config = IndexConfig(Seq("repo", "path", "commit"), Seq("content"), shardDocs = 256, buildPartitions = 4)
 
   private val json = new ObjectMapper()
@@ -108,7 +112,7 @@ class IndexStoreSpec extends AnyFunSuite {
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/_deletes/epoch=9")
     val idx = IndexStore.load(spark, dir)
     assert(idx.docs.count() === docsBefore)
-    assert(idx.deletes.isEmpty || idx.deletes.get.count() === 0)
+    assert(pendingDeletes(dir) === 0L)
   }
 
   test("fast-fuzzy mode persists the SymSpell dictionary at index time (README.md:28)") {
@@ -200,7 +204,7 @@ class IndexStoreSpec extends AnyFunSuite {
     val eBefore = new QueryEngine(before)
     val matchBefore = topDocs(eBefore, "tieredmarker", 500).map(_._1).toSet
     val liveBefore = before.docs.count()
-    val pendingBefore = before.deletes.map(_.count()).getOrElse(0L)
+    val pendingBefore = pendingDeletes(dir)
     assert(pendingBefore > 0)
 
     // pass 1: merge only the 2 smallest segments; epoch 0 (the big one)
@@ -212,7 +216,7 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(epochsMid.map(_.path).distinct.contains("seg-00000"))
     assert(mid.docs.count() === liveBefore)
     // tombstones targeting docs still in unmerged segments survive
-    assert(mid.deletes.nonEmpty && mid.deletes.get.count() > 0)
+    assert(pendingDeletes(dir) > 0L)
     assert(topDocs(new QueryEngine(mid), "tieredmarker", 500).map(_._1).toSet === matchBefore)
     // info() liveDocs accounting stays exact across a partial pass
     assert(IndexStore.info(spark, dir).collect()(0).getAs[Long]("liveDocs") === liveBefore)
@@ -225,7 +229,7 @@ class IndexStoreSpec extends AnyFunSuite {
     val end = IndexStore.load(spark, dir)
     val (epochs3, _, _) = IndexStore.readManifest(spark, dir)
     assert(epochs3.map(_.path).distinct.size === 1)
-    assert(end.deletes.isEmpty || end.deletes.get.count() === 0)
+    assert(pendingDeletes(dir) === 0L)
     assert(end.docs.count() === liveBefore)
     assert(topDocs(new QueryEngine(end), "tieredmarker", 500).map(_._1).toSet === matchBefore)
   }
@@ -270,7 +274,7 @@ class IndexStoreSpec extends AnyFunSuite {
     IndexStore.compact(spark, dir)
     val after = IndexStore.load(spark, dir)
     val eAfter = new QueryEngine(after)
-    assert(after.deletes.isEmpty || after.deletes.get.count() == 0)
+    assert(pendingDeletes(dir) == 0L)
     assert(after.docs.count() === docsBefore)
     // stats change at merge (deleted docs leave df/N) — matches
     // Lucene/tantivy semantics — so compare match SETS, not scores
@@ -613,7 +617,7 @@ class IndexStoreSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](IndexStore.load(spark, dir, atVersion = vN))
     val latest = IndexStore.load(spark, dir)
     assert(latest.docs.count() === docsAtVn)
-    assert(latest.deletes.isEmpty || latest.deletes.get.count() === 0L,
+    assert(pendingDeletes(dir) === 0L,
       "compacted view has no pending tombstones")
     val e = new QueryEngine(latest)
     assert(e.searchF32(Seq(graft.query.Fts("content", "pinmarker")), 100).count() === hitsAtVn)

@@ -342,4 +342,53 @@ class PlanSpec extends AnyFunSuite {
     val plan = f.queryExecution.executedPlan.toString
     assert(plan.contains("HashAggregate"), plan.take(1500))
   }
+
+  test("store scoring runs with no exchange outside the cached postings, on every route") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object Plans extends AdaptiveSparkPlanHelper
+    // the exchanges a run executed; the cache scan is a leaf here, so
+    // the shuffle that built the postings cache is not counted
+    def exchanges(df: DataFrame): Seq[ShuffleExchangeExec] = {
+      df.collect()
+      Plans.collect(df.queryExecution.executedPlan) { case x: ShuffleExchangeExec => x }
+    }
+    def onQid(x: ShuffleExchangeExec): Boolean = x.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.forall {
+        case a: Attribute => a.name == "qid"
+        case _ => false
+      }
+      case _ => false
+    }
+    val e = new QueryEngine(graft.index.IndexStore.load(spark, StoreFixture.dir))
+    val n = e.index.numDocs
+    def df(cs: Seq[SearchClause]) = e.compile(cs).terms.map(_.df)
+    val disj = Seq(Fts("content", "needle binary"))
+    val conj = Seq(Fts("content", "freshterm"), Fts("content", "fn"))
+    val dense = Seq(Fts("content", "fn return"))
+    // premises of Wand.route: disjunction WAND, conjunction WAND, exhaustive
+    assert(df(disj).min * 4 <= n)
+    assert(df(Seq(conj.head)).sum * 4 <= n)
+    assert(df(dense).min * 4 > n)
+    val batch = Seq(0 -> disj, 1 -> conj, 2 -> dense)
+    val split = Seq("graft.batch.splitMinDocs" -> "0")
+    Seq(
+      "searchF32 disjunction WAND" -> e.searchF32(disj, 10),
+      "searchF32 conjunction WAND" -> e.searchF32(conj, 10),
+      "searchF32 exhaustive" -> e.searchF32(dense, 10),
+      "searchF32 forced exhaustive" -> e.searchF32(disj, 10, useWand = false),
+      "matchF64" -> e.matchF64(disj)
+    ).foreach { case (what, q) => assert(exchanges(q).isEmpty, what) }
+    // the batch's only exchange is its per-qid top-k window above the
+    // scoring, never one that moves posting rows
+    Seq(
+      "searchManyF32" -> exchanges(e.searchManyF32(batch, 10)),
+      "searchManyF32 split" -> EagerPlanConfs.withConfs(spark, split)(
+        exchanges(e.searchManyF32(batch, 10)))
+    ).foreach { case (what, xs) => assert(xs.nonEmpty && xs.forall(onQid), s"$what: $xs") }
+    e.release()
+  }
 }

@@ -16,7 +16,12 @@ object BruteOracle {
   final val K1 = 1.2f
   final val B = 0.75f
 
-  def ftsScores(docs: Seq[(Long, String)], terms: Seq[String]): Map[Long, Float] = {
+  /** BM25 over `docs`; only docs passing `live` score, while N, df and
+    * avgdl count every doc in `docs` (a store's statistics before
+    * compaction).
+    */
+  def ftsScores(docs: Seq[(Long, String)], terms: Seq[String],
+      live: Long => Boolean = _ => true): Map[Long, Float] = {
     val tokenized = docs.map { case (id, t) => (id, Analyzer.tokenize(t)) }
     val n = docs.size.toLong
     val totalTokens = tokenized.map(_._2.length.toLong).sum
@@ -40,7 +45,7 @@ object BruteOracle {
           matched = true
         }
       }
-      if (matched) res(id) = s
+      if (matched && live(id)) res(id) = s
     }
     res.toMap
   }

@@ -90,19 +90,22 @@ class WandSpec extends AnyFunSuite {
     }
   }
 
-  test("WAND paths respect tombstones (per-shard cogroup, no driver Set)") {
-    import spark.implicits._
+  test("WAND paths respect tombstones (applied at store load)") {
+    import org.apache.spark.sql.functions.lit
     val docs = spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
-    val idx = IndexBuilder.build(docs, IndexConfig(Seq("doc_id"), Seq("text"),
-      shardDocs = 64, buildPartitions = 4))
-    // tombstone half the current top-10 of a hot query
-    val eng0 = new QueryEngine(idx)
+    val cfg = IndexConfig(Seq("doc_id"), Seq("text"), shardDocs = 64, buildPartitions = 4)
+    val dir = java.nio.file.Files.createTempDirectory("graftwand").toString
+    graft.index.IndexStore.create(docs, cfg, dir).unpersist()
+    // upsert half the current top-10 of a hot query with text that
+    // matches nothing: their old docIds become tombstones
+    val eng0 = new QueryEngine(graft.index.IndexStore.load(spark, dir))
     val top = eng0.searchF32(Seq(Fts("text", "the")), 10).collect().map(_.getLong(0))
     val dead = top.take(5).toSet
-    val deadDf = dead.toSeq.toDF("docId")
-    val idxDel = new graft.index.BuiltIndex(idx.docs, idx.postings, idx.termStats,
-      idx.numDocs, idx.fieldTokens, idx.config, Some(deadDf))
-    val eng = new QueryEngine(idxDel)
+    val deadKeys = eng0.lookupDocs(dead.toSeq, Seq("doc_id")).collect().map(_.get(1))
+    eng0.release()
+    graft.index.IndexStore.appendEpoch(docs.filter(docs("doc_id").isin(deadKeys.toSeq: _*))
+      .withColumn("text", lit("zzqqreplaced")), dir, "upsert-top")
+    val eng = new QueryEngine(graft.index.IndexStore.load(spark, dir))
     for (clauses <- Seq(
         Seq(Fts("text", "the")): Seq[SearchClause],
         Seq(Fts("text", "the"), Fts("text", "data")): Seq[SearchClause])) {
@@ -111,6 +114,7 @@ class WandSpec extends AnyFunSuite {
       assert(wand === exhaustive, s"clauses $clauses")
       assert(wand.toSet.intersect(dead).isEmpty, "deleted docs must not surface")
     }
+    eng.release()
   }
 
   test("WAND skip counters: rare+hot top-k skips the hot term's blocks") {
