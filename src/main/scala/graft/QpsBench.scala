@@ -104,12 +104,14 @@ object QpsBench {
     // A/B: the pre-pruning exhaustive batch merge (decode EVERY matched
     // block once, replay per query — Scorer.scoreManyF32) vs the
     // shared-cache block-max path the engine now serves (Wand.topKMany):
-    // same plans, same output, the delta is pure block skipping
+    // both end in the engine's per-qid merge, so the delta is pure
+    // block skipping
+    def exhaustive(qs: Seq[(Int, CompiledQuery)]): Unit = engine.batchTopK(
+      Scorer.preMerged(Scorer.scoreManyF32(idx, qs, 10).toDF("qid", "docId", "score"), 10),
+      10, qs.size).collect()
     val cqs = batch.map(_._1).zip(engine.compileMany(batch.map(_._2)))
       .filter(_._2.terms.nonEmpty)
-    def runExhaustive(): Unit = Scorer.topKPerQuery(
-      Scorer.scoreManyF32(idx, cqs, 10).toDF("qid", "docId", "score"),
-      10, org.apache.spark.sql.functions.col("score")).collect()
+    def runExhaustive(): Unit = exhaustive(cqs)
     runExhaustive() // warm-up
     val (_, tBatchEx) = Bench.time(runExhaustive())
 
@@ -122,9 +124,7 @@ object QpsBench {
       engine.searchManyF32(skew, 10, wandStats = Some(sStats)).collect())
     val cqsSkew = skew.map(_._1).zip(engine.compileMany(skew.map(_._2)))
       .filter(_._2.terms.nonEmpty)
-    def runSkewExhaustive(): Unit = Scorer.topKPerQuery(
-      Scorer.scoreManyF32(idx, cqsSkew, 10).toDF("qid", "docId", "score"),
-      10, org.apache.spark.sql.functions.col("score")).collect()
+    def runSkewExhaustive(): Unit = exhaustive(cqsSkew)
     runSkewExhaustive() // warm-up
     val (_, tSkewEx) = Bench.time(runSkewExhaustive())
 

@@ -474,38 +474,56 @@ object IndexStore {
     */
   private[index] final val BroadcastTombstones = 4000000L
 
+  /** A manifest's delete set, in the two shapes its consumers join: the
+    * docIds (the doc store's anti-join) and, built on first use, each
+    * shard's sorted ids (the postings re-encode).
+    */
+  private final class Deletes(val ids: DataFrame, byShardOf: => Dataset[ShardDels]) {
+    lazy val byShard: Dataset[ShardDels] = byShardOf
+  }
+
+  /** The manifest's tombstones, read once. Both joins sit INSIDE the
+    * frames persist() may freeze, and a cached plan never gets AQE's
+    * runtime broadcast conversion (CLAUDE.md): make the broadcast
+    * decision explicitly, gated. The manifest's row counts decide the
+    * gate without a job; under it ONE plain scan collects the ids
+    * (deduplicated driver-side) into driver-local broadcast frames,
+    * above it both shapes stay distributed, for plain shuffle joins
+    * rather than sort-merging the whole doc store against the delete
+    * set.
+    */
+  private def deletes(spark: SparkSession, dir: String, m: Manifest, shardDocs: Int,
+      broadcastTombstones: Long): Option[Deletes] =
+    tombstoneScan(spark, dir, m.tombstones).map { s =>
+      if (m.tombstones.map(_.rows).sum <= broadcastTombstones) {
+        val ids = s.collect().map(_.getLong(0)).distinct
+        new Deletes(broadcast(spark.createDataset(ids.toSeq)(Encoders.scalaLong).toDF("docId")),
+          broadcast(spark.createDataset(ids.groupBy(id => (id / shardDocs).toInt)
+            .map { case (shard, d) => ShardDels(shard, d.sorted) }.toSeq)(
+            Encoders.product[ShardDels])))
+      } else {
+        val d = s.distinct()
+        new Deletes(d, delsByShard(d, shardDocs))
+      }
+    }
+
+  /** The live stored docs: the segments' docs union minus the delete set. */
+  private def liveDocs(spark: SparkSession, dir: String, m: Manifest,
+      dels: Option[Deletes]): DataFrame = {
+    val all = readSegments(spark, dir, m.epochs.map(_.path).distinct, "docs.parquet",
+      docSchemaOf(m))
+    dels.fold(all)(d => all.join(d.ids, Seq("docId"), "left_anti"))
+  }
+
   private[index] def loadManifest(spark: SparkSession, dir: String, m: Manifest,
       cacheDocs: Boolean, broadcastTombstones: Long = BroadcastTombstones): BuiltIndex = {
     val config = configOf(m.config)
     val segPaths = m.epochs.map(_.path).distinct
     val stored = readSegments(spark, dir, segPaths, "postings.parquet", PostingsSchema)
       .as(Encoders.product[PostingRow])
-    val docsAll = readSegments(spark, dir, segPaths, "docs.parquet", docSchemaOf(m))
-    val (docs, live) = tombstoneScan(spark, dir, m.tombstones) match {
-      case Some(s) =>
-        // both joins sit INSIDE the frames persist() may freeze, and a
-        // cached plan never gets AQE's runtime broadcast conversion
-        // (CLAUDE.md): make the broadcast decision explicitly, gated.
-        // The manifest's row counts decide the gate without a job; under
-        // it ONE plain scan collects the ids (deduplicated driver-side)
-        // into driver-local frames — the ids for the doc store's
-        // anti-join, each shard's sorted ids for the postings — above it
-        // fall back to plain shuffle joins rather than sort-merging the
-        // whole doc store against the delete set.
-        if (m.tombstones.map(_.rows).sum <= broadcastTombstones) {
-          val ids = s.collect().map(_.getLong(0)).distinct
-          val byShard = ids.groupBy(id => (id / config.shardDocs).toInt)
-            .map { case (shard, d) => ShardDels(shard, d.sorted) }.toSeq
-          (docsAll.join(broadcast(spark.createDataset(ids.toSeq)(Encoders.scalaLong).toDF("docId")),
-            Seq("docId"), "left_anti"),
-            withoutDeleted(stored, broadcast(spark.createDataset(byShard)(Encoders.product[ShardDels]))))
-        } else {
-          val deletes = s.distinct()
-          (docsAll.join(deletes, Seq("docId"), "left_anti"),
-            withoutDeleted(stored, delsByShard(deletes, config.shardDocs)))
-        }
-      case None => (docsAll, stored)
-    }
+    val dels = deletes(spark, dir, m, config.shardDocs, broadcastTombstones)
+    val docs = liveDocs(spark, dir, m, dels)
+    val live = dels.fold(stored)(d => withoutDeleted(stored, d.byShard))
     // shards over the whole docId space: after compaction the store's
     // numDocs falls below its highest docId (ids are never renumbered)
     val postings = IndexBuilder.shardLocal(live, config, m.epochs.map(_.docIdEnd).max)
@@ -634,12 +652,11 @@ object IndexStore {
     val segName = f"seg-$epoch%05d"
     writeSegment(idx, s"$dir/$segName")
     writeLineage(idx, dir, epoch)
-    // upsert tombstones: previous docIds whose key reappears in this
-    // epoch. cacheDocs = false: this pass only streams (docId, key)
-    // columns out of the committed doc store — the cacheDocs default
-    // would pin the ENTIRE corpus's stored fields in executor memory on
-    // every incremental append, which cannot hold at store scale
-    val old = loadManifest(spark, dir, m, cacheDocs = false)
+    // upsert tombstones: previous live docIds whose key reappears in
+    // this epoch. Only the committed doc store's (docId, key) columns
+    // stream out of it: no postings, term dictionary or cache is built
+    val oldDocs = liveDocs(spark, dir, m,
+      deletes(spark, dir, m, config.shardDocs, BroadcastTombstones))
     val keyCols = config.keyCols
     // Catalyst pushes the left-semi join below through the store's
     // per-segment union (one join per segment branch), and AQE builds
@@ -661,14 +678,13 @@ object IndexStore {
       if (idx.numDocs <= 2000000L)
         broadcast(spark.createDataFrame(newKeys.collect().toSeq.asJava, newKeys.schema))
       else newKeys.persist(StorageLevel.MEMORY_AND_DISK)
-    val tombstones = old.docs.select((col("docId") +: keyCols.map(col)): _*)
+    val tombstones = oldDocs.select((col("docId") +: keyCols.map(col)): _*)
       .join(rhs, keyCols, "left_semi")
       .select("docId")
     tombstones.write.mode(SaveMode.Overwrite).parquet(deletesDir(dir, epoch))
     // a pure-insert append (no key overlap) commits no tombstone dir
     val newTombs = keepTombstones(dir, epoch)
     rhs.unpersist()
-    old.unpersist()
     val newEpochs = m.epochs ++ config.fields.map(f =>
       EpochMeta(epoch, segName, idx.numDocs, base, base + idx.numDocs, f,
         idx.fieldTokens.getOrElse(f, 0L)))

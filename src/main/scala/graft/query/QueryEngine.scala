@@ -424,13 +424,16 @@ final class QueryEngine(val index: BuiltIndex) {
     * top-k latency) even though the plan is identical. Caching the LAZY
     * frame reuses the planned QueryExecution while every collect()
     * still re-executes it against the cached index — results are
-    * recomputed per call, never stored (the frames carry no persist).
-    * This extends the compiled-query LRU above one level up, the same
-    * reference semantics (compiled query parts cached across requests,
-    * apis/mod.rs:68-69); like it, the cache dies with the engine, which
-    * mutations invalidate. Only stats-free calls are cacheable: a
-    * wandStats accumulator is captured in task closures, so those
-    * frames are per-caller.
+    * recomputed per call, never stored. That holds only because every
+    * cached frame is exchange-free (searchF32's top-k, searchManyF32's
+    * pre-merged candidates): re-collecting a planned frame that holds an
+    * exchange would re-read its first run's shuffle output instead of
+    * scoring again. This extends the compiled-query LRU above one level
+    * up, the same reference semantics (compiled query parts cached
+    * across requests, apis/mod.rs:68-69); like it, the cache dies with
+    * the engine, which mutations invalidate. Only stats-free calls are
+    * cacheable: a wandStats accumulator is captured in task closures, so
+    * those frames are per-caller.
     */
   private val planCache =
     new java.util.LinkedHashMap[AnyRef, DataFrame](16, 0.75f, true) {
@@ -714,8 +717,11 @@ final class QueryEngine(val index: BuiltIndex) {
     * decodes once per shard and replays per query in the exact
     * single-query accumulation order, making per-query results
     * bit-identical to searchF32 (BatchSearchSpec). Shard-local
-    * per-query heaps bound the exchange at (#shards x #queries x k)
-    * rows, and compileMany coalesces the dictionary jobs, so total job
+    * per-query heaps, pre-merged per task, bound the candidates at
+    * (#tasks x #queries x k) rows; the driver collects and merges them
+    * per qid (batchTopK), so a batch runs as ONE Spark job with no
+    * exchange, and the call returns a local frame with its wandStats
+    * filled. compileMany coalesces the dictionary jobs, so total job
     * count is O(1) in batch width. Block-max pruning applies PER QUERY
     * on top of the shared decode (Wand.topKMany): every query runs the
     * algorithm the single-query path would pick for it, all queries of
@@ -736,7 +742,9 @@ final class QueryEngine(val index: BuiltIndex) {
     val splitMinDocs = index.spark.conf
       .get("graft.batch.splitMinDocs", SearchDefaults.BatchSplitMinDocs.toString).toLong
     def build: DataFrame = searchManyF32Build(queries, k, wandStats, splitMinDocs)
-    if (wandStats.isEmpty) cachedPlan((queries, k, splitMinDocs))(build) else build
+    batchTopK(
+      if (wandStats.isEmpty) cachedPlan((queries, k, splitMinDocs))(build) else build,
+      k, queries.size)
   }
 
   private def searchManyF32Build(queries: Seq[(Int, Seq[SearchClause])], k: Int,
@@ -753,15 +761,16 @@ final class QueryEngine(val index: BuiltIndex) {
     // and deterministic, and per-query results are bit-identical on
     // either path (BatchSearchSpec).
     //
-    // Corpus-size floor on the split: a mixed batch pays a SECOND tiny
-    // Spark job (WAND pass unioned with the exhaustive pass), which at
-    // small corpora is pure scheduler overhead against near-zero
-    // skippable blocks — q_batch32 regressed 125 -> 104 qps at 50k docs
-    // when the split landed, while the same split wins 1.38x on the 27M
-    // Zipf mix (BENCH.md). Below the floor the whole batch takes the
-    // exhaustive replay (the r4-proven single-job path, bit-identical
-    // per BatchSearchSpec). Scale-adaptive (derived from the corpus,
-    // not local core count) and conf-overridable for tests/tuning.
+    // Corpus-size floor on the split: a mixed batch runs a SECOND pass
+    // over the postings (the WAND pass unioned with the exhaustive one:
+    // twice the tasks), which at small corpora is pure scheduler
+    // overhead against near-zero skippable blocks — q_batch32 regressed
+    // 125 -> 104 qps at 50k docs when the split landed, while the same
+    // split wins 1.38x on the 27M Zipf mix (BENCH.md). Below the floor
+    // the whole batch takes the exhaustive replay (the r4-proven
+    // single-pass path, bit-identical per BatchSearchSpec).
+    // Scale-adaptive (derived from the corpus, not local core count)
+    // and conf-overridable for tests/tuning.
     val (sparse, dense) =
       if (index.numDocs >= splitMinDocs)
         nonEmpty.partition(q => Wand.batchWandRoutable(q._2, index.numDocs))
@@ -773,7 +782,7 @@ final class QueryEngine(val index: BuiltIndex) {
       if (dense.nonEmpty)
         Some(Scorer.scoreManyF32(index, dense, k).toDF("qid", "docId", "score"))
       else None).flatten
-    Scorer.topKPerQuery(frames.reduce(_ unionByName _), k, col("score"))
+    Scorer.preMerged(frames.reduce(_ unionByName _), k)
   }
 
   /** f64 batched path (oracle parity): (qid, docId, score double),
@@ -784,11 +793,42 @@ final class QueryEngine(val index: BuiltIndex) {
   def searchManyF64(queries: Seq[(Int, Seq[SearchClause])], k: Int = DefaultLimit): DataFrame = {
     require(queries.map(_._1).distinct.size == queries.size, "qids must be unique")
     require(queries.size <= MaxBatchWidth, s"batch wider than $MaxBatchWidth: chunk it")
+    if (k <= 0) return emptyResult[ScoredQDocF64]
     val cqs = queries.map(_._1).zip(compileMany(queries.map(_._2)))
     val nonEmpty = cqs.filter(_._2.terms.nonEmpty)
     if (nonEmpty.isEmpty) return emptyResult[ScoredQDocF64]
     val scored = Scorer.scoreManyF64(index, nonEmpty, k).toDF("qid", "docId", "score")
-    Scorer.topKPerQuery(scored, k, round(col("score"), 4))
+    batchTopK(Scorer.preMerged(scored, k), k, nonEmpty.size)
+  }
+
+  /** Candidate rows up to which batchTopK merges on the driver; the
+    * engine's gate, lowered by tests to force the window branch.
+    */
+  @volatile private[graft] var driverMergeRows: Long = SearchDefaults.DriverMergeRows
+
+  /** A batch's per-qid top-k over its pre-merged candidates
+    * (`Scorer.preMerged`: qid, docId, score float|double), as a frame of
+    * the same schema, under the batch total order — score desc (f32) or
+    * round4 desc (f64), then docId asc. While the candidates fit the
+    * gate they are collected and merged on the driver
+    * (`Scorer.mergePerQuery`): the batch is the ONE scoring job and the
+    * result a local frame. The gate needs no job: each task returns at
+    * most k rows per query, a pass runs at most buildPartitions tasks
+    * (IndexBuilder.shardLocal), the sparse and dense passes split the
+    * queries, and no query keeps more rows than the index has docs.
+    * Above it — wide batches at large k — the lazy per-qid window
+    * (one hash exchange on qid) keeps the rows off the driver.
+    */
+  private[graft] def batchTopK(preMerged: DataFrame, k: Int, nQueries: Int): DataFrame = {
+    val f64 = Scorer.isF64(preMerged)
+    val bound = nQueries.toLong * math.min(index.config.buildPartitions.toLong * k, index.numDocs)
+    if (bound > driverMergeRows)
+      Scorer.topKPerQuery(preMerged, k, if (f64) round(col("score"), 4) else col("score"))
+    else {
+      import scala.jdk.CollectionConverters._
+      val merged = Scorer.mergePerQuery(preMerged.collect().iterator, k, f64).toSeq
+      index.spark.createDataFrame(merged.asJava, preMerged.schema)
+    }
   }
 
   /** Unlimited (docId, score float) match set on the rank-identity path. */
@@ -955,8 +995,9 @@ object SearchDefaults {
   final val MaxBatchWidth = 4096
   /** Corpus-size floor below which searchManyF32 skips the sparse/dense
     * split and routes the WHOLE batch through the exhaustive replay (one
-    * Spark job instead of two). Measured (same methodology, local[32]):
-    * at 50k docs the split's second job cost ~35% of batch latency for
+    * pass over the postings instead of two). Measured (same methodology,
+    * local[32], when the batch still ended in a per-qid exchange):
+    * at 50k docs the split's second pass cost ~35% of batch latency for
     * nothing to skip; at 2M x 64-query Zipf the split still LOSES 13%
     * (0.98 s vs 0.86 s, zero blocks skipped — the exhaustive-routed
     * half of the batch subscribes to the same hot blocks, so the shared
@@ -965,6 +1006,11 @@ object SearchDefaults {
     * below the measured-positive one. Override with spark conf
     * graft.batch.splitMinDocs. */
   final val BatchSplitMinDocs = 4000000L
+  /** Candidate rows a batch may collect for its driver-side per-qid
+    * merge (QueryEngine.batchTopK) — the bound appendEpoch lands an
+    * epoch's keys under: a 32-wide k=10 batch is a few thousand rows,
+    * a 4096-wide k=1000 one stays on the window path. */
+  private[graft] final val DriverMergeRows = 2000000L
   /** Term-count cap for the driver-side dictionary snapshot
     * (LocalTermDict). Dictionaries at or under this size serve every
     * compile-time lookup in memory (the tantivy-FST analogue); larger

@@ -1,6 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 import scala.reflect.runtime.universe.TypeTag
 
@@ -363,21 +363,31 @@ object Scorer {
       terms: Seq[CompiledTerm]): Map[String, Array[Double]] =
     terms.map(_.field).distinct.map(f => f -> Bm25.normCacheF64(index.avgFieldnormF64(f))).toMap
 
-  /** Bounded per-(query, shard) top-k selection under the engine total
-    * order (sort key desc, docId asc): a min-heap rooted at the worst
-    * kept candidate — the exhaustive kernel's and every WAND walk's.
-    * `raw` carries the unrounded score when the sort key is a rounded
-    * form of it (f64 oracle order).
+  /** Bounded top-k selection under the engine total order (sort key
+    * desc, docId asc): a min-heap rooted at the worst kept candidate —
+    * the exhaustive kernel's and every WAND walk's shard heaps, and the
+    * batch's per-qid merges (`mergePerQuery`). `raw` carries the
+    * unrounded score when the sort key is a rounded form of it (f64
+    * oracle order). Storage grows with the kept count up to k, so a
+    * merge holding one heap per query of a wide batch pays for the
+    * candidates it sees, not for queries x k.
     */
   private[query] final class TopKHeap(k: Int) {
-    private val ks = new Array[Double](k)
-    private val ds = new Array[Long](k)
-    private val raw = new Array[Double](k)
+    private var ks = new Array[Double](math.min(k, 16))
+    private var ds = new Array[Long](ks.length)
+    private var raw = new Array[Double](ks.length)
     private var n = 0
     @inline private def worse(k1: Double, d1: Long, k2: Double, d2: Long): Boolean =
       k1 < k2 || (k1 == k2 && d1 > d2)
+    private def grow(): Unit = {
+      val cap = math.min(k.toLong, 2L * ks.length).toInt
+      ks = java.util.Arrays.copyOf(ks, cap)
+      ds = java.util.Arrays.copyOf(ds, cap)
+      raw = java.util.Arrays.copyOf(raw, cap)
+    }
     def offer(key: Double, docId: Long, r: Double): Unit = {
       if (n < k) {
+        if (n == ks.length) grow()
         var i = n; ks(i) = key; ds(i) = docId; raw(i) = r; n += 1
         while (i > 0) {
           val p = (i - 1) >> 1
@@ -405,6 +415,10 @@ object Scorer {
     def foreachKept(f: (Long, Double) => Unit): Unit = {
       var i = 0; while (i < n) { f(ds(i), raw(i)); i += 1 }
     }
+    /** The kept (docId, raw score) pairs, best first. */
+    def sorted: Array[(Long, Double)] =
+      (0 until n).sortWith((i, j) => worse(ks(j), ds(j), ks(i), ds(i)))
+        .map(i => (ds(i), raw(i))).toArray
   }
 
   /** Mirrors Spark's `round(col, 4)` on DoubleType (BigDecimal.valueOf
@@ -412,14 +426,57 @@ object Scorer {
     * SAME rounded total order the oracle presentation uses, so
     * shard-local then global selection compose exactly.
     */
-  @inline private def round4(x: Double): Double =
+  @inline private[query] def round4(x: Double): Double =
     java.math.BigDecimal.valueOf(x).setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
 
-  /** Per-query global top-k over the batched shard candidates: the same
-    * total order as topK, partitioned by qid. The window input is
-    * bounded by (#shards x #queries x k) thanks to the shard-local
-    * heaps, and each qid partition holds at most (#shards x k) rows —
-    * no reducer ever sees a corpus-sized set.
+  // ------------------------------------------------- batched per-qid top-k
+
+  /** A batch candidate frame (qid int, docId long, score float|double)
+    * holds f64 scores, i.e. merges under the rounded oracle order.
+    */
+  def isF64(candidates: DataFrame): Boolean =
+    candidates.schema("score").dataType == org.apache.spark.sql.types.DoubleType
+
+  /** Per-qid top-k of batch candidate rows (qid, docId, score) under
+    * the batch's total order — key desc, docId asc, where the key is
+    * the f32 score itself or, for `f64`, its round4 (the oracle order)
+    * — emitted best first per qid, qids ascending, scores unchanged.
+    * The order of the shard heaps and of topKPerQuery's window, so
+    * merging shard candidates per task and then across tasks selects
+    * exactly what the window selects.
+    */
+  def mergePerQuery(rows: Iterator[Row], k: Int, f64: Boolean): Iterator[Row] = {
+    val heaps = new java.util.TreeMap[Int, TopKHeap]()
+    rows.foreach { r =>
+      val s = if (f64) r.getDouble(2) else r.getFloat(2).toDouble
+      var h = heaps.get(r.getInt(0))
+      if (h == null) { h = new TopKHeap(k); heaps.put(r.getInt(0), h) }
+      h.offer(if (f64) round4(s) else s, r.getLong(1), s)
+    }
+    import scala.jdk.CollectionConverters._
+    heaps.entrySet().iterator().asScala.flatMap { e =>
+      e.getValue.sorted.iterator.map { case (d, s) =>
+        if (f64) Row(e.getKey, d, s) else Row(e.getKey, d, s.toFloat)
+      }
+    }
+  }
+
+  /** The batch's candidate frame pre-merged per task: a narrow
+    * mapPartitions in the scoring stage that merges the task's shard
+    * heaps per qid, so a task returns at most #queries x k rows.
+    */
+  def preMerged(candidates: DataFrame, k: Int): DataFrame = {
+    val f64 = isF64(candidates)
+    candidates.mapPartitions(it => mergePerQuery(it, k, f64))(Encoders.row(candidates.schema))
+  }
+
+  /** Per-query global top-k over the batched candidates: the same total
+    * order as topK, partitioned by qid — the lazy alternative to a
+    * driver-side `mergePerQuery` for batches whose candidates are too
+    * many to collect. The window input is bounded by
+    * (#tasks x #queries x k) thanks to the shard and task pre-merges,
+    * and each qid partition holds at most (#tasks x k) rows — no
+    * reducer ever sees a corpus-sized set.
     */
   def topKPerQuery(scored: DataFrame, k: Int,
       orderKey: org.apache.spark.sql.Column): DataFrame = {

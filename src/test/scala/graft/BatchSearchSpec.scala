@@ -210,12 +210,35 @@ class BatchSearchSpec extends AnyFunSuite {
     val d = e.searchF32(sq, 5, wandStats = Some(stats))
     assert(!(c eq d), "stats-carrying frames must not be memoized")
     assert(rowsF32(c) === rowsF32(e.searchF32(sq, 5)))
-    // batched path: repeat reuses; the split-floor conf rides the key
-    val m1 = e.searchManyF32(batch, 5)
-    val m2 = e.searchManyF32(batch, 5)
-    assert(m1 eq m2)
-    val m3 = withSplit(e.searchManyF32(batch, 5))
-    assert(!(m1 eq m3), "a conf flip must re-plan, not serve the other regime")
+    // batched path: the LRU holds the candidate frame (each call merges
+    // it anew); a repeat hits, and the split-floor conf rides the key
+    val m1 = e.searchManyF32(batch, 5).collect().toSeq
+    val h1 = e.planCacheHits
+    assert(e.searchManyF32(batch, 5).collect().toSeq === m1)
+    assert(e.planCacheHits === h1 + 1, "a repeated batch must reuse the planned candidates")
+    withSplit(e.searchManyF32(batch, 5))
+    assert(e.planCacheHits === h1 + 1, "a conf flip must re-plan, not serve the other regime")
+  }
+
+  test("the driver merge and the forced per-qid window select identical rows") {
+    // the window branch serves batches whose candidates exceed the
+    // driver-merge gate; force it here and compare every entry point
+    val driver = new QueryEngine(index)
+    val window = new QueryEngine(index)
+    window.driverMergeRows = 0L
+    def rows(df: DataFrame) = df.collect().map(r => (r.getInt(0), r.getLong(1), r.get(2))).toSet
+    Seq(10, 1000).foreach { k =>
+      Seq[(String, QueryEngine => DataFrame)](
+        "searchManyF32" -> (_.searchManyF32(batch, k)),
+        "searchManyF64" -> (_.searchManyF64(batch, k))
+      ).foreach { case (what, run) =>
+        val a = rows(run(driver))
+        assert(a.nonEmpty)
+        assert(a === rows(run(window)), s"$what k=$k")
+      }
+      val split = withSplit((rows(driver.searchManyF32(batch, k)), rows(window.searchManyF32(batch, k))))
+      assert(split._1 === split._2, s"searchManyF32 split k=$k")
+    }
   }
 
   test("a no-match query yields no rows for its qid and leaves the rest intact") {

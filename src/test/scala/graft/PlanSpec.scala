@@ -382,11 +382,22 @@ class PlanSpec extends AnyFunSuite {
       "searchF32 forced exhaustive" -> e.searchF32(disj, 10, useWand = false),
       "matchF64" -> e.matchF64(disj)
     ).foreach { case (what, q) => assert(exchanges(q).isEmpty, what) }
-    // the batch's only exchange is its per-qid top-k window above the
-    // scoring, never one that moves posting rows
+    // under the driver-merge gate a batch is ONE job and plans no
+    // exchange: the shard candidates merge per qid on the driver
+    def oneJob(what: String, run: => DataFrame): Unit = {
+      run.collect() // warm-up
+      val (xs, c) = SparkEvents.of(spark)(exchanges(run))
+      assert(c.jobs === 1, s"$what: $c")
+      assert(xs.isEmpty, s"$what: $xs")
+    }
+    oneJob("searchManyF32", e.searchManyF32(batch, 10))
+    EagerPlanConfs.withConfs(spark, split)(oneJob("searchManyF32 split", e.searchManyF32(batch, 10)))
+    // above it, the batch's only exchange is its per-qid top-k window
+    // above the scoring, never one that moves posting rows
+    e.driverMergeRows = 0L
     Seq(
-      "searchManyF32" -> exchanges(e.searchManyF32(batch, 10)),
-      "searchManyF32 split" -> EagerPlanConfs.withConfs(spark, split)(
+      "windowed searchManyF32" -> exchanges(e.searchManyF32(batch, 10)),
+      "windowed searchManyF32 split" -> EagerPlanConfs.withConfs(spark, split)(
         exchanges(e.searchManyF32(batch, 10)))
     ).foreach { case (what, xs) => assert(xs.nonEmpty && xs.forall(onQid), s"$what: $xs") }
     e.release()
