@@ -115,7 +115,14 @@ final class BuiltIndex(
     val config: IndexConfig,
     /** build-time SymSpell dictionary (field, variant, term, df) when
       * the segment was written in fast-fuzzy mode. */
-    val symspell: Option[DataFrame] = None) {
+    val symspell: Option[DataFrame] = None,
+    /** docId range of every `docs` partition: partition p holds exactly
+      * the ids in [r(p), r(p+1)) (`IndexBuilder.assignDocIdsCounted`'s
+      * offsets). Set by in-memory builds, whose docs frame keeps the
+      * assignment's partitioning; None for loaded stores, whose docs
+      * stream from the segment parquet. `QueryEngine.lookupDocs` reads
+      * it to fetch ids from only the partitions that hold them. */
+    val docRanges: Option[Array[Long]] = None) {
 
   def spark: SparkSession = docs.sparkSession
 
@@ -167,10 +174,11 @@ object IndexBuilder {
       strategy: String = DocIdStrategy.KeyRange): DataFrame =
     assignDocIdsCounted(df, keyCols, parts, base, strategy)._1
 
-  /** As assignDocIds, additionally returning the sorted intermediate
-    * (for callers that want to re-derive lineage) and the total row
-    * count — known driver-side from the per-partition counts, so
-    * callers need no extra count() job over the corpus.
+  /** As assignDocIds, additionally returning the docId range of every
+    * output partition, `r` with partition p holding [r(p), r(p+1)):
+    * known driver-side from the per-partition counts, so callers need
+    * no extra count() job over the corpus (the row count is
+    * r.last - r.head).
     *
     * The sorted intermediate is NOT cached: `toRdd` freezes ONE physical
     * plan (and thus one partitioning — two separate Dataset jobs could
@@ -185,7 +193,7 @@ object IndexBuilder {
     * per-partition imperative id assignment.
     */
   def assignDocIdsCounted(df: DataFrame, keyCols: Seq[String], parts: Int,
-      base: Long = 0L, strategy: String = DocIdStrategy.KeyRange): (DataFrame, DataFrame, Long) = {
+      base: Long = 0L, strategy: String = DocIdStrategy.KeyRange): (DataFrame, Array[Long]) = {
     // fail loud on typos ("Scan", "key-range"): a silent fallback to
     // keyRange would measure/build the wrong strategy with no error
     require(strategy == DocIdStrategy.KeyRange || strategy == DocIdStrategy.Scan,
@@ -210,9 +218,9 @@ object IndexBuilder {
       }
       .collect().toMap
     val nParts = sortedRdd.getNumPartitions
-    val offsets = new Array[Long](nParts)
-    var acc = base
-    for (p <- 0 until nParts) { offsets(p) = acc; acc += counts.getOrElse(p, 0L) }
+    val offsets = new Array[Long](nParts + 1)
+    offsets(0) = base
+    for (p <- 0 until nParts) offsets(p + 1) = offsets(p) + counts.getOrElse(p, 0L)
     val outSchema = StructType(df.schema.fields :+ StructField("docId", LongType, nullable = false))
     val withIdsRdd = sortedRdd.mapPartitionsWithIndex { (pid, it) =>
       import org.apache.spark.sql.catalyst.InternalRow
@@ -230,7 +238,7 @@ object IndexBuilder {
     }
     val withIds = org.apache.spark.sql.GraftExpressionBridge
       .internalCreateDataFrame(df.sparkSession, withIdsRdd, outSchema)
-    (withIds, sorted, acc - base)
+    (withIds, offsets)
   }
 
   /** In-memory posting accumulator per map partition — the Spark-native
@@ -425,9 +433,10 @@ object IndexBuilder {
       require(sf.dataType.isInstanceOf[org.apache.spark.sql.types.StringType],
         s"indexed field $f must be a string column, got ${sf.dataType.simpleString}")
     }
-    val (withIds, _, numDocs) =
+    val (withIds, docRanges) =
       assignDocIdsCounted(df, config.keyCols, config.buildPartitions, docIdBase,
         config.docIdStrategy)
+    val numDocs = docRanges.last - docIdBase
     // numDocs is already known from the assignment counts — no extra
     // corpus pass; the docs cache materializes as a side effect of the
     // postings pass scanning it (one build = two passes total: the
@@ -450,6 +459,9 @@ object IndexBuilder {
     val fieldTokens = pPersisted
       .groupBy(col("field")).agg(sum(col("sumTf")).as("t"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    new BuiltIndex(docs, pPersisted, termStats, numDocs, fieldTokens, config).persist()
+    // docs keeps withIds' partitioning (a cache of it), so the
+    // assignment's offsets are its per-partition docId ranges
+    new BuiltIndex(docs, pPersisted, termStats, numDocs, fieldTokens, config,
+      docRanges = Some(docRanges)).persist()
   }
 }

@@ -1,7 +1,10 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{FloatType, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.analyze.{Analyzer, Levenshtein, SymSpell}
@@ -444,10 +447,12 @@ final class QueryEngine(val index: BuiltIndex) {
   /** Observability: searches served a memoized planned frame. */
   @volatile var planCacheHits: Long = 0L
 
-  private def cachedPlan(key: AnyRef)(build: => DataFrame): DataFrame = {
+  /** @param search false for lookupDocs' docs projection, which is not
+    *   a search and so counts no planCacheHits */
+  private def cachedPlan(key: AnyRef, search: Boolean = true)(build: => DataFrame): DataFrame = {
     planCache.synchronized {
       val hit = planCache.get(key)
-      if (hit != null) { planCacheHits += 1; return hit }
+      if (hit != null) { if (search) planCacheHits += 1; return hit }
     }
     // build OUTSIDE the lock: compile() inside may run dictionary jobs
     val df = build
@@ -863,18 +868,74 @@ final class QueryEngine(val index: BuiltIndex) {
     index.docs.join(side, "docId").select(cols: _*)
   }
 
-  /** Stored-field lookup for an already-collected top-k docId set via a
-    * pushed-down IN filter. On a persisted segment (docs NOT cached,
-    * IndexStore.load(cacheDocs = false)) the docs parquet is docId-
-    * sorted and range-partitioned, so the scan prunes to the row groups
-    * holding the k ids instead of probing a corpus-wide scan through a
-    * join — the right doc-store access shape when the corpus doesn't
-    * fit memory.
+  /** Stored fields (docId +: docCols) of an already-collected top-k
+    * docId set: the one stored-field fetch (lnx takes the top-k as
+    * (score, docAddr) and then reads only those payloads, SURVEY.md
+    * section 3.1). Ids no doc carries are absent from the result.
+    *
+    * With `BuiltIndex.docRanges` (in-memory builds) the fetch is ONE
+    * job over only the docs partitions whose range holds a requested
+    * id, reading a (docId +: docCols) projection whose physical plan is
+    * memoized in the plan LRU (planned once per column list); matched
+    * rows are converted on the executors and the result is a local
+    * frame, in no particular order. No requested id, no job. Without
+    * ranges (IndexStore.load: docs NOT cached) it is a lazy pushed-down
+    * IN filter: the docs parquet is docId-sorted and range-partitioned,
+    * so the scan prunes to the row groups holding the ids.
     */
   def lookupDocs(ids: Seq[Long], docCols: Seq[String]): DataFrame = {
-    require(ids.size <= 10000, "lookupDocs is for top-k result sets, not bulk reads")
-    index.docs.filter(col("docId").isin(ids: _*))
-      .select((col("docId") +: docCols.map(col)): _*)
+    require(ids.size <= MaxLookupIds, "lookupDocs is for top-k result sets, not bulk reads")
+    if (index.docRanges.isEmpty)
+      index.docs.filter(col("docId").isin(ids: _*))
+        .select((col("docId") +: docCols.map(col)): _*)
+    else {
+      import scala.jdk.CollectionConverters._
+      val (schema, rows) = fetchRanged(ids, docCols)
+      index.spark.createDataFrame(rows.toSeq.asJava, schema)
+    }
+  }
+
+  /** lookupDocs' range-pruned fetch, as the projection's schema and the
+    * matched rows. */
+  private def fetchRanged(ids: Seq[Long], docCols: Seq[String]): (StructType, Array[Row]) = {
+    val projected = cachedPlan(DocFetch.Projection(docCols), search = false)(
+      index.docs.select((col("docId") +: docCols.map(col)): _*))
+    val schema = projected.schema
+    val want = DocFetch.byPartition(index.docRanges.get, ids)
+    if (want.isEmpty) return (schema, Array.empty)
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    val parts = index.spark.sparkContext.runJob(projected.queryExecution.toRdd,
+      (ctx: TaskContext, it: Iterator[InternalRow]) => {
+        val ids = want(ctx.partitionId())
+        it.filter(r => java.util.Arrays.binarySearch(ids, r.getLong(0)) >= 0)
+          .map(r => toRow(r).asInstanceOf[Row]).toArray
+      },
+      want.keys.toSeq.sorted)
+    (schema, parts.flatten)
+  }
+
+  /** Top-k (score desc, docId asc, the searchF32 order) with stored
+    * fields, as a local frame (docId +: docCols :+ score float) in that
+    * order: the capped SQL statement's two jobs, searchF32's scoring
+    * job and lookupDocs' range-pruned fetch (none when nothing
+    * matches). Needs `BuiltIndex.docRanges` and k <= MaxLookupIds. A
+    * hit whose stored fields the fetch did not return fails loudly,
+    * naming its docId: never a silently shorter page.
+    */
+  private[graft] def searchWithDocs(clauses: Seq[SearchClause], k: Int,
+      docCols: Seq[String]): DataFrame = {
+    require(index.docRanges.nonEmpty && k <= MaxLookupIds,
+      "searchWithDocs needs docId ranges and k <= MaxLookupIds")
+    import scala.jdk.CollectionConverters._
+    val hits = searchF32(clauses, k).collect()
+    val (schema, rows) = fetchRanged(hits.map(_.getLong(0)).toSeq, docCols)
+    val byId = rows.iterator.map(r => r.getLong(0) -> r).toMap
+    val out = hits.map { h =>
+      val d = byId.getOrElse(h.getLong(0), throw new IllegalStateException(
+        s"stored fields of docId ${h.getLong(0)} are missing from the docs fetch"))
+      Row.fromSeq(d.toSeq :+ h.getFloat(1))
+    }
+    index.spark.createDataFrame(out.toSeq.asJava, schema.add("score", FloatType, nullable = false))
   }
 
   /** Hierarchical facet counting over a match set (the `facet` type's
@@ -900,6 +961,24 @@ final class QueryEngine(val index: BuiltIndex) {
   /** Zero-row frame with the schema of the scoring path it stands in for. */
   private def emptyResult[T <: Product: scala.reflect.runtime.universe.TypeTag]: DataFrame =
     index.spark.emptyDataset(Encoders.product[T]).toDF()
+}
+
+/** lookupDocs' partition pruning over `BuiltIndex.docRanges`. */
+private[query] object DocFetch {
+  /** Plan-LRU key of lookupDocs' docs projection. */
+  final case class Projection(cols: Seq[String])
+
+  /** The requested ids (distinct, sorted) of every docs partition whose
+    * range [r(p), r(p+1)) holds at least one; ids outside every range
+    * map to no partition. */
+  def byPartition(r: Array[Long], ids: Seq[Long]): Map[Int, Array[Long]] =
+    ids.distinct.flatMap { id =>
+      // the first bound above id closes the range holding it; empty
+      // partitions (equal bounds) are stepped over
+      var lo = 0; var hi = r.length
+      while (lo < hi) { val m = (lo + hi) >>> 1; if (r(m) <= id) lo = m + 1 else hi = m }
+      if (lo >= 1 && lo < r.length) Some((lo - 1) -> id) else None
+    }.groupBy(_._1).map { case (p, xs) => p -> xs.map(_._2).sorted.toArray }
 }
 
 /** Builds the SymSpell delete-variant dictionary from a term-stats
@@ -988,6 +1067,10 @@ private[graft] object RegexPrefix {
 object SearchDefaults {
   /** lnx injects LIMIT 1000 when absent (lnx-server/src/apis/query.rs:15-17). */
   final val DefaultLimit = 1000
+  /** cap on the ids of one QueryEngine.lookupDocs call (a top-k page,
+    * not a bulk read); capped SQL statements up to this LIMIT fetch
+    * through it instead of the docs join. */
+  final val MaxLookupIds = 10000
   /** cap on dictionary expansions per prefix/fuzzy/regex token (deterministic order). */
   final val MaxExpansions = 1024
   /** cap on searchMany batch width (every task closure carries every

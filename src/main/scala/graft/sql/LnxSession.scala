@@ -283,19 +283,28 @@ final class LnxSession(val spark: SparkSession) {
   }
 
   /** EXPLAIN surface: the compiled search clauses plus Spark's formatted
-    * physical plan, one line per row (query.rs:36-43).
+    * physical plan, one line per row (query.rs:36-43). A statement on
+    * the fetch path (cappedFetch) is not run: its lines are the
+    * scoring frame's plan and one line naming the stored-field fetch.
     */
   private def runExplain(st: Statement, params: Seq[Lit]): DataFrame = {
     import spark.implicits._
+    def formatted(df: DataFrame): Seq[String] = df.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted")).split('\n').toSeq
     st match {
       case s: Select =>
         val clauses = s.where.collect { case sp: SearchPred => sp }
           .map(sp => s"search clause: ${sp.func}(${sp.col}, ...)" +
             sp.cmp.map { case (op, v) => s" $op $v" }.getOrElse(""))
-        val df = runSelect(s, params)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        (clauses ++ plan.split('\n').toSeq).toDF("plan")
+        val plan = cappedFetch(s, params) match {
+          case Some(f) =>
+            formatted(f.e.searchF32(f.clauses, f.limit)) :+
+              s"stored-field fetch: docId${f.docCols.map(", " + _).mkString} of the top ${f.limit}" +
+              s" from only the docs partitions holding a hit" +
+              s" (range table: ${f.e.index.docRanges.get.length - 1} partitions)"
+          case None => formatted(runSelect(s, params))
+        }
+        (clauses ++ plan).toDF("plan")
       case other =>
         Seq(other.toString).toDF("plan")
     }
@@ -880,20 +889,15 @@ final class LnxSession(val spark: SparkSession) {
       case Some(f) => return runFacetSelect(s, f, searches, colPreds, scorePreds, params, t)
       case None =>
     }
-    val limit = s.limit.getOrElse(SearchDefaults.DefaultLimit) // default 1000 (query.rs:15-17)
-
-    // ONE alias-resolution map (SELECT alias -> underlying column)
-    // shared by the pre-join top-k gate and the ORDER BY resolution —
-    // two copies would invite drift between the gate and the ordering
-    val aliasTarget: Map[String, String] = s.cols.collect {
-      case NamedCol(n, Some(a)) => a -> n
-      case ScoreCol(Some(a)) => a -> "score"
-    }.toMap
-    // will the final order be by score? (drives the pre-join top-k)
-    val orderIsScore = s.orderBy match {
-      case Some((n, asc)) => !asc && aliasTarget.getOrElse(n, n) == "score"
-      case None => searches.nonEmpty
+    cappedFetch(s, params) match {
+      // already in (score desc, docId asc) order with <= limit rows: no
+      // orderBy/limit again (a Sort over a LocalRelation still runs a job)
+      case Some(f) => return project(s, t, f.e.searchWithDocs(f.clauses, f.limit, f.docCols))
+      case None =>
     }
+    val limit = limitOf(s)
+    val aliasTarget = aliasTargets(s)
+    val orderIsScore = ordersByScore(s, searches)
 
     val base: DataFrame =
       if (searches.nonEmpty) {
@@ -907,7 +911,9 @@ final class LnxSession(val spark: SparkSession) {
         val scored =
           if (capped && noThresholds) {
             // the flagship shape (fts/fuzzy WHERE + ORDER BY score()
-            // LIMIT k, fuzzy.sql): searchF32 routes eligible queries
+            // LIMIT k, fuzzy.sql) where cappedFetch declined it (LIMIT
+            // above MaxLookupIds, or an attached store's index without
+            // docId ranges): searchF32 routes eligible queries
             // through block-max WAND (exact vs exhaustive, WandSpec)
             // instead of scoring every matching posting. Thresholded
             // queries stay on the exhaustive path: filters must apply
@@ -958,7 +964,61 @@ final class LnxSession(val spark: SparkSession) {
       case None if searches.nonEmpty => orderByScore(filtered)
       case None => filtered
     }
-    val limited = ordered.limit(limit)
+    project(s, t, ordered.limit(limit))
+  }
+
+  private def limitOf(s: Select): Int =
+    s.limit.getOrElse(SearchDefaults.DefaultLimit) // default 1000 (query.rs:15-17)
+
+  /** ONE alias-resolution map (SELECT alias -> underlying column)
+    * shared by the top-k gates and the ORDER BY resolution — two copies
+    * would invite drift between the gates and the ordering. */
+  private def aliasTargets(s: Select): Map[String, String] = s.cols.collect {
+    case NamedCol(n, Some(a)) => a -> n
+    case ScoreCol(Some(a)) => a -> "score"
+  }.toMap
+
+  /** Will the final order be by score? (drives the pre-join top-k) */
+  private def ordersByScore(s: Select, searches: Seq[SearchPred]): Boolean = s.orderBy match {
+    case Some((n, asc)) => !asc && aliasTargets(s).getOrElse(n, n) == "score"
+    case None => searches.nonEmpty
+  }
+
+  /** What a capped statement's fetch path runs: `e.searchWithDocs` of
+    * its clauses, LIMIT and the stored columns its projection reads. */
+  private final case class CappedFetch(e: QueryEngine, clauses: Seq[SearchClause], limit: Int,
+      docCols: Seq[String])
+
+  /** The fetch path of a capped search statement — no column predicate,
+    * order = score desc, no thresholds, LIMIT <= MaxLookupIds, an index
+    * with docId ranges (in-memory builds; attached stores have none) —
+    * or None when the statement keeps the docs join. The path is two
+    * jobs: the top-k, then the stored fields of only the docs
+    * partitions holding a hit (QueryEngine.lookupDocs), instead of a
+    * broadcast join over every docs partition. Builds the index when
+    * the statement qualifies and it is not built yet.
+    */
+  private def cappedFetch(s: Select, params: Seq[Lit]): Option[CappedFetch] = {
+    val t = table(s.table)
+    val (searches, colPreds, scorePreds) = partitionPreds(s.where)
+    val limit = limitOf(s)
+    val qualifies = searches.nonEmpty && colPreds.isEmpty && scorePreds.isEmpty &&
+      searches.forall(_.cmp.isEmpty) && limit <= SearchDefaults.MaxLookupIds &&
+      !s.cols.exists(_.isInstanceOf[FacetCol]) && ordersByScore(s, searches)
+    if (!qualifies) return None
+    val e = engineFor(t)
+    if (e.index.docRanges.isEmpty) return None
+    // the stored columns `project` reads; absent (sparse) names stay null
+    val docCols = s.cols.flatMap {
+      case StarCol => t.rows.columns.toSeq
+      case NamedCol(n, _) if !n.equalsIgnoreCase("score") && t.rows.columns.contains(n) => Seq(n)
+      case _ => Nil
+    }.distinct
+    Some(CappedFetch(e, searches.map(toClause(_, params)), limit, docCols))
+  }
+
+  /** The SELECT list over a frame of stored columns + score. */
+  private def project(s: Select, t: TableState, df: DataFrame): DataFrame = {
     val projected = s.cols.flatMap {
       case StarCol => t.rows.columns.toSeq.map(c => outputCol(t, c))
       case NamedCol(n, a) if n.equalsIgnoreCase("score") =>
@@ -976,7 +1036,7 @@ final class LnxSession(val spark: SparkSession) {
       case ScoreCol(a) => Seq(a.fold(col("score"))(al => col("score").as(al)))
       case _: FacetCol => throw ParseException("facet_counts handled above", -1) // unreachable
     }
-    limited.select(projected: _*)
+    df.select(projected: _*)
   }
 
   /** Projection form of a stored column: ip columns store the sortable

@@ -109,8 +109,9 @@ class LnxSqlSpec extends AnyFunSuite {
     sess.execute("INSERT INTO blim (id, body) VALUES (1, 'alpha beta'), (2, 'alpha gamma')")
     def hints(sql: String) =
       sess.execute(sql).queryExecution.analyzed.collect { case h: ResolvedHint => h }
-    // capped + broadcast-sized limit: the slim (docId, score) side is hinted
-    assert(hints("SELECT id FROM blim WHERE fts(body, 'alpha') ORDER BY score() DESC LIMIT 10").nonEmpty)
+    // capped + broadcast-sized limit: the slim (docId, score) side is
+    // hinted (LIMITs up to QueryEngine's lookup bound take no join at all)
+    assert(hints("SELECT id FROM blim WHERE fts(body, 'alpha') ORDER BY score() DESC LIMIT 20000").nonEmpty)
     // LIMIT is unbounded user input: above the bound nothing may FORCE a
     // broadcast the planner can't refuse — AQE sizes the join at runtime
     assert(hints("SELECT id FROM blim WHERE fts(body, 'alpha') ORDER BY score() DESC LIMIT 50000000").isEmpty)

@@ -316,8 +316,13 @@ class PlanSpec extends AnyFunSuite {
     val sess = new graft.sql.LnxSession(spark)
     val docs = spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
     sess.register("documents", docs, Seq("doc_id"), Seq("text"))
-    val df = sess.execute(
+    // LIMIT 10 fetches stored fields for the top-k ids with no join at
+    // all; a LIMIT above QueryEngine's lookup bound keeps the docs join
+    val fetched = sess.execute(
       "SELECT doc_id, score() AS s FROM documents WHERE fts(text, 'the') ORDER BY s DESC LIMIT 10")
+    assert(fetched.queryExecution.analyzed.collect { case j: Join => j }.isEmpty)
+    val df = sess.execute(
+      "SELECT doc_id, score() AS s FROM documents WHERE fts(text, 'the') ORDER BY s DESC LIMIT 20000")
     val joins = df.queryExecution.analyzed.collect { case j: Join => j }
     assert(joins.nonEmpty)
     assert(joins.forall(j =>

@@ -1,9 +1,5 @@
 package graft.index
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,18 +19,8 @@ class StoreJobsSpec extends AnyFunSuite {
 
   /** Spark jobs started while `body` runs. */
   private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    TestListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val r = body
-      TestListenerBus.drain(sc)
-      (r, jobs.get)
-    } finally sc.removeSparkListener(listener)
+    val (r, c) = graft.SparkEvents.of(spark)(body)
+    (r, c.jobs)
   }
 
   private def tmpDir(): String = java.nio.file.Files.createTempDirectory("graftjobs").toString
