@@ -96,15 +96,15 @@ object PlanDump {
         Seq("content"), shardDocs = 8192, buildPartitions = cpus * 2))
       idx2.unpersist(blocking = true)
     }
+    // searches run one job over the shard tables, planned by no Catalyst
+    // query; their EXPLAIN frame (the lazy top-k over the same shard
+    // candidates) is what there is to dump
     write("bench_fts_hot", formatted(
-      engine.searchF32(Seq(Fts("content", "fn return license")), 10, useWand = true)))
+      engine.searchF32Planned(Seq(Fts("content", "fn return license")), 10)))
     write("bench_conj_wand", formatted(
-      engine.searchF32(Seq(Fts("content", "binary search"), Fts("content", "license")), 10,
-        useWand = true)))
-    val batch32 = QpsBench.queryPool(32).zipWithIndex.map { case (q, i) => i -> q }
-    write("bench_batch32", formatted(engine.searchManyF32(batch32, 10)))
+      engine.searchF32Planned(Seq(Fts("content", "binary search"), Fts("content", "license")), 10)))
     write("bench_fuzzy", formatted(
-      engine.searchF32(Seq(FuzzyC("content", "serach mrege")), 10)))
+      engine.searchF32Planned(Seq(FuzzyC("content", "serach mrege")), 10)))
 
     spark.stop()
   }

@@ -106,9 +106,8 @@ object QpsBench {
     // shared-cache block-max path the engine now serves (Wand.topKMany):
     // both end in the engine's per-qid merge, so the delta is pure
     // block skipping
-    def exhaustive(qs: Seq[(Int, CompiledQuery)]): Unit = engine.batchTopK(
-      Scorer.preMerged(Scorer.scoreManyF32(idx, qs, 10).toDF("qid", "docId", "score"), 10),
-      10, qs.size).collect()
+    def exhaustive(qs: Seq[(Int, CompiledQuery)]): Unit =
+      engine.batchTopK(Scorer.scoreManyF32(idx, qs, 10), 10, qs.size, f64 = false).collect()
     val cqs = batch.map(_._1).zip(engine.compileMany(batch.map(_._2)))
       .filter(_._2.terms.nonEmpty)
     def runExhaustive(): Unit = exhaustive(cqs)

@@ -1,6 +1,7 @@
 package graft.index
 
 import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -76,6 +77,9 @@ final case class PostingRow(
 /** Per-field corpus statistics needed by BM25. */
 final case class FieldStats(field: String, totalTokens: Long)
 
+/** One posting row's document count, the term dictionary's input. */
+final case class TermDf(field: String, term: String, df: Long)
+
 /** A partial posting list covering one input partition's slice of one
   * (field, term, shard): already delta+bitpack encoded at the map side.
   * Because docIds are assigned contiguously per range partition, the
@@ -95,20 +99,23 @@ final case class PartialRow(
 
 /** An immutable index segment: the Spark-native analogue of a tantivy
   * segment (posting lists + term dictionary + fieldnorms + doc store,
-  * SURVEY.md section 1.3/1.4). All members are lazy Spark datasets;
-  * `persist()` pins them for repeated queries (plays the role of lnx's
-  * mmap'd searcher + reader cache, bucket.rs:24-25).
+  * SURVEY.md section 1.3/1.4). `persist()` pins the frames for repeated
+  * queries (plays the role of lnx's mmap'd searcher + reader cache,
+  * bucket.rs:24-25).
   *
-  * `postings` holds live docs only and is co-partitioned by docId shard
-  * (`IndexBuilder.shardLocal`): the scorers run over it with no
-  * exchange and never see a delete set. A store applies its tombstones
-  * to the postings (and `docs`) once, at load; `termStats`, `numDocs`
-  * and `fieldTokens` still count deleted docs until compaction, as
+  * `shards` is the one postings cache: a term-keyed `ShardTable` per
+  * partition, co-partitioned by docId shard (`IndexBuilder.shardTables`),
+  * so every search probes it in place with no exchange and no query
+  * planning, and never sees a delete set. `postings` and an in-memory
+  * build's `termStats` and `fieldTokens` are read off it, not cached
+  * beside it. A store applies its tombstones to the postings (and
+  * `docs`) once, when the tables are built; `termStats`, `numDocs` and
+  * `fieldTokens` still count deleted docs until compaction, as
   * Lucene/tantivy segment statistics do.
   */
 final class BuiltIndex(
     val docs: DataFrame, // source columns + docId
-    val postings: Dataset[PostingRow],
+    val shards: ShardTables,
     val termStats: DataFrame, // field, term, df
     val numDocs: Long,
     val fieldTokens: Map[String, Long],
@@ -126,6 +133,10 @@ final class BuiltIndex(
 
   def spark: SparkSession = docs.sparkSession
 
+  /** Every posting row, read off the shard tables (segment writes, specs). */
+  def postings: Dataset[PostingRow] =
+    spark.createDataset(shards.rdd.flatMap(_.iterator))(Encoders.product[PostingRow])
+
   def avgFieldnormF32(field: String): Float =
     fieldTokens.getOrElse(field, 0L).toFloat / numDocs.toFloat
 
@@ -136,13 +147,12 @@ final class BuiltIndex(
     *   for the in-memory session analogue; the persisted-segment path
     *   (IndexStore.load) passes FALSE at scale so stored fields stream
     *   from the docId-sorted segment parquet (pruned reads) and only
-    *   postings/termstats — the rough analogue of tantivy's mmap'd
-    *   searcher state — occupy executor memory. At 100 TB the doc store
-    *   does not fit; the index working set does.
+    *   the shard tables and termstats — the rough analogue of tantivy's
+    *   mmap'd searcher state — occupy executor memory. At 100 TB the
+    *   doc store does not fit; the index working set does.
     */
   def persist(cacheDocs: Boolean = true): this.type = {
     if (cacheDocs) docs.persist(StorageLevel.MEMORY_AND_DISK)
-    postings.persist(StorageLevel.MEMORY_AND_DISK)
     termStats.persist(StorageLevel.MEMORY_AND_DISK)
     symspell.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
     this
@@ -156,7 +166,7 @@ final class BuiltIndex(
     * storage-memory budget.
     */
   def unpersist(blocking: Boolean): Unit = {
-    docs.unpersist(blocking); postings.unpersist(blocking); termStats.unpersist(blocking)
+    docs.unpersist(blocking); shards.unpersist(blocking); termStats.unpersist(blocking)
     symspell.foreach(_.unpersist(blocking))
   }
 }
@@ -387,27 +397,27 @@ object IndexBuilder {
 
   /** The one physical layout of every index's postings cache:
     * co-partitioned by docId shard, so every posting row of a shard sits
-    * in one partition and the scorers run as a mapPartitions over the
-    * cache scan with NO exchange (Scorer.shardGrouped) — the §2.4
-    * bucketing trade: pay one shard-keyed shuffle when the index is
-    * built or loaded, not one per query.
+    * in one partition, and each partition is ONE term-keyed
+    * `ShardTable` the scorers probe in place (Scorer.shardGrouped) —
+    * the §2.4 bucketing trade: pay one shard-keyed shuffle when the
+    * index is built or loaded, not one per query.
     *
     * Partition count = min(buildPartitions, shards in a docId span of
     * `span`), known driver-side — a build's doc count, a store's max
     * docIdEnd: a 7-shard corpus in 32+ partitions would leave every
-    * query's scan stage launching mostly-empty tasks. Rows sort by
-    * (field, term) within each partition so the columnar cache's
-    * per-batch min/max stats can prune term-filtered scans once
-    * partitions span many batches.
+    * query launching mostly-empty tasks. Freezing the RDD plans the
+    * shuffle once; the tables themselves build when it is persisted
+    * and first computed.
     */
-  private[index] def shardLocal(postings: Dataset[PostingRow], config: IndexConfig,
-      span: Long): Dataset[PostingRow] =
+  private[index] def shardTables(postings: Dataset[PostingRow], config: IndexConfig,
+      span: Long): RDD[ShardTable] =
     postings
       .repartition(
         math.min(config.buildPartitions.toLong,
           math.max(1L, (span + config.shardDocs - 1) / config.shardDocs)).toInt,
         col("shard"))
-      .sortWithinPartitions(col("field"), col("term"))
+      .rdd
+      .mapPartitions(rows => Iterator.single(ShardTable.of(rows)), preservesPartitioning = true)
 
   /** Full build: docs -> map-side encoded partials -> one compact
     * shuffle on (field, term, shard) -> concat-merge -> postings +
@@ -451,17 +461,22 @@ object IndexBuilder {
       .as(Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.scalaInt),
         Encoders.product[PartialRow])
       .mapGroups { (key, parts) => mergePartials(key, parts) }(Encoders.product[PostingRow])
-    val pPersisted = shardLocal(merged, config, numDocs).persist(StorageLevel.MEMORY_AND_DISK)
-    val termStats = pPersisted.groupBy(col("field"), col("term"))
-      .agg(sum(col("numDocs")).as("df"))
-    // exact per-field token totals (tantivy: total_num_tokens) from the
-    // per-row sumTf column: a map-side partial agg, no decode
-    val fieldTokens = pPersisted
-      .groupBy(col("field")).agg(sum(col("sumTf")).as("t"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val shards = new ShardTables(shardTables(merged, config, numDocs))
+    // ONE materialization: the shard tables build and persist in the
+    // job that sums the exact per-field token totals (tantivy:
+    // total_num_tokens) from the rows' sumTf; the term dictionary is
+    // aggregated from the same cached tables when first read
+    val fieldTokens = shards.rdd
+      .mapPartitions(_.flatMap(_.iterator).map(p => p.field -> p.sumTf).toSeq
+        .groupMapReduce(_._1)(_._2)(_ + _).iterator)
+      .collect().groupMapReduce(_._1)(_._2)(_ + _)
+    val termStats = spark.createDataset(shards.rdd.flatMap(_.iterator.map(p =>
+        TermDf(p.field, p.term, p.numDocs.toLong))))(Encoders.product[TermDf])
+      .groupBy(col("field"), col("term"))
+      .agg(sum(col("df")).as("df"))
     // docs keeps withIds' partitioning (a cache of it), so the
     // assignment's offsets are its per-partition docId ranges
-    new BuiltIndex(docs, pPersisted, termStats, numDocs, fieldTokens, config,
+    new BuiltIndex(docs, shards, termStats, numDocs, fieldTokens, config,
       docRanges = Some(docRanges)).persist()
   }
 }

@@ -392,11 +392,11 @@ object IndexStore {
   }
 
   /** Load the committed view: union of all segments, with every
-    * tombstone (upsert and delete-by-query) applied HERE, once — deleted
-    * docs leave both the doc store and the postings, which are
+    * tombstone (upsert and delete-by-query) applied once — deleted docs
+    * leave both the doc store and the postings, whose shard tables are
     * co-partitioned by docId shard like an in-memory build's
-    * (IndexBuilder.shardLocal), so no scorer ever sees a delete set and
-    * no query pays an exchange. df/avgdl statistics include
+    * (IndexBuilder.shardTables) and built by the first read, so no
+    * scorer ever sees a delete set and no query pays an exchange. df/avgdl statistics include
     * not-yet-compacted deleted docs — the same semantics as
     * Lucene/tantivy segment deletes before a merge — so every live doc
     * scores as if the deleted ones were still filtered per query.
@@ -525,8 +525,11 @@ object IndexStore {
     val docs = liveDocs(spark, dir, m, dels)
     val live = dels.fold(stored)(d => withoutDeleted(stored, d.byShard))
     // shards over the whole docId space: after compaction the store's
-    // numDocs falls below its highest docId (ids are never renumbered)
-    val postings = IndexBuilder.shardLocal(live, config, m.epochs.map(_.docIdEnd).max)
+    // numDocs falls below its highest docId (ids are never renumbered);
+    // the tables freeze and build on the first read, so load itself
+    // plans and runs nothing over the postings
+    val span = m.epochs.map(_.docIdEnd).max
+    val shards = new ShardTables(IndexBuilder.shardTables(live, config, span))
     val termStats = readSegments(spark, dir, segPaths, "termstats.parquet", TermStatsSchema)
       .groupBy("field", "term").agg(sum("df").as("df"))
     val byField = m.epochs.groupBy(_.field)
@@ -539,7 +542,7 @@ object IndexStore {
       if (!config.fastFuzzy) None
       else Some(readSegments(spark, dir, segPaths, "symspell.parquet", SymSpellSchema)
         .groupBy("field", "variant", "term").agg(sum("df").as("df")))
-    new BuiltIndex(docs, postings, termStats, numDocs, fieldTokens, config, symspell)
+    new BuiltIndex(docs, shards, termStats, numDocs, fieldTokens, config, symspell)
       .persist(cacheDocs)
   }
 

@@ -1,10 +1,12 @@
 package graft.query
 
 import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{FloatType, StructType}
+import org.apache.spark.sql.types.{DoubleType, FloatType, IntegerType, LongType, StructField,
+  StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.analyze.{Analyzer, Levenshtein, SymSpell}
@@ -421,22 +423,10 @@ final class QueryEngine(val index: BuiltIndex) {
   /** Observability: compile calls served from the LRU. */
   @volatile var compileCacheHits: Long = 0L
 
-  /** Planned-DataFrame LRU for the f32 serving paths: a repeated query
-    * re-pays Catalyst analysis/optimization/physical planning (~40-50 ms
-    * per call — measured as the dominant slice of the exchange-free
-    * top-k latency) even though the plan is identical. Caching the LAZY
-    * frame reuses the planned QueryExecution while every collect()
-    * still re-executes it against the cached index — results are
-    * recomputed per call, never stored. That holds only because every
-    * cached frame is exchange-free (searchF32's top-k, searchManyF32's
-    * pre-merged candidates): re-collecting a planned frame that holds an
-    * exchange would re-read its first run's shuffle output instead of
-    * scoring again. This extends the compiled-query LRU above one level
-    * up, the same reference semantics (compiled query parts cached
-    * across requests, apis/mod.rs:68-69); like it, the cache dies with
-    * the engine, which mutations invalidate. Only stats-free calls are
-    * cacheable: a wandStats accumulator is captured in task closures, so
-    * those frames are per-caller.
+  /** Memo of lookupDocs' docs projection (keyed by its column list):
+    * a range-pruned fetch runs its job over the projection's physical
+    * plan, planned once per column list instead of per call. Searches
+    * plan nothing to memoize: they run over the shard tables directly.
     */
   private val planCache =
     new java.util.LinkedHashMap[AnyRef, DataFrame](16, 0.75f, true) {
@@ -444,17 +434,15 @@ final class QueryEngine(val index: BuiltIndex) {
         size() > SearchDefaults.MaxBatchWidth
     }
 
-  /** Observability: searches served a memoized planned frame. */
+  /** Searches served a memoized planned frame: none since searches stopped
+    * planning; kept (always 0) for callers that report the ratio. */
   @volatile var planCacheHits: Long = 0L
 
-  /** @param search false for lookupDocs' docs projection, which is not
-    *   a search and so counts no planCacheHits */
-  private def cachedPlan(key: AnyRef, search: Boolean = true)(build: => DataFrame): DataFrame = {
+  private def cachedPlan(key: AnyRef)(build: => DataFrame): DataFrame = {
     planCache.synchronized {
       val hit = planCache.get(key)
-      if (hit != null) { if (search) planCacheHits += 1; return hit }
+      if (hit != null) return hit
     }
-    // build OUTSIDE the lock: compile() inside may run dictionary jobs
     val df = build
     planCache.synchronized { planCache.put(key, df) }
     df
@@ -587,8 +575,10 @@ final class QueryEngine(val index: BuiltIndex) {
             case Some(m) =>
               exactToks.distinct.flatMap(t => m.get((field, t)).map(df => (field, t, df, 1.0)))
             case None =>
-              dfLookup(exactToks.map(t => (field, t)).distinct)
-                .map { case ((f, t), df) => (f, t, df, 1.0) }.toSeq
+              // query-token order, as the batch path above (not the
+              // lookup's row order, which follows the dictionary layout)
+              val dfs = dfLookup(exactToks.map(t => (field, t)).distinct)
+              exactToks.distinct.flatMap(t => dfs.get((field, t)).map(df => (field, t, df, 1.0)))
           }
           val expanded = ctx.prefix match {
             case Some(m) =>
@@ -636,7 +626,8 @@ final class QueryEngine(val index: BuiltIndex) {
           }
         case MoreLikeThis(field, docId, topTerms, _) =>
           val toks = seedTerms(field, docId, topTerms)
-          dfLookup(toks.map(t => (field, t))).map { case ((f, t), df) => mkTerm(f, t, df, 1.0, g, n) }
+          val dfs = dfLookup(toks.map(t => (field, t)))
+          toks.flatMap(t => dfs.get((field, t)).map(df => mkTerm(field, t, df, 1.0, g, n)))
       }
     }
     // dedupe (field, term, group); keep first
@@ -678,29 +669,51 @@ final class QueryEngine(val index: BuiltIndex) {
     }
   }
 
-  /** (docId, score float) — rank-identity path. Block-max WAND handles
-    * eligible queries by default — single sum-scored groups AND
-    * all-required conjunctions (the reference's flagship WHERE shape),
-    * behind Wand.route's cost gates — and is exact w.r.t. the
-    * exhaustive scorer (WandSpec).
+  /** (docId, score float) — rank-identity path, best first (score desc,
+    * docId asc). Block-max WAND handles eligible queries by default —
+    * single sum-scored groups AND all-required conjunctions (the
+    * reference's flagship WHERE shape), behind Wand.route's cost gates —
+    * and is exact w.r.t. the exhaustive scorer (WandSpec). Runs ONE job
+    * over the shard tables (Scorer.collectTopK) and returns a local
+    * frame, with wandStats filled when the call returns.
     */
   def searchF32(clauses: Seq[SearchClause], k: Int = DefaultLimit, useWand: Boolean = true,
       wandStats: Option[Wand.Stats] = None): DataFrame = {
+    val (ids, scores) = topHits(clauses, k, useWand, wandStats)
+    localFrame(scoredSchema(f64 = false), ids.indices.map(i => Row(ids(i), scores(i))))
+  }
+
+  /** The per-shard top-k candidates of `clauses`, by Wand.route; None
+    * when nothing can match (no job to run).
+    */
+  private def shardCandidates(clauses: Seq[SearchClause], k: Int, useWand: Boolean,
+      wandStats: Option[Wand.Stats]): Option[RDD[ScoredDocF32]] = {
     // LIMIT 0 is legal SQL and must return zero rows, not crash the
     // WAND tasks (a zero-capacity shard heap cannot take an offer)
-    if (k <= 0) return emptyResult[ScoredDocF32]
-    def build: DataFrame = {
-      val cq = compile(clauses)
-      if (cq.terms.isEmpty) return emptyResult[ScoredDocF32]
-      val scored = (if (useWand) Wand.route(cq, index.numDocs) else 2) match {
-        case 0 => Wand.topK(index, cq, k, wandStats)
-        case 1 => Wand.topKConj(index, cq, k, wandStats)
-        case _ => Scorer.scoreF32(index, cq)
-      }
-      Scorer.topK(scored.toDF("docId", "score"), k)
+    if (k <= 0) return None
+    val cq = compile(clauses)
+    if (cq.terms.isEmpty) None
+    else (if (useWand) Wand.route(cq, index.numDocs) else 2) match {
+      case 0 => Some(Wand.topKShards(index, cq, k, wandStats))
+      case 1 => Wand.topKConjShards(index, cq, k, wandStats)
+      case _ => Some(Scorer.shardTopKF32(index, cq, k))
     }
-    if (wandStats.isEmpty) cachedPlan((clauses, k, useWand))(build) else build
   }
+
+  /** searchF32's hits as (docIds, scores), best first. */
+  private def topHits(clauses: Seq[SearchClause], k: Int, useWand: Boolean = true,
+      wandStats: Option[Wand.Stats] = None): (Array[Long], Array[Float]) =
+    shardCandidates(clauses, k, useWand, wandStats)
+      .fold((Array.empty[Long], Array.empty[Float]))(Scorer.collectTopK(_, k))
+
+  /** searchF32 as a lazy frame over the same shard candidates, planned
+    * but never run by the engine: what EXPLAIN prints for a capped
+    * search, with no Spark job.
+    */
+  private[graft] def searchF32Planned(clauses: Seq[SearchClause], k: Int): DataFrame =
+    shardCandidates(clauses, k, useWand = true, wandStats = None).fold(
+      localFrame(scoredSchema(f64 = false), Nil))(c =>
+      Scorer.topK(index.spark.createDataset(c)(Encoders.product[ScoredDocF32]).toDF(), k))
 
   /** (docId, score double) — oracle-parity path. Top-k selection runs
     * under the ORACLE's total order (round(score,4) desc, docId asc),
@@ -740,23 +753,12 @@ final class QueryEngine(val index: BuiltIndex) {
     // closure — bounded here so a runaway batch degrades loudly into
     // "chunk your batch", not into silent multi-MB task binaries
     require(queries.size <= MaxBatchWidth, s"batch wider than $MaxBatchWidth: chunk it")
-    if (k <= 0) return emptyResult[ScoredQDocF32]
-    // the split-floor conf resolves BEFORE the plan-cache lookup and
-    // rides the key: a conf flip between identical batches must
-    // re-plan, not serve the other regime's routing
+    if (k <= 0) return localFrame(batchSchema(f64 = false), Nil)
     val splitMinDocs = index.spark.conf
       .get("graft.batch.splitMinDocs", SearchDefaults.BatchSplitMinDocs.toString).toLong
-    def build: DataFrame = searchManyF32Build(queries, k, wandStats, splitMinDocs)
-    batchTopK(
-      if (wandStats.isEmpty) cachedPlan((queries, k, splitMinDocs))(build) else build,
-      k, queries.size)
-  }
-
-  private def searchManyF32Build(queries: Seq[(Int, Seq[SearchClause])], k: Int,
-      wandStats: Option[Wand.Stats], splitMinDocs: Long): DataFrame = {
     val cqs = queries.map(_._1).zip(compileMany(queries.map(_._2)))
     val nonEmpty = cqs.filter(_._2.terms.nonEmpty)
-    if (nonEmpty.isEmpty) return emptyResult[ScoredQDocF32]
+    if (nonEmpty.isEmpty) return localFrame(batchSchema(f64 = false), Nil)
     // partition the batch by WAND routability: sparse queries take the
     // shared-cache pruned pass (Wand.topKMany), dense ones the
     // exhaustive hash replay (Scorer.scoreManyF32) — per-query WAND
@@ -780,14 +782,10 @@ final class QueryEngine(val index: BuiltIndex) {
       if (index.numDocs >= splitMinDocs)
         nonEmpty.partition(q => Wand.batchWandRoutable(q._2, index.numDocs))
       else (Nil, nonEmpty)
-    val frames = Seq(
-      if (sparse.nonEmpty)
-        Some(Wand.topKMany(index, sparse, k, wandStats).toDF("qid", "docId", "score"))
-      else None,
-      if (dense.nonEmpty)
-        Some(Scorer.scoreManyF32(index, dense, k).toDF("qid", "docId", "score"))
-      else None).flatten
-    Scorer.preMerged(frames.reduce(_ unionByName _), k)
+    val passes: Seq[RDD[ScoredQDoc]] = Seq(
+      if (sparse.nonEmpty) Some(Wand.topKMany(index, sparse, k, wandStats)) else None,
+      if (dense.nonEmpty) Some(Scorer.scoreManyF32(index, dense, k)) else None).flatten
+    batchTopK(passes.reduce(_ union _), k, queries.size, f64 = false)
   }
 
   /** f64 batched path (oracle parity): (qid, docId, score double),
@@ -798,12 +796,11 @@ final class QueryEngine(val index: BuiltIndex) {
   def searchManyF64(queries: Seq[(Int, Seq[SearchClause])], k: Int = DefaultLimit): DataFrame = {
     require(queries.map(_._1).distinct.size == queries.size, "qids must be unique")
     require(queries.size <= MaxBatchWidth, s"batch wider than $MaxBatchWidth: chunk it")
-    if (k <= 0) return emptyResult[ScoredQDocF64]
+    if (k <= 0) return localFrame(batchSchema(f64 = true), Nil)
     val cqs = queries.map(_._1).zip(compileMany(queries.map(_._2)))
     val nonEmpty = cqs.filter(_._2.terms.nonEmpty)
-    if (nonEmpty.isEmpty) return emptyResult[ScoredQDocF64]
-    val scored = Scorer.scoreManyF64(index, nonEmpty, k).toDF("qid", "docId", "score")
-    batchTopK(Scorer.preMerged(scored, k), k, nonEmpty.size)
+    if (nonEmpty.isEmpty) return localFrame(batchSchema(f64 = true), Nil)
+    batchTopK(Scorer.scoreManyF64(index, nonEmpty, k), k, nonEmpty.size, f64 = true)
   }
 
   /** Candidate rows up to which batchTopK merges on the driver; the
@@ -811,35 +808,40 @@ final class QueryEngine(val index: BuiltIndex) {
     */
   @volatile private[graft] var driverMergeRows: Long = SearchDefaults.DriverMergeRows
 
-  /** A batch's per-qid top-k over its pre-merged candidates
-    * (`Scorer.preMerged`: qid, docId, score float|double), as a frame of
-    * the same schema, under the batch total order — score desc (f32) or
-    * round4 desc (f64), then docId asc. While the candidates fit the
-    * gate they are collected and merged on the driver
-    * (`Scorer.mergePerQuery`): the batch is the ONE scoring job and the
-    * result a local frame. The gate needs no job: each task returns at
-    * most k rows per query, a pass runs at most buildPartitions tasks
-    * (IndexBuilder.shardLocal), the sparse and dense passes split the
+  /** A batch's per-qid top-k over its shard candidates, as a frame
+    * (qid, docId, score float|double) under the batch total order —
+    * score desc (f32) or round4 desc (f64), then docId asc. While the
+    * candidates fit the gate, ONE job runs: each task merges its shard
+    * heaps per qid (`Scorer.preMerged`) and returns them as primitive
+    * arrays, the driver merges those per qid (`Scorer.PerQueryTopK`),
+    * and the result is a local frame, qids ascending, each qid's best
+    * first. The gate needs no job: each task returns at most k rows per
+    * query, a pass runs at most buildPartitions tasks
+    * (IndexBuilder.shardTables), the sparse and dense passes split the
     * queries, and no query keeps more rows than the index has docs.
-    * Above it — wide batches at large k — the lazy per-qid window
-    * (one hash exchange on qid) keeps the rows off the driver.
+    * Above it — wide batches at large k — the same pre-merged
+    * candidates become a lazy frame under a per-qid window (one hash
+    * exchange on qid), which keeps the rows off the driver.
     */
-  private[graft] def batchTopK(preMerged: DataFrame, k: Int, nQueries: Int): DataFrame = {
-    val f64 = Scorer.isF64(preMerged)
+  private[graft] def batchTopK(cands: RDD[ScoredQDoc], k: Int, nQueries: Int,
+      f64: Boolean): DataFrame = {
     val bound = nQueries.toLong * math.min(index.config.buildPartitions.toLong * k, index.numDocs)
-    if (bound > driverMergeRows)
-      Scorer.topKPerQuery(preMerged, k, if (f64) round(col("score"), 4) else col("score"))
-    else {
-      import scala.jdk.CollectionConverters._
-      val merged = Scorer.mergePerQuery(preMerged.collect().iterator, k, f64).toSeq
-      index.spark.createDataFrame(merged.asJava, preMerged.schema)
+    if (bound > driverMergeRows) {
+      val preMerged = cands.mapPartitions(it => Scorer.preMerged(it, k, f64).rows(f64))
+      Scorer.topKPerQuery(index.spark.createDataFrame(preMerged, batchSchema(f64)), k,
+        if (f64) round(col("score"), 4) else col("score"))
+    } else {
+      val top = new Scorer.PerQueryTopK(k, f64)
+      index.spark.sparkContext.runJob(cands, (it: Iterator[ScoredQDoc]) => Scorer.preMerged(it, k, f64))
+        .foreach(top.offerAll)
+      localFrame(batchSchema(f64), top.result.rows(f64).toSeq)
     }
   }
 
   /** Unlimited (docId, score float) match set on the rank-identity path. */
   def matchF32(clauses: Seq[SearchClause]): DataFrame = {
     val cq = compile(clauses)
-    if (cq.terms.isEmpty) return emptyResult[ScoredDocF32]
+    if (cq.terms.isEmpty) return localFrame(scoredSchema(f64 = false), Nil)
     Scorer.scoreF32(index, cq).toDF("docId", "score")
   }
 
@@ -848,14 +850,14 @@ final class QueryEngine(val index: BuiltIndex) {
     */
   def matchF64(clauses: Seq[SearchClause], threshold: Option[Double] = None): DataFrame = {
     val cq = compile(clauses)
-    if (cq.terms.isEmpty) return emptyResult[ScoredDocF64]
+    if (cq.terms.isEmpty) return localFrame(scoredSchema(f64 = true), Nil)
     val scored = Scorer.scoreF64(index, cq).toDF("docId", "score")
     threshold.map(t => scored.filter(col("score") > lit(t))).getOrElse(scored)
   }
 
   /** Join scored docIds back to stored fields (the only docId join the
     * engine needs, SURVEY.md section 2.3). Callers MUST pass a limited
-    * scored side (apply Scorer.topK / a threshold + limit first) and
+    * scored side (searchF32, or a threshold + limit) and
     * its cap: the broadcast hint is only sound while the cap is
     * broadcast-sized (`MaxBroadcastK`) — above it, or for unlimited
     * match sets (see facetCounts), the join runs un-hinted and AQE
@@ -876,7 +878,7 @@ final class QueryEngine(val index: BuiltIndex) {
     * With `BuiltIndex.docRanges` (in-memory builds) the fetch is ONE
     * job over only the docs partitions whose range holds a requested
     * id, reading a (docId +: docCols) projection whose physical plan is
-    * memoized in the plan LRU (planned once per column list); matched
+    * memoized in `planCache` (planned once per column list); matched
     * rows are converted on the executors and the result is a local
     * frame, in no particular order. No requested id, no job. Without
     * ranges (IndexStore.load: docs NOT cached) it is a lazy pushed-down
@@ -889,16 +891,15 @@ final class QueryEngine(val index: BuiltIndex) {
       index.docs.filter(col("docId").isin(ids: _*))
         .select((col("docId") +: docCols.map(col)): _*)
     else {
-      import scala.jdk.CollectionConverters._
       val (schema, rows) = fetchRanged(ids, docCols)
-      index.spark.createDataFrame(rows.toSeq.asJava, schema)
+      localFrame(schema, rows.toSeq)
     }
   }
 
   /** lookupDocs' range-pruned fetch, as the projection's schema and the
     * matched rows. */
   private def fetchRanged(ids: Seq[Long], docCols: Seq[String]): (StructType, Array[Row]) = {
-    val projected = cachedPlan(DocFetch.Projection(docCols), search = false)(
+    val projected = cachedPlan(DocFetch.Projection(docCols))(
       index.docs.select((col("docId") +: docCols.map(col)): _*))
     val schema = projected.schema
     val want = DocFetch.byPartition(index.docRanges.get, ids)
@@ -926,16 +927,15 @@ final class QueryEngine(val index: BuiltIndex) {
       docCols: Seq[String]): DataFrame = {
     require(index.docRanges.nonEmpty && k <= MaxLookupIds,
       "searchWithDocs needs docId ranges and k <= MaxLookupIds")
-    import scala.jdk.CollectionConverters._
-    val hits = searchF32(clauses, k).collect()
-    val (schema, rows) = fetchRanged(hits.map(_.getLong(0)).toSeq, docCols)
+    val (ids, scores) = topHits(clauses, k)
+    val (schema, rows) = fetchRanged(ids.toSeq, docCols)
     val byId = rows.iterator.map(r => r.getLong(0) -> r).toMap
-    val out = hits.map { h =>
-      val d = byId.getOrElse(h.getLong(0), throw new IllegalStateException(
-        s"stored fields of docId ${h.getLong(0)} are missing from the docs fetch"))
-      Row.fromSeq(d.toSeq :+ h.getFloat(1))
+    val out = ids.indices.map { i =>
+      val d = byId.getOrElse(ids(i), throw new IllegalStateException(
+        s"stored fields of docId ${ids(i)} are missing from the docs fetch"))
+      Row.fromSeq(d.toSeq :+ scores(i))
     }
-    index.spark.createDataFrame(out.toSeq.asJava, schema.add("score", FloatType, nullable = false))
+    localFrame(schema.add("score", FloatType, nullable = false), out)
   }
 
   /** Hierarchical facet counting over a match set (the `facet` type's
@@ -958,9 +958,20 @@ final class QueryEngine(val index: BuiltIndex) {
       .groupBy(col("facet")).agg(count(lit(1)).as("cnt"))
   }
 
-  /** Zero-row frame with the schema of the scoring path it stands in for. */
-  private def emptyResult[T <: Product: scala.reflect.runtime.universe.TypeTag]: DataFrame =
-    index.spark.emptyDataset(Encoders.product[T]).toDF()
+  /** A driver-held result as a frame: collecting it runs no job. */
+  private def localFrame(schema: StructType, rows: Seq[Row]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    index.spark.createDataFrame(rows.asJava, schema)
+  }
+
+  /** (docId, score) of a single query's results: score float, or double for `f64`. */
+  private def scoredSchema(f64: Boolean): StructType = StructType(Seq(
+    StructField("docId", LongType, nullable = false),
+    StructField("score", if (f64) DoubleType else FloatType, nullable = false)))
+
+  /** (qid, docId, score) of a batch's results. */
+  private def batchSchema(f64: Boolean): StructType =
+    StructType(StructField("qid", IntegerType, nullable = false) +: scoredSchema(f64).fields)
 }
 
 /** lookupDocs' partition pruning over `BuiltIndex.docRanges`. */

@@ -1,8 +1,10 @@
 package graft.query
 
+import scala.reflect.ClassTag
+
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
-import scala.reflect.runtime.universe.TypeTag
 
 import graft.index.{BuiltIndex, DecodedBlock, PostingCodec, PostingRow}
 
@@ -35,61 +37,74 @@ final case class CompiledQuery(terms: Seq[CompiledTerm], groups: Seq[CompiledGro
 
 final case class ScoredDocF32(docId: Long, score: Float)
 final case class ScoredDocF64(docId: Long, score: Double)
-final case class ScoredQDocF32(qid: Int, docId: Long, score: Float)
-final case class ScoredQDocF64(qid: Int, docId: Long, score: Double)
+
+/** A batch candidate of either precision; `raw` is its score as a double. */
+sealed trait ScoredQDoc {
+  def qid: Int
+  def docId: Long
+  def raw: Double
+}
+final case class ScoredQDocF32(qid: Int, docId: Long, score: Float) extends ScoredQDoc {
+  def raw: Double = score.toDouble
+}
+final case class ScoredQDocF64(qid: Int, docId: Long, score: Double) extends ScoredQDoc {
+  def raw: Double = score
+}
+
+/** A batch's candidates as primitive columns (qid, docId, raw score),
+  * qids ascending and each qid's best first: what a scoring task hands
+  * the driver, and the driver's merged result.
+  */
+final case class QCands(qids: Array[Int], docIds: Array[Long], scores: Array[Double]) {
+  /** As (qid, docId, score) rows: score double for `f64`, else float. */
+  def rows(f64: Boolean): Iterator[Row] = qids.indices.iterator.map { i =>
+    if (f64) Row(qids(i), docIds(i), scores(i)) else Row(qids(i), docIds(i), scores(i).toFloat)
+  }
+}
 
 /** Distributed scoring over the sharded posting lists.
   *
-  * Plan shape (scale rationale): the posting rows matching the query's
-  * terms are a *tiny* Dataset (#terms x #shards rows) selected with a
-  * `term IN (...)` filter against the postings cache, which is already
-  * co-partitioned by docId shard — so each task merges all clause
-  * postings for its disjoint docId ranges with no exchange at all,
-  * per-doc aggregation happens in-task, and the global top-k is a
-  * TakeOrdered over per-shard candidates. No query-time shuffle moves
-  * posting rows; only the per-shard candidates leave their task.
+  * Plan shape (scale rationale): every index's postings cache is one
+  * term-keyed `ShardTable` per partition, co-partitioned by docId shard,
+  * so each task probes its table for the query's (field, term) keys —
+  * a hash lookup per key, no scan, no query planning — merges all
+  * clause postings for its disjoint docId ranges with no exchange at
+  * all, and keeps a bounded per-shard top-k. Only those candidates
+  * leave their task; the driver merges them (QueryEngine).
   */
 object Scorer {
 
-  /** Pushdown-friendly selection of the query's posting rows. The exact
-    * (field, term) pair match stays a Column expression (codegen'd, on
-    * top of the pushed-down isin scans) instead of a typed filter that
-    * would force row deserialization.
+  /** The query's posting rows, probed out of each partition's shard
+    * table in (field, term) order; a key's rows keep their table order.
     */
-  def matchedPostings(index: BuiltIndex, terms: Seq[CompiledTerm]): Dataset[PostingRow] = {
-    val termKeys = terms.map(_.term).distinct
-    val fieldKeys = terms.map(_.field).distinct
-    val base = index.postings
-      .filter(col("term").isin(termKeys: _*) && col("field").isin(fieldKeys: _*))
-    if (fieldKeys.size <= 1) base
-    else {
-      val pairKeys = terms.map(t => t.field + "\u0000" + t.term).distinct
-      base.filter(concat_ws("\u0000", col("field"), col("term")).isin(pairKeys: _*))
-    }
+  def matchedPostings(index: BuiltIndex, terms: Seq[CompiledTerm]): RDD[PostingRow] = {
+    val keys = terms.map(t => (t.field, t.term)).distinct.sorted.toArray
+    index.shards.rdd.mapPartitions(_.flatMap(table => keys.iterator.flatMap(k => table.rows(k._1, k._2))))
   }
 
   /** Run a per-shard scoring function over the query's matched posting
-    * rows — the ONE physical shape every index scores in. Every index's
-    * postings cache is co-partitioned by docId shard
-    * (`IndexBuilder.shardLocal`), so every row of a shard already sits
-    * in one cache partition and the scorers run as a mapPartitions
-    * directly over the pruned cache scan — a single-stage Spark job with
-    * NO exchange (guide §2.4: the bucketing pattern — the build or load
-    * pays one shard-keyed shuffle so that no query pays one).
+    * rows — the ONE physical shape every index scores in: a narrow
+    * mapPartitions over the persisted shard tables (`BuiltIndex.shards`),
+    * one task per table, a single-stage job with NO exchange (guide
+    * §2.4: the bucketing pattern — the build or load pays one
+    * shard-keyed shuffle so that no query pays one). Callers run it
+    * with one `runJob` (searchF32, the batches under the driver-merge
+    * gate) or wrap it with `createDataset` (matchF32/matchF64, the
+    * windowed batch).
     *
-    * `f` receives exactly the matched rows of one shard. A store's shard
-    * may hold several rows per (field, term), one per segment; a docId
-    * lives in exactly one segment, so the order of a key's rows cannot
-    * change any doc's sum. Tombstones never reach `f`: they are applied
-    * to the postings once, when the store loads.
+    * `f` receives exactly the matched rows of one shard, shards
+    * ascending. A store's shard may hold several rows per (field, term),
+    * one per segment; a docId lives in exactly one segment, so the order
+    * of a key's rows cannot change any doc's sum. Tombstones never reach
+    * `f`: they are applied to the postings once, when the store's tables
+    * are built.
     */
-  def shardGrouped[T](index: BuiltIndex, terms: Seq[CompiledTerm])(
-      f: Array[PostingRow] => Iterator[T])(
-      implicit enc: org.apache.spark.sql.Encoder[T]): Dataset[T] =
+  def shardGrouped[T: ClassTag](index: BuiltIndex, terms: Seq[CompiledTerm])(
+      f: Array[PostingRow] => Iterator[T]): RDD[T] =
     matchedPostings(index, terms).mapPartitions { it =>
       // TreeMap: deterministic shard iteration order within a task
-      // (output ROW order feeds only order-insensitive consumers —
-      // topK / aggregates — but determinism costs nothing here)
+      // (output order feeds only order-insensitive consumers — heaps,
+      // merges, aggregates — but determinism costs nothing here)
       val byShard = new java.util.TreeMap[Int, scala.collection.mutable.ArrayBuffer[PostingRow]]()
       it.foreach { p =>
         var b = byShard.get(p.shard)
@@ -108,8 +123,8 @@ object Scorer {
     */
   def scoreF32(index: BuiltIndex, cq: CompiledQuery): Dataset[ScoredDocF32] = {
     val caches = normCachesF32(index, cq.terms)
-    scoreAll(index, cq)(new AccF32(_, caches))(
-      (acc, docId, o) => ScoredDocF32(docId, acc.score(o)))
+    index.spark.createDataset(scoreAll(index, cq)(new AccF32(_, caches))(
+      (acc, docId, o) => ScoredDocF32(docId, acc.score(o))))(Encoders.product[ScoredDocF32])
   }
 
   /** Oracle-parity f64 path: the same kernel in pure double math
@@ -117,8 +132,17 @@ object Scorer {
     */
   def scoreF64(index: BuiltIndex, cq: CompiledQuery): Dataset[ScoredDocF64] = {
     val caches = normCachesF64(index, cq.terms)
-    scoreAll(index, cq)(new AccF64(_, caches))(
-      (acc, docId, o) => ScoredDocF64(docId, acc.score(o)))
+    index.spark.createDataset(scoreAll(index, cq)(new AccF64(_, caches))(
+      (acc, docId, o) => ScoredDocF64(docId, acc.score(o))))(Encoders.product[ScoredDocF64])
+  }
+
+  /** Exhaustive f32 top-k candidates of one query: each shard's k best
+    * under the engine total order (searchF32's exhaustive route).
+    */
+  def shardTopKF32(index: BuiltIndex, cq: CompiledQuery, k: Int): RDD[ScoredDocF32] = {
+    val caches = normCachesF32(index, cq.terms)
+    scoreMany(index, Seq(0 -> cq), k)(new AccF32(_, caches))(
+      (_, docId, s) => ScoredDocF32(docId, s.toFloat))
   }
 
   /** Batched multi-query scoring — the cluster THROUGHPUT path: ONE
@@ -128,9 +152,9 @@ object Scorer {
     * so no stage ever carries a corpus-sized per-query match set.
     */
   def scoreManyF32(index: BuiltIndex, queries: Seq[(Int, CompiledQuery)],
-      k: Int): Dataset[ScoredQDocF32] = {
+      k: Int): RDD[ScoredQDoc] = {
     val caches = normCachesF32(index, queries.flatMap(_._2.terms))
-    scoreMany(index, queries, k)(new AccF32(_, caches))(
+    scoreMany[ScoredQDoc](index, queries, k)(new AccF32(_, caches))(
       (qid, docId, s) => ScoredQDocF32(qid, docId, s.toFloat))
   }
 
@@ -139,18 +163,33 @@ object Scorer {
     * presentation uses.
     */
   def scoreManyF64(index: BuiltIndex, queries: Seq[(Int, CompiledQuery)],
-      k: Int): Dataset[ScoredQDocF64] = {
+      k: Int): RDD[ScoredQDoc] = {
     val caches = normCachesF64(index, queries.flatMap(_._2.terms))
-    scoreMany(index, queries, k)(new AccF64(_, caches))(ScoredQDocF64(_, _, _))
+    scoreMany[ScoredQDoc](index, queries, k)(new AccF64(_, caches))(ScoredQDocF64(_, _, _))
   }
 
   /** Global top-k with the engine's total order (score desc, docId asc
     * — tantivy breaks score ties by doc address; we pin docId,
-    * SURVEY.md section 2.7 T1). Catalyst plans TakeOrderedAndProject:
+    * SURVEY.md section 2.7 T1) over a lazy scored frame (SQL's
+    * thresholded matches). Catalyst plans TakeOrderedAndProject:
     * per-partition heaps + driver merge = distributed top-k.
     */
   def topK(scored: DataFrame, k: Int): DataFrame =
     scored.orderBy(col("score").desc, col("docId").asc).limit(k)
+
+  /** The global top-k (docId, score) of per-shard f32 candidates under
+    * the engine total order, best first, in ONE job: the batch merge
+    * with a single qid — each task merges its shards' heaps and returns
+    * them as primitive arrays, and the driver merges those.
+    */
+  def collectTopK(cands: RDD[ScoredDocF32], k: Int): (Array[Long], Array[Float]) = {
+    val top = new PerQueryTopK(k, f64 = false)
+    cands.sparkContext.runJob(cands, (it: Iterator[ScoredDocF32]) =>
+      preMerged(it.map(c => ScoredQDocF32(0, c.docId, c.score)), k, f64 = false))
+      .foreach(top.offerAll)
+    val m = top.result
+    (m.docIds, m.scores.map(_.toFloat))
+  }
 
   // ------------------------------------------------- the exhaustive kernel
 
@@ -300,8 +339,8 @@ object Scorer {
     heap.foreachKept(emit)
   }
 
-  private def scoreAll[A <: ShardAcc, T <: Product: TypeTag](index: BuiltIndex,
-      cq: CompiledQuery)(newAcc: Int => A)(out: (A, Long, Int) => T): Dataset[T] = {
+  private def scoreAll[A <: ShardAcc, T: ClassTag](index: BuiltIndex,
+      cq: CompiledQuery)(newAcc: Int => A)(out: (A, Long, Int) => T): RDD[T] = {
     val plan = mkPlan(0, cq)
     val shardDocs = index.config.shardDocs // capture: closures must not drag BuiltIndex in
     shardGrouped(index, cq.terms) { rows =>
@@ -313,12 +352,12 @@ object Scorer {
         Iterator.range(0, shardDocs).filter(o => acc.isHit(o, plan.reqMask))
           .map(o => out(acc, base + o, o))
       }
-    }(Encoders.product[T])
+    }
   }
 
-  private def scoreMany[T <: Product: TypeTag](index: BuiltIndex,
+  private def scoreMany[T: ClassTag](index: BuiltIndex,
       queries: Seq[(Int, CompiledQuery)], k: Int)(newAcc: Int => ShardAcc)(
-      out: (Int, Long, Double) => T): Dataset[T] = {
+      out: (Int, Long, Double) => T): RDD[T] = {
     val plans = queries.map { case (qid, cq) => mkPlan(qid, cq) }.toArray
     val shardDocs = index.config.shardDocs
     shardGrouped(index, queries.flatMap(_._2.terms)) { rows =>
@@ -339,7 +378,7 @@ object Scorer {
         }
         res.result().iterator
       }
-    }(Encoders.product[T])
+    }
   }
 
   /** A shard's rows keyed by (field, term). */
@@ -366,7 +405,7 @@ object Scorer {
   /** Bounded top-k selection under the engine total order (sort key
     * desc, docId asc): a min-heap rooted at the worst kept candidate —
     * the exhaustive kernel's and every WAND walk's shard heaps, and the
-    * batch's per-qid merges (`mergePerQuery`). `raw` carries the
+    * batch's per-qid merges (`PerQueryTopK`). `raw` carries the
     * unrounded score when the sort key is a rounded form of it (f64
     * oracle order). Storage grows with the kept count up to k, so a
     * merge holding one heap per query of a wide batch pays for the
@@ -431,52 +470,48 @@ object Scorer {
 
   // ------------------------------------------------- batched per-qid top-k
 
-  /** A batch candidate frame (qid int, docId long, score float|double)
-    * holds f64 scores, i.e. merges under the rounded oracle order.
+  /** Per-qid top-k of batch candidates under the batch's total order —
+    * key desc, docId asc, where the key is the f32 score itself or, for
+    * `f64`, its round4 (the oracle order) — with scores unchanged. The
+    * order of the shard heaps and of topKPerQuery's window, so merging
+    * shard candidates per task and then across tasks selects exactly
+    * what the window selects.
     */
-  def isF64(candidates: DataFrame): Boolean =
-    candidates.schema("score").dataType == org.apache.spark.sql.types.DoubleType
-
-  /** Per-qid top-k of batch candidate rows (qid, docId, score) under
-    * the batch's total order — key desc, docId asc, where the key is
-    * the f32 score itself or, for `f64`, its round4 (the oracle order)
-    * — emitted best first per qid, qids ascending, scores unchanged.
-    * The order of the shard heaps and of topKPerQuery's window, so
-    * merging shard candidates per task and then across tasks selects
-    * exactly what the window selects.
-    */
-  def mergePerQuery(rows: Iterator[Row], k: Int, f64: Boolean): Iterator[Row] = {
-    val heaps = new java.util.TreeMap[Int, TopKHeap]()
-    rows.foreach { r =>
-      val s = if (f64) r.getDouble(2) else r.getFloat(2).toDouble
-      var h = heaps.get(r.getInt(0))
-      if (h == null) { h = new TopKHeap(k); heaps.put(r.getInt(0), h) }
-      h.offer(if (f64) round4(s) else s, r.getLong(1), s)
+  private[query] final class PerQueryTopK(k: Int, f64: Boolean) {
+    private val heaps = new java.util.TreeMap[Int, TopKHeap]()
+    def offer(qid: Int, docId: Long, raw: Double): Unit = {
+      var h = heaps.get(qid)
+      if (h == null) { h = new TopKHeap(k); heaps.put(qid, h) }
+      h.offer(if (f64) round4(raw) else raw, docId, raw)
     }
-    import scala.jdk.CollectionConverters._
-    heaps.entrySet().iterator().asScala.flatMap { e =>
-      e.getValue.sorted.iterator.map { case (d, s) =>
-        if (f64) Row(e.getKey, d, s) else Row(e.getKey, d, s.toFloat)
-      }
+    def offerAll(c: QCands): Unit = {
+      var i = 0
+      while (i < c.qids.length) { offer(c.qids(i), c.docIds(i), c.scores(i)); i += 1 }
+    }
+    /** The kept candidates, qids ascending, each qid's best first. */
+    def result: QCands = {
+      import scala.jdk.CollectionConverters._
+      val kept = heaps.entrySet().iterator().asScala
+        .flatMap(e => e.getValue.sorted.iterator.map { case (d, s) => (e.getKey.intValue, d, s) })
+        .toArray
+      QCands(kept.map(_._1), kept.map(_._2), kept.map(_._3))
     }
   }
 
-  /** The batch's candidate frame pre-merged per task: a narrow
-    * mapPartitions in the scoring stage that merges the task's shard
-    * heaps per qid, so a task returns at most #queries x k rows.
-    */
-  def preMerged(candidates: DataFrame, k: Int): DataFrame = {
-    val f64 = isF64(candidates)
-    candidates.mapPartitions(it => mergePerQuery(it, k, f64))(Encoders.row(candidates.schema))
+  /** A task's batch candidates merged per qid (at most k each). */
+  def preMerged(it: Iterator[ScoredQDoc], k: Int, f64: Boolean): QCands = {
+    val top = new PerQueryTopK(k, f64)
+    it.foreach(c => top.offer(c.qid, c.docId, c.raw))
+    top.result
   }
 
   /** Per-query global top-k over the batched candidates: the same total
-    * order as topK, partitioned by qid — the lazy alternative to a
-    * driver-side `mergePerQuery` for batches whose candidates are too
-    * many to collect. The window input is bounded by
-    * (#tasks x #queries x k) thanks to the shard and task pre-merges,
-    * and each qid partition holds at most (#tasks x k) rows — no
-    * reducer ever sees a corpus-sized set.
+    * order as topK, partitioned by qid — the lazy alternative to the
+    * driver-side merge for batches whose candidates are too many to
+    * collect. The window input is bounded by (#tasks x #queries x k)
+    * thanks to the shard and task pre-merges, and each qid partition
+    * holds at most (#tasks x k) rows — no reducer ever sees a
+    * corpus-sized set.
     */
   def topKPerQuery(scored: DataFrame, k: Int,
       orderKey: org.apache.spark.sql.Column): DataFrame = {

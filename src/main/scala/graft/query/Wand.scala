@@ -1,5 +1,6 @@
 package graft.query
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, Encoders}
 
 import graft.index.{BuiltIndex, DecodedBlock, PostingRow}
@@ -420,24 +421,29 @@ object Wand {
     * exhaustive scorer under the (score desc, docId asc) total order.
     */
   def topKConj(index: BuiltIndex, cq: CompiledQuery, k: Int,
-      stats: Option[Stats] = None): Dataset[ScoredDocF32] = {
+      stats: Option[Stats] = None): Dataset[ScoredDocF32] =
+    topKConjShards(index, cq, k, stats).fold(
+      index.spark.emptyDataset(Encoders.product[ScoredDocF32]))(
+      index.spark.createDataset(_)(Encoders.product[ScoredDocF32]))
+
+  /** The per-shard heaps of `topKConj`; None when some group matches no
+    * dictionary term anywhere (the intersection is empty, no job runs).
+    */
+  private[query] def topKConjShards(index: BuiltIndex, cq: CompiledQuery, k: Int,
+      stats: Option[Stats]): Option[RDD[ScoredDocF32]] = {
     require(cq.groups.nonEmpty && cq.groups.forall(_.required),
       "conjunction WAND covers all-required multi-group queries")
-    // a group with no dictionary matches anywhere → empty intersection
-    if (cq.groups.exists(g => !cq.terms.exists(_.group == g.id)))
-      return index.spark.emptyDataset(Encoders.product[ScoredDocF32])
-    walkShards(index, cq, k)(wandShardConj(_, _, _, _, stats))
+    if (cq.groups.exists(g => !cq.terms.exists(_.group == g.id))) None
+    else Some(walkShards(index, cq, k)(wandShardConj(_, _, _, _, stats)))
   }
 
   /** One single-query WAND walk per shard. A store's tombstoned docs
-    * were dropped from the postings at load, so the walk never meets
-    * them and every heap fills with live docs only.
+    * were dropped from the postings when its tables were built, so the
+    * walk never meets them and every heap fills with live docs only.
     */
   private def walkShards(index: BuiltIndex, cq: CompiledQuery, k: Int)(
       walk: (Array[PostingRow], Scorer.QueryPlan, Map[String, Array[Float]], Int) =>
-        Iterator[ScoredDocF32]): Dataset[ScoredDocF32] = {
-    val spark = index.spark
-    import spark.implicits._
+        Iterator[ScoredDocF32]): RDD[ScoredDocF32] = {
     val plan = Scorer.mkPlan(0, cq)
     val caches = Scorer.normCachesF32(index, cq.terms)
     val kk = math.min(k, index.config.shardDocs) // a shard holds at most shardDocs hits
@@ -515,9 +521,7 @@ object Wand {
     * per query of lnx's concurrent search load.
     */
   def topKMany(index: BuiltIndex, queries: Seq[(Int, CompiledQuery)], k: Int,
-      stats: Option[Stats] = None): Dataset[ScoredQDocF32] = {
-    val spark = index.spark
-    import spark.implicits._
+      stats: Option[Stats] = None): RDD[ScoredQDoc] = {
     val plans = queries.map { case (qid, cq) =>
       BatchPlan(batchRoute(cq, index.numDocs), Scorer.mkPlan(qid, cq))
     }.toArray
@@ -525,12 +529,12 @@ object Wand {
     val caches = Scorer.normCachesF32(index, allTerms)
     val shardDocs = index.config.shardDocs
     val kk = k
-    Scorer.shardGrouped(index, allTerms)(batchShard(_, plans, caches, shardDocs, kk, stats))
+    Scorer.shardGrouped[ScoredQDoc](index, allTerms)(batchShard(_, plans, caches, shardDocs, kk, stats))
   }
 
   private def batchShard(rows: Array[PostingRow], plans: Array[BatchPlan],
       caches: Map[String, Array[Float]], shardDocs: Int, k: Int,
-      stats: Option[Stats]): Iterator[ScoredQDocF32] = {
+      stats: Option[Stats]): Iterator[ScoredQDoc] = {
     if (rows.isEmpty || k <= 0) return Iterator.empty
     val cache = new BlockCache(stats)
     rows.foreach(cache.register)
@@ -539,7 +543,7 @@ object Wand {
     val shardK = math.min(k, shardDocs)
     // one accumulator shared by every exhaustive-route query of the shard
     lazy val acc = new Scorer.AccF32(shardDocs, caches)
-    val out = Seq.newBuilder[ScoredQDocF32]
+    val out = Seq.newBuilder[ScoredQDoc]
     plans.foreach { q =>
       val qid = q.plan.qid
       val qRows = q.plan.order.flatMap(rowsOfKey.getOrElse(_, Array.empty[PostingRow]))
@@ -564,7 +568,12 @@ object Wand {
     * scorer under the (score desc, docId asc) total order.
     */
   def topK(index: BuiltIndex, cq: CompiledQuery, k: Int,
-      stats: Option[Stats] = None): Dataset[ScoredDocF32] = {
+      stats: Option[Stats] = None): Dataset[ScoredDocF32] =
+    index.spark.createDataset(topKShards(index, cq, k, stats))(Encoders.product[ScoredDocF32])
+
+  /** The per-shard heaps of `topK`. */
+  private[query] def topKShards(index: BuiltIndex, cq: CompiledQuery, k: Int,
+      stats: Option[Stats]): RDD[ScoredDocF32] = {
     require(cq.groups.size == 1 && !cq.groups.head.constScore,
       "WAND path covers single-group sum-scored queries; use Scorer for the rest")
     walkShards(index, cq, k)(wandShard(_, _, _, _, stats))

@@ -283,9 +283,11 @@ final class LnxSession(val spark: SparkSession) {
   }
 
   /** EXPLAIN surface: the compiled search clauses plus Spark's formatted
-    * physical plan, one line per row (query.rs:36-43). A statement on
-    * the fetch path (cappedFetch) is not run: its lines are the
-    * scoring frame's plan and one line naming the stored-field fetch.
+    * physical plan, one line per row (query.rs:36-43). Nothing runs: a
+    * capped search is shown as the lazy frame over its shard candidates
+    * (QueryEngine.searchF32Planned), which the statement itself scores
+    * in one job, and a statement on the fetch path (cappedFetch) adds
+    * one line naming the stored-field fetch.
     */
   private def runExplain(st: Statement, params: Seq[Lit]): DataFrame = {
     import spark.implicits._
@@ -298,11 +300,11 @@ final class LnxSession(val spark: SparkSession) {
             sp.cmp.map { case (op, v) => s" $op $v" }.getOrElse(""))
         val plan = cappedFetch(s, params) match {
           case Some(f) =>
-            formatted(f.e.searchF32(f.clauses, f.limit)) :+
+            formatted(f.e.searchF32Planned(f.clauses, f.limit)) :+
               s"stored-field fetch: docId${f.docCols.map(", " + _).mkString} of the top ${f.limit}" +
               s" from only the docs partitions holding a hit" +
               s" (range table: ${f.e.index.docRanges.get.length - 1} partitions)"
-          case None => formatted(runSelect(s, params))
+          case None => formatted(runSelect(s, params, planOnly = true))
         }
         (clauses ++ plan).toDF("plan")
       case other =>
@@ -880,7 +882,9 @@ final class LnxSession(val spark: SparkSession) {
     s.limit.map(ordered.limit).getOrElse(ordered)
   }
 
-  private def runSelect(s: Select, params: Seq[Lit]): DataFrame = {
+  /** @param planOnly EXPLAIN: a capped search stays a lazy frame
+    *   (searchF32Planned), so formatting the plan runs no job */
+  private def runSelect(s: Select, params: Seq[Lit], planOnly: Boolean = false): DataFrame = {
     val t = table(s.table)
     // score() without a search clause has no score to threshold —
     // partitionPreds fails loudly for SELECT and mutations alike
@@ -918,7 +922,7 @@ final class LnxSession(val spark: SparkSession) {
             // instead of scoring every matching posting. Thresholded
             // queries stay on the exhaustive path: filters must apply
             // to the full match set before any k-cap.
-            e.searchF32(clauses, limit)
+            if (planOnly) e.searchF32Planned(clauses, limit) else e.searchF32(clauses, limit)
           } else {
             val m = thresholdedMatches(e, searches, scorePreds, params)
             if (capped) Scorer.topK(m, limit) else m

@@ -45,8 +45,11 @@ class IndexStoreSpec extends AnyFunSuite {
   test("term lookups on the persisted postings push filters to parquet") {
     val dir = tmpDir()
     val corpus = CodeCorpus.generate(spark, 500, 4)
-    val idx = IndexStore.create(corpus, config, dir)
-    val plan = idx.postings.filter(col("term") === "license").queryExecution.executedPlan.toString
+    IndexStore.create(corpus, config, dir).unpersist()
+    // the segment's postings parquet, as a term lookup reads it (queries
+    // probe the loaded shard tables instead)
+    val plan = spark.read.parquet(s"$dir/seg-00000/postings.parquet")
+      .filter(col("term") === "license").queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") && plan.contains("license"), plan.take(2000))
   }
 
@@ -162,9 +165,9 @@ class IndexStoreSpec extends AnyFunSuite {
     // prior cached load of the same dir would make the cold frame
     // report as cached too (same-session test artifact)
     val cold = IndexStore.load(spark, dir, cacheDocs = false)
-    // the doc store must NOT be pinned in scale mode (postings are)
+    // the doc store must NOT be pinned in scale mode (the shard tables
+    // are, once the first read builds them)
     assert(cold.docs.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
-    assert(cold.postings.storageLevel !== org.apache.spark.storage.StorageLevel.NONE)
     val eu = new QueryEngine(cold)
     // top-k stored-field lookup pushes the id set into the parquet scan.
     // Asserted BEFORE any cached load of the same dir: the CacheManager
@@ -172,6 +175,7 @@ class IndexStoreSpec extends AnyFunSuite {
     // would rewrite this plan into an InMemoryTableScan.
     val ids = eu.searchF32(Seq(Fts("content", "binary search")), 5)
       .collect().map(_.getLong(0)).toSeq
+    assert(cold.shards.rdd.getStorageLevel !== org.apache.spark.storage.StorageLevel.NONE)
     val lookup = eu.lookupDocs(ids, Seq("path"))
     assert(lookup.count() === ids.size)
     val plan = lookup.queryExecution.executedPlan.toString
