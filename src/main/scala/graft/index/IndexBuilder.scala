@@ -1,8 +1,10 @@
 package graft.index
 
-import org.apache.spark.TaskContext
+import org.apache.spark.{NarrowDependency, Partition, TaskContext}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
@@ -80,23 +82,6 @@ final case class FieldStats(field: String, totalTokens: Long)
 /** One posting row's document count, the term dictionary's input. */
 final case class TermDf(field: String, term: String, df: Long)
 
-/** A partial posting list covering one input partition's slice of one
-  * (field, term, shard): already delta+bitpack encoded at the map side.
-  * Because docIds are assigned contiguously per range partition, the
-  * partials of a shard have disjoint, ordered docId ranges — the merge
-  * is a concatenation, never an interleave (firstDoc orders them).
-  */
-final case class PartialRow(
-    field: String,
-    term: String,
-    shard: Int,
-    firstDoc: Long,
-    numDocs: Int,
-    sumTf: Long,
-    bytes: Array[Byte],
-    blockOffset: Array[Int],
-    blockLast: Array[Long])
-
 /** An immutable index segment: the Spark-native analogue of a tantivy
   * segment (posting lists + term dictionary + fieldnorms + doc store,
   * SURVEY.md section 1.3/1.4). `persist()` pins the frames for repeated
@@ -104,9 +89,12 @@ final case class PartialRow(
   * bucket.rs:24-25).
   *
   * `shards` is the one postings cache: a term-keyed `ShardTable` per
-  * partition, co-partitioned by docId shard (`IndexBuilder.shardTables`),
-  * so every search probes it in place with no exchange and no query
-  * planning, and never sees a delete set. `postings` and an in-memory
+  * partition, co-partitioned by docId shard, so every search probes it
+  * in place with no exchange and no query planning, and never sees a
+  * delete set. An in-memory build's table p is built from docs
+  * partition p and holds exactly its shards (`IndexBuilder.build`); a
+  * loaded store's tables come from one shard repartition
+  * (`IndexBuilder.shardTables`). `postings` and an in-memory
   * build's `termStats` and `fieldTokens` are read off it, not cached
   * beside it. A store applies its tombstones to the postings (and
   * `docs`) once, when the tables are built; `termStats`, `numDocs` and
@@ -124,11 +112,14 @@ final class BuiltIndex(
       * the segment was written in fast-fuzzy mode. */
     val symspell: Option[DataFrame] = None,
     /** docId range of every `docs` partition: partition p holds exactly
-      * the ids in [r(p), r(p+1)) (`IndexBuilder.assignDocIdsCounted`'s
-      * offsets). Set by in-memory builds, whose docs frame keeps the
-      * assignment's partitioning; None for loaded stores, whose docs
-      * stream from the segment parquet. `QueryEngine.lookupDocs` reads
-      * it to fetch ids from only the partitions that hold them. */
+      * the ids in [r(p), r(p+1)), ascending (`IndexBuilder.assignDocIdsCounted`'s
+      * cuts; interior bounds are multiples of shardDocs, and shard
+      * table p holds exactly the shards of that range). Set by
+      * in-memory builds, whose docs frame keeps the assignment's
+      * partitioning; None for loaded stores, whose docs stream from the
+      * segment parquet. `QueryEngine.searchWithDocs` reads it to score
+      * and fetch a partition's hits in one task, `lookupDocs` to fetch
+      * ids from only the partitions that hold them. */
     val docRanges: Option[Array[Long]] = None) {
 
   def spark: SparkSession = docs.sparkSession
@@ -190,6 +181,12 @@ object IndexBuilder {
     * no extra count() job over the corpus (the row count is
     * r.last - r.head).
     *
+    * The output partitions are cut on the `shardDocs` grid
+    * (`shardCuts`): each holds whole grid shards (shard = docId /
+    * shardDocs), so a build can tokenize a partition and own every
+    * posting row of its shards. `shardDocs = 1` cuts anywhere, into
+    * min(parts, rows) balanced ranges.
+    *
     * The sorted intermediate is NOT cached: `toRdd` freezes ONE physical
     * plan (and thus one partitioning — two separate Dataset jobs could
     * be re-planned differently by AQE, desynchronizing the count and
@@ -199,11 +196,15 @@ object IndexBuilder {
     * of the second pass is the in-partition sort — pure parallel CPU —
     * where caching would add a corpus-sized cache write + read, which
     * is what bounds the build at high thread counts (memory bandwidth,
-    * not cores). This is the one sanctioned RDD drop: genuinely
-    * per-partition imperative id assignment.
+    * not cores). The id pass is a narrow re-cut (`ShardCutRDD`): an
+    * output partition reads the sorted partitions overlapping its id
+    * range, so a partition straddling a cut is sorted once per side —
+    * CPU again, never a shuffle. This is the one sanctioned RDD drop:
+    * genuinely per-partition imperative id assignment.
     */
   def assignDocIdsCounted(df: DataFrame, keyCols: Seq[String], parts: Int,
-      base: Long = 0L, strategy: String = DocIdStrategy.KeyRange): (DataFrame, Array[Long]) = {
+      base: Long = 0L, strategy: String = DocIdStrategy.KeyRange,
+      shardDocs: Int = 1): (DataFrame, Array[Long]) = {
     // fail loud on typos ("Scan", "key-range"): a silent fallback to
     // keyRange would measure/build the wrong strategy with no error
     require(strategy == DocIdStrategy.KeyRange || strategy == DocIdStrategy.Scan,
@@ -231,38 +232,40 @@ object IndexBuilder {
     val offsets = new Array[Long](nParts + 1)
     offsets(0) = base
     for (p <- 0 until nParts) offsets(p + 1) = offsets(p) + counts.getOrElse(p, 0L)
+    val cuts = shardCuts(base, offsets.last - base, shardDocs, parts)
     val outSchema = StructType(df.schema.fields :+ StructField("docId", LongType, nullable = false))
-    val withIdsRdd = sortedRdd.mapPartitionsWithIndex { (pid, it) =>
-      import org.apache.spark.sql.catalyst.InternalRow
-      import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
-      val proj = UnsafeProjection.create(outSchema)
-      val idRow = new GenericInternalRow(1)
-      val joined = new JoinedRow
-      var next = offsets(pid)
-      it.map { r =>
-        idRow.update(0, next); next += 1
-        // copy: the projection reuses its output buffer, and downstream
-        // consumers (cache builder, shuffle) may hold references
-        proj(joined(r, idRow)).copy(): InternalRow
-      }
-    }
-    val withIds = org.apache.spark.sql.GraftExpressionBridge
-      .internalCreateDataFrame(df.sparkSession, withIdsRdd, outSchema)
-    (withIds, offsets)
+    val withIds = org.apache.spark.sql.GraftExpressionBridge.internalCreateDataFrame(
+      df.sparkSession, new ShardCutRDD(sortedRdd, offsets, cuts, outSchema), outSchema)
+    (withIds, cuts)
   }
 
-  /** In-memory posting accumulator per map partition — the Spark-native
-    * analogue of tantivy's indexing-time term hashmap (tantivy-stacker,
-    * Cargo.lock:2890). Docs arrive in docId order (range partition +
-    * in-partition sort), so per-term buffers are born sorted; buffers
-    * flush at every shard boundary, bounding memory to one shard's
-    * activity. Output rows carry already-encoded posting bytes, so the
-    * one shuffle moves ~2-4 bytes per (term, doc) occurrence instead of
-    * a ~70-byte row — the difference between a DRAM/shuffle-bound build
-    * and a CPU-bound one (measured 4x task-CPU inflation at high
-    * parallelism with the naive hit shuffle).
+  /** The docId cut points of `n` docs from `base`: the grid shards
+    * (docId / shardDocs) the ids touch, in max(1, min(parts, #shards))
+    * contiguous runs of near-equal shard count. Interior cuts are
+    * multiples of shardDocs; the ends are base and base + n.
     */
-  private def partialPostings(docs: DataFrame, config: IndexConfig): Dataset[PartialRow] = {
+  private[index] def shardCuts(base: Long, n: Long, shardDocs: Int, parts: Int): Array[Long] = {
+    val first = base / shardDocs
+    val shards = if (n == 0) 0L else (base + n - 1) / shardDocs - first + 1
+    val runs = math.max(1L, math.min(parts.toLong, shards)).toInt
+    Array.tabulate(runs + 1) { j =>
+      if (j == 0) base
+      else if (j == runs) base + n
+      else (first + j * shards / runs) * shardDocs
+    }
+  }
+
+  /** In-memory posting accumulator per docs partition — the
+    * Spark-native analogue of tantivy's indexing-time term hashmap
+    * (tantivy-stacker, Cargo.lock:2890) — built into that partition's
+    * ShardTable in the same task. Docs arrive in docId order and the
+    * partition holds whole grid shards (assignDocIdsCounted cuts on the
+    * grid), so per-term buffers are born sorted and complete: buffers
+    * flush at every shard boundary into FINAL posting rows (one per
+    * (field, term, shard), `encodeRow`), bounding accumulator memory to
+    * one shard's activity, with no exchange and no merge.
+    */
+  private def postingTables(docs: DataFrame, config: IndexConfig): RDD[ShardTable] = {
     val fields = config.fields
     // per-field tokenizer names resolved here (plain strings: the task
     // closure captures names, not the registry objects)
@@ -272,13 +275,11 @@ object IndexBuilder {
     val projected = docs.select(cols: _*)
     // InternalRow scan: the tokenize+encode pass reads (docId, texts)
     // straight off the columnar cache without per-doc external-Row
-    // materialization; only the few output PartialRows pay an encoder
-    val rdd = projected.queryExecution.toRdd.mapPartitions { rows =>
+    // materialization
+    projected.queryExecution.toRdd.mapPartitions(rows => Iterator.single(ShardTable.of(
       // streaming iterator, NOT a partition-wide buffer: each shard's
-      // flushed PartialRows are emitted (and consumed by the shuffle
-      // writer) before the next shard accumulates, so task memory holds
-      // one shard's activity — not the whole partition's encoded output
-      new Iterator[PartialRow] {
+      // flushed rows reach the table before the next shard accumulates
+      new Iterator[PostingRow] {
         // primitive growable buffers + ONE term map per field: the loop
         // body runs once per (term, doc) occurrence across the whole
         // corpus, where an ArrayBuffer[Long] append (boxed Long) and a
@@ -302,7 +303,7 @@ object IndexBuilder {
         }
         private val accByField: Array[java.util.HashMap[String, Buf]] =
           Array.fill(fields.length)(new java.util.HashMap[String, Buf]())
-        private val pending = new java.util.ArrayDeque[PartialRow]()
+        private val pending = new java.util.ArrayDeque[PostingRow]()
         private var curShard = -1
         private var done = false
         private def flush(): Unit = {
@@ -314,16 +315,8 @@ object IndexBuilder {
               val it = acc.entrySet().iterator()
               while (it.hasNext) {
                 val e = it.next()
-                val term = e.getKey
                 val b = e.getValue
-                val docIds = b.docIdArr
-                val tfArr = b.tfArr
-                var sumTf = 0L
-                var i = 0
-                while (i < tfArr.length) { sumTf += tfArr(i); i += 1 }
-                val enc = PostingCodec.encode(docIds, tfArr, b.normArr)
-                pending.addLast(PartialRow(field, term, curShard, docIds(0), docIds.length,
-                  sumTf, enc.bytes, enc.blockOffset, enc.blockLast))
+                pending.addLast(encodeRow(field, e.getKey, curShard, b.docIdArr, b.tfArr, b.normArr))
               }
               acc.clear()
             }
@@ -359,30 +352,8 @@ object IndexBuilder {
           }
         }
         override def hasNext: Boolean = { advance(); !pending.isEmpty }
-        override def next(): PartialRow = { advance(); pending.removeFirst() }
-      }
-    }
-    docs.sparkSession.createDataset(rdd)(Encoders.product[PartialRow])
-  }
-
-  /** Merge the (few, docId-range-disjoint) partials of one
-    * (field, term, shard) into the final PostingRow.
-    */
-  private def mergePartials(key: (String, String, Int), parts: Iterator[PartialRow]): PostingRow = {
-    val sorted = parts.toArray.sortBy(_.firstDoc)
-    val n = sorted.map(_.numDocs).sum
-    val docIds = new Array[Long](n)
-    val tfs = new Array[Int](n)
-    val norms = new Array[Int](n)
-    var off = 0
-    sorted.foreach { p =>
-      val dec = PostingCodec.decodeAll(p.bytes, p.blockOffset, p.blockLast)
-      System.arraycopy(dec.docIds, 0, docIds, off, p.numDocs)
-      System.arraycopy(dec.tfs, 0, tfs, off, p.numDocs)
-      System.arraycopy(dec.norms, 0, norms, off, p.numDocs)
-      off += p.numDocs
-    }
-    encodeRow(key._1, key._2, key._3, docIds, tfs, norms)
+        override def next(): PostingRow = { advance(); pending.removeFirst() }
+      })), preservesPartitioning = true)
   }
 
   /** The PostingRow of one (field, term, shard) from its docId-sorted postings. */
@@ -395,19 +366,19 @@ object IndexBuilder {
       enc.bytes, enc.blockOffset, enc.blockLast, enc.blockMaxTf, enc.blockMinNorm)
   }
 
-  /** The one physical layout of every index's postings cache:
-    * co-partitioned by docId shard, so every posting row of a shard sits
-    * in one partition, and each partition is ONE term-keyed
-    * `ShardTable` the scorers probe in place (Scorer.shardGrouped) —
-    * the §2.4 bucketing trade: pay one shard-keyed shuffle when the
-    * index is built or loaded, not one per query.
+  /** A loaded store's postings cache: co-partitioned by docId shard,
+    * so every posting row of a shard sits in one partition, and each
+    * partition is ONE term-keyed `ShardTable` the scorers probe in
+    * place (Scorer.shardGrouped) — the §2.4 bucketing trade: pay one
+    * shard-keyed shuffle when the store is loaded, not one per query.
+    * (An in-memory build needs no shuffle: its docs partitions hold
+    * whole shards and each builds its own table, `postingTables`.)
     *
     * Partition count = min(buildPartitions, shards in a docId span of
-    * `span`), known driver-side — a build's doc count, a store's max
-    * docIdEnd: a 7-shard corpus in 32+ partitions would leave every
-    * query launching mostly-empty tasks. Freezing the RDD plans the
-    * shuffle once; the tables themselves build when it is persisted
-    * and first computed.
+    * `span`, the store's max docIdEnd), known driver-side: a 7-shard
+    * corpus in 32+ partitions would leave every query launching
+    * mostly-empty tasks. Freezing the RDD plans the shuffle once; the
+    * tables themselves build when it is persisted and first computed.
     */
   private[index] def shardTables(postings: Dataset[PostingRow], config: IndexConfig,
       span: Long): RDD[ShardTable] =
@@ -419,19 +390,19 @@ object IndexBuilder {
       .rdd
       .mapPartitions(rows => Iterator.single(ShardTable.of(rows)), preservesPartitioning = true)
 
-  /** Full build: docs -> map-side encoded partials -> one compact
-    * shuffle on (field, term, shard) -> concat-merge -> postings +
-    * term dictionary + stats.
+  /** Full build: docs cut on the shard grid -> per docs partition,
+    * tokenize + encode its shards' posting rows into its ShardTable (no
+    * exchange) -> term dictionary + stats off the tables.
     */
   def build(df: DataFrame, config: IndexConfig, docIdBase: Long = 0L): BuiltIndex =
-    // eager persist-heavy span (see EagerPlanConfs): the postings
-    // merge + caches compile statically under the persist, where AQE
-    // only adds per-stage jobs and plan-description events
+    // eager persist-heavy span (see EagerPlanConfs): the caches compile
+    // statically under the persist, where AQE only adds per-stage jobs
+    // and plan-description events
     graft.EagerPlanConfs.scoped(df.sparkSession)(buildBody(df, config, docIdBase))
 
   private def buildBody(df: DataFrame, config: IndexConfig, docIdBase: Long): BuiltIndex = {
     val spark = df.sparkSession
-    // fail loud HERE, naming the column: partialPostings reads fields
+    // fail loud HERE, naming the column: postingTables reads fields
     // via getUTF8String, which on a non-string column misreads the
     // value's bytes as an offset word — garbage tokens or an
     // out-of-bounds crash deep inside a task, far from the cause
@@ -445,23 +416,17 @@ object IndexBuilder {
     }
     val (withIds, docRanges) =
       assignDocIdsCounted(df, config.keyCols, config.buildPartitions, docIdBase,
-        config.docIdStrategy)
+        config.docIdStrategy, config.shardDocs)
     val numDocs = docRanges.last - docIdBase
     // numDocs is already known from the assignment counts — no extra
     // corpus pass; the docs cache materializes as a side effect of the
     // postings pass scanning it (one build = two passes total: the
     // count pass over the shared shuffle output, then postings+cache)
     val docs = withIds.persist(StorageLevel.MEMORY_AND_DISK)
-    // one merge shuffle keyed on the partials' own (field, term, shard)
-    // columns (no appended key copy), so merge parallelism never
-    // collapses to the shard count (7 shards at sf0.1); then the
-    // persisted layout every scorer reads
-    val merged = partialPostings(docs, config)
-      .groupBy(col("field"), col("term"), col("shard"))
-      .as(Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.scalaInt),
-        Encoders.product[PartialRow])
-      .mapGroups { (key, parts) => mergePartials(key, parts) }(Encoders.product[PostingRow])
-    val shards = new ShardTables(shardTables(merged, config, numDocs))
+    // table p is built from docs partition p: co-partitioned with the
+    // docs by construction, so a capped search scores and fetches its
+    // hits in one task per partition (QueryEngine.searchWithDocs)
+    val shards = new ShardTables(postingTables(docs, config))
     // ONE materialization: the shard tables build and persist in the
     // job that sums the exact per-field token totals (tantivy:
     // total_num_tokens) from the rows' sumTf; the term dictionary is
@@ -475,8 +440,65 @@ object IndexBuilder {
       .groupBy(col("field"), col("term"))
       .agg(sum(col("df")).as("df"))
     // docs keeps withIds' partitioning (a cache of it), so the
-    // assignment's offsets are its per-partition docId ranges
+    // assignment's shard-aligned cuts are its per-partition docId ranges
     new BuiltIndex(docs, shards, termStats, numDocs, fieldTokens, config,
       docRanges = Some(docRanges)).persist()
+  }
+}
+
+/** The id pass of `IndexBuilder.assignDocIdsCounted`: output partition j
+  * holds the docIds [cuts(j), cuts(j+1)), ascending, with the docId
+  * appended to each row. Parent partition p holds the rows that take
+  * the ids [offsets(p), offsets(p+1)) in iteration order, so partition j
+  * reads exactly the parents overlapping its range (a narrow
+  * dependency) and keeps each one's overlapping slice.
+  */
+private[index] final class ShardCutRDD(
+    parent: RDD[InternalRow],
+    offsets: Array[Long],
+    cuts: Array[Long],
+    outSchema: StructType)
+    extends RDD[InternalRow](parent.context, Seq(new ShardCutRDD.Dep(parent, offsets, cuts))) {
+
+  override protected def getPartitions: Array[Partition] =
+    Array.tabulate[Partition](cuts.length - 1) { j =>
+      ShardCutRDD.Slice(j, ShardCutRDD.parentsOf(offsets, cuts(j), cuts(j + 1))
+        .map(p => (parent.partitions(p), offsets(p), offsets(p + 1))))
+    }
+
+  override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] = {
+    val (lo, hi) = (cuts(split.index), cuts(split.index + 1))
+    val proj = UnsafeProjection.create(outSchema)
+    val idRow = new GenericInternalRow(1)
+    val joined = new JoinedRow
+    split.asInstanceOf[ShardCutRDD.Slice].parents.iterator.flatMap { case (part, from, until) =>
+      var next = math.max(lo, from)
+      parent.iterator(part, context)
+        .drop((next - from).toInt)
+        .take((math.min(hi, until) - next).toInt)
+        .map { r =>
+          idRow.update(0, next); next += 1
+          // copy: the projection reuses its output buffer, and downstream
+          // consumers (the cache builder) hold references
+          proj(joined(r, idRow)).copy(): InternalRow
+        }
+    }
+  }
+}
+
+private[index] object ShardCutRDD {
+  /** Output partition `index` and the parent partitions it reads, each
+    * with the id range [from, until) its rows take. */
+  final case class Slice(index: Int, parents: Seq[(Partition, Long, Long)]) extends Partition
+
+  /** The parent partitions holding ids in [lo, hi) (empty ones skipped). */
+  def parentsOf(offsets: Array[Long], lo: Long, hi: Long): Seq[Int] =
+    (0 until offsets.length - 1).filter(p => offsets(p) < offsets(p + 1) &&
+      offsets(p) < hi && offsets(p + 1) > lo)
+
+  final class Dep(parent: RDD[InternalRow], offsets: Array[Long], cuts: Array[Long])
+      extends NarrowDependency[InternalRow](parent) {
+    override def getParents(partitionId: Int): Seq[Int] =
+      parentsOf(offsets, cuts(partitionId), cuts(partitionId + 1))
   }
 }

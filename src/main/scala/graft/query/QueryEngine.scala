@@ -423,10 +423,11 @@ final class QueryEngine(val index: BuiltIndex) {
   /** Observability: compile calls served from the LRU. */
   @volatile var compileCacheHits: Long = 0L
 
-  /** Memo of lookupDocs' docs projection (keyed by its column list):
-    * a range-pruned fetch runs its job over the projection's physical
-    * plan, planned once per column list instead of per call. Searches
-    * plan nothing to memoize: they run over the shard tables directly.
+  /** Memo of the docs projection lookupDocs and searchWithDocs read
+    * (keyed by its column list): a fetch runs its job over the
+    * projection's physical plan, planned once per column list instead
+    * of per call. Scoring plans nothing to memoize: it runs over the
+    * shard tables directly.
     */
   private val planCache =
     new java.util.LinkedHashMap[AnyRef, DataFrame](16, 0.75f, true) {
@@ -816,8 +817,10 @@ final class QueryEngine(val index: BuiltIndex) {
     * arrays, the driver merges those per qid (`Scorer.PerQueryTopK`),
     * and the result is a local frame, qids ascending, each qid's best
     * first. The gate needs no job: each task returns at most k rows per
-    * query, a pass runs at most buildPartitions tasks
-    * (IndexBuilder.shardTables), the sparse and dense passes split the
+    * query, a pass runs one task per shard table and there are at most
+    * buildPartitions tables (an in-memory build's docs partitions,
+    * IndexBuilder.build; a store's shard repartition,
+    * IndexBuilder.shardTables), the sparse and dense passes split the
     * queries, and no query keeps more rows than the index has docs.
     * Above it — wide batches at large k — the same pre-merged
     * candidates become a lazy frame under a per-qid window (one hash
@@ -878,9 +881,10 @@ final class QueryEngine(val index: BuiltIndex) {
     * With `BuiltIndex.docRanges` (in-memory builds) the fetch is ONE
     * job over only the docs partitions whose range holds a requested
     * id, reading a (docId +: docCols) projection whose physical plan is
-    * memoized in `planCache` (planned once per column list); matched
-    * rows are converted on the executors and the result is a local
-    * frame, in no particular order. No requested id, no job. Without
+    * memoized in `planCache` (planned once per column list); each task
+    * stops past its partition's largest requested id, matched rows are
+    * converted on the executors and the result is a local frame, in no
+    * particular order. No requested id, no job. Without
     * ranges (IndexStore.load: docs NOT cached) it is a lazy pushed-down
     * IN filter: the docs parquet is docId-sorted and range-partitioned,
     * so the scan prunes to the row groups holding the ids.
@@ -899,36 +903,70 @@ final class QueryEngine(val index: BuiltIndex) {
   /** lookupDocs' range-pruned fetch, as the projection's schema and the
     * matched rows. */
   private def fetchRanged(ids: Seq[Long], docCols: Seq[String]): (StructType, Array[Row]) = {
-    val projected = cachedPlan(DocFetch.Projection(docCols))(
-      index.docs.select((col("docId") +: docCols.map(col)): _*))
+    val projected = docsProjection(docCols)
     val schema = projected.schema
     val want = DocFetch.byPartition(index.docRanges.get, ids)
     if (want.isEmpty) return (schema, Array.empty)
     val toRow = CatalystTypeConverters.createToScalaConverter(schema)
     val parts = index.spark.sparkContext.runJob(projected.queryExecution.toRdd,
-      (ctx: TaskContext, it: Iterator[InternalRow]) => {
-        val ids = want(ctx.partitionId())
-        it.filter(r => java.util.Arrays.binarySearch(ids, r.getLong(0)) >= 0)
-          .map(r => toRow(r).asInstanceOf[Row]).toArray
-      },
+      (ctx: TaskContext, it: Iterator[InternalRow]) => DocFetch.rows(it, want(ctx.partitionId()), toRow),
       want.keys.toSeq.sorted)
     (schema, parts.flatten)
   }
 
+  /** The (docId +: docCols) projection of the docs, planned once per
+    * column list (`planCache`). */
+  private def docsProjection(docCols: Seq[String]): DataFrame =
+    cachedPlan(DocFetch.Projection(docCols))(
+      index.docs.select((col("docId") +: docCols.map(col)): _*))
+
+  /** Does a capped search of k hits score and fetch in one job
+    * (searchWithDocs)? Only while every docs partition's local top-k
+    * together stays a top-k page: partitions x k <= MaxLookupIds. */
+  private[graft] def fetchesInScoringJob(k: Int): Boolean =
+    index.docRanges.exists(r => (r.length - 1).toLong * k <= MaxLookupIds)
+
   /** Top-k (score desc, docId asc, the searchF32 order) with stored
     * fields, as a local frame (docId +: docCols :+ score float) in that
-    * order: the capped SQL statement's two jobs, searchF32's scoring
-    * job and lookupDocs' range-pruned fetch (none when nothing
-    * matches). Needs `BuiltIndex.docRanges` and k <= MaxLookupIds. A
-    * hit whose stored fields the fetch did not return fails loudly,
-    * naming its docId: never a silently shorter page.
+    * order. Needs `BuiltIndex.docRanges` and k <= MaxLookupIds.
+    *
+    * Under the `fetchesInScoringJob` gate it is ONE job: shard table p
+    * and docs partition p cover the same docId range, so task p takes
+    * its partition's top-k and reads those ids' stored fields from its
+    * own docs partition (docId-ascending, so the scan stops past the
+    * largest wanted id); the driver merges the local top-ks — exact,
+    * since the global top-k is a subset of their union. Above the gate,
+    * two jobs: searchF32's top-k, then lookupDocs' range-pruned fetch.
+    * No job when nothing can match. A hit whose stored fields were not
+    * returned fails loudly, naming its docId: never a silently shorter
+    * page.
     */
   private[graft] def searchWithDocs(clauses: Seq[SearchClause], k: Int,
       docCols: Seq[String]): DataFrame = {
     require(index.docRanges.nonEmpty && k <= MaxLookupIds,
       "searchWithDocs needs docId ranges and k <= MaxLookupIds")
-    val (ids, scores) = topHits(clauses, k)
-    val (schema, rows) = fetchRanged(ids.toSeq, docCols)
+    val projected = docsProjection(docCols)
+    val schema = projected.schema
+    val ((ids, scores), rows) =
+      if (!fetchesInScoringJob(k)) {
+        val hits = topHits(clauses, k)
+        (hits, fetchRanged(hits._1.toSeq, docCols)._2)
+      } else shardCandidates(clauses, k, useWand = true, wandStats = None) match {
+        case None => ((Array.empty[Long], Array.empty[Float]), Array.empty[Row])
+        case Some(cands) =>
+          val docsRdd = projected.queryExecution.toRdd
+          require(cands.getNumPartitions == docsRdd.getNumPartitions,
+            s"shard tables (${cands.getNumPartitions} partitions) are not co-partitioned " +
+              s"with the docs (${docsRdd.getNumPartitions})")
+          val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+          val parts = index.spark.sparkContext.runJob(
+            cands.zipPartitions(docsRdd) { (cs, docs) =>
+              val top = Scorer.localTopK(cs, k)
+              Iterator.single((top, DocFetch.rows(docs, top.docIds.sorted, toRow)))
+            },
+            (it: Iterator[(QCands, Array[Row])]) => it.next())
+          (Scorer.mergeTopK(parts.map(_._1), k), parts.flatMap(_._2))
+      }
     val byId = rows.iterator.map(r => r.getLong(0) -> r).toMap
     val out = ids.indices.map { i =>
       val d = byId.getOrElse(ids(i), throw new IllegalStateException(
@@ -974,14 +1012,33 @@ final class QueryEngine(val index: BuiltIndex) {
     StructType(StructField("qid", IntegerType, nullable = false) +: scoredSchema(f64).fields)
 }
 
-/** lookupDocs' partition pruning over `BuiltIndex.docRanges`. */
+/** The docs-partition reads of lookupDocs and searchWithDocs over
+  * `BuiltIndex.docRanges`. */
 private[query] object DocFetch {
-  /** Plan-LRU key of lookupDocs' docs projection. */
+  /** Plan-LRU key of the docs projection the fetches read. */
   final case class Projection(cols: Seq[String])
 
   /** The requested ids (distinct, sorted) of every docs partition whose
     * range [r(p), r(p+1)) holds at least one; ids outside every range
     * map to no partition. */
+  /** The stored rows of the wanted `ids` (distinct, ascending) in one
+    * docs partition, whose rows are docId-ascending: the scan stops at
+    * the first row at or past the largest wanted id. */
+  def rows(part: Iterator[InternalRow], ids: Array[Long], toRow: Any => Any): Array[Row] = {
+    val out = Array.newBuilder[Row]
+    if (ids.nonEmpty) {
+      val last = ids(ids.length - 1)
+      var more = part.hasNext
+      while (more) {
+        val r = part.next()
+        val id = r.getLong(0)
+        if (java.util.Arrays.binarySearch(ids, id) >= 0) out += toRow(r).asInstanceOf[Row]
+        more = id < last && part.hasNext
+      }
+    }
+    out.result()
+  }
+
   def byPartition(r: Array[Long], ids: Seq[Long]): Map[Int, Array[Long]] =
     ids.distinct.flatMap { id =>
       // the first bound above id closes the range holding it; empty

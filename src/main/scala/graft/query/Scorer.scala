@@ -182,11 +182,17 @@ object Scorer {
     * with a single qid — each task merges its shards' heaps and returns
     * them as primitive arrays, and the driver merges those.
     */
-  def collectTopK(cands: RDD[ScoredDocF32], k: Int): (Array[Long], Array[Float]) = {
+  def collectTopK(cands: RDD[ScoredDocF32], k: Int): (Array[Long], Array[Float]) =
+    mergeTopK(cands.sparkContext.runJob(cands, (it: Iterator[ScoredDocF32]) => localTopK(it, k)), k)
+
+  /** A task's f32 candidates merged into its top-k (one qid, 0). */
+  def localTopK(it: Iterator[ScoredDocF32], k: Int): QCands =
+    preMerged(it.map(c => ScoredQDocF32(0, c.docId, c.score)), k, f64 = false)
+
+  /** The global top-k of the tasks' `localTopK`s, best first. */
+  def mergeTopK(parts: Iterable[QCands], k: Int): (Array[Long], Array[Float]) = {
     val top = new PerQueryTopK(k, f64 = false)
-    cands.sparkContext.runJob(cands, (it: Iterator[ScoredDocF32]) =>
-      preMerged(it.map(c => ScoredQDocF32(0, c.docId, c.score)), k, f64 = false))
-      .foreach(top.offerAll)
+    parts.foreach(top.offerAll)
     val m = top.result
     (m.docIds, m.scores.map(_.toFloat))
   }

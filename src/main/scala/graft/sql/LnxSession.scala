@@ -287,7 +287,9 @@ final class LnxSession(val spark: SparkSession) {
     * capped search is shown as the lazy frame over its shard candidates
     * (QueryEngine.searchF32Planned), which the statement itself scores
     * in one job, and a statement on the fetch path (cappedFetch) adds
-    * one line naming the stored-field fetch.
+    * one line naming the stored-field fetch: read inside the scoring
+    * job's tasks under QueryEngine.fetchesInScoringJob, else a second
+    * job.
     */
   private def runExplain(st: Statement, params: Seq[Lit]): DataFrame = {
     import spark.implicits._
@@ -300,10 +302,15 @@ final class LnxSession(val spark: SparkSession) {
             sp.cmp.map { case (op, v) => s" $op $v" }.getOrElse(""))
         val plan = cappedFetch(s, params) match {
           case Some(f) =>
-            formatted(f.e.searchF32Planned(f.clauses, f.limit)) :+
-              s"stored-field fetch: docId${f.docCols.map(", " + _).mkString} of the top ${f.limit}" +
-              s" from only the docs partitions holding a hit" +
-              s" (range table: ${f.e.index.docRanges.get.length - 1} partitions)"
+            val cols = s"docId${f.docCols.map(", " + _).mkString}"
+            val nParts = f.e.index.docRanges.get.length - 1
+            formatted(f.e.searchF32Planned(f.clauses, f.limit)) :+ (
+              if (f.e.fetchesInScoringJob(f.limit))
+                s"stored-field fetch: $cols of each docs partition's top ${f.limit}, read by" +
+                  s" that partition's scoring task in the same job (range table: $nParts partitions)"
+              else
+                s"stored-field fetch: $cols of the top ${f.limit} in a second job, from only the" +
+                  s" docs partitions holding a hit (range table: $nParts partitions)")
           case None => formatted(runSelect(s, params, planOnly = true))
         }
         (clauses ++ plan).toDF("plan")
@@ -996,11 +1003,14 @@ final class LnxSession(val spark: SparkSession) {
   /** The fetch path of a capped search statement — no column predicate,
     * order = score desc, no thresholds, LIMIT <= MaxLookupIds, an index
     * with docId ranges (in-memory builds; attached stores have none) —
-    * or None when the statement keeps the docs join. The path is two
-    * jobs: the top-k, then the stored fields of only the docs
-    * partitions holding a hit (QueryEngine.lookupDocs), instead of a
-    * broadcast join over every docs partition. Builds the index when
-    * the statement qualifies and it is not built yet.
+    * or None when the statement keeps the docs join. The path
+    * (QueryEngine.searchWithDocs) is one job while partitions x LIMIT
+    * <= MaxLookupIds — each task scores its shards and reads its local
+    * top-k's stored fields from its own docs partition — and above
+    * that two: the top-k, then the stored fields of only the docs
+    * partitions holding a hit; never a broadcast join over every docs
+    * partition. Builds the index when the statement qualifies and it
+    * is not built yet.
     */
   private def cappedFetch(s: Select, params: Seq[Lit]): Option[CappedFetch] = {
     val t = table(s.table)

@@ -63,4 +63,23 @@ class BuildTrafficSpec extends AnyFunSuite {
           s"keyRange's ${keyRange.shuffleWriteBytes} B — the range exchange is back?")
     } finally spark.sparkContext.removeSparkListener(l)
   }
+
+  test("a Scan build shuffles nothing; a keyRange build runs one shuffle-map stage, the range exchange") {
+    val corpus = graft.corpus.CodeCorpus.generate(spark, 2000, 4)
+    def built(strategy: String) = SparkEvents.of(spark)(graft.index.IndexBuilder.build(corpus,
+      graft.index.IndexConfig(Seq("repo", "path", "commit"), Seq("content"), shardDocs = 256,
+        buildPartitions = 4, docIdStrategy = strategy)))
+    val (scanIdx, scan) = built(graft.index.DocIdStrategy.Scan)
+    val (keyIdx, keyRange) = built(graft.index.DocIdStrategy.KeyRange)
+    try {
+      // the docs partitions hold whole shards and build their own
+      // tables: no postings merge, no shard repartition
+      assert(scan.shuffleBytes === 0L, scan)
+      assert(scan.shuffleMapStages === 0, scan)
+      assert(keyRange.shuffleMapStages === 1, keyRange)
+      assert(keyRange.shuffleBytes > 0L, keyRange)
+      // the premise: both builds cut 8 shards into 4 docs partitions
+      assert(scanIdx.docRanges.get.length - 1 === 4 && keyIdx.docRanges.get.length - 1 === 4)
+    } finally { scanIdx.unpersist(); keyIdx.unpersist() }
+  }
 }

@@ -19,13 +19,14 @@ object SparkEvents {
     * @param stages stages submitted (a stage whose output already
     *   exists is skipped, never submitted)
     * @param shuffleBytes shuffle bytes written plus read by the tasks
-    * @param sqlExecutions SQL executions started (Catalyst-planned runs) */
+    * @param sqlExecutions SQL executions started (Catalyst-planned runs)
+    * @param shuffleMapStages submitted stages that write shuffle output */
   final case class Counts(jobs: Int, tasks: Int, jobTasks: Seq[Int], stages: Int = 0,
-      shuffleBytes: Long = 0L, sqlExecutions: Int = 0)
+      shuffleBytes: Long = 0L, sqlExecutions: Int = 0, shuffleMapStages: Int = 0)
 
   def of[T](spark: SparkSession)(body: => T): (T, Counts) = {
     val sc = spark.sparkContext
-    val tasks, stages, sqlExecutions = new AtomicInteger
+    val tasks, stages, sqlExecutions, shuffleMapStages = new AtomicInteger
     val shuffleBytes = new AtomicLong
     val jobOfStage = mutable.Map.empty[Int, Int]
     val perJob = mutable.LinkedHashMap.empty[Int, Int]
@@ -36,7 +37,10 @@ object SparkEvents {
           perJob(e.jobId) = 0
         }
       }
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = stages.incrementAndGet()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+        stages.incrementAndGet()
+        if (TestListenerBus.isShuffleMap(e.stageInfo)) shuffleMapStages.incrementAndGet()
+      }
       override def onTaskStart(e: SparkListenerTaskStart): Unit = {
         tasks.incrementAndGet()
         jobOfStage.synchronized {
@@ -57,7 +61,7 @@ object SparkEvents {
       val r = body
       TestListenerBus.drain(sc)
       (r, jobOfStage.synchronized(Counts(perJob.size, tasks.get, perJob.values.toSeq,
-        stages.get, shuffleBytes.get, sqlExecutions.get)))
+        stages.get, shuffleBytes.get, sqlExecutions.get, shuffleMapStages.get)))
     } finally sc.removeSparkListener(listener)
   }
 }

@@ -12,10 +12,12 @@ import graft.sql.LnxSession
 import graft.sql.LnxSql.SLit
 
 /** A capped SQL search (no column predicate, score order, no threshold,
-  * LIMIT <= MaxLookupIds) on an in-memory index runs as two jobs — the
-  * top-k, then the stored fields of only the docs partitions holding a
-  * hit — and returns exactly the rows of the docs-join path, which any
-  * LIMIT above the bound still takes.
+  * LIMIT <= MaxLookupIds) on an in-memory index runs as one job while
+  * docs partitions x LIMIT <= MaxLookupIds — each task scores its shards
+  * and fetches its local top-k from its own docs partition — and above
+  * that as two (the top-k, then the stored fields of only the docs
+  * partitions holding a hit). Either way it returns exactly the rows of
+  * the docs-join path, which any LIMIT above MaxLookupIds still takes.
   */
 class SqlFetchSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -120,14 +122,15 @@ class SqlFetchSpec extends AnyFunSuite {
 
   // ------------------------------------------------------------ job shape
 
-  /** A code corpus whose docs cache has 16 partitions (more than k), so
-    * the fetch's pruning shows in its task count. */
+  /** A code corpus of 24 grid shards whose docs cache has 16 partitions
+    * (more than k), so task counts show the fetch's placement. */
   private lazy val files: LnxSession = {
     val sess = new LnxSession(spark)
     val rows = CodeCorpus.generate(spark, 3000, 4)
     sess.register("files", rows, Seq("repo", "path", "commit"), Seq("content"))
     val t = sess.table("files")
-    t.engine = Some(new QueryEngine(IndexBuilder.build(rows, t.config.copy(buildPartitions = 16))))
+    t.engine = Some(new QueryEngine(IndexBuilder.build(rows,
+      t.config.copy(buildPartitions = 16, shardDocs = 128))))
     sess
   }
 
@@ -138,18 +141,35 @@ class SqlFetchSpec extends AnyFunSuite {
   private def run(sql: String, params: Seq[SLit]) =
     SparkEvents.of(spark)(files.execute(sql, params).collect())
 
-  test("a warmed capped statement runs 2 jobs; the fetch runs one task per docs partition holding a hit") {
+  test("a warmed capped statement runs 1 job of one task per docs partition") {
     run(serveSql, serveParams) // warm: dictionary probe, compile, plan LRU
     val (rows, c) = run(serveSql, serveParams)
     assert(rows.length === 10)
     val e = files.table("files").engine.get
     val r = e.index.docRanges.get
     assert(r.length - 1 === 16, "test premise: 16 docs partitions")
-    val hits = e.searchF32(Seq(Fts("content", "binary search")), 10).collect().map(_.getLong(0))
+    assert(e.fetchesInScoringJob(10), "test premise: 16 x 10 is under the gate")
+    assert(c.jobs === 1, c)
+    assert(c.jobTasks === Seq(r.length - 1), c)
+    assert(rows.toSeq === files.execute(serveSql.replace("LIMIT 10", "LIMIT 20000"), serveParams)
+      .collect().take(10).toSeq)
+  }
+
+  test("above the partitions x k gate a capped statement runs 2 jobs and returns the same rows") {
+    val sql = "SELECT path, score() AS s FROM files WHERE fts(content, $1) ORDER BY s DESC"
+    val k = SearchDefaults.MaxLookupIds / 16 + 1
+    val e = files.table("files").engine.get
+    assert(!e.fetchesInScoringJob(k) && e.fetchesInScoringJob(k - 1), "test premise: k is just above the gate")
+    run(s"$sql LIMIT $k", serveParams)
+    val (rows, c) = run(s"$sql LIMIT $k", serveParams)
+    val r = e.index.docRanges.get
+    val hits = e.searchF32(Seq(Fts("content", "binary search")), k).collect().map(_.getLong(0))
     val holding = hits.map(id => r.lastIndexWhere(_ <= id)).distinct.length
     assert(c.jobs === 2, c)
     assert(c.jobTasks(1) === holding, c)
-    assert(holding <= math.min(10, r.length - 1))
+    assert(rows.length === hits.length && rows.length > 10)
+    assert(rows.toSeq === files.execute(s"$sql LIMIT 20000", serveParams).collect().take(k).toSeq)
+    assert(rows.take(10).toSeq === run(s"$sql LIMIT 10", serveParams)._1.toSeq)
   }
 
   test("a statement with no hit runs no fetch job") {
@@ -172,7 +192,7 @@ class SqlFetchSpec extends AnyFunSuite {
     run(serveSql, serveParams)
     val (first, c1) = run(serveSql, serveParams)
     val (second, c2) = run(serveSql, serveParams)
-    assert(c1.jobs === 2 && c2.jobTasks === c1.jobTasks, s"first $c1, repeat $c2")
+    assert(c1.jobs === 1 && c2.jobTasks === c1.jobTasks, s"first $c1, repeat $c2")
     assert(c2.jobTasks.forall(_ > 0), c2)
     assert(second.toSeq === first.toSeq)
   }
@@ -185,7 +205,12 @@ class SqlFetchSpec extends AnyFunSuite {
     assert(text.contains("search clause: fts(content, ...)"))
     assert(text.contains("Physical Plan"))
     assert(text.contains("stored-field fetch: docId, path"), text)
+    assert(text.contains("read by that partition's scoring task in the same job"), text)
     assert(text.contains("range table: 16 partitions"), text)
+    // above the partitions x k gate the fetch is named as a second job
+    val (above, c2) = run("EXPLAIN " + serveSql.replace("LIMIT 10", "LIMIT 1000"), serveParams)
+    assert(c2.jobs === 0, c2)
+    assert(above.map(_.getString(0)).mkString("\n").contains("of the top 1000 in a second job"))
   }
 
   test("EXPLAIN of a capped statement on a warmed attached store starts no Spark job") {
