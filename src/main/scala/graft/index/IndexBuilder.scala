@@ -79,7 +79,9 @@ final case class PostingRow(
 /** Per-field corpus statistics needed by BM25. */
 final case class FieldStats(field: String, totalTokens: Long)
 
-/** One posting row's document count, the term dictionary's input. */
+/** A term's document count in one posting row or one shard-table
+  * partition (`ShardTable.termDfs`): the term dictionary's input,
+  * summed per (field, term) into the df. */
 final case class TermDf(field: String, term: String, df: Long)
 
 /** An immutable index segment: the Spark-native analogue of a tantivy

@@ -9,7 +9,11 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.io.LocalInputFile
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, GraftExpressionBridge, SaveMode,
+  SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.util.UnsafeRowUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import org.apache.spark.storage.StorageLevel
@@ -22,6 +26,13 @@ import org.apache.spark.storage.StorageLevel
   *   dir/_lineage/epoch=N/                              per-partition metrics
   *   dir/_manifest/vNNNNN/manifest.json                 one version's metadata
   *   dir/_manifest/LATEST                               atomic pointer
+  *
+  * A segment's files hold no global order, only a per-file one: every
+  * docs file is docId-ascending and the docs files' docId ranges are
+  * disjoint; every postings file is sorted by (field, term, shard);
+  * every termstats file by (field, term), its df a partial df that
+  * readers sum per (field, term). An append or create writes each file
+  * straight from the build's partitions (`writeSegment`, no exchange).
   *
   * A version's manifest.json holds everything a reader or the next
   * writer needs: epochs, index config, checkpoints, the tombstone dirs
@@ -270,45 +281,46 @@ object IndexStore {
     (m.epochs, configOf(m.config), m.checkpoints)
   }
 
-  /** Write one epoch's segment data (no manifest commit yet):
-    * postings range-partitioned + sorted by (field, term) so term
-    * lookups prune parquet row groups (the FST/sstable term-dictionary
-    * analogue, SURVEY.md section 4 O3); docs sorted by docId.
-    */
-  // ---- segment-layout writers, shared by writeSegment AND compact:
-  // the layout IS the read-path contract (8 MB doc-store row groups for
-  // top-k point lookups, range-partitioned dictionary), so exactly one
-  // implementation exists — a second copy in compact drifted in r4
-  // (default 128 MB doc groups + a coalesce(1) dictionary), silently
-  // degrading every post-compaction store.
+  // ---- segment-file writers, the one write step of each file kind,
+  // shared by writeSegment (create and appendEpoch, straight from the
+  // build's partitions) and compact (after its own exchanges: its merged
+  // inputs are not laid out). Each writer owns its file's sort and
+  // options, so no second copy can drift (one in compact did in r4: 128
+  // MB doc groups + a coalesce(1) dictionary, silently degrading every
+  // post-compaction store). The per-file layout IS the read-path
+  // contract:
+  //  - docs: every file docId-ascending, the files' docId ranges
+  //    pairwise disjoint (lookupDocs' pushed-down IN filter prunes a
+  //    top-k fetch to the row groups holding its ids);
+  //  - postings: every file sorted by (field, term, shard), so a term
+  //    lookup prunes row groups within each file (the FST/sstable
+  //    term-dictionary analogue, SURVEY.md section 4 O3); no reader
+  //    needs a global term range (load repartitions by shard, compact
+  //    groups by key);
+  //  - termstats: every file sorted by (field, term); its rows are
+  //    partial dfs, one per (field, term) of the partition that wrote
+  //    it, and readers sum df per (field, term) over the files (load).
 
-  private def writePostingsParquet(postings: DataFrame, parts: Int, path: String): Unit =
+  private def writePostingsParquet(postings: DataFrame, path: String): Unit =
     postings
-      .repartitionByRange(parts, col("field"), col("term"))
       .sortWithinPartitions("field", "term", "shard")
       .write.mode(SaveMode.Overwrite).parquet(path)
 
-  /** Doc store: small row groups (8 MB vs the 128 MB default) — the
-    * access pattern is top-k point lookups by docId (lookupDocs), and
-    * row-group stats are the pruning unit, so a k-id fetch reads ~k
-    * small groups instead of k 128 MB ones. Scan-heavy consumers read
-    * postings, not docs, so the small-group overhead lands nowhere hot.
+  /** Doc store, written as `docs` is partitioned and ordered (the caller
+    * hands in docId-ascending partitions over disjoint docId ranges).
+    * Small row groups (8 MB vs the 128 MB default): the access pattern
+    * is top-k point lookups by docId (lookupDocs), and row-group stats
+    * are the pruning unit, so a k-id fetch reads ~k small groups instead
+    * of k 128 MB ones. Scan-heavy consumers read postings, not docs, so
+    * the small-group overhead lands nowhere hot.
     */
-  private def writeDocsParquet(docs: DataFrame, parts: Int, path: String): Unit =
-    docs
-      .repartitionByRange(parts, col("docId"))
-      .sortWithinPartitions("docId")
-      .write.mode(SaveMode.Overwrite)
+  private def writeDocsParquet(docs: DataFrame, path: String): Unit =
+    docs.write.mode(SaveMode.Overwrite)
       .option("parquet.block.size", (8 * 1024 * 1024).toString)
       .parquet(path)
 
-  /** Term dictionary: range-partitioned like the postings so prefix /
-    * exact lookups prune row groups (tiny at test scale, but a single
-    * file would bottleneck a 10^12-doc dictionary).
-    */
-  private def writeTermstatsParquet(termStats: DataFrame, parts: Int, path: String): Unit =
+  private def writeTermstatsParquet(termStats: DataFrame, path: String): Unit =
     termStats
-      .repartitionByRange(math.max(1, parts / 4), col("field"), col("term"))
       .sortWithinPartitions("field", "term")
       .write.mode(SaveMode.Overwrite).parquet(path)
 
@@ -322,13 +334,25 @@ object IndexStore {
       .sortWithinPartitions("field", "variant")
       .write.mode(SaveMode.Overwrite).parquet(path)
 
+  /** Write an in-memory build's segment files (no manifest commit yet),
+    * one file per docs partition and one job per file kind, with no
+    * exchange: docs partition p is already docId-ascending over its own
+    * range (`BuiltIndex.docRanges`) and shard table p holds its
+    * postings, so each partition writes its docs, its sorted posting
+    * rows and its partial term dfs as they are. Only a fast-fuzzy
+    * segment's SymSpell dictionary derives from the aggregated
+    * `termStats`.
+    */
   private def writeSegment(idx: BuiltIndex, segDir: String): Unit = {
-    val parts = math.max(1, idx.config.buildPartitions / 4)
-    writePostingsParquet(idx.postings.toDF(), parts, s"$segDir/postings.parquet")
-    writeDocsParquet(idx.docs, parts, s"$segDir/docs.parquet")
-    writeTermstatsParquet(idx.termStats, parts, s"$segDir/termstats.parquet")
+    require(idx.docRanges.nonEmpty, "writeSegment writes an in-memory build's partitions")
+    writePostingsParquet(idx.postings.toDF(), s"$segDir/postings.parquet")
+    writeDocsParquet(idx.docs, s"$segDir/docs.parquet")
+    writeTermstatsParquet(
+      idx.spark.createDataset(idx.shards.rdd.flatMap(_.termDfs))(Encoders.product[TermDf]).toDF(),
+      s"$segDir/termstats.parquet")
     if (idx.config.fastFuzzy)
-      writeSymspellParquet(idx.termStats, parts, s"$segDir/symspell.parquet")
+      writeSymspellParquet(idx.termStats, math.max(1, idx.config.buildPartitions / 4),
+        s"$segDir/symspell.parquet")
   }
 
   private def writeLineage(idx: BuiltIndex, dir: String, epoch: Int): Unit = {
@@ -652,50 +676,101 @@ object IndexStore {
     val epoch = nextEpoch(m)
     val base = m.epochs.map(_.docIdEnd).max
     val idx = IndexBuilder.build(newDocs, config, base)
-    val segName = f"seg-$epoch%05d"
-    writeSegment(idx, s"$dir/$segName")
-    writeLineage(idx, dir, epoch)
-    // upsert tombstones: previous live docIds whose key reappears in
-    // this epoch. Only the committed doc store's (docId, key) columns
-    // stream out of it: no postings, term dictionary or cache is built
-    val oldDocs = liveDocs(spark, dir, m,
-      deletes(spark, dir, m, config.shardDocs, BroadcastTombstones))
-    val keyCols = config.keyCols
-    // Catalyst pushes the left-semi join below through the store's
-    // per-segment union (one join per segment branch), and AQE builds
-    // each branch's broadcast separately. So the epoch's key set is
-    // LANDED once on the driver and broadcast as a local relation: the
-    // branches' broadcast builds then serialize driver rows and start
-    // no job, and the append's job count does not grow with the segment
-    // count. Upsert detection stays EXCHANGE-FREE on the store side —
-    // its slim (docId, key) columns stream through the pruned parquet
-    // scan and never shuffle, so the per-append exchange is O(epoch),
-    // not O(corpus). Above the gate (~200 MB of keys) fall back to a
-    // shuffle join over the keys, materialized once (an unmaterialized
-    // right side would be re-derived from the FULL-WIDTH epoch docs
-    // cache once per segment branch). The gate cardinality is
-    // idx.numDocs (keys are one-per-doc by construction), so no extra
-    // counting pass over the epoch cache is needed.
-    val newKeys = idx.docs.select(keyCols.map(col): _*)
-    val rhs =
-      if (idx.numDocs <= 2000000L)
-        broadcast(spark.createDataFrame(newKeys.collect().toSeq.asJava, newKeys.schema))
-      else newKeys.persist(StorageLevel.MEMORY_AND_DISK)
-    val tombstones = oldDocs.select((col("docId") +: keyCols.map(col)): _*)
-      .join(rhs, keyCols, "left_semi")
-      .select("docId")
-    tombstones.write.mode(SaveMode.Overwrite).parquet(deletesDir(dir, epoch))
-    // a pure-insert append (no key overlap) commits no tombstone dir
-    val newTombs = keepTombstones(dir, epoch)
-    rhs.unpersist()
-    val newEpochs = m.epochs ++ config.fields.map(f =>
-      EpochMeta(epoch, segName, idx.numDocs, base, base + idx.numDocs, f,
-        idx.fieldTokens.getOrElse(f, 0L)))
-    commit(dir, basis + 1, m.copy(epochs = newEpochs,
-      checkpoints = m.checkpoints :+ CheckpointRow(epoch, snapshotId, 0L),
-      tombstones = m.tombstones ++ newTombs))
-    idx.unpersist()
+    try {
+      val segName = f"seg-$epoch%05d"
+      writeSegment(idx, s"$dir/$segName")
+      writeLineage(idx, dir, epoch)
+      writeUpserts(spark, dir, m, idx, deletesDir(dir, epoch))
+      // a pure-insert append (no key overlap) commits no tombstone dir
+      val newTombs = keepTombstones(dir, epoch)
+      val newEpochs = m.epochs ++ config.fields.map(f =>
+        EpochMeta(epoch, segName, idx.numDocs, base, base + idx.numDocs, f,
+          idx.fieldTokens.getOrElse(f, 0L)))
+      commit(dir, basis + 1, m.copy(epochs = newEpochs,
+        checkpoints = m.checkpoints :+ CheckpointRow(epoch, snapshotId, 0L),
+        tombstones = m.tombstones ++ newTombs))
+    } finally idx.unpersist()
     true
+  }
+
+  /** Epoch keys up to which an append collects them on the driver
+    * (keys are one per doc, so the gate reads `numDocs`, no job): the
+    * upsert scan's key set, or the join path's broadcast side.
+    */
+  private[index] final val BroadcastKeys = 2000000L
+
+  /** The upsert scan's key gate (`writeUpserts`); specs lower it to
+    * force the join path. */
+  @volatile private[graft] var upsertScanKeys: Long = BroadcastKeys
+
+  /** Write an epoch's upsert tombstones to `path`: every docId the
+    * committed store still serves whose key reappears in the epoch
+    * `idx`. Only the segments' (docId, key) docs columns are read: no
+    * postings, term dictionary or cache is built.
+    *
+    * Under both driver gates (the epoch's keys, the prior tombstones
+    * under `BroadcastTombstones`) and for keys whose join equality is
+    * byte equality after normalization (`UnsafeRowUtils.isBinaryStable`:
+    * no non-binary collation), it is ONE column-pruned scan with no join
+    * and no exchange. The epoch's keys and the prior tombstone ids are
+    * collected into driver sets and broadcast (`UpsertKeys.Probe`); each
+    * task keeps a row whose key is in the key set and whose docId is not
+    * a tombstone. A key matches exactly as the join matched it: a key
+    * with a null column never matches, floats compare after the join's
+    * normalization (-0.0 = 0.0, NaN = NaN) and binaries by content, as
+    * each key is compared as one normalized UnsafeRow. The broadcast is
+    * destroyed once the write ends, failed or not.
+    *
+    * Otherwise the live docs left-semi-join the epoch's keys, broadcast
+    * as a driver-landed local relation up to `BroadcastKeys` (no job per
+    * segment branch of the union the join is pushed through), else
+    * persisted once for a shuffle join.
+    */
+  private def writeUpserts(spark: SparkSession, dir: String, m: Manifest, idx: BuiltIndex,
+      path: String): Unit = {
+    val keyCols = idx.config.keyCols
+    val keyTypes = keyCols.map(k => idx.docs.schema(k).dataType)
+    val scan = idx.numDocs <= upsertScanKeys &&
+      m.tombstones.map(_.rows).sum <= BroadcastTombstones &&
+      keyTypes.forall(UnsafeRowUtils.isBinaryStable)
+    if (scan) {
+      val epochKeys = idx.docs.select(keyCols.map(col): _*).queryExecution.toRdd
+        .mapPartitions(rows => UpsertKeys.keyed(rows, keyTypes, 0).map(_._2.copy()))
+        .collect()
+      val tombstones = tombstoneScan(spark, dir, m.tombstones).fold(Array.empty[Long]) { s =>
+        val ids = s.as(Encoders.scalaLong).collect()
+        java.util.Arrays.sort(ids)
+        ids
+      }
+      val probe = spark.sparkContext.broadcast(UpsertKeys.Probe(
+        new java.util.HashSet[UnsafeRow](epochKeys.toSeq.asJava), tombstones))
+      try {
+        val ids = readSegments(spark, dir, m.epochs.map(_.path).distinct, "docs.parquet",
+            docSchemaOf(m))
+          .select((col("docId") +: keyCols.map(col)): _*).queryExecution.toRdd
+          .mapPartitions { rows =>
+            val p = probe.value
+            UpsertKeys.keyed(rows, keyTypes, 1).collect {
+              case (r, k) if p.hit(r.getLong(0), k) => r.getLong(0)
+            }
+          }
+        spark.createDataset(ids)(Encoders.scalaLong).toDF("docId")
+          .write.mode(SaveMode.Overwrite).parquet(path)
+      } finally probe.destroy()
+    } else {
+      val oldDocs = liveDocs(spark, dir, m,
+        deletes(spark, dir, m, idx.config.shardDocs, BroadcastTombstones))
+      val newKeys = idx.docs.select(keyCols.map(col): _*)
+      val rhs =
+        if (idx.numDocs <= BroadcastKeys)
+          broadcast(spark.createDataFrame(newKeys.collect().toSeq.asJava, newKeys.schema))
+        else newKeys.persist(StorageLevel.MEMORY_AND_DISK)
+      try oldDocs.select((col("docId") +: keyCols.map(col)): _*)
+        .join(rhs, keyCols, "left_semi")
+        .select("docId")
+        .write.mode(SaveMode.Overwrite).parquet(path)
+      finally rhs.unpersist()
+    }
   }
 
   /** deleteByQuery checkpoint ids live in their own namespace: a bare
@@ -805,14 +880,17 @@ object IndexStore {
     val mergedEpoch = nextEpoch(m)
     val segName = f"seg-$mergedEpoch%05d"
     val parts = math.max(1, config.buildPartitions / 4)
-    writePostingsParquet(merged.toDF(), parts, s"$dir/$segName/postings.parquet")
-    writeDocsParquet(docsSel, parts, s"$dir/$segName/docs.parquet")
+    writePostingsParquet(merged.toDF().repartitionByRange(parts, col("field"), col("term")),
+      s"$dir/$segName/postings.parquet")
+    writeDocsParquet(docsSel.repartitionByRange(parts, col("docId")).sortWithinPartitions("docId"),
+      s"$dir/$segName/docs.parquet")
     // dictionary + stats derive from the WRITTEN postings: one merge
     // computation total instead of re-merging per aggregate
     val mergedOnDisk = readSegments(spark, dir, Seq(segName), "postings.parquet", PostingsSchema)
     writeTermstatsParquet(
-      mergedOnDisk.groupBy("field", "term").agg(sum("numDocs").as("df")),
-      parts, s"$dir/$segName/termstats.parquet")
+      mergedOnDisk.groupBy("field", "term").agg(sum("numDocs").as("df"))
+        .repartitionByRange(math.max(1, parts / 4), col("field"), col("term")),
+      s"$dir/$segName/termstats.parquet")
     if (config.fastFuzzy)
       writeSymspellParquet(
         readSegments(spark, dir, Seq(segName), "termstats.parquet", TermStatsSchema),
@@ -930,5 +1008,33 @@ object IndexStore {
       } finally l3.close()
     }
     removed
+  }
+}
+
+/** Upsert keys as a join compares them (`IndexStore.writeUpserts`). */
+private[index] object UpsertKeys {
+  /** The rows of `rows` whose key columns (`keyTypes`, from ordinal
+    * `first`) are all non-null (a null key never matches), each with its
+    * key as one UnsafeRow, normalized as a join normalizes its keys
+    * (-0.0 = 0.0, one NaN), so two keys the join matches are equal rows
+    * with equal hashes. The key row is reused: copy it to keep it.
+    */
+  def keyed(rows: Iterator[InternalRow], keyTypes: Seq[DataType],
+      first: Int): Iterator[(InternalRow, UnsafeRow)] = {
+    val proj = UnsafeProjection.create(keyTypes.zipWithIndex.map { case (dt, i) =>
+      GraftExpressionBridge.normalizeJoinKey(BoundReference(first + i, dt, nullable = true))
+    })
+    val cols = first until first + keyTypes.size
+    rows.filter(r => cols.forall(!r.isNullAt(_))).map(r => (r, proj(r)))
+  }
+
+  /** An epoch's keys (`keyed` rows) and the store's prior tombstones,
+    * sorted (duplicates kept): the compact set of up to
+    * `IndexStore.BroadcastTombstones` longs, probed only by rows whose
+    * key matched. */
+  final case class Probe(keys: java.util.HashSet[UnsafeRow], tombstones: Array[Long]) {
+    /** Does the stored (docId, key) row get tombstoned? */
+    def hit(docId: Long, key: UnsafeRow): Boolean =
+      keys.contains(key) && java.util.Arrays.binarySearch(tombstones, docId) < 0
   }
 }

@@ -26,6 +26,17 @@ final class ShardTable private (
   /** Every row of the partition. */
   def iterator: Iterator[PostingRow] =
     byField.values().iterator().asScala.flatMap(_.values().iterator().asScala.flatMap(_.iterator))
+
+  /** One (field, term, df) per key of the partition, df summed over its
+    * rows: a partial df when other partitions hold the term too. */
+  def termDfs: Iterator[TermDf] =
+    byField.entrySet().iterator().asScala.flatMap { f =>
+      f.getValue.entrySet().iterator().asScala.map { t =>
+        var df = 0L
+        t.getValue.foreach(df += _.numDocs)
+        TermDf(f.getKey, t.getKey, df)
+      }
+    }
 }
 
 object ShardTable {

@@ -886,8 +886,9 @@ final class QueryEngine(val index: BuiltIndex) {
     * converted on the executors and the result is a local frame, in no
     * particular order. No requested id, no job. Without
     * ranges (IndexStore.load: docs NOT cached) it is a lazy pushed-down
-    * IN filter: the docs parquet is docId-sorted and range-partitioned,
-    * so the scan prunes to the row groups holding the ids.
+    * IN filter: every docs file is docId-sorted and the files' docId
+    * ranges are disjoint, so the scan prunes to the row groups holding
+    * the ids.
     */
   def lookupDocs(ids: Seq[Long], docCols: Seq[String]): DataFrame = {
     require(ids.size <= MaxLookupIds, "lookupDocs is for top-k result sets, not bulk reads")

@@ -66,6 +66,34 @@ class StoreJobsSpec extends AnyFunSuite {
     assert(row.getAs[Long]("pendingDeletes") === 120L)
   }
 
+  test("an append on a 4-segment store: keyRange <= 10 jobs, 1 shuffle-map stage; scan none") {
+    /** A 4-segment store with 3 tombstone dirs, built with `strategy`. */
+    def store(strategy: String): String = {
+      val dir = tmpDir()
+      IndexStore.create(CodeCorpus.generate(spark, 200, 2), config.copy(docIdStrategy = strategy),
+        dir, "snap-0").unpersist()
+      (1 to 3).foreach(i => IndexStore.appendEpoch(upsert(i), dir, s"snap-$i"))
+      val m = IndexStore.readManifestFile(dir, IndexStore.currentVersion(dir))
+      assert(m.epochs.map(_.path).distinct.size === 4)
+      assert(m.tombstones.size === 3)
+      dir
+    }
+    def append(dir: String): graft.SparkEvents.Counts = {
+      val c = graft.SparkEvents.of(spark)(IndexStore.appendEpoch(upsert(4), dir, "snap-4"))._2
+      val m = IndexStore.readManifestFile(dir, IndexStore.currentVersion(dir))
+      assert(m.tombstones.last === IndexStore.TombstoneDir(4, 30L))
+      info(s"${m.config.docIdStrategy}: $c")
+      c
+    }
+    val keyRange = append(store(DocIdStrategy.KeyRange))
+    assert(keyRange.jobs <= 10, keyRange)
+    // the build's docId range exchange, and nothing after it
+    assert(keyRange.shuffleMapStages === 1, keyRange)
+    val scan = append(store(DocIdStrategy.Scan))
+    assert(scan.shuffleMapStages === 0, scan)
+    assert(scan.shuffleBytes === 0L, scan)
+  }
+
   test("the known read schemas are the ones parquet inference reports") {
     val dir = tmpDir()
     val ff = config.copy(fastFuzzy = true)
