@@ -2,14 +2,14 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 
-/** Cumulative task-level traffic counters for a window of Spark jobs —
-  * the REGIME-INDEPENDENT half of the scaling evidence. Wall-clock on
-  * this sandbox VM swings ±60% between legs with both calibration
-  * markers flat (BENCH.md round-4 control leg), but bytes read /
-  * shuffled / spilled per task are deterministic properties of the
-  * PLAN: identical across regimes, directly comparable across runs,
+/** Cumulative task-level traffic counters (and the jobs started) for a
+  * window of Spark jobs — the REGIME-INDEPENDENT half of the scaling
+  * evidence. Wall-clock on this sandbox VM swings ±60% between legs
+  * with both calibration markers flat (BENCH.md round-4 control
+  * leg), but bytes read / shuffled / spilled per task are
+  * deterministic properties of the PLAN: identical across regimes, directly comparable across runs,
   * and the quantity that actually predicts cluster behavior (a
   * 1000-executor job lives or dies by what crosses the network, not by
   * one box's fabric). ScalingBench reports the per-build deltas so
@@ -29,6 +29,9 @@ final class BuildTraffic extends SparkListener {
   private val shufWrite = new AtomicLong
   private val shufRead = new AtomicLong
   private val spill = new AtomicLong
+  private val jobs = new AtomicLong
+
+  override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
 
   override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
     val m = t.taskMetrics
@@ -41,7 +44,7 @@ final class BuildTraffic extends SparkListener {
   }
 
   private def snap: BuildTraffic.Snap =
-    BuildTraffic.Snap(input.get, shufWrite.get, shufRead.get, spill.get)
+    BuildTraffic.Snap(input.get, shufWrite.get, shufRead.get, spill.get, jobs.get)
 
   /** Snapshot once the async bus has delivered everything: poll until
     * two reads `quietMs` apart agree (all actions in the measured
@@ -64,10 +67,11 @@ final class BuildTraffic extends SparkListener {
 }
 
 object BuildTraffic {
+  /** @param jobs Spark jobs started */
   final case class Snap(inputBytes: Long, shuffleWriteBytes: Long,
-      shuffleReadBytes: Long, spilledBytes: Long) {
+      shuffleReadBytes: Long, spilledBytes: Long, jobs: Long) {
     def -(o: Snap): Snap = Snap(inputBytes - o.inputBytes,
       shuffleWriteBytes - o.shuffleWriteBytes,
-      shuffleReadBytes - o.shuffleReadBytes, spilledBytes - o.spilledBytes)
+      shuffleReadBytes - o.shuffleReadBytes, spilledBytes - o.spilledBytes, jobs - o.jobs)
   }
 }

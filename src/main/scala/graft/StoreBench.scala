@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.functions.col
+
 import graft.corpus.CodeCorpus
 import graft.index.{IndexConfig, IndexStore}
 import graft.query._
@@ -13,6 +15,15 @@ import graft.query._
   * cannot fit executor memory.
   *
   * Usage: runMain graft.StoreBench [nDocs] — prints one JSON line.
+  *
+  * Freshness leg: runMain graft.StoreBench freshness [baseDocs] [epochs]
+  * — an append-and-read loop on a store of `baseDocs` files (default
+  * 5000, 3 epochs): each epoch appends 200 upserts and 200 new files
+  * (inputs written to parquet first), attaches the store on a fresh
+  * session table, then runs a capped SQL read and a second one with
+  * another query. Prints one JSON line with each step's median
+  * milliseconds and Spark jobs (`append`, `attach`, `first_read`,
+  * `next_read`) and the per-epoch values.
   */
 object StoreBench {
 
@@ -23,7 +34,74 @@ object StoreBench {
       (System.nanoTime() - t0) / 1e9
     }.min
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit =
+    if (args.headOption.contains("freshness"))
+      freshness(args.lift(1).fold(5000L)(_.toLong), args.lift(2).fold(3)(_.toInt))
+    else scaleAB(args)
+
+  private def freshness(baseDocs: Long, epochs: Int): Unit = {
+    val cpus = BenchSession.cpus
+    val spark = BenchSession(cpus, cpus)
+    val parts = cpus * 2
+    val half = 200
+    val config = IndexConfig(Seq("repo", "path", "commit"), Seq("content"),
+      shardDocs = 4096, buildPartitions = parts)
+    val dir = java.nio.file.Files.createTempDirectory("graftfreshness").toString
+    val inputs = java.nio.file.Files.createTempDirectory("graftfreshin").toString
+    // epoch e: `half` upserts of base files spread over the corpus, and
+    // `half` new files past every id so far
+    val stride = math.max(1L, baseDocs / half)
+    (1 to epochs).foreach { e =>
+      val up = spark.range(0, half, 1, parts)
+        .select(((col("id") * stride + e) % baseDocs).as("id"))
+        .as(org.apache.spark.sql.Encoders.scalaLong)
+        .map { id =>
+          val d = CodeCorpus.genDoc(id)
+          d.copy(content = d.content + s" revised epoch$e")
+        }(org.apache.spark.sql.Encoders.product[CodeCorpus.SourceFile]).toDF()
+      val fresh = CodeCorpus.generateRange(spark, baseDocs + (e - 1L) * half,
+        baseDocs + e.toLong * half, parts)
+      up.unionByName(fresh).write.parquet(s"$inputs/epoch-$e")
+    }
+    CodeCorpus.generate(spark, baseDocs, parts).write.parquet(s"$inputs/base")
+    val (_, tCreate) = Bench.time(
+      IndexStore.create(spark.read.parquet(s"$inputs/base"), config, dir).unpersist())
+
+    val traffic = new BuildTraffic
+    spark.sparkContext.addSparkListener(traffic)
+    val session = new graft.sql.LnxSession(spark)
+    val sql = "SELECT path, score() AS s FROM files WHERE fts(content, $1) ORDER BY s DESC LIMIT 10"
+    /** (milliseconds, jobs) of `body`; the listener settles outside the timing. */
+    def step(body: => Unit): (Double, Long) = {
+      val before = traffic.settle()
+      val (_, sec) = Bench.time(body)
+      (sec * 1e3, (traffic.settle() - before).jobs)
+    }
+    val steps = Seq("append", "attach", "first_read", "next_read")
+    val runs = (1 to epochs).map { e =>
+      Seq(
+        step(IndexStore.appendEpoch(spark.read.parquet(s"$inputs/epoch-$e"), dir, s"fresh-$e")),
+        step(session.attach("files", dir)),
+        step(session.execute(sql, Seq(graft.sql.LnxSql.SLit("binary search"))).collect()),
+        step(session.execute(sql, Seq(graft.sql.LnxSql.SLit("fn license"))).collect()))
+    }
+    session.table("files").engine.foreach(_.release())
+    def median(xs: Seq[Double]): Double = { val s = xs.sorted; s(s.size / 2) }
+    val fields = steps.indices.flatMap { i =>
+      val name = steps(i)
+      Seq(f""""${name}_ms":${median(runs.map(_(i)._1))}%.1f""",
+        s""""${name}_jobs":${median(runs.map(_(i)._2.toDouble)).toLong}""",
+        runs.map(r => f"${r(i)._1}%.1f").mkString(s""""${name}_ms_per_epoch":[""", ",", "]"),
+        runs.map(_(i)._2).mkString(s""""${name}_jobs_per_epoch":[""", ",", "]"))
+    }
+    println(s"""{"metric":"store_freshness","baseDocs":$baseDocs,"epochs":$epochs,"cpus":$cpus,""" +
+      f""""create_sec":$tCreate%.2f,${fields.mkString(",")}}""")
+    IndexStore.drop(dir)
+    IndexStore.drop(inputs)
+    spark.stop()
+  }
+
+  private def scaleAB(args: Array[String]): Unit = {
     val nDocs = if (args.nonEmpty) args(0).toLong else 8000000L
     val cpus = BenchSession.cpus
     // SPARK_GRAFT_LOCAL_DIR routes a 27M keyRange exchange (~20 GB) to

@@ -84,6 +84,17 @@ final case class FieldStats(field: String, totalTokens: Long)
   * summed per (field, term) into the df. */
 final case class TermDf(field: String, term: String, df: Long)
 
+/** The docIds a docs partition may hold: [from, until). */
+final case class DocRange(from: Long, until: Long) {
+  def contains(id: Long): Boolean = from <= id && id < until
+}
+
+object DocRange {
+  /** The ranges between consecutive `cuts`: partition p holds [cuts(p), cuts(p+1)). */
+  def ofCuts(cuts: Array[Long]): IndexedSeq[DocRange] =
+    (0 until cuts.length - 1).map(p => DocRange(cuts(p), cuts(p + 1)))
+}
+
 /** An immutable index segment: the Spark-native analogue of a tantivy
   * segment (posting lists + term dictionary + fieldnorms + doc store,
   * SURVEY.md section 1.3/1.4). `persist()` pins the frames for repeated
@@ -95,7 +106,9 @@ final case class TermDf(field: String, term: String, df: Long)
   * in place with no exchange and no query planning, and never sees a
   * delete set. An in-memory build's table p is built from docs
   * partition p and holds exactly its shards (`IndexBuilder.build`); a
-  * loaded store's tables come from one shard repartition
+  * loaded store's table p from postings file p of its file pairs,
+  * beside docs file p (`IndexStore.loadManifest`), or from one shard
+  * repartition above the load's tombstone gate
   * (`IndexBuilder.shardTables`). `postings` and an in-memory
   * build's `termStats` and `fieldTokens` are read off it, not cached
   * beside it. A store applies its tombstones to the postings (and
@@ -113,18 +126,27 @@ final class BuiltIndex(
     /** build-time SymSpell dictionary (field, variant, term, df) when
       * the segment was written in fast-fuzzy mode. */
     val symspell: Option[DataFrame] = None,
-    /** docId range of every `docs` partition: partition p holds exactly
-      * the ids in [r(p), r(p+1)), ascending (`IndexBuilder.assignDocIdsCounted`'s
-      * cuts; interior bounds are multiples of shardDocs, and shard
-      * table p holds exactly the shards of that range). Set by
-      * in-memory builds, whose docs frame keeps the assignment's
-      * partitioning; None for loaded stores, whose docs stream from the
-      * segment parquet. `QueryEngine.searchWithDocs` reads it to score
-      * and fetch a partition's hits in one task, `lookupDocs` to fetch
-      * ids from only the partitions that hold them. */
-    val docRanges: Option[Array[Long]] = None) {
+    /** The range table: the docId window of every `docs` partition,
+      * whose docs are docId-ascending, all inside it, and exactly the
+      * docs whose postings shard table p holds. An in-memory build's
+      * windows are `IndexBuilder.assignDocIdsCounted`'s shard-grid cuts
+      * (partition p holds every id of its window; they tile the build's
+      * ids). A loaded store's are its file pairs' (`IndexStore.load`):
+      * a window may hold tombstoned ids, and a partial compaction's may
+      * overlap other segments', so an id can fall in several windows
+      * and lives in at most one of them. None when the docs keep no
+      * such partitioning (a store over the load's tombstone gate).
+      * `QueryEngine.searchWithDocs` reads it to score and fetch a
+      * partition's hits in one task, `lookupDocs` to read ids from only
+      * the partitions whose window holds one. */
+    val docRanges: Option[IndexedSeq[DocRange]] = None) {
 
   def spark: SparkSession = docs.sparkSession
+
+  /** The number of shard tables a search runs over, known without a
+    * job: the range table's partitions, else at most buildPartitions
+    * (a store's shard repartition, `IndexBuilder.shardTables`). */
+  def searchPartitions: Int = docRanges.fold(config.buildPartitions)(_.length)
 
   /** Every posting row, read off the shard tables (segment writes, specs). */
   def postings: Dataset[PostingRow] =
@@ -257,6 +279,14 @@ object IndexBuilder {
     }
   }
 
+  /** The run of `cuts` holding `docId` (the last cut at or below it;
+    * ids below the first cut fall in run 0, ids past the last in the
+    * last run). */
+  private[index] def cutIndex(cuts: Array[Long], docId: Long): Int = {
+    val at = java.util.Arrays.binarySearch(cuts, 0, cuts.length - 1, docId)
+    math.max(0, if (at >= 0) at else -at - 2)
+  }
+
   /** In-memory posting accumulator per docs partition — the
     * Spark-native analogue of tantivy's indexing-time term hashmap
     * (tantivy-stacker, Cargo.lock:2890) — built into that partition's
@@ -368,13 +398,16 @@ object IndexBuilder {
       enc.bytes, enc.blockOffset, enc.blockLast, enc.blockMaxTf, enc.blockMinNorm)
   }
 
-  /** A loaded store's postings cache: co-partitioned by docId shard,
+  /** A heavy-churn store's postings cache (a load above the tombstone
+    * gate, `IndexStore.loadManifest`): co-partitioned by docId shard,
     * so every posting row of a shard sits in one partition, and each
     * partition is ONE term-keyed `ShardTable` the scorers probe in
     * place (Scorer.shardGrouped) — the §2.4 bucketing trade: pay one
     * shard-keyed shuffle when the store is loaded, not one per query.
-    * (An in-memory build needs no shuffle: its docs partitions hold
-    * whole shards and each builds its own table, `postingTables`.)
+    * (An in-memory build and a store under the gate need no shuffle:
+    * a build's docs partitions hold whole shards and each builds its
+    * own table, `postingTables`; a store reads each file pair's
+    * postings as one table.)
     *
     * Partition count = min(buildPartitions, shards in a docId span of
     * `span`, the store's max docIdEnd), known driver-side: a 7-shard
@@ -444,7 +477,7 @@ object IndexBuilder {
     // docs keeps withIds' partitioning (a cache of it), so the
     // assignment's shard-aligned cuts are its per-partition docId ranges
     new BuiltIndex(docs, shards, termStats, numDocs, fieldTokens, config,
-      docRanges = Some(docRanges)).persist()
+      docRanges = Some(DocRange.ofCuts(docRanges))).persist()
   }
 }
 

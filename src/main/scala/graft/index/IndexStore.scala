@@ -9,11 +9,14 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.io.LocalInputFile
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, GraftExpressionBridge, SaveMode,
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, GraftExpressionBridge, Row, SaveMode,
   SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.util.UnsafeRowUtils
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import org.apache.spark.storage.StorageLevel
@@ -27,12 +30,17 @@ import org.apache.spark.storage.StorageLevel
   *   dir/_manifest/vNNNNN/manifest.json                 one version's metadata
   *   dir/_manifest/LATEST                               atomic pointer
   *
-  * A segment's files hold no global order, only a per-file one: every
-  * docs file is docId-ascending and the docs files' docId ranges are
-  * disjoint; every postings file is sorted by (field, term, shard);
-  * every termstats file by (field, term), its df a partial df that
-  * readers sum per (field, term). An append or create writes each file
-  * straight from the build's partitions (`writeSegment`, no exchange).
+  * A segment is a set of file pairs: docs file p and postings file p
+  * hold exactly the same docs, inside a docId window the manifest
+  * records (`FilePair`), and a load reads pair p as search partition p
+  * (`loadManifest`). The files hold no global order, only a per-file
+  * one: every docs file is docId-ascending and a segment's docs files'
+  * docId ranges are disjoint; every postings file is sorted by (field,
+  * term, shard); every termstats file by (field, term), its df a partial
+  * df that readers sum per (field, term). An append or create writes
+  * each file straight from the build's partitions (`writeSegment`, no
+  * exchange); a compaction cuts its merged window on the same shard
+  * grid (`compact`).
   *
   * A version's manifest.json holds everything a reader or the next
   * writer needs: epochs, index config, checkpoints, the tombstone dirs
@@ -70,18 +78,30 @@ object IndexStore {
   /** One `_deletes/epoch=N` dir a manifest version reads, and its rows. */
   final case class TombstoneDir(epoch: Int, rows: Long)
 
+  /** One search partition of a segment: its docs file and its postings
+    * file (paths relative to the segment dir; no postings file when none
+    * of its docs holds a term) hold exactly the same docs, all with ids
+    * in [docIdFrom, docIdUntil). */
+  final case class FilePair(docs: String, postings: Option[String], docIdFrom: Long,
+      docIdUntil: Long)
+
+  /** A segment dir's file pairs, in partition order. */
+  final case class SegmentFiles(path: String, pairs: Seq[FilePair])
+
   /** The whole content of one version's manifest.json. `tombstones` is
     * the set of tombstone dirs readers of THIS version apply (the
     * Iceberg-manifest analogue: physical deletion is deferred to
     * retention-aware gc()); `docSchema` is the doc store's schema as
-    * segment reads see it, in `StructType.json` form.
+    * segment reads see it, in `StructType.json` form; `segments` lists
+    * every segment dir the epochs name with its file pairs.
     */
   final case class Manifest(format: Int, epochs: Seq[EpochMeta], config: ConfigRow,
       checkpoints: Seq[CheckpointRow], tombstones: Seq[TombstoneDir],
-      kv: Map[String, String], docSchema: String)
+      kv: Map[String, String], docSchema: String, segments: Seq[SegmentFiles] = Nil)
 
-  /** Bumped when manifest.json changes shape; readers reject other values. */
-  private[index] final val ManifestFormat = 2
+  /** Bumped when manifest.json changes shape; readers reject other values
+    * (3: segments list their file pairs). */
+  private[index] final val ManifestFormat = 3
   private final val ManifestFile = "manifest.json"
   private val Json = new ObjectMapper().registerModule(DefaultScalaModule)
 
@@ -228,10 +248,14 @@ object IndexStore {
       throw new IllegalStateException(
         s"concurrent manifest writer at $dir: writing v$v but LATEST is v$cur " +
         s"(expected v${v - 1}); the store supports one writer at a time")
+    require(m.segments.map(_.path).sorted == m.epochs.map(_.path).distinct.sorted,
+      s"manifest v$v lists the file pairs of ${m.segments.map(_.path).sorted.mkString(", ")} " +
+        s"for the segments ${m.epochs.map(_.path).distinct.sorted.mkString(", ")}")
     writeManifestFile(dir, v, m.copy(
       epochs = m.epochs.sortBy(e => (e.epoch, e.field)),
       checkpoints = m.checkpoints.sortBy(_.epoch),
-      tombstones = m.tombstones.sortBy(_.epoch)))
+      tombstones = m.tombstones.sortBy(_.epoch),
+      segments = m.segments.sortBy(_.path)))
     commitVersion(dir, v)
   }
 
@@ -283,23 +307,26 @@ object IndexStore {
 
   // ---- segment-file writers, the one write step of each file kind,
   // shared by writeSegment (create and appendEpoch, straight from the
-  // build's partitions) and compact (after its own exchanges: its merged
-  // inputs are not laid out). Each writer owns its file's sort and
-  // options, so no second copy can drift (one in compact did in r4: 128
-  // MB doc groups + a coalesce(1) dictionary, silently degrading every
-  // post-compaction store). The per-file layout IS the read-path
-  // contract:
+  // build's partitions) and compact (after its one exchange per file
+  // kind). Each writer owns its file's sort and options, so no second
+  // copy can drift (one in compact did in r4: 128 MB doc groups + a
+  // coalesce(1) dictionary, silently degrading every post-compaction
+  // store). The layout IS the read-path contract:
+  //  - file pairs: docs file p and postings file p of a segment hold
+  //    exactly the same docs, the ids of a window [from, until) that the
+  //    manifest records with the pair (`FilePair`). A build's windows are
+  //    its shard-grid cuts, so a pair holds whole grid shards of its
+  //    segment; load reads pair p as search partition p (shard table p
+  //    beside docs partition p), with no exchange;
   //  - docs: every file docId-ascending, the files' docId ranges
-  //    pairwise disjoint (lookupDocs' pushed-down IN filter prunes a
-  //    top-k fetch to the row groups holding its ids);
+  //    pairwise disjoint within a segment (a partial compaction's
+  //    window may overlap other segments');
   //  - postings: every file sorted by (field, term, shard), so a term
   //    lookup prunes row groups within each file (the FST/sstable
-  //    term-dictionary analogue, SURVEY.md section 4 O3); no reader
-  //    needs a global term range (load repartitions by shard, compact
-  //    groups by key);
+  //    term-dictionary analogue, SURVEY.md section 4 O3);
   //  - termstats: every file sorted by (field, term); its rows are
-  //    partial dfs, one per (field, term) of the partition that wrote
-  //    it, and readers sum df per (field, term) over the files (load).
+  //    partial dfs, one per (field, term) of the pair that wrote it, and
+  //    readers sum df per (field, term) over the files (load).
 
   private def writePostingsParquet(postings: DataFrame, path: String): Unit =
     postings
@@ -341,10 +368,11 @@ object IndexStore {
     * postings, so each partition writes its docs, its sorted posting
     * rows and its partial term dfs as they are. Only a fast-fuzzy
     * segment's SymSpell dictionary derives from the aggregated
-    * `termStats`.
+    * `termStats`. Returns the segment's file pairs.
     */
-  private def writeSegment(idx: BuiltIndex, segDir: String): Unit = {
-    require(idx.docRanges.nonEmpty, "writeSegment writes an in-memory build's partitions")
+  private def writeSegment(idx: BuiltIndex, segDir: String): Seq[FilePair] = {
+    val ranges = idx.docRanges.getOrElse(
+      throw new IllegalArgumentException("writeSegment writes an in-memory build's partitions"))
     writePostingsParquet(idx.postings.toDF(), s"$segDir/postings.parquet")
     writeDocsParquet(idx.docs, s"$segDir/docs.parquet")
     writeTermstatsParquet(
@@ -353,6 +381,45 @@ object IndexStore {
     if (idx.config.fastFuzzy)
       writeSymspellParquet(idx.termStats, math.max(1, idx.config.buildPartitions / 4),
         s"$segDir/symspell.parquet")
+    filePairs(segDir, ranges)
+  }
+
+  /** The file pairs just written under `segDir`, partition p's docs and
+    * postings files with the window `ranges(p)`. A partition with no
+    * docs file holds no live doc and makes no pair.
+    */
+  private def filePairs(segDir: String, ranges: IndexedSeq[DocRange]): Seq[FilePair] = {
+    val docs = partFiles(segDir, "docs.parquet")
+    val postings = partFiles(segDir, "postings.parquet")
+    require(postings.keySet.subsetOf(docs.keySet) && docs.keySet.forall(_ < ranges.size),
+      s"$segDir: docs files of partitions ${docs.keySet.toSeq.sorted.mkString(",")} and " +
+        s"postings files of ${postings.keySet.toSeq.sorted.mkString(",")} do not pair up " +
+        s"over ${ranges.size} partitions")
+    ranges.indices.flatMap(p =>
+      docs.get(p).map(d => FilePair(d, postings.get(p), ranges(p).from, ranges(p).until)))
+  }
+
+  /** The parquet data files Spark wrote under `path`. */
+  private def parquetParts(path: java.nio.file.Path): Seq[java.nio.file.Path] = {
+    val listing = Files.list(path)
+    try listing.iterator().asScala.filter { p =>
+      val name = p.getFileName.toString
+      name.startsWith("part-") && name.endsWith(".parquet")
+    }.toVector
+    finally listing.close()
+  }
+
+  /** The files of one kind under `segDir` by the partition that wrote
+    * each (Spark names a file `part-NNNNN-...` after its partition), as
+    * paths relative to the segment dir. */
+  private def partFiles(segDir: String, kind: String): Map[Int, String] = {
+    val byPart = parquetParts(Paths.get(segDir, kind)).map { p =>
+      val name = p.getFileName.toString
+      name.stripPrefix("part-").takeWhile(_.isDigit).toInt -> s"$kind/$name"
+    }
+    require(byPart.map(_._1).distinct.size == byPart.size,
+      s"$segDir/$kind holds several files of one partition")
+    byPart.toMap
   }
 
   private def writeLineage(idx: BuiltIndex, dir: String, epoch: Int): Unit = {
@@ -390,7 +457,7 @@ object IndexStore {
     val staging = root.resolve("_staging-seg-00000")
     if (Files.exists(staging)) deleteTree(staging)
     val idx = IndexBuilder.build(df, config)
-    writeSegment(idx, staging.toString)
+    val pairs = writeSegment(idx, staging.toString)
     if (Files.exists(root)) {
       Seq("_manifest", "_lineage", "_deletes").foreach(d => deleteTree(root.resolve(d)))
       val listing = Files.list(root)
@@ -410,26 +477,28 @@ object IndexStore {
       config.buildPartitions, config.fastFuzzy, config.tokenizers,
       docIdStrategy = config.docIdStrategy)
     commit(dir, 1, Manifest(ManifestFormat, epochs, configRow,
-      Seq(CheckpointRow(0, snapshotId, 0L)), Nil, Map.empty, readBack(idx.docs.schema).json))
+      Seq(CheckpointRow(0, snapshotId, 0L)), Nil, Map.empty, readBack(idx.docs.schema).json,
+      Seq(SegmentFiles("seg-00000", pairs))))
     idx.unpersist()
     load(df.sparkSession, dir)
   }
 
   /** Load the committed view: union of all segments, with every
     * tombstone (upsert and delete-by-query) applied once — deleted docs
-    * leave both the doc store and the postings, whose shard tables are
-    * co-partitioned by docId shard like an in-memory build's
-    * (IndexBuilder.shardTables) and built by the first read, so no
-    * scorer ever sees a delete set and no query pays an exchange. df/avgdl statistics include
-    * not-yet-compacted deleted docs — the same semantics as
-    * Lucene/tantivy segment deletes before a merge — so every live doc
-    * scores as if the deleted ones were still filtered per query.
+    * leave both the doc store and the postings, which are partitioned
+    * like an in-memory build's (docs partition p beside shard table p),
+    * so no scorer ever sees a delete set and no query pays an exchange.
+    * df/avgdl statistics include not-yet-compacted deleted docs — the
+    * same semantics as Lucene/tantivy segment deletes before a merge —
+    * so every live doc scores as if the deleted ones were still
+    * filtered per query. See `loadManifest` for the two partitionings.
     *
     * @param cacheDocs false = the SCALE default: stored fields stream
-    *   from the docId-sorted segment parquet (top-k lookups prune to k
-    *   row groups, QueryEngine.lookupDocs) and only postings/termstats
-    *   pin memory. True pins the doc store too — only sane when the
-    *   corpus fits executor memory (interactive small-table sessions).
+    *   from the docId-sorted segment parquet (top-k lookups read only
+    *   the files whose window holds an id, QueryEngine.lookupDocs) and
+    *   only postings/termstats pin memory. True pins the doc store too —
+    *   only sane when the corpus fits executor memory (interactive
+    *   small-table sessions).
     * @param atVersion 0 = the committed LATEST; a positive version pins
     *   the load to that manifest snapshot — combine with
     *   `gc(retention >= R)` so the pinned version's files survive
@@ -445,6 +514,10 @@ object IndexStore {
     segPaths.map(p => spark.read.schema(schema).parquet(s"$dir/$p/$file"))
       .reduce(_ unionByName _)
 
+  /** One parquet file as a frame of exactly one partition. */
+  private def wholeFile(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    spark.read.format(classOf[WholeFileParquet].getName).schema(schema).load(path)
+
   /** Every docId the manifest's tombstone dirs hold (not deduplicated). */
   private def tombstoneScan(spark: SparkSession, dir: String,
       tombs: Seq[TombstoneDir]): Option[DataFrame] =
@@ -457,8 +530,8 @@ object IndexStore {
 
   /** Tombstones gathered per docId shard — the delete set stays
     * distributed (each row bounded by the shard width) instead of a
-    * driver-collected closure Set. Shared by load (above its broadcast
-    * gate) and compact.
+    * driver-collected array. Shared by load (above its broadcast gate)
+    * and compact.
     */
   private def delsByShard(deletes: DataFrame, shardDocs: Int) =
     deletes
@@ -493,67 +566,116 @@ object IndexStore {
       keep.map(dec.docIds), keep.map(dec.tfs), keep.map(dec.norms)))
   }
 
+  /** `rows` without the docs in `dels` (sorted, distinct, every
+    * tombstone of the store): the rows of a shard holding none of them
+    * pass untouched, the rest go through `liveRow`. */
+  private def liveRows(rows: Iterator[PostingRow], dels: Array[Long],
+      shardDocs: Int): Iterator[PostingRow] =
+    rows.flatMap { p =>
+      val from = p.shard.toLong * shardDocs
+      val at = java.util.Arrays.binarySearch(dels, from)
+      val next = if (at >= 0) at else -at - 1
+      if (next < dels.length && dels(next) < from + shardDocs) liveRow(p, dels) else Some(p)
+    }
+
   /** Tombstone rows up to which load collects the ids driver-side and
     * broadcasts them (slim docId longs: 4M rows ≈ 32 MB).
     */
   private[index] final val BroadcastTombstones = 4000000L
 
-  /** A manifest's delete set, in the two shapes its consumers join: the
-    * docIds (the doc store's anti-join) and, built on first use, each
-    * shard's sorted ids (the postings re-encode).
+  /** A manifest's delete set: `ids`, the docIds as a frame (the doc
+    * store's anti-join), built on first use, and under the broadcast
+    * gate `sorted`, the same ids collected on the driver, distinct and
+    * ascending.
     */
-  private final class Deletes(val ids: DataFrame, byShardOf: => Dataset[ShardDels]) {
-    lazy val byShard: Dataset[ShardDels] = byShardOf
+  private final class Deletes(idsOf: => DataFrame, val sorted: Option[Array[Long]]) {
+    lazy val ids: DataFrame = idsOf
   }
 
-  /** The manifest's tombstones, read once. Both joins sit INSIDE the
-    * frames persist() may freeze, and a cached plan never gets AQE's
-    * runtime broadcast conversion (CLAUDE.md): make the broadcast
+  /** The manifest's tombstones, read once. The joins they feed sit
+    * INSIDE frames persist() may freeze, and a cached plan never gets
+    * AQE's runtime broadcast conversion (CLAUDE.md): make the broadcast
     * decision explicitly, gated. The manifest's row counts decide the
     * gate without a job; under it ONE plain scan collects the ids
-    * (deduplicated driver-side) into driver-local broadcast frames,
-    * above it both shapes stay distributed, for plain shuffle joins
-    * rather than sort-merging the whole doc store against the delete
-    * set.
+    * (deduplicated driver-side) and `ids` is a driver-local broadcast
+    * frame, above it the distinct scan, for plain shuffle joins rather
+    * than sort-merging the whole doc store against the delete set.
     */
-  private def deletes(spark: SparkSession, dir: String, m: Manifest, shardDocs: Int,
+  private def deletes(spark: SparkSession, dir: String, m: Manifest,
       broadcastTombstones: Long): Option[Deletes] =
     tombstoneScan(spark, dir, m.tombstones).map { s =>
       if (m.tombstones.map(_.rows).sum <= broadcastTombstones) {
         val ids = s.collect().map(_.getLong(0)).distinct
+        java.util.Arrays.sort(ids)
         new Deletes(broadcast(spark.createDataset(ids.toSeq)(Encoders.scalaLong).toDF("docId")),
-          broadcast(spark.createDataset(ids.groupBy(id => (id / shardDocs).toInt)
-            .map { case (shard, d) => ShardDels(shard, d.sorted) }.toSeq)(
-            Encoders.product[ShardDels])))
-      } else {
-        val d = s.distinct()
-        new Deletes(d, delsByShard(d, shardDocs))
-      }
+          Some(ids))
+      } else new Deletes(s.distinct(), None)
     }
 
-  /** The live stored docs: the segments' docs union minus the delete set. */
-  private def liveDocs(spark: SparkSession, dir: String, m: Manifest,
-      dels: Option[Deletes]): DataFrame = {
-    val all = readSegments(spark, dir, m.epochs.map(_.path).distinct, "docs.parquet",
-      docSchemaOf(m))
-    dels.fold(all)(d => all.join(d.ids, Seq("docId"), "left_anti"))
-  }
+  /** `docs` minus the delete set. */
+  private def withoutTombstones(docs: DataFrame, dels: Option[Deletes]): DataFrame =
+    dels.fold(docs)(d => docs.join(d.ids, Seq("docId"), "left_anti"))
 
+  /** The index of a manifest, partitioned one of two ways.
+    *
+    * Paired (up to `broadcastTombstones` tombstone rows, the regime of
+    * every append-and-read loop): search partition p is file pair p of
+    * the manifest (`FilePair`, segments in path order). Docs partition p
+    * is docs file p read whole (`WholeFileParquet`, never split or
+    * packed with another file), filtered against the broadcast
+    * tombstone ids, so docId-ascending; shard table p is built from
+    * postings file p alone, its tombstoned docs dropped by `liveRow`
+    * against the same ids, with no exchange, inside the first search's
+    * job. `docRanges` are the pairs' windows, so a capped search scores
+    * and fetches in one job (QueryEngine.searchWithDocs) and
+    * `lookupDocs` reads only the files whose window holds an id. A grid shard written by several segments
+    * sits in several partitions, but a doc's postings are all in its
+    * own pair, so per-doc scores are the same as in any other layout.
+    *
+    * Shuffled (heavy churn above the gate, where the ids stay
+    * distributed): the docs are the segments' docs anti-joined with the
+    * distinct tombstones, and the postings meet their shard's tombstones
+    * in a shuffle join and go through one shard repartition
+    * (`IndexBuilder.shardTables`), with no range table.
+    *
+    * Either way the tables freeze and build on the first read, so load
+    * itself plans and runs nothing over the postings; its one job is the
+    * tombstone collect under the gate.
+    */
   private[index] def loadManifest(spark: SparkSession, dir: String, m: Manifest,
       cacheDocs: Boolean, broadcastTombstones: Long = BroadcastTombstones): BuiltIndex = {
     val config = configOf(m.config)
     val segPaths = m.epochs.map(_.path).distinct
-    val stored = readSegments(spark, dir, segPaths, "postings.parquet", PostingsSchema)
-      .as(Encoders.product[PostingRow])
-    val dels = deletes(spark, dir, m, config.shardDocs, broadcastTombstones)
-    val docs = liveDocs(spark, dir, m, dels)
-    val live = dels.fold(stored)(d => withoutDeleted(stored, d.byShard))
-    // shards over the whole docId space: after compaction the store's
-    // numDocs falls below its highest docId (ids are never renumbered);
-    // the tables freeze and build on the first read, so load itself
-    // plans and runs nothing over the postings
-    val span = m.epochs.map(_.docIdEnd).max
-    val shards = new ShardTables(IndexBuilder.shardTables(live, config, span))
+    val docSchema = docSchemaOf(m)
+    val dels = deletes(spark, dir, m, broadcastTombstones)
+    val (docs, shards, docRanges) = dels.map(_.sorted) match {
+      case Some(None) =>
+        val stored = readSegments(spark, dir, segPaths, "postings.parquet", PostingsSchema)
+          .as(Encoders.product[PostingRow])
+        val live = withoutDeleted(stored, delsByShard(dels.get.ids, config.shardDocs))
+        // shards over the whole docId space: after compaction the
+        // store's numDocs falls below its highest docId (ids are never
+        // renumbered)
+        val span = m.epochs.map(_.docIdEnd).max
+        (withoutTombstones(readSegments(spark, dir, segPaths, "docs.parquet", docSchema), dels),
+          new ShardTables(IndexBuilder.shardTables(live, config, span)), None)
+      case sorted =>
+        val pairs = m.segments.flatMap(s => s.pairs.map(p => s.path -> p))
+        require(pairs.nonEmpty, s"manifest of $dir lists no file pairs")
+        val stored = pairs.map { case (seg, p) =>
+          wholeFile(spark, s"$dir/$seg/${p.docs}", docSchema)
+        }.reduce(_ union _)
+        // the ids go out once as a broadcast variable, which both the
+        // docs filter and the table build read: no broadcast exchange
+        // (its collect job would run in the first read)
+        val dead = sorted.flatten.map(spark.sparkContext.broadcast(_))
+        val docs = dead.fold(stored) { d =>
+          val live = udf((docId: Long) => java.util.Arrays.binarySearch(d.value, docId) < 0)
+          stored.filter(live(col("docId")))
+        }
+        (docs, new ShardTables(pairedTables(spark, dir, pairs, dead, config.shardDocs)),
+          Some(pairs.map(p => DocRange(p._2.docIdFrom, p._2.docIdUntil)).toIndexedSeq))
+    }
     val termStats = readSegments(spark, dir, segPaths, "termstats.parquet", TermStatsSchema)
       .groupBy("field", "term").agg(sum("df").as("df"))
     val byField = m.epochs.groupBy(_.field)
@@ -566,8 +688,24 @@ object IndexStore {
       if (!config.fastFuzzy) None
       else Some(readSegments(spark, dir, segPaths, "symspell.parquet", SymSpellSchema)
         .groupBy("field", "variant", "term").agg(sum("df").as("df")))
-    new BuiltIndex(docs, shards, termStats, numDocs, fieldTokens, config, symspell)
+    new BuiltIndex(docs, shards, termStats, numDocs, fieldTokens, config, symspell, docRanges)
       .persist(cacheDocs)
+  }
+
+  /** Shard table p of a paired load, built from postings file p alone
+    * (an empty table when the pair has none), its tombstoned docs
+    * dropped against `dels` (sorted, distinct): a narrow read, no
+    * exchange. */
+  private def pairedTables(spark: SparkSession, dir: String, pairs: Seq[(String, FilePair)],
+      dels: Option[Broadcast[Array[Long]]], shardDocs: Int): RDD[ShardTable] = {
+    val enc = Encoders.product[PostingRow]
+    // a pair with no postings file reads as one empty partition
+    val none = spark.createDataset(spark.sparkContext.parallelize(Seq.empty[PostingRow], 1))(enc)
+    val postings = pairs.map { case (seg, p) =>
+      p.postings.fold(none)(f => wholeFile(spark, s"$dir/$seg/$f", PostingsSchema).as(enc))
+    }.reduce(_ union _).rdd
+    postings.mapPartitions(rows => Iterator.single(ShardTable.of(
+      dels.fold(rows)(d => liveRows(rows, d.value, shardDocs)))), preservesPartitioning = true)
   }
 
   /** Next epoch number, clearing BOTH sets: delete-only epochs exist
@@ -581,19 +719,11 @@ object IndexStore {
   /** Rows of the parquet files just written under `path`, summed from
     * their footers on the driver — no Spark job, no data read.
     */
-  private def parquetRows(path: String): Long = {
-    val listing = Files.list(Paths.get(path))
-    try listing.iterator().asScala
-      .filter { p =>
-        val name = p.getFileName.toString
-        name.startsWith("part-") && name.endsWith(".parquet")
-      }
-      .map { p =>
-        val r = ParquetFileReader.open(new LocalInputFile(p))
-        try r.getRecordCount finally r.close()
-      }.sum
-    finally listing.close()
-  }
+  private def parquetRows(path: String): Long =
+    parquetParts(Paths.get(path)).map { p =>
+      val r = ParquetFileReader.open(new LocalInputFile(p))
+      try r.getRecordCount finally r.close()
+    }.sum
 
   /** Count the tombstone dir just written for `epoch`: its manifest
     * entry, or None after deleting it when empty — an empty dir would
@@ -622,8 +752,15 @@ object IndexStore {
     */
   def drop(dir: String): Unit = deleteTree(Paths.get(dir))
 
-  def lineage(spark: SparkSession, dir: String): DataFrame =
+  /** Per-partition build metrics of the committed epochs: an epoch no
+    * manifest version committed (an append that failed after its
+    * segment write) leaves `_lineage/epoch=N` rows behind, which this
+    * view drops. */
+  def lineage(spark: SparkSession, dir: String): DataFrame = {
+    val m = manifestAt(dir)._2
     spark.read.parquet(s"$dir/_lineage")
+      .filter(col("epoch").isin((m.epochs.map(_.epoch) ++ m.checkpoints.map(_.epoch)).distinct: _*))
+  }
 
   def checkpoints(spark: SparkSession, dir: String): Seq[CheckpointRow] =
     readManifest(spark, dir)._3
@@ -631,17 +768,25 @@ object IndexStore {
   /** One-row health/info summary of the committed view — the engine's
     * analogue of the reference's health/info endpoints (SURVEY.md
     * section 2.11): manifest version, epoch/segment counts, live docs,
-    * pending tombstones, checkpoint count.
+    * pending tombstones, checkpoint count, and two read-cost signals:
+    * `searchPartitions`, the file pairs a read scans (one search
+    * partition each; it grows by an append's pairs until a compaction),
+    * and `tombstoneRatio`, the share of stored docs that are tombstoned
+    * (they still cost postings until a compaction). Both come from the
+    * manifest and the pending-delete count: no extra job.
     */
   def info(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val (v, m) = manifestAt(dir)
     val pendingDeletes =
       tombstoneScan(spark, dir, m.tombstones).map(_.distinct().count()).getOrElse(0L)
-    val liveDocs = m.epochs.groupBy(_.epoch).map(_._2.head.numDocs).sum - pendingDeletes
-    Seq((v, m.epochs.map(_.epoch).distinct.size,
-      m.epochs.map(_.path).distinct.size, liveDocs, pendingDeletes, m.checkpoints.size))
-      .toDF("manifestVersion", "epochs", "segments", "liveDocs", "pendingDeletes", "checkpoints")
+    val storedDocs = m.epochs.groupBy(_.epoch).map(_._2.head.numDocs).sum
+    val tombstoneRatio = if (storedDocs == 0L) 0.0 else pendingDeletes.toDouble / storedDocs
+    Seq((v, m.epochs.map(_.epoch).distinct.size, m.epochs.map(_.path).distinct.size,
+      storedDocs - pendingDeletes, pendingDeletes, m.checkpoints.size,
+      m.segments.map(_.pairs.size).sum, tombstoneRatio))
+      .toDF("manifestVersion", "epochs", "segments", "liveDocs", "pendingDeletes", "checkpoints",
+        "searchPartitions", "tombstoneRatio")
   }
 
   /** Append one ingest epoch (INSERT-as-UPSERT by primary key,
@@ -678,7 +823,7 @@ object IndexStore {
     val idx = IndexBuilder.build(newDocs, config, base)
     try {
       val segName = f"seg-$epoch%05d"
-      writeSegment(idx, s"$dir/$segName")
+      val pairs = writeSegment(idx, s"$dir/$segName")
       writeLineage(idx, dir, epoch)
       writeUpserts(spark, dir, m, idx, deletesDir(dir, epoch))
       // a pure-insert append (no key overlap) commits no tombstone dir
@@ -688,7 +833,8 @@ object IndexStore {
           idx.fieldTokens.getOrElse(f, 0L)))
       commit(dir, basis + 1, m.copy(epochs = newEpochs,
         checkpoints = m.checkpoints :+ CheckpointRow(epoch, snapshotId, 0L),
-        tombstones = m.tombstones ++ newTombs))
+        tombstones = m.tombstones ++ newTombs,
+        segments = m.segments :+ SegmentFiles(segName, pairs)))
     } finally idx.unpersist()
     true
   }
@@ -758,8 +904,9 @@ object IndexStore {
           .write.mode(SaveMode.Overwrite).parquet(path)
       } finally probe.destroy()
     } else {
-      val oldDocs = liveDocs(spark, dir, m,
-        deletes(spark, dir, m, idx.config.shardDocs, BroadcastTombstones))
+      val oldDocs = withoutTombstones(
+        readSegments(spark, dir, m.epochs.map(_.path).distinct, "docs.parquet", docSchemaOf(m)),
+        deletes(spark, dir, m, BroadcastTombstones))
       val newKeys = idx.docs.select(keyCols.map(col): _*)
       val rhs =
         if (idx.numDocs <= BroadcastKeys)
@@ -823,6 +970,14 @@ object IndexStore {
     * (field, term, shard), drop tombstoned docIds, rewrite as one
     * segment — postings-level, no re-tokenization.
     *
+    * The merged segment keeps the file-pair layout: its docId window is
+    * cut like a build's (`IndexBuilder.shardCuts` over buildPartitions),
+    * and run p's docs and postings land in partition p through one
+    * exchange per file kind (`repartitionById`), so docs file p and
+    * postings file p hold the same docs. Each pair writes its own
+    * partial term dfs, read back from its written postings file. A run
+    * whose docs were all deleted writes no pair.
+    *
     * @param maxSegments bounds one pass (the reference's LSM tiered
     *   framing, bucket.rs:72-74): the N smallest segments by doc count
     *   merge, the rest stay untouched, so a single compaction's
@@ -849,6 +1004,19 @@ object IndexStore {
       else segs.sortBy(s => (s._3, s._1)).take(maxSegments)
     val selectedEpochs = selected.map(_._1).toSet
     val unselected = segs.filterNot(s => selectedEpochs(s._1))
+    // the merged epoch keeps the id-space window of what it merged
+    // (ids are never renumbered); unmerged epochs keep their rows — a
+    // base of 0 would claim an id range overlapping epochs that were
+    // NOT selected by a partial compaction
+    val mergedDocIdEnd = m.epochs.filter(e => selectedEpochs(e.epoch)).map(_.docIdEnd).max
+    val mergedDocIdBase = m.epochs.filter(e => selectedEpochs(e.epoch)).map(_.docIdBase).min
+    val cuts = IndexBuilder.shardCuts(mergedDocIdBase, mergedDocIdEnd - mergedDocIdBase,
+      config.shardDocs, config.buildPartitions)
+    val runs = cuts.length - 1
+    // the run holding a docId: interior cuts are grid multiples, so every
+    // doc of a shard falls in the run holding the shard's first id in
+    // the window
+    val runOf = udf((docId: Long) => IndexBuilder.cutIndex(cuts, docId))
 
     val deletes = tombstoneScan(spark, dir, m.tombstones).map(_.distinct())
     val docSchema = docSchemaOf(m)
@@ -865,39 +1033,31 @@ object IndexStore {
     // a driver-collected Set / task closure)
     val merged = deletes.fold(postingsSel)(d =>
         withoutDeleted(postingsSel, delsByShard(d, config.shardDocs)))
-      .groupByKey(p => (p.field, p.term, p.shard))(
-        Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.scalaInt))
-      .mapGroups { (key, rows) =>
-        val (field, term, shard) = key
-        // a merged segment's docId window may interleave with another's
-        // (partial passes), so the rows merge by docId, not by concat
-        val all = rows.flatMap { p =>
-          val dec = PostingCodec.decodeAll(p.bytes, p.blockOffset, p.blockLast)
-          dec.docIds.indices.map(i => (dec.docIds(i), dec.tfs(i), dec.norms(i)))
-        }.toArray.sortBy(_._1)
-        IndexBuilder.encodeRow(field, term, shard, all.map(_._1), all.map(_._2), all.map(_._3))
-      }(Encoders.product[PostingRow])
+      .repartitionById(runs, runOf(greatest(col("shard").cast("long") * config.shardDocs,
+        lit(mergedDocIdBase))))
+      .sortWithinPartitions("field", "term", "shard")
+      .mapPartitions(mergeRuns)(Encoders.product[PostingRow])
     val mergedEpoch = nextEpoch(m)
     val segName = f"seg-$mergedEpoch%05d"
-    val parts = math.max(1, config.buildPartitions / 4)
-    writePostingsParquet(merged.toDF().repartitionByRange(parts, col("field"), col("term")),
-      s"$dir/$segName/postings.parquet")
-    writeDocsParquet(docsSel.repartitionByRange(parts, col("docId")).sortWithinPartitions("docId"),
-      s"$dir/$segName/docs.parquet")
+    val segDir = s"$dir/$segName"
+    writePostingsParquet(merged.toDF(), s"$segDir/postings.parquet")
+    writeDocsParquet(docsSel.repartitionById(runs, runOf(col("docId"))).sortWithinPartitions("docId"),
+      s"$segDir/docs.parquet")
+    val pairs = filePairs(segDir, DocRange.ofCuts(cuts))
     // dictionary + stats derive from the WRITTEN postings: one merge
     // computation total instead of re-merging per aggregate
-    val mergedOnDisk = readSegments(spark, dir, Seq(segName), "postings.parquet", PostingsSchema)
-    writeTermstatsParquet(
-      mergedOnDisk.groupBy("field", "term").agg(sum("numDocs").as("df"))
-        .repartitionByRange(math.max(1, parts / 4), col("field"), col("term")),
-      s"$dir/$segName/termstats.parquet")
+    val mergedOnDisk = pairs.flatMap(_.postings)
+      .map(f => wholeFile(spark, s"$segDir/$f", PostingsSchema))
+      .reduceOption(_ union _)
+      .getOrElse(spark.createDataFrame(java.util.Collections.emptyList[Row](), PostingsSchema))
+    writeTermstatsParquet(partialDfs(mergedOnDisk), s"$segDir/termstats.parquet")
     if (config.fastFuzzy)
       writeSymspellParquet(
         readSegments(spark, dir, Seq(segName), "termstats.parquet", TermStatsSchema),
-        parts, s"$dir/$segName/symspell.parquet")
+        math.max(1, config.buildPartitions / 4), s"$segDir/symspell.parquet")
     val newFieldTokens = mergedOnDisk.groupBy("field").agg(sum("sumTf").as("t"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val liveDocs = parquetRows(s"$dir/$segName/docs.parquet")
+    val liveDocs = parquetRows(s"$segDir/docs.parquet")
     // partial pass: tombstones targeting docs still physically present
     // in unmerged segments survive, rewritten under the merged epoch
     // (data before manifest — the dir is orphan until the commit below;
@@ -910,12 +1070,6 @@ object IndexStore {
           .write.mode(SaveMode.Overwrite).parquet(deletesDir(dir, mergedEpoch))
         keepTombstones(dir, mergedEpoch)
       }
-    // the merged epoch keeps the id-space window of what it merged
-    // (ids are never renumbered); unmerged epochs keep their rows — a
-    // base of 0 would claim an id range overlapping epochs that were
-    // NOT selected by a partial compaction
-    val mergedDocIdEnd = m.epochs.filter(e => selectedEpochs(e.epoch)).map(_.docIdEnd).max
-    val mergedDocIdBase = m.epochs.filter(e => selectedEpochs(e.epoch)).map(_.docIdBase).min
     val newEpochs = m.epochs.filterNot(e => selectedEpochs(e.epoch)) ++
       config.fields.map(f =>
         EpochMeta(mergedEpoch, segName, liveDocs, mergedDocIdBase, mergedDocIdEnd, f,
@@ -926,7 +1080,49 @@ object IndexStore {
     // dirs are NOT deleted here — a reader pinned at an older manifest
     // version still needs them; retention-aware gc() owns deletion,
     // exactly like superseded segment dirs.
-    commit(dir, basis + 1, m.copy(epochs = newEpochs, tombstones = retainedTombstones.toSeq))
+    val selectedPaths = selected.map(_._2).toSet
+    commit(dir, basis + 1, m.copy(epochs = newEpochs, tombstones = retainedTombstones.toSeq,
+      segments = m.segments.filterNot(s => selectedPaths(s.path)) :+ SegmentFiles(segName, pairs)))
+  }
+
+  /** A run's posting rows, sorted by (field, term, shard), as one row
+    * per key: a key held by several segments merges its docs by docId (a
+    * merged segment's window may interleave with another's), a key held
+    * by one passes untouched. Streams one key at a time. */
+  private def mergeRuns(rows: Iterator[PostingRow]): Iterator[PostingRow] = {
+    val in = rows.buffered
+    new Iterator[PostingRow] {
+      def hasNext: Boolean = in.hasNext
+      def next(): PostingRow = {
+        val first = in.next()
+        val same = scala.collection.mutable.ArrayBuffer(first)
+        while (in.hasNext && in.head.shard == first.shard && in.head.term == first.term &&
+            in.head.field == first.field) same += in.next()
+        if (same.size == 1) first
+        else {
+          val all = same.flatMap { p =>
+            val dec = PostingCodec.decodeAll(p.bytes, p.blockOffset, p.blockLast)
+            dec.docIds.indices.map(i => (dec.docIds(i), dec.tfs(i), dec.norms(i)))
+          }.toArray.sortBy(_._1)
+          IndexBuilder.encodeRow(first.field, first.term, first.shard, all.map(_._1),
+            all.map(_._2), all.map(_._3))
+        }
+      }
+    }
+  }
+
+  /** Each partition's partial dfs of `postings` (one row per (field,
+    * term) it holds, df summed over its rows), read from the
+    * (field, term, numDocs) columns only. */
+  private def partialDfs(postings: DataFrame): DataFrame = {
+    val spark = postings.sparkSession
+    spark.createDataset(postings.select("field", "term", "numDocs").queryExecution.toRdd
+      .mapPartitions { rows =>
+        val dfs = new java.util.HashMap[(String, String), java.lang.Long]()
+        rows.foreach(r => dfs.merge((r.getUTF8String(0).toString, r.getUTF8String(1).toString),
+          r.getInt(2).toLong, (a, b) => a + b))
+        dfs.entrySet().iterator().asScala.map(e => TermDf(e.getKey._1, e.getKey._2, e.getValue))
+      })(Encoders.product[TermDf]).toDF()
   }
 
   /** Explicit storage GC with SNAPSHOT RETENTION: delete segment dirs,
@@ -1037,4 +1233,14 @@ private[index] object UpsertKeys {
     def hit(docId: Long, key: UnsafeRow): Boolean =
       keys.contains(key) && java.util.Arrays.binarySearch(tombstones, docId) < 0
   }
+}
+
+/** Parquet read whole: a file is never split into several scan
+  * partitions, so a scan of one file is exactly one partition (a
+  * store's file pair read as one search partition, `IndexStore.load`).
+  * Loaded by class name (`spark.read.format`).
+  */
+final class WholeFileParquet extends ParquetFileFormat {
+  override def isSplitable(sparkSession: SparkSession, options: Map[String, String],
+      path: org.apache.hadoop.fs.Path): Boolean = false
 }

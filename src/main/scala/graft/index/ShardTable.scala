@@ -62,8 +62,10 @@ object ShardTable {
   }
 }
 
-/** An index's postings cache: one persisted `ShardTable` per
-  * shard-local partition (`IndexBuilder.shardTables`). The RDD is
+/** An index's postings cache: one persisted `ShardTable` per search
+  * partition (an in-memory build's docs partition, a store's file
+  * pair, or a heavy-churn store's shard repartition,
+  * `IndexBuilder.shardTables`). The RDD is
   * frozen and persisted on first use — a build materializes it at once
   * (its statistics come from it), a loaded store on its first read —
   * and every search runs over it with no query planning.

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{DoubleType, FloatType, IntegerType, LongType,
 import org.apache.spark.storage.StorageLevel
 
 import graft.analyze.{Analyzer, Levenshtein, SymSpell}
-import graft.index.BuiltIndex
+import graft.index.{BuiltIndex, DocRange}
 
 /** Search clauses: the WHERE-clause surface of the lnx SQL dialect
   * (SURVEY.md section 2.4; lnx-server/src/apis/mod.rs:200-281). Each
@@ -818,17 +818,16 @@ final class QueryEngine(val index: BuiltIndex) {
     * and the result is a local frame, qids ascending, each qid's best
     * first. The gate needs no job: each task returns at most k rows per
     * query, a pass runs one task per shard table and there are at most
-    * buildPartitions tables (an in-memory build's docs partitions,
-    * IndexBuilder.build; a store's shard repartition,
-    * IndexBuilder.shardTables), the sparse and dense passes split the
-    * queries, and no query keeps more rows than the index has docs.
+    * `BuiltIndex.searchPartitions` tables, the sparse and dense passes
+    * split the queries, and no query keeps more rows than the index has
+    * docs.
     * Above it — wide batches at large k — the same pre-merged
     * candidates become a lazy frame under a per-qid window (one hash
     * exchange on qid), which keeps the rows off the driver.
     */
   private[graft] def batchTopK(cands: RDD[ScoredQDoc], k: Int, nQueries: Int,
       f64: Boolean): DataFrame = {
-    val bound = nQueries.toLong * math.min(index.config.buildPartitions.toLong * k, index.numDocs)
+    val bound = nQueries.toLong * math.min(index.searchPartitions.toLong * k, index.numDocs)
     if (bound > driverMergeRows) {
       val preMerged = cands.mapPartitions(it => Scorer.preMerged(it, k, f64).rows(f64))
       Scorer.topKPerQuery(index.spark.createDataFrame(preMerged, batchSchema(f64)), k,
@@ -878,17 +877,18 @@ final class QueryEngine(val index: BuiltIndex) {
     * (score, docAddr) and then reads only those payloads, SURVEY.md
     * section 3.1). Ids no doc carries are absent from the result.
     *
-    * With `BuiltIndex.docRanges` (in-memory builds) the fetch is ONE
-    * job over only the docs partitions whose range holds a requested
-    * id, reading a (docId +: docCols) projection whose physical plan is
-    * memoized in `planCache` (planned once per column list); each task
-    * stops past its partition's largest requested id, matched rows are
-    * converted on the executors and the result is a local frame, in no
-    * particular order. No requested id, no job. Without
-    * ranges (IndexStore.load: docs NOT cached) it is a lazy pushed-down
-    * IN filter: every docs file is docId-sorted and the files' docId
-    * ranges are disjoint, so the scan prunes to the row groups holding
-    * the ids.
+    * With `BuiltIndex.docRanges` (in-memory builds, and stores under
+    * the load's tombstone gate, whose docs partitions are their file
+    * pairs' docs files) the fetch is ONE job over only the docs
+    * partitions whose window holds a requested id, reading a
+    * (docId +: docCols) projection whose physical plan is memoized in
+    * `planCache` (planned once per column list); each task stops past
+    * its partition's largest requested id, matched rows are converted
+    * on the executors and the result is a local frame, in no particular
+    * order. No requested id, no job. Without ranges (a heavy-churn
+    * store) it is a lazy pushed-down IN filter: every docs file is
+    * docId-sorted, so the scan prunes to the row groups holding the
+    * ids.
     */
   def lookupDocs(ids: Seq[Long], docCols: Seq[String]): DataFrame = {
     require(ids.size <= MaxLookupIds, "lookupDocs is for top-k result sets, not bulk reads")
@@ -925,14 +925,14 @@ final class QueryEngine(val index: BuiltIndex) {
     * (searchWithDocs)? Only while every docs partition's local top-k
     * together stays a top-k page: partitions x k <= MaxLookupIds. */
   private[graft] def fetchesInScoringJob(k: Int): Boolean =
-    index.docRanges.exists(r => (r.length - 1).toLong * k <= MaxLookupIds)
+    index.docRanges.exists(r => r.length.toLong * k <= MaxLookupIds)
 
   /** Top-k (score desc, docId asc, the searchF32 order) with stored
     * fields, as a local frame (docId +: docCols :+ score float) in that
     * order. Needs `BuiltIndex.docRanges` and k <= MaxLookupIds.
     *
     * Under the `fetchesInScoringJob` gate it is ONE job: shard table p
-    * and docs partition p cover the same docId range, so task p takes
+    * and docs partition p hold the same docs, so task p takes
     * its partition's top-k and reads those ids' stored fields from its
     * own docs partition (docId-ascending, so the scan stops past the
     * largest wanted id); the driver merges the local top-ks — exact,
@@ -1019,9 +1019,6 @@ private[query] object DocFetch {
   /** Plan-LRU key of the docs projection the fetches read. */
   final case class Projection(cols: Seq[String])
 
-  /** The requested ids (distinct, sorted) of every docs partition whose
-    * range [r(p), r(p+1)) holds at least one; ids outside every range
-    * map to no partition. */
   /** The stored rows of the wanted `ids` (distinct, ascending) in one
     * docs partition, whose rows are docId-ascending: the scan stops at
     * the first row at or past the largest wanted id. */
@@ -1040,14 +1037,22 @@ private[query] object DocFetch {
     out.result()
   }
 
-  def byPartition(r: Array[Long], ids: Seq[Long]): Map[Int, Array[Long]] =
-    ids.distinct.flatMap { id =>
-      // the first bound above id closes the range holding it; empty
-      // partitions (equal bounds) are stepped over
-      var lo = 0; var hi = r.length
-      while (lo < hi) { val m = (lo + hi) >>> 1; if (r(m) <= id) lo = m + 1 else hi = m }
-      if (lo >= 1 && lo < r.length) Some((lo - 1) -> id) else None
-    }.groupBy(_._1).map { case (p, xs) => p -> xs.map(_._2).sorted.toArray }
+  /** The requested ids (distinct, ascending) of every docs partition
+    * whose window holds at least one. Windows may overlap (a store's
+    * partial compaction), so an id can go to several partitions; ids
+    * outside every window go to none. */
+  def byPartition(ranges: IndexedSeq[DocRange], ids: Seq[Long]): Map[Int, Array[Long]] = {
+    val sorted = ids.distinct.sorted.toArray
+    // the first index of `sorted` at or past `id`
+    def from(id: Long): Int = {
+      val at = java.util.Arrays.binarySearch(sorted, id)
+      if (at >= 0) at else -at - 1
+    }
+    ranges.indices.flatMap { p =>
+      val (a, b) = (from(ranges(p).from), from(ranges(p).until))
+      if (a < b) Some(p -> java.util.Arrays.copyOfRange(sorted, a, b)) else None
+    }.toMap
+  }
 }
 
 /** Builds the SymSpell delete-variant dictionary from a term-stats

@@ -182,12 +182,17 @@ final class LnxSession(val spark: SparkSession) {
   /** Attach a persisted IndexStore index as a queryable table — the
     * SCALE entry point: stored fields stream from the docId-sorted
     * segment parquet (docs NOT cached), only postings/termstats pin
-    * memory, and no per-session rebuild happens. Ingest for attached
-    * tables goes through IndexStore.appendEpoch + re-attach; a mutation
-    * through this session falls back to the in-memory path on a
-    * session-local copy (the store itself is never modified).
-    */
-  /** @param atVersion 0 = the committed LATEST; a positive version pins
+    * memory, and no per-session rebuild happens. The store keeps its
+    * segments' partitioning (one search partition per file pair,
+    * IndexStore.load), so a capped search statement on it scores and
+    * fetches in one job like an in-memory table's (`cappedFetch`), and
+    * the first statement builds the shard tables inside that job, with
+    * no shuffle. Ingest for attached tables goes through
+    * IndexStore.appendEpoch + re-attach; a mutation through this
+    * session falls back to the in-memory path on a session-local copy
+    * (the store itself is never modified).
+    *
+    * @param atVersion 0 = the committed LATEST; a positive version pins
     *   the attached table to that manifest snapshot (time travel over
     *   the versioned metastore) — pair with `IndexStore.gc(retention)`
     *   so the pinned version's files survive later compactions. Column
@@ -303,7 +308,7 @@ final class LnxSession(val spark: SparkSession) {
         val plan = cappedFetch(s, params) match {
           case Some(f) =>
             val cols = s"docId${f.docCols.map(", " + _).mkString}"
-            val nParts = f.e.index.docRanges.get.length - 1
+            val nParts = f.e.index.docRanges.get.length
             formatted(f.e.searchF32Planned(f.clauses, f.limit)) :+ (
               if (f.e.fetchesInScoringJob(f.limit))
                 s"stored-field fetch: $cols of each docs partition's top ${f.limit}, read by" +
@@ -923,7 +928,7 @@ final class LnxSession(val spark: SparkSession) {
           if (capped && noThresholds) {
             // the flagship shape (fts/fuzzy WHERE + ORDER BY score()
             // LIMIT k, fuzzy.sql) where cappedFetch declined it (LIMIT
-            // above MaxLookupIds, or an attached store's index without
+            // above MaxLookupIds, or a heavy-churn store's index without
             // docId ranges): searchF32 routes eligible queries
             // through block-max WAND (exact vs exhaustive, WandSpec)
             // instead of scoring every matching posting. Thresholded
@@ -1002,8 +1007,10 @@ final class LnxSession(val spark: SparkSession) {
 
   /** The fetch path of a capped search statement — no column predicate,
     * order = score desc, no thresholds, LIMIT <= MaxLookupIds, an index
-    * with docId ranges (in-memory builds; attached stores have none) —
-    * or None when the statement keeps the docs join. The path
+    * with docId ranges (in-memory builds, and attached stores under the
+    * load's tombstone gate, whose search partitions are their file
+    * pairs; a heavy-churn store above it has none) — or None when the
+    * statement keeps the docs join. The path
     * (QueryEngine.searchWithDocs) is one job while partitions x LIMIT
     * <= MaxLookupIds — each task scores its shards and reads its local
     * top-k's stored fields from its own docs partition — and above

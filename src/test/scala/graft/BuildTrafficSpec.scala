@@ -79,7 +79,7 @@ class BuildTrafficSpec extends AnyFunSuite {
       assert(keyRange.shuffleMapStages === 1, keyRange)
       assert(keyRange.shuffleBytes > 0L, keyRange)
       // the premise: both builds cut 8 shards into 4 docs partitions
-      assert(scanIdx.docRanges.get.length - 1 === 4 && keyIdx.docRanges.get.length - 1 === 4)
+      assert(scanIdx.docRanges.get.length === 4 && keyIdx.docRanges.get.length === 4)
     } finally { scanIdx.unpersist(); keyIdx.unpersist() }
   }
 }

@@ -89,6 +89,12 @@ class IndexStoreSpec extends AnyFunSuite {
     val dir = tmpDir()
     val corpus = CodeCorpus.generate(spark, 300, 4).cache()
     IndexStore.create(corpus, config, dir, "snap-0")
+    // the read-cost columns come from the manifest: on a store with no
+    // tombstone, info runs no Spark job at all
+    val (fresh, c) = SparkEvents.of(spark)(IndexStore.info(spark, dir).collect()(0))
+    assert(c.jobs === 0, c)
+    assert(fresh.getAs[Int]("searchPartitions") === 2) // 300 docs = 2 shards of 256
+    assert(fresh.getAs[Double]("tombstoneRatio") === 0.0)
     val modified = corpus.filter(col("path").contains("file_1"))
       .withColumn("content", concat(col("content"), lit(" v2marker")))
     val nMod = modified.count()
@@ -99,6 +105,32 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(row.getAs[Long]("pendingDeletes") === nMod) // superseded docIds
     assert(row.getAs[Long]("liveDocs") === 300L)
     assert(row.getAs[Int]("checkpoints") === 2)
+    // the append's docs (ids 300 until 300 + nMod) sit in one shard: one more pair
+    assert(row.getAs[Int]("searchPartitions") === 3)
+    val loaded = IndexStore.load(spark, dir, cacheDocs = false)
+    try assert(loaded.docRanges.map(_.length) === Some(3))
+    finally loaded.unpersist()
+    assert(row.getAs[Double]("tombstoneRatio") === nMod.toDouble / (300L + nMod))
+  }
+
+  test("a failed append leaves no lineage row for its epoch") {
+    val dir = tmpDir()
+    IndexStore.create(CodeCorpus.generate(spark, 200, 2), config, dir, "snap-0").unpersist()
+    def upserts(from: Long, until: Long, tag: String) = CodeCorpus.generateRange(spark, from, until, 2)
+      .withColumn("content", concat(col("content"), lit(s" $tag")))
+    assert(IndexStore.appendEpoch(upserts(0, 20, "first"), dir, "snap-1"))
+    // a corrupt docs file of the first segment fails the next append's
+    // upsert scan, after its segment and lineage writes
+    val docsFile = java.nio.file.Files.list(java.nio.file.Paths.get(dir, "seg-00000", "docs.parquet"))
+      .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
+    java.nio.file.Files.write(docsFile, "not parquet".getBytes("UTF-8"))
+    intercept[Exception](IndexStore.appendEpoch(upserts(10, 30, "second"), dir, "snap-2"))
+    assert(IndexStore.currentVersion(dir) === 2)
+    assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir, "_lineage", "epoch=2")),
+      "test premise: the failed append wrote lineage for its epoch")
+    val epochs = IndexStore.lineage(spark, dir).select("epoch").distinct().collect()
+      .map(_.get(0).toString.toInt).toSet
+    assert(epochs === Set(0, 1))
   }
 
   test("orphan tombstones from an uncommitted epoch are invisible (crash consistency)") {
@@ -169,17 +201,22 @@ class IndexStoreSpec extends AnyFunSuite {
     // are, once the first read builds them)
     assert(cold.docs.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
     val eu = new QueryEngine(cold)
-    // top-k stored-field lookup pushes the id set into the parquet scan.
-    // Asserted BEFORE any cached load of the same dir: the CacheManager
-    // substitutes by logical-plan equality, so a later cached docs frame
-    // would rewrite this plan into an InMemoryTableScan.
+    // a top-k stored-field lookup reads only the docs files whose window
+    // holds an id, straight from the parquet: one job, one task per
+    // file holding a hit. Asserted BEFORE any cached load of the same
+    // dir: the CacheManager substitutes by logical-plan equality, so a
+    // later cached docs frame would rewrite this plan into an
+    // InMemoryTableScan.
     val ids = eu.searchF32(Seq(Fts("content", "binary search")), 5)
       .collect().map(_.getLong(0)).toSeq
     assert(cold.shards.rdd.getStorageLevel !== org.apache.spark.storage.StorageLevel.NONE)
-    val lookup = eu.lookupDocs(ids, Seq("path"))
-    assert(lookup.count() === ids.size)
-    val plan = lookup.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [In(docId"), plan.take(1500))
+    val ranges = cold.docRanges.getOrElse(fail("a store under the tombstone gate has a range table"))
+    val holding = ids.map(id => ranges.indexWhere(_.contains(id))).distinct.size
+    val (found, c) = SparkEvents.of(spark)(eu.lookupDocs(ids, Seq("path")).collect())
+    assert(found.length === ids.size)
+    assert(c.jobs === 1 && c.jobTasks === Seq(holding), c)
+    val plan = cold.docs.queryExecution.executedPlan.toString
+    assert(plan.contains("FileScan") && !plan.contains("InMemoryTableScan"), plan.take(1500))
     val cached = IndexStore.load(spark, dir)
     val ec = new QueryEngine(cached)
     for (q <- Seq("binary search", "fn license", "needle")) {

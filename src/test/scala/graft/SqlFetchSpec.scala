@@ -147,10 +147,10 @@ class SqlFetchSpec extends AnyFunSuite {
     assert(rows.length === 10)
     val e = files.table("files").engine.get
     val r = e.index.docRanges.get
-    assert(r.length - 1 === 16, "test premise: 16 docs partitions")
+    assert(r.length === 16, "test premise: 16 docs partitions")
     assert(e.fetchesInScoringJob(10), "test premise: 16 x 10 is under the gate")
     assert(c.jobs === 1, c)
-    assert(c.jobTasks === Seq(r.length - 1), c)
+    assert(c.jobTasks === Seq(r.length), c)
     assert(rows.toSeq === files.execute(serveSql.replace("LIMIT 10", "LIMIT 20000"), serveParams)
       .collect().take(10).toSeq)
   }
@@ -164,7 +164,7 @@ class SqlFetchSpec extends AnyFunSuite {
     val (rows, c) = run(s"$sql LIMIT $k", serveParams)
     val r = e.index.docRanges.get
     val hits = e.searchF32(Seq(Fts("content", "binary search")), k).collect().map(_.getLong(0))
-    val holding = hits.map(id => r.lastIndexWhere(_ <= id)).distinct.length
+    val holding = hits.map(id => r.indexWhere(_.contains(id))).distinct.length
     assert(c.jobs === 2, c)
     assert(c.jobTasks(1) === holding, c)
     assert(rows.length === hits.length && rows.length > 10)
@@ -223,8 +223,13 @@ class SqlFetchSpec extends AnyFunSuite {
       val text = lines.map(_.getString(0)).mkString("\n")
       assert(text.contains("search clause: fts(content, ...)"))
       assert(text.contains("Physical Plan"))
-      // an attached store has no docId ranges: the statement joins its docs
-      assert(!text.contains("stored-field fetch"), text)
+      // an attached store keeps its file pairs as search partitions: the
+      // statement reads its stored fields in the scoring job's tasks
+      val pairs = sess.table("files").engine.get.index.docRanges
+        .getOrElse(fail("an attached store under the tombstone gate has a range table")).length
+      assert(text.contains("stored-field fetch: docId, path"), text)
+      assert(text.contains("read by that partition's scoring task in the same job"), text)
+      assert(text.contains(s"range table: $pairs partitions"), text)
     } finally sess.table("files").engine.foreach(_.release())
   }
 
@@ -232,7 +237,10 @@ class SqlFetchSpec extends AnyFunSuite {
 
   /** Every docs partition holds exactly the ids of its range. */
   private def checkRanges(idx: BuiltIndex): Unit = {
-    val r = idx.docRanges.getOrElse(fail("in-memory builds record docId ranges"))
+    val ranges = idx.docRanges.getOrElse(fail("in-memory builds record docId ranges"))
+    // a build's windows tile its ids: r(p) are their cut points
+    assert(ranges.indices.tail.forall(p => ranges(p).from == ranges(p - 1).until))
+    val r = ranges.map(_.from).toArray :+ ranges.last.until
     val ids = idx.docs.select("docId").queryExecution.toRdd
     assert(ids.getNumPartitions === r.length - 1)
     val spans = ids.mapPartitionsWithIndex { (p, it) =>

@@ -49,6 +49,13 @@ class ManifestSpec extends AnyFunSuite {
 
   private val checkpointGen = for (e <- int; id <- text; at <- long) yield CheckpointRow(e, id, at)
 
+  private val segmentGen = for {
+    path <- text
+    pairs <- Gen.listOf(for {
+      docs <- text; postings <- Gen.option(text); from <- long; until <- long
+    } yield FilePair(docs, postings, from, until))
+  } yield SegmentFiles(path, pairs)
+
   private def typeGen(depth: Int): Gen[DataType] = {
     val leaf = Gen.oneOf(LongType, IntegerType, StringType, DoubleType, BooleanType,
       BinaryType, DateType, TimestampType, FloatType)
@@ -72,7 +79,8 @@ class ManifestSpec extends AnyFunSuite {
     tombs <- Gen.listOf(Gen.zip(int, long).map { case (e, r) => TombstoneDir(e, r) })
     kv <- textMap
     schema <- structGen(2)
-  } yield (Manifest(ManifestFormat, epochs, config, cps, tombs, kv, schema.json), schema)
+    segments <- Gen.listOf(segmentGen)
+  } yield (Manifest(ManifestFormat, epochs, config, cps, tombs, kv, schema.json, segments), schema)
 
   private def tmpDir(): String = java.nio.file.Files.createTempDirectory("graftmanifest").toString
 

@@ -18,7 +18,10 @@ class ShardLayoutSpec extends AnyFunSuite {
   /** Checks the layout of `idx`; returns its partition count. */
   private def checkLayout(idx: BuiltIndex, what: String): Int = {
     val sd = idx.config.shardDocs
-    val r = idx.docRanges.getOrElse(fail(s"$what: in-memory builds record docId ranges"))
+    val ranges = idx.docRanges.getOrElse(fail(s"$what: in-memory builds record docId ranges"))
+    // a build's windows tile its ids: r(p) are their cut points
+    assert(ranges.indices.tail.forall(p => ranges(p).from == ranges(p - 1).until), what)
+    val r = ranges.map(_.from).toArray :+ ranges.last.until
     val n = r.length - 1
     val base = r.head
     val shards = if (idx.numDocs == 0) 0L else (r.last - 1) / sd - base / sd + 1
