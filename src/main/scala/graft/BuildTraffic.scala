@@ -2,9 +2,12 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+  SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
-/** Cumulative task-level traffic counters (and the jobs started) for a
+/** Cumulative task-level traffic counters (and the jobs and SQL
+  * executions started) for a
   * window of Spark jobs — the REGIME-INDEPENDENT half of the scaling
   * evidence. Wall-clock on this sandbox VM swings ±60% between legs
   * with both calibration markers flat (BENCH.md round-4 control
@@ -30,8 +33,14 @@ final class BuildTraffic extends SparkListener {
   private val shufRead = new AtomicLong
   private val spill = new AtomicLong
   private val jobs = new AtomicLong
+  private val sqlExecutions = new AtomicLong
 
   override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case _: SparkListenerSQLExecutionStart => sqlExecutions.incrementAndGet()
+    case _ =>
+  }
 
   override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
     val m = t.taskMetrics
@@ -44,7 +53,8 @@ final class BuildTraffic extends SparkListener {
   }
 
   private def snap: BuildTraffic.Snap =
-    BuildTraffic.Snap(input.get, shufWrite.get, shufRead.get, spill.get, jobs.get)
+    BuildTraffic.Snap(input.get, shufWrite.get, shufRead.get, spill.get, jobs.get,
+      sqlExecutions.get)
 
   /** Snapshot once the async bus has delivered everything: poll until
     * two reads `quietMs` apart agree (all actions in the measured
@@ -67,11 +77,13 @@ final class BuildTraffic extends SparkListener {
 }
 
 object BuildTraffic {
-  /** @param jobs Spark jobs started */
+  /** @param jobs Spark jobs started
+    * @param sqlExecutions SQL executions started (Catalyst-planned runs) */
   final case class Snap(inputBytes: Long, shuffleWriteBytes: Long,
-      shuffleReadBytes: Long, spilledBytes: Long, jobs: Long) {
+      shuffleReadBytes: Long, spilledBytes: Long, jobs: Long, sqlExecutions: Long = 0L) {
     def -(o: Snap): Snap = Snap(inputBytes - o.inputBytes,
       shuffleWriteBytes - o.shuffleWriteBytes,
-      shuffleReadBytes - o.shuffleReadBytes, spilledBytes - o.spilledBytes, jobs - o.jobs)
+      shuffleReadBytes - o.shuffleReadBytes, spilledBytes - o.spilledBytes, jobs - o.jobs,
+      sqlExecutions - o.sqlExecutions)
   }
 }

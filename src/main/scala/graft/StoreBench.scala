@@ -21,9 +21,13 @@ import graft.query._
   * 5000, 3 epochs): each epoch appends 200 upserts and 200 new files
   * (inputs written to parquet first), attaches the store on a fresh
   * session table, then runs a capped SQL read and a second one with
-  * another query. Prints one JSON line with each step's median
-  * milliseconds and Spark jobs (`append`, `attach`, `first_read`,
-  * `next_read`) and the per-epoch values.
+  * another query. The first read splits into the layers that make it
+  * up: `load` (the attach: manifest, tombstones, docs relation),
+  * `dictionary` (the cold engine's dictionary snapshot) and
+  * `first_statement` (the capped statement, which builds the shard
+  * tables). Prints one JSON line with each step's median milliseconds,
+  * Spark jobs and SQL executions (`append`, `load`, `dictionary`,
+  * `first_statement`, `next_read`) and the per-epoch values.
   */
 object StoreBench {
 
@@ -71,19 +75,25 @@ object StoreBench {
     spark.sparkContext.addSparkListener(traffic)
     val session = new graft.sql.LnxSession(spark)
     val sql = "SELECT path, score() AS s FROM files WHERE fts(content, $1) ORDER BY s DESC LIMIT 10"
-    /** (milliseconds, jobs) of `body`; the listener settles outside the timing. */
-    def step(body: => Unit): (Double, Long) = {
+    /** (milliseconds, jobs, SQL executions) of `body`; the listener
+      * settles outside the timing. */
+    def step(body: => Unit): (Double, Long, Long) = {
       val before = traffic.settle()
       val (_, sec) = Bench.time(body)
-      (sec * 1e3, (traffic.settle() - before).jobs)
+      val d = traffic.settle() - before
+      (sec * 1e3, d.jobs, d.sqlExecutions)
     }
-    val steps = Seq("append", "attach", "first_read", "next_read")
+    // a statement's rows are a local frame; collecting it is one SQL
+    // execution with no job, so a step runs the statement alone
+    def statement(q: String) = session.execute(sql, Seq(graft.sql.LnxSql.SLit(q)))
+    val steps = Seq("append", "load", "dictionary", "first_statement", "next_read")
     val runs = (1 to epochs).map { e =>
       Seq(
         step(IndexStore.appendEpoch(spark.read.parquet(s"$inputs/epoch-$e"), dir, s"fresh-$e")),
         step(session.attach("files", dir)),
-        step(session.execute(sql, Seq(graft.sql.LnxSql.SLit("binary search"))).collect()),
-        step(session.execute(sql, Seq(graft.sql.LnxSql.SLit("fn license"))).collect()))
+        step(session.table("files").engine.foreach(_.localDictActive)),
+        step(statement("binary search")),
+        step(statement("fn license")))
     }
     session.table("files").engine.foreach(_.release())
     def median(xs: Seq[Double]): Double = { val s = xs.sorted; s(s.size / 2) }
@@ -91,8 +101,10 @@ object StoreBench {
       val name = steps(i)
       Seq(f""""${name}_ms":${median(runs.map(_(i)._1))}%.1f""",
         s""""${name}_jobs":${median(runs.map(_(i)._2.toDouble)).toLong}""",
+        s""""${name}_sql":${median(runs.map(_(i)._3.toDouble)).toLong}""",
         runs.map(r => f"${r(i)._1}%.1f").mkString(s""""${name}_ms_per_epoch":[""", ",", "]"),
-        runs.map(_(i)._2).mkString(s""""${name}_jobs_per_epoch":[""", ",", "]"))
+        runs.map(_(i)._2).mkString(s""""${name}_jobs_per_epoch":[""", ",", "]"),
+        runs.map(_(i)._3).mkString(s""""${name}_sql_per_epoch":[""", ",", "]"))
     }
     println(s"""{"metric":"store_freshness","baseDocs":$baseDocs,"epochs":$epochs,"cpus":$cpus,""" +
       f""""create_sec":$tCreate%.2f,${fields.mkString(",")}}""")

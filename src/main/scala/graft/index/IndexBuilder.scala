@@ -115,17 +115,25 @@ object DocRange {
   * `docs`) once, when the tables are built; `termStats`, `numDocs` and
   * `fieldTokens` still count deleted docs until compaction, as
   * Lucene/tantivy segment statistics do.
+  *
+  * `termStats` and `symspell` are distributed frames for the dictionary
+  * lookups above the driver snapshot's cap (QueryEngine), planned and
+  * persisted on first use: an engine whose dictionary fits the driver
+  * never plans them. What a search reads instead goes through two
+  * hooks: `docColumns` (the docs partitions a fetch reads) and
+  * `termDfs` (the partial dfs the driver snapshot sums), each without a
+  * Catalyst plan per read when the index is a loaded store.
   */
 final class BuiltIndex(
     val docs: DataFrame, // source columns + docId
     val shards: ShardTables,
-    val termStats: DataFrame, // field, term, df
+    termStatsOf: => DataFrame, // field, term, df
     val numDocs: Long,
     val fieldTokens: Map[String, Long],
     val config: IndexConfig,
     /** build-time SymSpell dictionary (field, variant, term, df) when
       * the segment was written in fast-fuzzy mode. */
-    val symspell: Option[DataFrame] = None,
+    symspellOf: => Option[DataFrame] = None,
     /** The range table: the docId window of every `docs` partition,
       * whose docs are docId-ascending, all inside it, and exactly the
       * docs whose postings shard table p holds. An in-memory build's
@@ -139,7 +147,14 @@ final class BuiltIndex(
       * `QueryEngine.searchWithDocs` reads it to score and fetch a
       * partition's hits in one task, `lookupDocs` to read ids from only
       * the partitions whose window holds one. */
-    val docRanges: Option[IndexedSeq[DocRange]] = None) {
+    val docRanges: Option[IndexedSeq[DocRange]] = None,
+    /** A loaded store's planless docs read (`IndexStore.loadManifest`):
+      * the (docId +: cols) rows of docs file p as partition p, tombstoned
+      * docs dropped. None reads the projection of `docs`. */
+    docsScan: Option[Seq[String] => (StructType, RDD[InternalRow])] = None,
+    /** A loaded store's planless partial dfs: its termstats files. None
+      * reads the shard tables' (`ShardTable.termDfs`). */
+    termDfScan: Option[() => RDD[TermDf]] = None) {
 
   def spark: SparkSession = docs.sparkSession
 
@@ -147,6 +162,37 @@ final class BuiltIndex(
     * job: the range table's partitions, else at most buildPartitions
     * (a store's shard repartition, `IndexBuilder.shardTables`). */
   def searchPartitions: Int = docRanges.fold(config.buildPartitions)(_.length)
+
+  @volatile private var termStatsUsed, symspellUsed = false
+
+  /** The term dictionary (field, term, df), summed over the partial
+    * dfs; planned and persisted on first use. */
+  lazy val termStats: DataFrame = {
+    termStatsUsed = true
+    termStatsOf.persist(StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** The build-time SymSpell dictionary (field, variant, term, df) of a
+    * store written in fast-fuzzy mode; planned and persisted on first use. */
+  lazy val symspell: Option[DataFrame] = {
+    symspellUsed = true
+    symspellOf.map(_.persist(StorageLevel.MEMORY_AND_DISK))
+  }
+
+  /** Docs partition p's (docId +: cols) rows, partition p beside range
+    * p and shard table p, and their schema. A store's rows come from a
+    * reused columnar batch: convert each before keeping it. */
+  def docColumns(cols: Seq[String]): (StructType, RDD[InternalRow]) =
+    docsScan.fold {
+      val projected = docs.select((col("docId") +: cols.map(col)): _*)
+      (projected.schema, projected.queryExecution.toRdd)
+    }(_(cols))
+
+  /** Partial dfs, one set per partition with no (field, term) twice in
+    * a set, whose sums per (field, term) are `termStats`: read with no
+    * shuffle. */
+  def termDfs: RDD[TermDf] =
+    termDfScan.fold(shards.rdd.mapPartitions(_.flatMap(_.termDfs)))(_())
 
   /** Every posting row, read off the shard tables (segment writes, specs). */
   def postings: Dataset[PostingRow] =
@@ -162,14 +208,12 @@ final class BuiltIndex(
     *   for the in-memory session analogue; the persisted-segment path
     *   (IndexStore.load) passes FALSE at scale so stored fields stream
     *   from the docId-sorted segment parquet (pruned reads) and only
-    *   the shard tables and termstats — the rough analogue of tantivy's
-    *   mmap'd searcher state — occupy executor memory. At 100 TB the
-    *   doc store does not fit; the index working set does.
+    *   the shard tables — the rough analogue of tantivy's mmap'd
+    *   searcher state — occupy executor memory. At 100 TB the doc
+    *   store does not fit; the index working set does.
     */
   def persist(cacheDocs: Boolean = true): this.type = {
     if (cacheDocs) docs.persist(StorageLevel.MEMORY_AND_DISK)
-    termStats.persist(StorageLevel.MEMORY_AND_DISK)
-    symspell.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
     this
   }
 
@@ -178,11 +222,13 @@ final class BuiltIndex(
   /** blocking = true waits for the blocks to actually drop — required
     * when the caller immediately starts competing work (e.g. Bench's
     * second build pass) and async eviction would contaminate its
-    * storage-memory budget.
+    * storage-memory budget. A never-used dictionary frame has nothing
+    * to drop.
     */
   def unpersist(blocking: Boolean): Unit = {
-    docs.unpersist(blocking); shards.unpersist(blocking); termStats.unpersist(blocking)
-    symspell.foreach(_.unpersist(blocking))
+    docs.unpersist(blocking); shards.unpersist(blocking)
+    if (termStatsUsed) termStats.unpersist(blocking)
+    if (symspellUsed) symspell.foreach(_.unpersist(blocking))
   }
 }
 
@@ -470,14 +516,13 @@ object IndexBuilder {
       .mapPartitions(_.flatMap(_.iterator).map(p => p.field -> p.sumTf).toSeq
         .groupMapReduce(_._1)(_._2)(_ + _).iterator)
       .collect().groupMapReduce(_._1)(_._2)(_ + _)
-    val termStats = spark.createDataset(shards.rdd.flatMap(_.iterator.map(p =>
-        TermDf(p.field, p.term, p.numDocs.toLong))))(Encoders.product[TermDf])
-      .groupBy(col("field"), col("term"))
-      .agg(sum(col("df")).as("df"))
     // docs keeps withIds' partitioning (a cache of it), so the
     // assignment's shard-aligned cuts are its per-partition docId ranges
-    new BuiltIndex(docs, shards, termStats, numDocs, fieldTokens, config,
-      docRanges = Some(DocRange.ofCuts(docRanges))).persist()
+    new BuiltIndex(docs, shards,
+      spark.createDataset(shards.rdd.flatMap(_.termDfs))(Encoders.product[TermDf])
+        .groupBy(col("field"), col("term"))
+        .agg(sum(col("df")).as("df")),
+      numDocs, fieldTokens, config, docRanges = Some(DocRange.ofCuts(docRanges))).persist()
   }
 }
 

@@ -7,16 +7,18 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.hadoop.fs.FileStatus
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.io.LocalInputFile
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, GraftExpressionBridge, Row, SaveMode,
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, GraftExpressionBridge, SaveMode,
   SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.UnsafeRowUtils
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import org.apache.spark.storage.StorageLevel
@@ -33,7 +35,9 @@ import org.apache.spark.storage.StorageLevel
   * A segment is a set of file pairs: docs file p and postings file p
   * hold exactly the same docs, inside a docId window the manifest
   * records (`FilePair`), and a load reads pair p as search partition p
-  * (`loadManifest`). The files hold no global order, only a per-file
+  * (`loadManifest`): a search opens file p in partition p through a
+  * planless parquet scan (`FileScan`), with no Catalyst relation per
+  * file. The files hold no global order, only a per-file
   * one: every docs file is docId-ascending and a segment's docs files'
   * docId ranges are disjoint; every postings file is sorted by (field,
   * term, shard); every termstats file by (field, term), its df a partial
@@ -496,9 +500,10 @@ object IndexStore {
     * @param cacheDocs false = the SCALE default: stored fields stream
     *   from the docId-sorted segment parquet (top-k lookups read only
     *   the files whose window holds an id, QueryEngine.lookupDocs) and
-    *   only postings/termstats pin memory. True pins the doc store too —
-    *   only sane when the corpus fits executor memory (interactive
-    *   small-table sessions).
+    *   only the shard tables pin memory. True pins the `docs` frame
+    *   general SQL reads too — only sane when the corpus fits executor
+    *   memory (interactive small-table sessions); fetches still read
+    *   the docs files, one per partition.
     * @param atVersion 0 = the committed LATEST; a positive version pins
     *   the load to that manifest snapshot — combine with
     *   `gc(retention >= R)` so the pinned version's files survive
@@ -508,22 +513,59 @@ object IndexStore {
       atVersion: Int = 0): BuiltIndex =
     loadManifest(spark, dir, manifestAt(dir, atVersion)._2, cacheDocs)
 
-  /** Union of the segments' files of one kind, read with their known schema. */
+  /** Union of the segments' files of one kind, read with their known
+    * schema, as a Catalyst frame (the shuffle paths above the tombstone
+    * gate, the dictionary frames, compaction's merge). */
   private def readSegments(spark: SparkSession, dir: String, segPaths: Seq[String],
       file: String, schema: StructType): DataFrame =
     segPaths.map(p => spark.read.schema(schema).parquet(s"$dir/$p/$file"))
       .reduce(_ unionByName _)
 
-  /** One parquet file as a frame of exactly one partition. */
-  private def wholeFile(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.format(classOf[WholeFileParquet].getName).schema(schema).load(path)
+  /** The statuses of the manifest's docs files, in pair order. */
+  private def docFiles(spark: SparkSession, dir: String, m: Manifest): Seq[FileStatus] =
+    FileScan.statuses(spark, m.segments.flatMap(s => s.pairs.map(p => s"$dir/${s.path}/${p.docs}")))
 
-  /** Every docId the manifest's tombstone dirs hold (not deduplicated). */
+  /** The fields of a store file's `schema` named by `cols`, resolved as
+    * Catalyst resolves a column name (case-insensitive unless
+    * configured). */
+  private def fieldsOf(schema: StructType, cols: Seq[String]): StructType = {
+    val resolver = org.apache.spark.sql.internal.SQLConf.get.resolver
+    StructType(cols.map(c => schema.fields.find(f => resolver(f.name, c)).getOrElse(
+      throw new IllegalArgumentException(
+        s"no column $c among ${schema.fieldNames.mkString(", ")}"))))
+  }
+
+  /** Every docId the manifest's tombstone dirs hold (not deduplicated),
+    * as a Catalyst frame: the distributed delete set above the gate. */
   private def tombstoneScan(spark: SparkSession, dir: String,
       tombs: Seq[TombstoneDir]): Option[DataFrame] =
     if (tombs.isEmpty) None
     else Some(tombs.map(t => spark.read.schema(TombstoneSchema).parquet(deletesDir(dir, t.epoch)))
       .reduce(_ unionByName _))
+
+  /** The same docIds read by a planless scan, one partition per
+    * tombstone file; None when the manifest lists no tombstone dir. */
+  private def tombstoneRdd(spark: SparkSession, dir: String,
+      tombs: Seq[TombstoneDir]): Option[RDD[Long]] =
+    if (tombs.isEmpty) None
+    else {
+      val files = FileScan.statuses(spark, tombs.flatMap(t =>
+        parquetParts(Paths.get(deletesDir(dir, t.epoch))).map(_.toString)))
+      Some(FileScan.scan(spark, files.map(Some(_)), TombstoneSchema, TombstoneSchema)
+        .map(_.getLong(0)))
+    }
+
+  /** The manifest's tombstoned docIds, distinct and ascending: ONE scan
+    * job with no SQL execution, and no job without tombstones. */
+  private def tombstoneIds(spark: SparkSession, dir: String,
+      tombs: Seq[TombstoneDir]): Array[Long] =
+    tombstoneRdd(spark, dir, tombs).fold(Array.emptyLongArray) { rdd =>
+      val ids = spark.sparkContext.runJob(rdd, (it: Iterator[Long]) => it.toArray).flatten
+      java.util.Arrays.sort(ids)
+      var n = 0
+      ids.indices.foreach { i => if (i == 0 || ids(i) != ids(i - 1)) { ids(n) = ids(i); n += 1 } }
+      java.util.Arrays.copyOf(ids, n)
+    }
 
   /** One docId shard's tombstones, sorted. */
   private[index] final case class ShardDels(shard: Int, dels: Array[Long])
@@ -596,21 +638,20 @@ object IndexStore {
     * INSIDE frames persist() may freeze, and a cached plan never gets
     * AQE's runtime broadcast conversion (CLAUDE.md): make the broadcast
     * decision explicitly, gated. The manifest's row counts decide the
-    * gate without a job; under it ONE plain scan collects the ids
-    * (deduplicated driver-side) and `ids` is a driver-local broadcast
-    * frame, above it the distinct scan, for plain shuffle joins rather
+    * gate without a job; under it ONE planless scan job collects the
+    * ids (`tombstoneIds`) and `ids` is a driver-local broadcast frame
+    * (whose broadcast still runs a collect job when a plan executes
+    * it), above it the distinct scan, for plain shuffle joins rather
     * than sort-merging the whole doc store against the delete set.
     */
   private def deletes(spark: SparkSession, dir: String, m: Manifest,
       broadcastTombstones: Long): Option[Deletes] =
-    tombstoneScan(spark, dir, m.tombstones).map { s =>
-      if (m.tombstones.map(_.rows).sum <= broadcastTombstones) {
-        val ids = s.collect().map(_.getLong(0)).distinct
-        java.util.Arrays.sort(ids)
-        new Deletes(broadcast(spark.createDataset(ids.toSeq)(Encoders.scalaLong).toDF("docId")),
-          Some(ids))
-      } else new Deletes(s.distinct(), None)
-    }
+    if (m.tombstones.isEmpty) None
+    else if (m.tombstones.map(_.rows).sum <= broadcastTombstones) {
+      val ids = tombstoneIds(spark, dir, m.tombstones)
+      Some(new Deletes(broadcast(spark.createDataset(ids.toSeq)(Encoders.scalaLong).toDF("docId")),
+        Some(ids)))
+    } else Some(new Deletes(tombstoneScan(spark, dir, m.tombstones).get.distinct(), None))
 
   /** `docs` minus the delete set. */
   private def withoutTombstones(docs: DataFrame, dels: Option[Deletes]): DataFrame =
@@ -620,17 +661,25 @@ object IndexStore {
     *
     * Paired (up to `broadcastTombstones` tombstone rows, the regime of
     * every append-and-read loop): search partition p is file pair p of
-    * the manifest (`FilePair`, segments in path order). Docs partition p
-    * is docs file p read whole (`WholeFileParquet`, never split or
-    * packed with another file), filtered against the broadcast
-    * tombstone ids, so docId-ascending; shard table p is built from
-    * postings file p alone, its tombstoned docs dropped by `liveRow`
-    * against the same ids, with no exchange, inside the first search's
-    * job. `docRanges` are the pairs' windows, so a capped search scores
-    * and fetches in one job (QueryEngine.searchWithDocs) and
-    * `lookupDocs` reads only the files whose window holds an id. A grid shard written by several segments
-    * sits in several partitions, but a doc's postings are all in its
-    * own pair, so per-doc scores are the same as in any other layout.
+    * the manifest (`FilePair`, segments in path order), and every read a
+    * search makes is a planless scan (`FileScan.scan`: partition p
+    * opens exactly file p, no Catalyst relation per file). The
+    * tombstones are one scan job collected into a sorted id array, sent
+    * once as a broadcast variable. Shard table p is built from postings
+    * file p alone (an empty partition when the pair has none), its
+    * tombstoned docs dropped by `liveRow` against the ids, with no
+    * exchange, inside the first search's job. A fetch reads docs file p
+    * as partition p with only the columns it returns, filtered against
+    * the same ids (`BuiltIndex.docColumns`), so docId-ascending.
+    * `docRanges` are the pairs' windows, so a capped search scores and
+    * fetches in one job (QueryEngine.searchWithDocs) and `lookupDocs`
+    * reads only the files whose window holds an id. A grid shard written
+    * by several segments sits in several partitions, but a doc's
+    * postings are all in its own pair, so per-doc scores are the same
+    * as in any other layout. `docs`, which general SQL reads, is ONE
+    * parquet relation over all the docs files (`FileScan.relation`) with
+    * the same tombstone filter, so Catalyst keeps its pruning and
+    * pushdown.
     *
     * Shuffled (heavy churn above the gate, where the ids stay
     * distributed): the docs are the segments' docs anti-joined with the
@@ -638,9 +687,14 @@ object IndexStore {
     * in a shuffle join and go through one shard repartition
     * (`IndexBuilder.shardTables`), with no range table.
     *
-    * Either way the tables freeze and build on the first read, so load
-    * itself plans and runs nothing over the postings; its one job is the
-    * tombstone collect under the gate.
+    * Either way the tables freeze and build on the first read, the
+    * dictionary snapshot sums the termstats files' partial dfs in one
+    * scan job (`BuiltIndex.termDfs`), and the `termStats` and `symspell`
+    * frames are planned only when a lookup above the snapshot's cap
+    * needs them. So load plans nothing over the postings, the
+    * dictionary or (under the gate) the docs; its one job is the
+    * tombstone collect under the gate, none on a store without
+    * tombstones.
     */
   private[index] def loadManifest(spark: SparkSession, dir: String, m: Manifest,
       cacheDocs: Boolean, broadcastTombstones: Long = BroadcastTombstones): BuiltIndex = {
@@ -648,7 +702,7 @@ object IndexStore {
     val segPaths = m.epochs.map(_.path).distinct
     val docSchema = docSchemaOf(m)
     val dels = deletes(spark, dir, m, broadcastTombstones)
-    val (docs, shards, docRanges) = dels.map(_.sorted) match {
+    val (docs, shards, docRanges, docsScan) = dels.map(_.sorted) match {
       case Some(None) =>
         val stored = readSegments(spark, dir, segPaths, "postings.parquet", PostingsSchema)
           .as(Encoders.product[PostingRow])
@@ -658,54 +712,74 @@ object IndexStore {
         // renumbered)
         val span = m.epochs.map(_.docIdEnd).max
         (withoutTombstones(readSegments(spark, dir, segPaths, "docs.parquet", docSchema), dels),
-          new ShardTables(IndexBuilder.shardTables(live, config, span)), None)
+          new ShardTables(IndexBuilder.shardTables(live, config, span)), None, None)
       case sorted =>
         val pairs = m.segments.flatMap(s => s.pairs.map(p => s.path -> p))
         require(pairs.nonEmpty, s"manifest of $dir lists no file pairs")
-        val stored = pairs.map { case (seg, p) =>
-          wholeFile(spark, s"$dir/$seg/${p.docs}", docSchema)
-        }.reduce(_ union _)
-        // the ids go out once as a broadcast variable, which both the
-        // docs filter and the table build read: no broadcast exchange
-        // (its collect job would run in the first read)
+        val files = docFiles(spark, dir, m)
+        // the ids go out once as a broadcast variable, which the docs
+        // filter, the fetch scan and the table build all read: no
+        // broadcast exchange (its collect job would run in the first read)
         val dead = sorted.flatten.map(spark.sparkContext.broadcast(_))
+        val stored = FileScan.relation(spark, files, docSchema)
         val docs = dead.fold(stored) { d =>
           val live = udf((docId: Long) => java.util.Arrays.binarySearch(d.value, docId) < 0)
           stored.filter(live(col("docId")))
         }
+        val docsScan = (cols: Seq[String]) => {
+          val required = fieldsOf(docSchema, "docId" +: cols)
+          val rows = FileScan.scan(spark, files.map(Some(_)), docSchema, required)
+          (required, dead.fold(rows)(d => rows.mapPartitions(_.filter(r =>
+            java.util.Arrays.binarySearch(d.value, r.getLong(0)) < 0), preservesPartitioning = true)))
+        }
         (docs, new ShardTables(pairedTables(spark, dir, pairs, dead, config.shardDocs)),
-          Some(pairs.map(p => DocRange(p._2.docIdFrom, p._2.docIdUntil)).toIndexedSeq))
+          Some(pairs.map(p => DocRange(p._2.docIdFrom, p._2.docIdUntil)).toIndexedSeq),
+          Some(docsScan))
     }
-    val termStats = readSegments(spark, dir, segPaths, "termstats.parquet", TermStatsSchema)
-      .groupBy("field", "term").agg(sum("df").as("df"))
     val byField = m.epochs.groupBy(_.field)
     val fieldTokens = byField.map { case (f, es) => f -> es.map(_.fieldTokens).sum }
     val numDocs = m.epochs.groupBy(_.epoch).map(_._2.head.numDocs).sum
+    // the partial dfs, one termstats file per partition
+    val termDfScan = () => {
+      val files = FileScan.statuses(spark, segPaths.flatMap(p =>
+        parquetParts(Paths.get(dir, p, "termstats.parquet")).map(_.toString)))
+      FileScan.scan(spark, files.map(Some(_)), TermStatsSchema, TermStatsSchema)
+        .map(r => TermDf(r.getUTF8String(0).toString, r.getUTF8String(1).toString, r.getLong(2)))
+    }
     // fast-fuzzy segments carry the precomputed correction dictionary;
     // per-(field, variant, term) df re-aggregates across segments just
     // like the term dictionary
-    val symspell =
+    new BuiltIndex(docs, shards,
+      readSegments(spark, dir, segPaths, "termstats.parquet", TermStatsSchema)
+        .groupBy("field", "term").agg(sum("df").as("df")),
+      numDocs, fieldTokens, config,
       if (!config.fastFuzzy) None
       else Some(readSegments(spark, dir, segPaths, "symspell.parquet", SymSpellSchema)
-        .groupBy("field", "variant", "term").agg(sum("df").as("df")))
-    new BuiltIndex(docs, shards, termStats, numDocs, fieldTokens, config, symspell, docRanges)
+        .groupBy("field", "variant", "term").agg(sum("df").as("df"))),
+      docRanges, docsScan, Some(termDfScan))
       .persist(cacheDocs)
   }
 
+  /** Posting rows as the store's postings files hold them, bound to
+    * `PostingsSchema`: each task builds its own deserializer from it. */
+  private lazy val PostingRows =
+    ExpressionEncoder[PostingRow]().resolveAndBind(DataTypeUtils.toAttributes(PostingsSchema))
+
   /** Shard table p of a paired load, built from postings file p alone
     * (an empty table when the pair has none), its tombstoned docs
-    * dropped against `dels` (sorted, distinct): a narrow read, no
+    * dropped against `dels` (sorted, distinct): a planless scan, no
     * exchange. */
   private def pairedTables(spark: SparkSession, dir: String, pairs: Seq[(String, FilePair)],
       dels: Option[Broadcast[Array[Long]]], shardDocs: Int): RDD[ShardTable] = {
-    val enc = Encoders.product[PostingRow]
-    // a pair with no postings file reads as one empty partition
-    val none = spark.createDataset(spark.sparkContext.parallelize(Seq.empty[PostingRow], 1))(enc)
-    val postings = pairs.map { case (seg, p) =>
-      p.postings.fold(none)(f => wholeFile(spark, s"$dir/$seg/$f", PostingsSchema).as(enc))
-    }.reduce(_ union _).rdd
-    postings.mapPartitions(rows => Iterator.single(ShardTable.of(
-      dels.fold(rows)(d => liveRows(rows, d.value, shardDocs)))), preservesPartitioning = true)
+    val paths = pairs.map { case (seg, p) => p.postings.map(f => s"$dir/$seg/$f") }
+    val found = FileScan.statuses(spark, paths.flatten).iterator
+    val enc = PostingRows
+    FileScan.scan(spark, paths.map(_.map(_ => found.next())), PostingsSchema, PostingsSchema)
+      .mapPartitions({ rows =>
+        val toPosting = enc.createDeserializer()
+        val postings = rows.map(r => toPosting(r))
+        Iterator.single(ShardTable.of(dels.fold(postings)(d => liveRows(postings, d.value, shardDocs))))
+      }, preservesPartitioning = true)
   }
 
   /** Next epoch number, clearing BOTH sets: delete-only epochs exist
@@ -773,13 +847,18 @@ object IndexStore {
     * partition each; it grows by an append's pairs until a compaction),
     * and `tombstoneRatio`, the share of stored docs that are tombstoned
     * (they still cost postings until a compaction). Both come from the
-    * manifest and the pending-delete count: no extra job.
+    * manifest and the pending-delete count. The count is one planless
+    * scan job over the tombstone files (no SQL execution; the ids
+    * collected and counted under the load's tombstone gate, a distinct
+    * count above it), and no job on a store without tombstones.
     */
   def info(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val (v, m) = manifestAt(dir)
     val pendingDeletes =
-      tombstoneScan(spark, dir, m.tombstones).map(_.distinct().count()).getOrElse(0L)
+      if (m.tombstones.map(_.rows).sum <= BroadcastTombstones)
+        tombstoneIds(spark, dir, m.tombstones).length.toLong
+      else tombstoneRdd(spark, dir, m.tombstones).fold(0L)(_.distinct().count())
     val storedDocs = m.epochs.groupBy(_.epoch).map(_._2.head.numDocs).sum
     val tombstoneRatio = if (storedDocs == 0L) 0.0 else pendingDeletes.toDouble / storedDocs
     Seq((v, m.epochs.map(_.epoch).distinct.size, m.epochs.map(_.path).distinct.size,
@@ -857,9 +936,11 @@ object IndexStore {
     * Under both driver gates (the epoch's keys, the prior tombstones
     * under `BroadcastTombstones`) and for keys whose join equality is
     * byte equality after normalization (`UnsafeRowUtils.isBinaryStable`:
-    * no non-binary collation), it is ONE column-pruned scan with no join
-    * and no exchange. The epoch's keys and the prior tombstone ids are
-    * collected into driver sets and broadcast (`UpsertKeys.Probe`); each
+    * no non-binary collation), it is ONE column-pruned scan with no join,
+    * no exchange and no Catalyst plan (`FileScan.scan` over the pairs'
+    * docs files). The epoch's keys and the prior tombstone ids (one
+    * planless scan job, `tombstoneIds`) are collected into driver sets
+    * and broadcast (`UpsertKeys.Probe`); each
     * task keeps a row whose key is in the key set and whose docId is not
     * a tombstone. A key matches exactly as the join matched it: a key
     * with a null column never matches, floats compare after the join's
@@ -869,8 +950,9 @@ object IndexStore {
     *
     * Otherwise the live docs left-semi-join the epoch's keys, broadcast
     * as a driver-landed local relation up to `BroadcastKeys` (no job per
-    * segment branch of the union the join is pushed through), else
-    * persisted once for a shuffle join.
+    * segment branch of the union the join is pushed through, but one
+    * collect job per broadcast when the plan runs), else persisted once
+    * for a shuffle join.
     */
   private def writeUpserts(spark: SparkSession, dir: String, m: Manifest, idx: BuiltIndex,
       path: String): Unit = {
@@ -883,17 +965,13 @@ object IndexStore {
       val epochKeys = idx.docs.select(keyCols.map(col): _*).queryExecution.toRdd
         .mapPartitions(rows => UpsertKeys.keyed(rows, keyTypes, 0).map(_._2.copy()))
         .collect()
-      val tombstones = tombstoneScan(spark, dir, m.tombstones).fold(Array.empty[Long]) { s =>
-        val ids = s.as(Encoders.scalaLong).collect()
-        java.util.Arrays.sort(ids)
-        ids
-      }
       val probe = spark.sparkContext.broadcast(UpsertKeys.Probe(
-        new java.util.HashSet[UnsafeRow](epochKeys.toSeq.asJava), tombstones))
+        new java.util.HashSet[UnsafeRow](epochKeys.toSeq.asJava),
+        tombstoneIds(spark, dir, m.tombstones)))
       try {
-        val ids = readSegments(spark, dir, m.epochs.map(_.path).distinct, "docs.parquet",
-            docSchemaOf(m))
-          .select((col("docId") +: keyCols.map(col)): _*).queryExecution.toRdd
+        val docSchema = docSchemaOf(m)
+        val ids = FileScan.scan(spark, docFiles(spark, dir, m).map(Some(_)), docSchema,
+            fieldsOf(docSchema, "docId" +: keyCols))
           .mapPartitions { rows =>
             val p = probe.value
             UpsertKeys.keyed(rows, keyTypes, 1).collect {
@@ -1046,17 +1124,19 @@ object IndexStore {
     val pairs = filePairs(segDir, DocRange.ofCuts(cuts))
     // dictionary + stats derive from the WRITTEN postings: one merge
     // computation total instead of re-merging per aggregate
-    val mergedOnDisk = pairs.flatMap(_.postings)
-      .map(f => wholeFile(spark, s"$segDir/$f", PostingsSchema))
-      .reduceOption(_ union _)
-      .getOrElse(spark.createDataFrame(java.util.Collections.emptyList[Row](), PostingsSchema))
-    writeTermstatsParquet(partialDfs(mergedOnDisk), s"$segDir/termstats.parquet")
+    val written = FileScan.statuses(spark, pairs.flatMap(_.postings).map(f => s"$segDir/$f"))
+    writeTermstatsParquet(partialDfs(spark, written), s"$segDir/termstats.parquet")
     if (config.fastFuzzy)
       writeSymspellParquet(
         readSegments(spark, dir, Seq(segName), "termstats.parquet", TermStatsSchema),
         math.max(1, config.buildPartitions / 4), s"$segDir/symspell.parquet")
-    val newFieldTokens = mergedOnDisk.groupBy("field").agg(sum("sumTf").as("t"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val newFieldTokens = spark.sparkContext.runJob(
+        FileScan.scan(spark, written.map(Some(_)), PostingsSchema,
+          fieldsOf(PostingsSchema, Seq("field", "sumTf"))),
+        (rows: Iterator[InternalRow]) =>
+          rows.map(r => r.getUTF8String(0).toString -> r.getLong(1)).toSeq
+            .groupMapReduce(_._1)(_._2)(_ + _))
+      .flatten.groupMapReduce(_._1)(_._2)(_ + _)
     val liveDocs = parquetRows(s"$segDir/docs.parquet")
     // partial pass: tombstones targeting docs still physically present
     // in unmerged segments survive, rewritten under the merged epoch
@@ -1111,19 +1191,18 @@ object IndexStore {
     }
   }
 
-  /** Each partition's partial dfs of `postings` (one row per (field,
-    * term) it holds, df summed over its rows), read from the
-    * (field, term, numDocs) columns only. */
-  private def partialDfs(postings: DataFrame): DataFrame = {
-    val spark = postings.sparkSession
-    spark.createDataset(postings.select("field", "term", "numDocs").queryExecution.toRdd
+  /** Each postings file's partial dfs (one row per (field, term) it
+    * holds, df summed over its rows), read by a planless scan of the
+    * (field, term, numDocs) columns: one partition per file. */
+  private def partialDfs(spark: SparkSession, postings: Seq[FileStatus]): DataFrame =
+    spark.createDataset(FileScan.scan(spark, postings.map(Some(_)), PostingsSchema,
+        fieldsOf(PostingsSchema, Seq("field", "term", "numDocs")))
       .mapPartitions { rows =>
         val dfs = new java.util.HashMap[(String, String), java.lang.Long]()
         rows.foreach(r => dfs.merge((r.getUTF8String(0).toString, r.getUTF8String(1).toString),
           r.getInt(2).toLong, (a, b) => a + b))
         dfs.entrySet().iterator().asScala.map(e => TermDf(e.getKey._1, e.getKey._2, e.getValue))
       })(Encoders.product[TermDf]).toDF()
-  }
 
   /** Explicit storage GC with SNAPSHOT RETENTION: delete segment dirs,
     * tombstone dirs, and manifest-version dirs referenced by NONE of
@@ -1233,14 +1312,4 @@ private[index] object UpsertKeys {
     def hit(docId: Long, key: UnsafeRow): Boolean =
       keys.contains(key) && java.util.Arrays.binarySearch(tombstones, docId) < 0
   }
-}
-
-/** Parquet read whole: a file is never split into several scan
-  * partitions, so a scan of one file is exactly one partition (a
-  * store's file pair read as one search partition, `IndexStore.load`).
-  * Loaded by class name (`spark.read.format`).
-  */
-final class WholeFileParquet extends ParquetFileFormat {
-  override def isSplitable(sparkSession: SparkSession, options: Map[String, String],
-      path: org.apache.hadoop.fs.Path): Boolean = false
 }

@@ -167,12 +167,14 @@ object Dedup {
     * build. The gate already guarantees these exact rows land on the
     * driver inside those broadcast builds — collecting them once from
     * the persisted frame (one cache-read job) and broadcasting
-    * LocalRelations instead is the same driver footprint with zero
-    * broadcast-build jobs. Above the gate: None, and the distributed
+    * LocalRelations instead is the same driver footprint, with no
+    * exchange feeding the broadcast; each LocalRelation broadcast still
+    * runs one collect job when its plan executes (LandedBroadcastSpec).
+    * Above the gate: None, and the distributed
     * frames flow exactly as before (the 100 TB path — candidate volume
     * there must never collect).
     */
-  private def landedCandidates(cand: DataFrame, nCand: Long,
+  private[graft] def landedCandidates(cand: DataFrame, nCand: Long,
       broadcastIdLimit: Long): Option[(DataFrame, DataFrame)] = {
     if (2 * nCand > broadcastIdLimit) return None
     import scala.jdk.CollectionConverters._
@@ -294,7 +296,8 @@ object Dedup {
     // frames when nCand fits the same count gate (never unconditionally:
     // the pair set grows with near-dup density at corpus scale); under
     // the gate the edge set is landed once (landedCandidates) so those
-    // broadcasts build from driver rows without their own jobs.
+    // broadcasts build from driver rows (one collect job each, no
+    // exchange).
     val (edgesF, shcRaw) = verifyInputs(sh, cand, nCand, broadcastIdLimit)
     val shc = shcRaw.distinct().persist()
     scoped(sh, sig0, cand, shc)(sortedPairs(
@@ -358,7 +361,7 @@ object Dedup {
       .select(col("id").as("a"), col("rep").as("b")).distinct().persist()
     val nCand = edges.count()
     // distinct on the candidate-restricted sliver (see minhashPairs);
-    // gate passed -> edges landed once, broadcast builds job-free
+    // gate passed -> edges landed once, broadcasts built from driver rows
     val (edgesF, shcRaw) = verifyInputs(sh, edges, nCand, broadcastIdLimit)
     val shc = shcRaw.distinct().persist()
     val verified = jaccardVerified(edgesF, shc, threshold, nCand, broadcastIdLimit)

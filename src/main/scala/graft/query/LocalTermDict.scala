@@ -2,6 +2,8 @@ package graft.query
 
 import java.nio.charset.StandardCharsets
 
+import scala.jdk.CollectionConverters._
+
 import graft.analyze.Levenshtein
 
 /** Bounded in-memory snapshot of the term dictionary (field, term, df):
@@ -39,6 +41,10 @@ import graft.analyze.Levenshtein
 final class LocalTermDict private (
     private val fields: java.util.HashMap[String, LocalTermDict.FieldDict]) {
   import LocalTermDict._
+
+  /** Every (field, term, df) of the snapshot (specs). */
+  private[graft] def entries: Seq[(String, String, Long)] =
+    fields.asScala.toSeq.flatMap { case (f, fd) => fd.terms.indices.map(i => (f, fd.terms(i), fd.dfs(i))) }
 
   def df(field: String, term: String): Option[Long] = {
     val fd = fields.get(field)

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{DoubleType, FloatType, IntegerType, LongType,
 import org.apache.spark.storage.StorageLevel
 
 import graft.analyze.{Analyzer, Levenshtein, SymSpell}
-import graft.index.{BuiltIndex, DocRange}
+import graft.index.{BuiltIndex, DocRange, TermDf}
 
 /** Search clauses: the WHERE-clause surface of the lnx SQL dialect
   * (SURVEY.md section 2.4; lnx-server/src/apis/mod.rs:200-281). Each
@@ -58,35 +58,47 @@ final case class MoreLikeThis(field: String, docId: Long, topTerms: Int = 8,
 
 /** Compiles search clauses against an index's term dictionary and runs
   * them through the distributed scorers. Term-dictionary lookups
-  * (df, prefix/fuzzy/regex expansion) execute as pushdown filters on
-  * the termStats Dataset and collect only the matched entries — the
-  * Spark analogue of tantivy consulting its FST term dictionary at
-  * plan time.
+  * (df, prefix/fuzzy/regex expansion, fast-fuzzy correction) answer
+  * from a driver-side snapshot (`LocalTermDict`) whenever the dictionary
+  * fits `graft.dict.localMaxTerms` — the Spark analogue of tantivy
+  * consulting its FST term dictionary at plan time. The snapshot sums
+  * the index's partial dfs (`BuiltIndex.termDfs`) in one job with no
+  * shuffle and no Catalyst plan. Above the cap the lookups run as
+  * capped, pushed-down filters on the termStats frame and collect only
+  * the matched entries.
   */
 final class QueryEngine(val index: BuiltIndex) {
   import SearchDefaults._
 
   /** Driver-side term-dictionary snapshot (the tantivy-FST analogue —
-    * see LocalTermDict). Probed ONCE per engine with a capped collect
-    * (`limit(cap+1)` — bounded at any corpus scale): when the whole
-    * dictionary fits under `graft.dict.localMaxTerms`, every dictionary
-    * lookup below answers driver-side with zero Spark jobs; otherwise
-    * None and the distributed lookup jobs run unchanged (the 100 TB
-    * path). Lazy: engines that never consult the dictionary never pay
-    * the probe. The conf resolves at first use and is pinned for the
-    * engine's lifetime (mutations invalidate by engine replacement,
-    * like both LRUs above).
+    * see LocalTermDict), built ONCE per engine in one Spark job with no
+    * shuffle: each task returns its partition's partial dfs
+    * (`BuiltIndex.termDfs`: a store's termstats file, a build's shard
+    * table), or None at once when it holds more than the cap — so at
+    * most cap rows per task reach the driver at any corpus scale — and
+    * the driver sums them per (field, term). When the whole dictionary
+    * fits under `graft.dict.localMaxTerms`, every dictionary lookup
+    * below answers driver-side with zero Spark jobs; otherwise None and
+    * the distributed lookup jobs run unchanged (the 100 TB path). Lazy:
+    * engines that never consult the dictionary never pay the probe. The
+    * conf resolves at first use and is pinned for the engine's lifetime
+    * (mutations invalidate by engine replacement, like both LRUs below).
     */
-  private lazy val localDict: Option[LocalTermDict] = {
+  private[graft] lazy val localDict: Option[LocalTermDict] = {
     val cap = index.spark.conf
       .get("graft.dict.localMaxTerms", SearchDefaults.LocalDictMaxTerms.toString).toInt
     if (cap <= 0) None
     else {
-      val rows = index.termStats.select(col("field"), col("term"), col("df"))
-        .limit(cap + 1).collect()
-      if (rows.length > cap) None
-      else Some(LocalTermDict.fromRows(
-        rows.map(r => (r.getString(0), r.getString(1), r.getLong(2)))))
+      val parts = index.spark.sparkContext.runJob(index.termDfs, (it: Iterator[TermDf]) => {
+        val held = it.take(cap + 1).toArray
+        if (held.length > cap) None else Some(held)
+      })
+      if (parts.contains(None)) None
+      else {
+        val dfs = parts.iterator.flatMap(_.get).toSeq.groupMapReduce(t => (t.field, t.term))(_.df)(_ + _)
+        if (dfs.size > cap) None
+        else Some(LocalTermDict.fromRows(dfs.iterator.map { case ((f, t), df) => (f, t, df) }.toArray))
+      }
     }
   }
 
@@ -423,31 +435,22 @@ final class QueryEngine(val index: BuiltIndex) {
   /** Observability: compile calls served from the LRU. */
   @volatile var compileCacheHits: Long = 0L
 
-  /** Memo of the docs projection lookupDocs and searchWithDocs read
-    * (keyed by its column list): a fetch runs its job over the
-    * projection's physical plan, planned once per column list instead
-    * of per call. Scoring plans nothing to memoize: it runs over the
-    * shard tables directly.
+  /** Memo of the docs columns lookupDocs and searchWithDocs read, by
+    * column list (`BuiltIndex.docColumns`: a build's cached-docs
+    * projection, planned once per list instead of per call, or a
+    * store's planless docs scan). Scoring has nothing to memoize: it
+    * runs over the shard tables directly.
     */
-  private val planCache =
-    new java.util.LinkedHashMap[AnyRef, DataFrame](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[AnyRef, DataFrame]): Boolean =
+  private val docColumnsCache =
+    new java.util.LinkedHashMap[Seq[String], (StructType, RDD[InternalRow])](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[Seq[String], (StructType, RDD[InternalRow])]): Boolean =
         size() > SearchDefaults.MaxBatchWidth
     }
 
   /** Searches served a memoized planned frame: none since searches stopped
     * planning; kept (always 0) for callers that report the ratio. */
   @volatile var planCacheHits: Long = 0L
-
-  private def cachedPlan(key: AnyRef)(build: => DataFrame): DataFrame = {
-    planCache.synchronized {
-      val hit = planCache.get(key)
-      if (hit != null) return hit
-    }
-    val df = build
-    planCache.synchronized { planCache.put(key, df) }
-    df
-  }
 
   def compile(clauses: Seq[SearchClause]): CompiledQuery = {
     compileCache.synchronized {
@@ -880,9 +883,10 @@ final class QueryEngine(val index: BuiltIndex) {
     * With `BuiltIndex.docRanges` (in-memory builds, and stores under
     * the load's tombstone gate, whose docs partitions are their file
     * pairs' docs files) the fetch is ONE job over only the docs
-    * partitions whose window holds a requested id, reading a
-    * (docId +: docCols) projection whose physical plan is memoized in
-    * `planCache` (planned once per column list); each task stops past
+    * partitions whose window holds a requested id, reading its
+    * (docId +: docCols) columns (`BuiltIndex.docColumns`, memoized per
+    * column list: a build's cached-docs projection, a store's planless
+    * scan of its docs files); each task stops past
     * its partition's largest requested id, matched rows are converted
     * on the executors and the result is a local frame, in no particular
     * order. No requested id, no job. Without ranges (a heavy-churn
@@ -904,22 +908,27 @@ final class QueryEngine(val index: BuiltIndex) {
   /** lookupDocs' range-pruned fetch, as the projection's schema and the
     * matched rows. */
   private def fetchRanged(ids: Seq[Long], docCols: Seq[String]): (StructType, Array[Row]) = {
-    val projected = docsProjection(docCols)
-    val schema = projected.schema
+    val (schema, docsRdd) = docColumns(docCols)
     val want = DocFetch.byPartition(index.docRanges.get, ids)
     if (want.isEmpty) return (schema, Array.empty)
     val toRow = CatalystTypeConverters.createToScalaConverter(schema)
-    val parts = index.spark.sparkContext.runJob(projected.queryExecution.toRdd,
+    val parts = index.spark.sparkContext.runJob(docsRdd,
       (ctx: TaskContext, it: Iterator[InternalRow]) => DocFetch.rows(it, want(ctx.partitionId()), toRow),
       want.keys.toSeq.sorted)
     (schema, parts.flatten)
   }
 
-  /** The (docId +: docCols) projection of the docs, planned once per
-    * column list (`planCache`). */
-  private def docsProjection(docCols: Seq[String]): DataFrame =
-    cachedPlan(DocFetch.Projection(docCols))(
-      index.docs.select((col("docId") +: docCols.map(col)): _*))
+  /** The (docId +: docCols) rows of every docs partition and their
+    * schema, built once per column list (`docColumnsCache`). */
+  private def docColumns(docCols: Seq[String]): (StructType, RDD[InternalRow]) = {
+    docColumnsCache.synchronized {
+      val hit = docColumnsCache.get(docCols)
+      if (hit != null) return hit
+    }
+    val read = index.docColumns(docCols)
+    docColumnsCache.synchronized { docColumnsCache.put(docCols, read) }
+    read
+  }
 
   /** Does a capped search of k hits score and fetch in one job
     * (searchWithDocs)? Only while every docs partition's local top-k
@@ -946,8 +955,7 @@ final class QueryEngine(val index: BuiltIndex) {
       docCols: Seq[String]): DataFrame = {
     require(index.docRanges.nonEmpty && k <= MaxLookupIds,
       "searchWithDocs needs docId ranges and k <= MaxLookupIds")
-    val projected = docsProjection(docCols)
-    val schema = projected.schema
+    val (schema, docsRdd) = docColumns(docCols)
     val ((ids, scores), rows) =
       if (!fetchesInScoringJob(k)) {
         val hits = topHits(clauses, k)
@@ -955,7 +963,6 @@ final class QueryEngine(val index: BuiltIndex) {
       } else shardCandidates(clauses, k, useWand = true, wandStats = None) match {
         case None => ((Array.empty[Long], Array.empty[Float]), Array.empty[Row])
         case Some(cands) =>
-          val docsRdd = projected.queryExecution.toRdd
           require(cands.getNumPartitions == docsRdd.getNumPartitions,
             s"shard tables (${cands.getNumPartitions} partitions) are not co-partitioned " +
               s"with the docs (${docsRdd.getNumPartitions})")
@@ -1016,9 +1023,6 @@ final class QueryEngine(val index: BuiltIndex) {
 /** The docs-partition reads of lookupDocs and searchWithDocs over
   * `BuiltIndex.docRanges`. */
 private[query] object DocFetch {
-  /** Plan-LRU key of the docs projection the fetches read. */
-  final case class Projection(cols: Seq[String])
-
   /** The stored rows of the wanted `ids` (distinct, ascending) in one
     * docs partition, whose rows are docId-ascending: the scan stops at
     * the first row at or past the largest wanted id. */

@@ -113,6 +113,21 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(row.getAs[Double]("tombstoneRatio") === nMod.toDouble / (300L + nMod))
   }
 
+  test("info on a tombstoned store: <= 1 job, no SQL execution, same counts") {
+    val dir = StoreFixture.dir
+    val (info, c) = SparkEvents.of(spark)(IndexStore.info(spark, dir))
+    assert(c.jobs <= 1 && c.sqlExecutions === 0, c)
+    val row = info.collect()(0)
+    // the distinct ids of the tombstone dirs (the fixture is never
+    // compacted, so its manifest reads every one), through Catalyst
+    val pending = spark.read.parquet(s"$dir/_deletes").select("docId").distinct().count()
+    assert(pending > 0L, "test premise: the fixture carries tombstones")
+    val stored = IndexStore.readManifest(spark, dir)._1.groupBy(_.epoch).map(_._2.head.numDocs).sum
+    assert(row.getAs[Long]("pendingDeletes") === pending)
+    assert(row.getAs[Long]("liveDocs") === stored - pending)
+    assert(row.getAs[Double]("tombstoneRatio") === pending.toDouble / stored)
+  }
+
   test("a failed append leaves no lineage row for its epoch") {
     val dir = tmpDir()
     IndexStore.create(CodeCorpus.generate(spark, 200, 2), config, dir, "snap-0").unpersist()

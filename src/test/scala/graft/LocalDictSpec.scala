@@ -105,6 +105,45 @@ class LocalDictSpec extends AnyFunSuite {
     }
   }
 
+  // ---- the snapshot's input: per-partition partial dfs ----
+
+  private def aggregated(idx: graft.index.BuiltIndex): Set[(String, String, Long)] =
+    idx.termStats.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
+
+  private def snapshot(e: QueryEngine): Set[(String, String, Long)] =
+    e.localDict.getOrElse(fail("the snapshot should fit")).entries.toSet
+
+  test("the partial-df snapshot equals the aggregated dictionary: build and store") {
+    assert(snapshot(engineLocal) === aggregated(index))
+    val store = graft.index.IndexStore.load(spark, StoreFixture.dir, cacheDocs = false)
+    try {
+      val e = new QueryEngine(store)
+      val (snap, built) = SparkEvents.of(spark)(snapshot(e))
+      assert(built.jobs === 1 && built.shuffleMapStages === 0 && built.sqlExecutions === 0, built)
+      assert(snap === aggregated(store))
+      // a term whose partial dfs sit in several termstats files is summed once
+      val parts = spark.read.parquet(s"${StoreFixture.dir}/seg-*/termstats.parquet")
+        .filter(col("field") === "content" && col("term") === "binary")
+        .collect().map(_.getLong(2))
+      assert(parts.length > 1, "test premise: 'binary' is split across pairs")
+      assert(snap.collect { case ("content", "binary", df) => df } === Set(parts.sum))
+    } finally store.unpersist()
+  }
+
+  test("the snapshot is None past the cap: cap = distinct - 1 None, cap = distinct Some") {
+    val distinct = aggregated(index).size
+    def engineAt(cap: Int): QueryEngine = {
+      val s = spark.newSession()
+      s.conf.set("graft.dict.localMaxTerms", cap.toString)
+      new QueryEngine(buildIndex(s.createDataFrame(docs.rdd, docs.schema)))
+    }
+    val under = engineAt(distinct - 1)
+    assert(under.localDict.isEmpty)
+    val at = engineAt(distinct)
+    assert(at.localDict.map(_.entries.toSet) === Some(aggregated(index)))
+    Seq(under, at).foreach(_.release())
+  }
+
   // ---- capped-primitive order pins (tiny cap, Spark-computed refs) ----
 
   lazy val unicodeRows: Array[(String, String, Long)] = Array(

@@ -29,7 +29,7 @@ class StoreReadSpec extends AnyFunSuite {
     val idx = IndexStore.load(spark, dir, cacheDocs = false)
     try {
       val ranges = idx.docRanges.getOrElse(fail(s"$what: no range table"))
-      val docs = idx.docs.select("docId").queryExecution.toRdd
+      val docs = idx.docColumns(Nil)._2
         .mapPartitionsWithIndex((p, it) => Iterator.single(p -> it.map(_.getLong(0)).toArray))
         .collect().toMap
       val postings = idx.shards.rdd.mapPartitionsWithIndex { (p, it) =>
@@ -157,6 +157,76 @@ class StoreReadSpec extends AnyFunSuite {
       assert(c.jobs === 1, c)
       assert(c.shuffleMapStages === 0 && c.shuffleBytes === 0L, c)
     } finally sess.table("files").engine.foreach(_.release())
+  }
+
+  test("attach plus the first capped statement: <= 3 jobs, no SQL execution") {
+    val sess = new LnxSession(spark)
+    try {
+      // tombstone collect (load), dictionary snapshot, scoring + fetch
+      val (df, c) = SparkEvents.of(spark) {
+        sess.attach("files", StoreFixture.dir)
+        sess.execute(serveSql, params)
+      }
+      assert(c.jobs <= 3, c)
+      assert(c.sqlExecutions === 0, c)
+      val (rows, collected) = SparkEvents.of(spark)(df.collect())
+      assert(collected.jobs === 0, collected)
+      val ref = sess.execute(serveSql.replace("LIMIT 10",
+        s"LIMIT ${SearchDefaults.MaxLookupIds + 1}"), params)
+      assert(rows.toSeq === ref.collect().take(10).toSeq)
+    } finally sess.table("files").engine.foreach(_.release())
+  }
+
+  test("a store with no tombstones loads with no job") {
+    val config = IndexConfig(keys, Seq("content"), shardDocs = 64, buildPartitions = 3)
+    val dir = java.nio.file.Files.createTempDirectory("graftstorenotomb").toString
+    IndexStore.create(CodeCorpus.generate(spark, 200, 3), config, dir, "snap-0").unpersist()
+    assert(IndexStore.appendEpoch(CodeCorpus.generateRange(spark, 200, 260, 2), dir, "snap-1"))
+    val (idx, c) = SparkEvents.of(spark)(IndexStore.load(spark, dir, cacheDocs = false))
+    try {
+      assert(c.jobs === 0 && c.sqlExecutions === 0, c)
+      assert(new QueryEngine(idx).searchF32(Seq(Fts("content", "binary search")), 5)
+        .collect().length === 5)
+    } finally idx.unpersist()
+  }
+
+  test("a pair with no postings file reads as one empty partition") {
+    import spark.implicits._
+    // docs 4..7 hold no term: partition 1 writes a docs file and no
+    // postings file (an empty partition 0 would still write an empty one)
+    val df = (0 until 8).map(i => (i.toLong, if (i < 4) s"needle word$i" else "")).toDF("id", "content")
+    val config = IndexConfig(Seq("id"), Seq("content"), shardDocs = 4, buildPartitions = 2)
+    val dir = java.nio.file.Files.createTempDirectory("graftstorenopostings").toString
+    IndexStore.create(df, config, dir, "snap-0").unpersist()
+    val pairs = IndexStore.readManifestFile(dir, IndexStore.currentVersion(dir)).segments.head.pairs
+    assert(pairs.map(_.postings.isDefined) === Seq(true, false), s"test premise: $pairs")
+    val idx = IndexStore.load(spark, dir, cacheDocs = false)
+    try {
+      val sizes = idx.shards.rdd.map(_.iterator.size).collect().toSeq
+      assert(sizes.length === 2 && sizes.head > 0 && sizes(1) === 0, sizes)
+      val e = new QueryEngine(idx)
+      val hits = e.searchWithDocs(Seq(Fts("content", "needle")), 10, Seq("id")).collect()
+      assert(hits.map(_.getLong(1)).sorted.toSeq === (0L until 4L))
+      assert(e.lookupDocs(Seq(1L, 5L), Seq("content")).collect().map(_.getLong(0)).sorted.toSeq ===
+        Seq(1L, 5L))
+    } finally idx.unpersist()
+  }
+
+  test("a pinned load whose pair file is gone fails naming the file") {
+    val config = IndexConfig(keys, Seq("content"), shardDocs = 64, buildPartitions = 3)
+    val dir = java.nio.file.Files.createTempDirectory("graftstoregone").toString
+    IndexStore.create(CodeCorpus.generate(spark, 200, 3), config, dir, "snap-0").unpersist()
+    assert(IndexStore.appendEpoch(CodeCorpus.generateRange(spark, 200, 260, 2), dir, "snap-1"))
+    IndexStore.compact(spark, dir)
+    // a file version 2 lists and version 3 no longer does, removed as gc
+    // removes what a retention window no longer covers
+    val v2 = IndexStore.readManifestFile(dir, 2)
+    val gone = s"$dir/${v2.segments.head.path}/${v2.segments.head.pairs.head.docs}"
+    java.nio.file.Files.delete(java.nio.file.Paths.get(gone))
+    val err = intercept[IllegalStateException](IndexStore.load(spark, dir, cacheDocs = false,
+      atVersion = 2))
+    assert(err.getMessage.contains(gone), err.getMessage)
+    IndexStore.load(spark, dir, cacheDocs = false).unpersist()
   }
 
   test("an attached store's capped rows equal the docs-join path's") {
