@@ -2,7 +2,8 @@ package graft.index
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.SparkContext
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -18,7 +19,8 @@ import org.apache.spark.sql.types.StructType
   * partition and opens it, as lnx resolves a blob to its (tablet, range)
   * and opens the reader (SURVEY.md section 3.3). `IndexStore` reads file
   * pairs, term dfs and tombstones through `scan`; `relation` is the one
-  * Catalyst relation over a known file list that general SQL reads.
+  * Catalyst relation over a known file list that general SQL reads;
+  * `rowCount` reads only the files' footers.
   */
 private[index] object FileScan {
 
@@ -38,6 +40,16 @@ private[index] object FileScan {
     }
   }
 
+  /** The rows `files` hold, summed from their parquet footers on the
+    * driver: no Spark job. */
+  def rowCount(spark: SparkSession, files: Seq[FileStatus]): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    files.iterator.map { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      try r.getRecordCount finally r.close()
+    }.sum
+  }
+
   /** Partition p reads exactly `files(p)` (None: an empty partition) as
     * rows of `required`, a subset of the files' `dataSchema`. The rows
     * come from a reused columnar batch: convert or copy one before
@@ -52,22 +64,14 @@ private[index] object FileScan {
     new FileScanRDD(spark, reader(spark, dataSchema, required), parts, required)
   }
 
-  /** Parquet reader functions by (context, data schema, required schema):
-    * building one broadcasts the Hadoop conf, so each is built once. */
-  private val readers = new java.util.LinkedHashMap[(SparkContext, StructType, StructType),
-      PartitionedFile => Iterator[InternalRow]](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[(SparkContext, StructType, StructType),
-        PartitionedFile => Iterator[InternalRow]]): Boolean = size() > 64
-  }
-
+  /** A parquet reader function for one scan. Building it broadcasts the
+    * Hadoop conf and fixes the session's parquet settings, so it is
+    * built per scan, never shared across scans or sessions. */
   private def reader(spark: SparkSession, dataSchema: StructType,
       required: StructType): PartitionedFile => Iterator[InternalRow] =
-    readers.synchronized {
-      readers.computeIfAbsent((spark.sparkContext, dataSchema, required), _ =>
-        new ParquetFileFormat().buildReaderWithPartitionValues(spark, dataSchema, new StructType(),
-          required, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-          new Configuration(spark.sparkContext.hadoopConfiguration)))
-    }
+    new ParquetFileFormat().buildReaderWithPartitionValues(spark, dataSchema, new StructType(),
+      required, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      new Configuration(spark.sparkContext.hadoopConfiguration))
 
   /** One parquet relation over exactly `files`: no listing, no schema
     * inference, and Catalyst keeps column pruning and filter pushdown. */

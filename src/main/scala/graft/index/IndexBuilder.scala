@@ -119,15 +119,20 @@ object DocRange {
   * `termStats` and `symspell` are distributed frames for the dictionary
   * lookups above the driver snapshot's cap (QueryEngine), planned and
   * persisted on first use: an engine whose dictionary fits the driver
-  * never plans them. What a search reads instead goes through two
-  * hooks: `docColumns` (the docs partitions a fetch reads) and
-  * `termDfs` (the partial dfs the driver snapshot sums), each without a
-  * Catalyst plan per read when the index is a loaded store.
+  * never plans them. `termStats` is the sum of `termDfs`. What a search
+  * reads instead goes through two hooks: `docColumns` (the docs
+  * partitions a fetch reads) and `termDfs` (the partial dfs the driver
+  * snapshot sums, `termDfRows` rows), each without a Catalyst plan per
+  * read when the index is a loaded store.
   */
 final class BuiltIndex(
     val docs: DataFrame, // source columns + docId
     val shards: ShardTables,
-    termStatsOf: => DataFrame, // field, term, df
+    /** The rows `termDfs` reads, known without reading them (a build
+      * counts its tables' keys in the job that builds them, a store sums
+      * its termstats files' footers): the dictionary snapshot reads the
+      * partial dfs only when they are few enough (QueryEngine). */
+    termDfRowsOf: => Long,
     val numDocs: Long,
     val fieldTokens: Map[String, Long],
     val config: IndexConfig,
@@ -165,12 +170,17 @@ final class BuiltIndex(
 
   @volatile private var termStatsUsed, symspellUsed = false
 
-  /** The term dictionary (field, term, df), summed over the partial
-    * dfs; planned and persisted on first use. */
+  /** The term dictionary (field, term, df): `termDfs` summed per
+    * (field, term), planned and persisted on first use. */
   lazy val termStats: DataFrame = {
     termStatsUsed = true
-    termStatsOf.persist(StorageLevel.MEMORY_AND_DISK)
+    spark.createDataset(termDfs)(Encoders.product[TermDf])
+      .groupBy(col("field"), col("term"))
+      .agg(sum(col("df")).as("df"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
   }
+
+  lazy val termDfRows: Long = termDfRowsOf
 
   /** The build-time SymSpell dictionary (field, variant, term, df) of a
     * store written in fast-fuzzy mode; planned and persisted on first use. */
@@ -510,19 +520,19 @@ object IndexBuilder {
     val shards = new ShardTables(postingTables(docs, config))
     // ONE materialization: the shard tables build and persist in the
     // job that sums the exact per-field token totals (tantivy:
-    // total_num_tokens) from the rows' sumTf; the term dictionary is
-    // aggregated from the same cached tables when first read
-    val fieldTokens = shards.rdd
-      .mapPartitions(_.flatMap(_.iterator).map(p => p.field -> p.sumTf).toSeq
-        .groupMapReduce(_._1)(_._2)(_ + _).iterator)
-      .collect().groupMapReduce(_._1)(_._2)(_ + _)
+    // total_num_tokens) from the rows' sumTf and counts the tables'
+    // (field, term) keys, the partial-df rows the dictionary snapshot
+    // reads; the term dictionary is aggregated from the same cached
+    // tables when first read
+    val perTable = shards.rdd
+      .map(t => (t.keys.toLong,
+        t.iterator.map(p => p.field -> p.sumTf).toSeq.groupMapReduce(_._1)(_._2)(_ + _)))
+      .collect()
+    val fieldTokens = perTable.toSeq.flatMap(_._2).groupMapReduce(_._1)(_._2)(_ + _)
     // docs keeps withIds' partitioning (a cache of it), so the
     // assignment's shard-aligned cuts are its per-partition docId ranges
-    new BuiltIndex(docs, shards,
-      spark.createDataset(shards.rdd.flatMap(_.termDfs))(Encoders.product[TermDf])
-        .groupBy(col("field"), col("term"))
-        .agg(sum(col("df")).as("df")),
-      numDocs, fieldTokens, config, docRanges = Some(DocRange.ofCuts(docRanges))).persist()
+    new BuiltIndex(docs, shards, perTable.map(_._1).sum, numDocs, fieldTokens, config,
+      docRanges = Some(DocRange.ofCuts(docRanges))).persist()
   }
 }
 

@@ -379,8 +379,7 @@ object IndexStore {
       throw new IllegalArgumentException("writeSegment writes an in-memory build's partitions"))
     writePostingsParquet(idx.postings.toDF(), s"$segDir/postings.parquet")
     writeDocsParquet(idx.docs, s"$segDir/docs.parquet")
-    writeTermstatsParquet(
-      idx.spark.createDataset(idx.shards.rdd.flatMap(_.termDfs))(Encoders.product[TermDf]).toDF(),
+    writeTermstatsParquet(idx.spark.createDataset(idx.termDfs)(Encoders.product[TermDf]).toDF(),
       s"$segDir/termstats.parquet")
     if (idx.config.fastFuzzy)
       writeSymspellParquet(idx.termStats, math.max(1, idx.config.buildPartitions / 4),
@@ -515,7 +514,7 @@ object IndexStore {
 
   /** Union of the segments' files of one kind, read with their known
     * schema, as a Catalyst frame (the shuffle paths above the tombstone
-    * gate, the dictionary frames, compaction's merge). */
+    * gate, the SymSpell frames, compaction's merge). */
   private def readSegments(spark: SparkSession, dir: String, segPaths: Seq[String],
       file: String, schema: StructType): DataFrame =
     segPaths.map(p => spark.read.schema(schema).parquet(s"$dir/$p/$file"))
@@ -739,20 +738,17 @@ object IndexStore {
     val byField = m.epochs.groupBy(_.field)
     val fieldTokens = byField.map { case (f, es) => f -> es.map(_.fieldTokens).sum }
     val numDocs = m.epochs.groupBy(_.epoch).map(_._2.head.numDocs).sum
-    // the partial dfs, one termstats file per partition
-    val termDfScan = () => {
-      val files = FileScan.statuses(spark, segPaths.flatMap(p =>
-        parquetParts(Paths.get(dir, p, "termstats.parquet")).map(_.toString)))
-      FileScan.scan(spark, files.map(Some(_)), TermStatsSchema, TermStatsSchema)
+    // the partial dfs, one termstats file per partition, found and
+    // counted (from their footers) when the dictionary is first built
+    lazy val termstats = FileScan.statuses(spark, segPaths.flatMap(p =>
+      parquetParts(Paths.get(dir, p, "termstats.parquet")).map(_.toString)))
+    val termDfScan = () =>
+      FileScan.scan(spark, termstats.map(Some(_)), TermStatsSchema, TermStatsSchema)
         .map(r => TermDf(r.getUTF8String(0).toString, r.getUTF8String(1).toString, r.getLong(2)))
-    }
     // fast-fuzzy segments carry the precomputed correction dictionary;
     // per-(field, variant, term) df re-aggregates across segments just
     // like the term dictionary
-    new BuiltIndex(docs, shards,
-      readSegments(spark, dir, segPaths, "termstats.parquet", TermStatsSchema)
-        .groupBy("field", "term").agg(sum("df").as("df")),
-      numDocs, fieldTokens, config,
+    new BuiltIndex(docs, shards, FileScan.rowCount(spark, termstats), numDocs, fieldTokens, config,
       if (!config.fastFuzzy) None
       else Some(readSegments(spark, dir, segPaths, "symspell.parquet", SymSpellSchema)
         .groupBy("field", "variant", "term").agg(sum("df").as("df"))),
@@ -847,18 +843,14 @@ object IndexStore {
     * partition each; it grows by an append's pairs until a compaction),
     * and `tombstoneRatio`, the share of stored docs that are tombstoned
     * (they still cost postings until a compaction). Both come from the
-    * manifest and the pending-delete count. The count is one planless
-    * scan job over the tombstone files (no SQL execution; the ids
-    * collected and counted under the load's tombstone gate, a distinct
-    * count above it), and no job on a store without tombstones.
+    * manifest and the pending-delete count: the distinct ids of one
+    * planless scan over the tombstone files (one job, no SQL execution),
+    * and no job on a store without tombstones.
     */
   def info(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val (v, m) = manifestAt(dir)
-    val pendingDeletes =
-      if (m.tombstones.map(_.rows).sum <= BroadcastTombstones)
-        tombstoneIds(spark, dir, m.tombstones).length.toLong
-      else tombstoneRdd(spark, dir, m.tombstones).fold(0L)(_.distinct().count())
+    val pendingDeletes = tombstoneRdd(spark, dir, m.tombstones).fold(0L)(_.distinct().count())
     val storedDocs = m.epochs.groupBy(_.epoch).map(_._2.head.numDocs).sum
     val tombstoneRatio = if (storedDocs == 0L) 0.0 else pendingDeletes.toDouble / storedDocs
     Seq((v, m.epochs.map(_.epoch).distinct.size, m.epochs.map(_.path).distinct.size,

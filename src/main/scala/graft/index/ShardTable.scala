@@ -27,6 +27,13 @@ final class ShardTable private (
   def iterator: Iterator[PostingRow] =
     byField.values().iterator().asScala.flatMap(_.values().iterator().asScala.flatMap(_.iterator))
 
+  /** The number of (field, term) keys: the rows of `termDfs`. */
+  def keys: Int = {
+    var n = 0
+    byField.values().forEach(terms => n += terms.size)
+    n
+  }
+
   /** One (field, term, df) per key of the partition, df summed over its
     * rows: a partial df when other partitions hold the term too. */
   def termDfs: Iterator[TermDf] =

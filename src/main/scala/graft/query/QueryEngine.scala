@@ -64,8 +64,8 @@ final case class MoreLikeThis(field: String, docId: Long, topTerms: Int = 8,
   * consulting its FST term dictionary at plan time. The snapshot sums
   * the index's partial dfs (`BuiltIndex.termDfs`) in one job with no
   * shuffle and no Catalyst plan. Above the cap the lookups run as
-  * capped, pushed-down filters on the termStats frame and collect only
-  * the matched entries.
+  * capped filters on the termStats frame and collect only the matched
+  * entries.
   */
 final class QueryEngine(val index: BuiltIndex) {
   import SearchDefaults._
@@ -74,20 +74,23 @@ final class QueryEngine(val index: BuiltIndex) {
     * see LocalTermDict), built ONCE per engine in one Spark job with no
     * shuffle: each task returns its partition's partial dfs
     * (`BuiltIndex.termDfs`: a store's termstats file, a build's shard
-    * table), or None at once when it holds more than the cap — so at
-    * most cap rows per task reach the driver at any corpus scale — and
-    * the driver sums them per (field, term). When the whole dictionary
-    * fits under `graft.dict.localMaxTerms`, every dictionary lookup
-    * below answers driver-side with zero Spark jobs; otherwise None and
-    * the distributed lookup jobs run unchanged (the 100 TB path). Lazy:
-    * engines that never consult the dictionary never pay the probe. The
-    * conf resolves at first use and is pinned for the engine's lifetime
-    * (mutations invalidate by engine replacement, like both LRUs below).
+    * table), or None at once when it holds more than the cap, and the
+    * driver sums them per (field, term). The job runs only when the
+    * partial dfs hold at most `LocalDictPartialRowsPerTerm` x cap rows
+    * (`BuiltIndex.termDfRows`, known without a job), so that many rows at
+    * most reach the driver at any corpus scale. When the whole
+    * dictionary fits under `graft.dict.localMaxTerms`, every dictionary
+    * lookup below answers driver-side with zero Spark jobs; otherwise
+    * None and the distributed lookup jobs run unchanged (the 100 TB
+    * path). Lazy: engines that never consult the dictionary never pay
+    * the probe. The conf resolves at first use and is pinned for the
+    * engine's lifetime (mutations invalidate by engine replacement,
+    * like both LRUs below).
     */
   private[graft] lazy val localDict: Option[LocalTermDict] = {
     val cap = index.spark.conf
       .get("graft.dict.localMaxTerms", SearchDefaults.LocalDictMaxTerms.toString).toInt
-    if (cap <= 0) None
+    if (cap <= 0 || index.termDfRows > LocalDictPartialRowsPerTerm.toLong * cap) None
     else {
       val parts = index.spark.sparkContext.runJob(index.termDfs, (it: Iterator[TermDf]) => {
         val held = it.take(cap + 1).toArray
@@ -95,7 +98,9 @@ final class QueryEngine(val index: BuiltIndex) {
       })
       if (parts.contains(None)) None
       else {
-        val dfs = parts.iterator.flatMap(_.get).toSeq.groupMapReduce(t => (t.field, t.term))(_.df)(_ + _)
+        val dfs = scala.collection.mutable.HashMap.empty[(String, String), Long]
+        parts.foreach(_.get.foreach(t =>
+          dfs.updateWith((t.field, t.term))(df => Some(df.getOrElse(0L) + t.df))))
         if (dfs.size > cap) None
         else Some(LocalTermDict.fromRows(dfs.iterator.map { case ((f, t), df) => (f, t, df) }.toArray))
       }
@@ -1180,6 +1185,12 @@ object SearchDefaults {
     * budget and far below the scale where a dictionary stops fitting.
     * Override with spark conf graft.dict.localMaxTerms (0 disables). */
   final val LocalDictMaxTerms = 262144
+  /** Partial-df rows per term of that cap the snapshot job may bring
+    * to the driver (`BuiltIndex.termDfRows`): a term held by several
+    * partitions sends one row from each. Past it the dictionary takes
+    * the distributed path without the job, so at most 4 x 256k rows
+    * (tens of MB) ever reach the driver, whatever the partition count. */
+  final val LocalDictPartialRowsPerTerm = 4
   /** Largest scored-side cap the engine FORCE-broadcasts in the
     * docId->stored-fields join. A capped scored side is slim
     * (docId, score) rows (~12 B each), so 1M rows ~ 12 MB — around

@@ -121,6 +121,8 @@ class LocalDictSpec extends AnyFunSuite {
       val (snap, built) = SparkEvents.of(spark)(snapshot(e))
       assert(built.jobs === 1 && built.shuffleMapStages === 0 && built.sqlExecutions === 0, built)
       assert(snap === aggregated(store))
+      // the row count the snapshot is gated on, read from the files' footers
+      assert(store.termDfRows === store.termDfs.count())
       // a term whose partial dfs sit in several termstats files is summed once
       val parts = spark.read.parquet(s"${StoreFixture.dir}/seg-*/termstats.parquet")
         .filter(col("field") === "content" && col("term") === "binary")
@@ -142,6 +144,32 @@ class LocalDictSpec extends AnyFunSuite {
     val at = engineAt(distinct)
     assert(at.localDict.map(_.entries.toSet) === Some(aggregated(index)))
     Seq(under, at).foreach(_.release())
+  }
+
+  test("the snapshot job runs only when the partial dfs are few: partitions under the cap, their sum over it") {
+    // 8 partitions of one doc each, 10 terms of its own per doc
+    def engineAt(cap: Int): QueryEngine = {
+      val s = spark.newSession()
+      s.conf.set("graft.dict.localMaxTerms", cap.toString)
+      val rows = (0 until 8).map(i => (i.toLong, (0 until 10).map(j => s"t${i}w$j").mkString(" ")))
+      new QueryEngine(IndexBuilder.build(s.createDataFrame(rows).toDF("id", "content"),
+        IndexConfig(Seq("id"), Seq("content"), shardDocs = 1, buildPartitions = 8,
+          tokenizers = Map("content" -> "whitespace"))))
+    }
+    val over = engineAt(15)
+    val perPartition = over.index.termDfs.mapPartitions(it => Iterator.single(it.size)).collect()
+    assert(perPartition.length === 8 && perPartition.forall(_ === 10), "test premise: 10 terms a partition")
+    assert(over.index.termDfRows === 80L && over.index.termDfs.count() === 80L)
+    // each partition is under the cap, but the 80 rows pass 4 x 15: no row is read
+    val (none, skipped) = SparkEvents.of(spark)(over.localDict)
+    assert(none.isEmpty && skipped.jobs === 0, skipped)
+    // within 4 x 25 the job runs, every task answers, and the sum passes the cap
+    val summed = engineAt(25)
+    val (alsoNone, ran) = SparkEvents.of(spark)(summed.localDict)
+    assert(alsoNone.isEmpty && ran.jobs === 1, ran)
+    val fits = engineAt(80)
+    assert(fits.localDict.map(_.entries.toSet) === Some(aggregated(fits.index)))
+    Seq(over, summed, fits).foreach(_.release())
   }
 
   // ---- capped-primitive order pins (tiny cap, Spark-computed refs) ----
