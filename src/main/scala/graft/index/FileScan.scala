@@ -1,5 +1,7 @@
 package graft.index
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -40,14 +42,14 @@ private[index] object FileScan {
     }
   }
 
-  /** The rows `files` hold, summed from their parquet footers on the
-    * driver: no Spark job. */
+  /** The rows `files` hold, summed from their parquet footers, read
+    * in parallel on the driver: no Spark job. */
   def rowCount(spark: SparkSession, files: Seq[FileStatus]): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
-    files.iterator.map { f =>
+    files.asJava.parallelStream().mapToLong { f =>
       val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
       try r.getRecordCount finally r.close()
-    }.sum
+    }.sum()
   }
 
   /** Partition p reads exactly `files(p)` (None: an empty partition) as
