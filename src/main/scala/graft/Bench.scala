@@ -260,7 +260,7 @@ object Bench {
       // rare beacon + ultra-hot terms: the block-max skip shape
       "skew" -> "rareAuditBeacon license fn")
     // warm-up every path once (codegen + cache materialization +
-    // symspell dictionary); timed runs below are steady-state latency
+    // dictionary snapshot); timed runs below are steady-state latency
     queries.foreach { case (_, q) =>
       engine.searchF32(Seq(Fts("content", q)), 10, useWand = true).collect()
       engine.searchF32(Seq(Fts("content", q)), 10, useWand = false).collect()

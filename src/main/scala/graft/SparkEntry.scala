@@ -54,12 +54,14 @@ object SparkEntry {
   private val delStoreEngines = scala.collection.concurrent.TrieMap.empty[String, QueryEngine]
   private val ivfStores = scala.collection.concurrent.TrieMap.empty[String, String]
 
-  /** The same index written through IndexStore (segments + manifest,
-    * fast-fuzzy artifact persisted) and loaded back in SCALE mode —
-    * stored fields stream from the segment parquet, docs NOT cached
-    * (cacheDocs = false) — gating the whole persistence path, including
-    * the uncached doc-store access, against the same oracles as the
-    * in-memory build.
+  /** The same index written through IndexStore (segments + manifest)
+    * and loaded back in SCALE mode — stored fields stream from the
+    * segment parquet, docs NOT cached (cacheDocs = false) — gating the
+    * whole persistence path, including the uncached doc-store access,
+    * against the same oracles as the in-memory build. Its fast-fuzzy
+    * key keeps the name `q38_persisted_fastfuzzy` from when the store
+    * persisted a SymSpell artifact; it now corrects over the store's
+    * term dictionary like every other engine.
     */
   def storeEngine(spark: SparkSession, dir: String): QueryEngine =
     storeEngines.getOrElseUpdate(dir, {
@@ -67,8 +69,8 @@ object SparkEntry {
       val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
       val tmp = java.nio.file.Files.createTempDirectory("graftstore").toString
       IndexStore.create(docs,
-        IndexConfig(Seq("doc_id"), Seq("text"), shardDocs = 1024, buildPartitions = parts,
-          fastFuzzy = true), tmp).unpersist()
+        IndexConfig(Seq("doc_id"), Seq("text"), shardDocs = 1024, buildPartitions = parts),
+        tmp).unpersist()
       new QueryEngine(IndexStore.load(spark, tmp, cacheDocs = false))
     })
 
@@ -175,7 +177,7 @@ object SparkEntry {
         .orderBy(col("qid").asc, col("score").desc, col("doc_id").asc)
     }),
     // F4 regex with a required literal prefix: same rlike semantics,
-    // but the dictionary scan is pruned by a pushed StringStartsWith
+    // but the dictionary scan is narrowed to the prefix's term range
     "q45_regex_prefixed" -> ((s, dir) => {
       val e = docEngine(s, dir)
       present(e, e.matchF64(Seq(RegexC("text", "sor.+"))), 1000)
@@ -186,8 +188,8 @@ object SparkEntry {
       val e = storeEngine(s, dir)
       present(e, e.matchF64(Seq(Fts("text", "merge sort data"))), 10)
     }),
-    // F5 through the PERSISTED fast-fuzzy artifact (index-time
-    // SymSpell dictionary, variant-range-partitioned)
+    // F5 through a persisted store: corrections over its termstats
+    // dictionary
     "q38_persisted_fastfuzzy" -> ((s, dir) => {
       val e = storeEngine(s, dir)
       present(e, e.matchF64(Seq(FastFuzzy("text", "mrege sortt"))), 10)

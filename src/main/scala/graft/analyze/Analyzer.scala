@@ -150,11 +150,9 @@ object Tokenizers {
     * 'quickli'). v1 = Porter 1980 `en_stem` (manifests without the
     * column); v2 = Snowball English ("Porter2") `en_stem`, matching
     * tantivy's rust-stemmers; v3 = Unicode-whitespace split +
-    * codepoint-granular length caps for `whitespace`/`raw`, and
-    * codepoint-granular SymSpell delete variants (symspell.parquet is
-    * a persisted artifact, so variant granularity is versioned
-    * analysis semantics too — only raw/whitespace terms can contain
-    * astral codepoints, the other tokenizers emit [a-z0-9]+). */
+    * codepoint-granular length caps for `whitespace`/`raw` (v3 also
+    * made the then-persisted SymSpell delete variants codepoint-
+    * granular; no store artifact depends on them any more). */
   final val AnalyzerVersion = 3
 
   /** Tokenizers whose output (or persisted derived artifacts) changed

@@ -86,12 +86,14 @@ object Levenshtein {
   }
 }
 
-/** SymSpell-style pre-computed spell correction: lnx's flagship
-  * "fast-fuzzy" path (README.md:28,41 — correct the *query* against a
-  * build-time dictionary instead of expanding terms at search time;
-  * SURVEY.md section 2.4 F5). Delete-variants of depth <= 2 on both the
-  * dictionary and the query cover every pair within Levenshtein
-  * distance 2; candidates are verified with the true distance.
+/** SymSpell-style spell correction: lnx's flagship "fast-fuzzy" path
+  * (README.md:28,41 — correct the *query* against the dictionary
+  * instead of expanding terms at search time; SURVEY.md section 2.4
+  * F5). Delete-variants of depth <= 2 on both the dictionary and the
+  * query cover every pair within Levenshtein distance 2 (the SymSpell
+  * completeness property, SymSpellSpec); the engine picks the
+  * correction among the dictionary terms within that distance
+  * (`LocalTermDict`, `pickBestDf`).
   */
 object SymSpell {
   final val MaxDistance = 2
@@ -99,9 +101,8 @@ object SymSpell {
   /** All strings obtained from `s` by deleting up to `d` CODEPOINTS
     * (incl. s) — codepoint granularity matches the distance definition
     * above (a char-granular delete would split surrogate pairs and
-    * lose depth-2 completeness for astral-codepoint terms). This output
-    * is PERSISTED (symspell.parquet), so any change here is an
-    * analyzer-version bump (Tokenizers.AnalyzerVersion v3).
+    * lose depth-2 completeness for astral-codepoint terms). Nothing
+    * persists this output, so changing it needs no analyzer-version bump.
     */
   def deletes(s: String, d: Int = MaxDistance): Set[String] = {
     var cur = Set(s)

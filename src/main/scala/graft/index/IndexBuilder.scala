@@ -30,12 +30,6 @@ final case class IndexConfig(
     fields: Seq[String],
     shardDocs: Int = 8192,
     buildPartitions: Int = 32,
-    /** lnx fast-fuzzy mode: pre-compute the SymSpell delete-variant
-      * dictionary at INDEX time and persist it with the segment
-      * (README.md:28 — "sacrifices indexing performance" for the 30x
-      * query path). Off: the dictionary builds lazily at first query.
-      */
-    fastFuzzy: Boolean = false,
     /** Per-field tokenizer names (the DDL's `WITH (tokenizers = ...)`,
       * sql.rs:110; registry semantics in analyze.Tokenizers). Fields
       * absent from the map use the default code-aware analyzer. Query
@@ -109,20 +103,18 @@ object DocRange {
   * loaded store's table p from postings file p of its file pairs,
   * beside docs file p (`IndexStore.loadManifest`), or from one shard
   * repartition above the load's tombstone gate
-  * (`IndexBuilder.shardTables`). `postings` and an in-memory
-  * build's `termStats` and `fieldTokens` are read off it, not cached
-  * beside it. A store applies its tombstones to the postings (and
-  * `docs`) once, when the tables are built; `termStats`, `numDocs` and
-  * `fieldTokens` still count deleted docs until compaction, as
-  * Lucene/tantivy segment statistics do.
+  * (`IndexBuilder.shardTables`). `postings`, an in-memory build's
+  * partial dfs (`termDfs`) and `fieldTokens` are read off it, not
+  * cached beside it. A store applies its tombstones to the postings
+  * (and `docs`) once, when the tables are built; the term dfs,
+  * `numDocs` and `fieldTokens` still count deleted docs until
+  * compaction, as Lucene/tantivy segment statistics do.
   *
-  * `termStats` and `symspell` are distributed frames for the dictionary
-  * lookups above the driver snapshot's cap (QueryEngine), planned and
-  * persisted on first use: an engine whose dictionary fits the driver
-  * never plans them. `termStats` is the sum of `termDfs`. What a search
-  * reads instead goes through two hooks: `docColumns` (the docs
-  * partitions a fetch reads) and `termDfs` (the partial dfs the driver
-  * snapshot sums, `termDfRows` rows), each without a Catalyst plan per
+  * What a search reads beside the tables goes through two hooks:
+  * `docColumns` (the docs partitions a fetch reads) and `termDfs` (the
+  * partial dfs every dictionary lookup reads, `termDfRows` rows: the
+  * driver snapshot sums them, above its cap each partition is a
+  * dictionary piece, QueryEngine), each without a Catalyst plan per
   * read when the index is a loaded store.
   */
 final class BuiltIndex(
@@ -136,9 +128,6 @@ final class BuiltIndex(
     val numDocs: Long,
     val fieldTokens: Map[String, Long],
     val config: IndexConfig,
-    /** build-time SymSpell dictionary (field, variant, term, df) when
-      * the segment was written in fast-fuzzy mode. */
-    symspellOf: => Option[DataFrame] = None,
     /** The range table: the docId window of every `docs` partition,
       * whose docs are docId-ascending, all inside it, and exactly the
       * docs whose postings shard table p holds. An in-memory build's
@@ -168,26 +157,7 @@ final class BuiltIndex(
     * (a store's shard repartition, `IndexBuilder.shardTables`). */
   def searchPartitions: Int = docRanges.fold(config.buildPartitions)(_.length)
 
-  @volatile private var termStatsUsed, symspellUsed = false
-
-  /** The term dictionary (field, term, df): `termDfs` summed per
-    * (field, term), planned and persisted on first use. */
-  lazy val termStats: DataFrame = {
-    termStatsUsed = true
-    spark.createDataset(termDfs)(Encoders.product[TermDf])
-      .groupBy(col("field"), col("term"))
-      .agg(sum(col("df")).as("df"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-  }
-
   lazy val termDfRows: Long = termDfRowsOf
-
-  /** The build-time SymSpell dictionary (field, variant, term, df) of a
-    * store written in fast-fuzzy mode; planned and persisted on first use. */
-  lazy val symspell: Option[DataFrame] = {
-    symspellUsed = true
-    symspellOf.map(_.persist(StorageLevel.MEMORY_AND_DISK))
-  }
 
   /** Docs partition p's (docId +: cols) rows, partition p beside range
     * p and shard table p, and their schema. A store's rows come from a
@@ -199,8 +169,8 @@ final class BuiltIndex(
     }(_(cols))
 
   /** Partial dfs, one set per partition with no (field, term) twice in
-    * a set, whose sums per (field, term) are `termStats`: read with no
-    * shuffle. */
+    * a set, whose sums per (field, term) are the term dictionary: read
+    * with no shuffle. */
   def termDfs: RDD[TermDf] =
     termDfScan.fold(shards.rdd.mapPartitions(_.flatMap(_.termDfs)))(_())
 
@@ -232,13 +202,10 @@ final class BuiltIndex(
   /** blocking = true waits for the blocks to actually drop — required
     * when the caller immediately starts competing work (e.g. Bench's
     * second build pass) and async eviction would contaminate its
-    * storage-memory budget. A never-used dictionary frame has nothing
-    * to drop.
+    * storage-memory budget.
     */
   def unpersist(blocking: Boolean): Unit = {
     docs.unpersist(blocking); shards.unpersist(blocking)
-    if (termStatsUsed) termStats.unpersist(blocking)
-    if (symspellUsed) symspell.foreach(_.unpersist(blocking))
   }
 }
 

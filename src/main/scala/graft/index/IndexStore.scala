@@ -74,6 +74,9 @@ object IndexStore {
   final case class CheckpointRow(epoch: Int, snapshotId: String, committedAtEpochMs: Long)
   final case class LineageRow(epoch: Int, partitionId: Int, postingRows: Long,
       postingDocs: Long, tokens: Long)
+  /** `fastFuzzy` is read and ignored: stores written with it set carry
+    * a `symspell.parquet` per segment that nothing reads any more
+    * (fast-fuzzy correction runs over the term dictionary). */
   final case class ConfigRow(keyCols: Seq[String], fields: Seq[String], shardDocs: Int,
       buildPartitions: Int, fastFuzzy: Boolean = false,
       tokenizers: Map[String, String] = Map.empty,
@@ -125,16 +128,14 @@ object IndexStore {
   private[index] val PostingsSchema =
     readBack(Encoders.product[PostingRow].schema).asInstanceOf[StructType]
   private[index] val TermStatsSchema = StructType.fromDDL("field STRING, term STRING, df BIGINT")
-  private[index] val SymSpellSchema =
-    StructType.fromDDL("field STRING, variant STRING, term STRING, df BIGINT")
   private[index] val TombstoneSchema = StructType.fromDDL("docId BIGINT")
 
   private def docSchemaOf(m: Manifest): StructType =
     DataType.fromJson(m.docSchema).asInstanceOf[StructType]
 
   private def configOf(c: ConfigRow): IndexConfig =
-    IndexConfig(c.keyCols, c.fields, c.shardDocs, c.buildPartitions, c.fastFuzzy,
-      c.tokenizers, c.docIdStrategy)
+    IndexConfig(c.keyCols, c.fields, c.shardDocs, c.buildPartitions, c.tokenizers,
+      c.docIdStrategy)
 
   private def latestPath(dir: String) = Paths.get(dir, "_manifest", "LATEST")
 
@@ -350,19 +351,9 @@ object IndexStore {
       .option("parquet.block.size", (8 * 1024 * 1024).toString)
       .parquet(path)
 
-  private def writeTermstatsParquet(termStats: DataFrame, path: String): Unit =
-    termStats
+  private def writeTermstatsParquet(rows: DataFrame, path: String): Unit =
+    rows
       .sortWithinPartitions("field", "term")
-      .write.mode(SaveMode.Overwrite).parquet(path)
-
-  /** Fast-fuzzy mode: the SymSpell delete-variant dictionary is an
-    * INDEX-time artifact (README.md:28), variant-range-partitioned so
-    * query-time correction lookups prune row groups.
-    */
-  private def writeSymspellParquet(termStats: DataFrame, parts: Int, path: String): Unit =
-    graft.query.SymSpellDict.build(termStats)
-      .repartitionByRange(math.max(1, parts / 4), col("field"), col("variant"))
-      .sortWithinPartitions("field", "variant")
       .write.mode(SaveMode.Overwrite).parquet(path)
 
   /** Write an in-memory build's segment files (no manifest commit yet),
@@ -370,9 +361,8 @@ object IndexStore {
     * exchange: docs partition p is already docId-ascending over its own
     * range (`BuiltIndex.docRanges`) and shard table p holds its
     * postings, so each partition writes its docs, its sorted posting
-    * rows and its partial term dfs as they are. Only a fast-fuzzy
-    * segment's SymSpell dictionary derives from the aggregated
-    * `termStats`. Returns the segment's file pairs.
+    * rows and its partial term dfs as they are. Returns the segment's
+    * file pairs.
     */
   private def writeSegment(idx: BuiltIndex, segDir: String): Seq[FilePair] = {
     val ranges = idx.docRanges.getOrElse(
@@ -381,9 +371,6 @@ object IndexStore {
     writeDocsParquet(idx.docs, s"$segDir/docs.parquet")
     writeTermstatsParquet(idx.spark.createDataset(idx.termDfs)(Encoders.product[TermDf]).toDF(),
       s"$segDir/termstats.parquet")
-    if (idx.config.fastFuzzy)
-      writeSymspellParquet(idx.termStats, math.max(1, idx.config.buildPartitions / 4),
-        s"$segDir/symspell.parquet")
     filePairs(segDir, ranges)
   }
 
@@ -477,7 +464,7 @@ object IndexStore {
     val epochs = config.fields.map(f =>
       EpochMeta(0, "seg-00000", idx.numDocs, 0L, idx.numDocs, f, idx.fieldTokens.getOrElse(f, 0L)))
     val configRow = ConfigRow(config.keyCols, config.fields, config.shardDocs,
-      config.buildPartitions, config.fastFuzzy, config.tokenizers,
+      config.buildPartitions, tokenizers = config.tokenizers,
       docIdStrategy = config.docIdStrategy)
     commit(dir, 1, Manifest(ManifestFormat, epochs, configRow,
       Seq(CheckpointRow(0, snapshotId, 0L)), Nil, Map.empty, readBack(idx.docs.schema).json,
@@ -514,7 +501,7 @@ object IndexStore {
 
   /** Union of the segments' files of one kind, read with their known
     * schema, as a Catalyst frame (the shuffle paths above the tombstone
-    * gate, the SymSpell frames, compaction's merge). */
+    * gate, compaction's merge). */
   private def readSegments(spark: SparkSession, dir: String, segPaths: Seq[String],
       file: String, schema: StructType): DataFrame =
     segPaths.map(p => spark.read.schema(schema).parquet(s"$dir/$p/$file"))
@@ -686,12 +673,10 @@ object IndexStore {
     * in a shuffle join and go through one shard repartition
     * (`IndexBuilder.shardTables`), with no range table.
     *
-    * Either way the tables freeze and build on the first read, the
-    * dictionary snapshot sums the termstats files' partial dfs in one
-    * scan job (`BuiltIndex.termDfs`), and the `termStats` and `symspell`
-    * frames are planned only when a lookup above the snapshot's cap
-    * needs them. So load plans nothing over the postings, the
-    * dictionary or (under the gate) the docs; its one job is the
+    * Either way the tables freeze and build on the first read, and the
+    * dictionary lookups read the termstats files' partial dfs through
+    * one planless scan (`BuiltIndex.termDfs`). So load plans nothing
+    * over the postings, the dictionary or (under the gate) the docs; its one job is the
     * tombstone collect under the gate, none on a store without
     * tombstones.
     */
@@ -745,13 +730,7 @@ object IndexStore {
     val termDfScan = () =>
       FileScan.scan(spark, termstats.map(Some(_)), TermStatsSchema, TermStatsSchema)
         .map(r => TermDf(r.getUTF8String(0).toString, r.getUTF8String(1).toString, r.getLong(2)))
-    // fast-fuzzy segments carry the precomputed correction dictionary;
-    // per-(field, variant, term) df re-aggregates across segments just
-    // like the term dictionary
     new BuiltIndex(docs, shards, FileScan.rowCount(spark, termstats), numDocs, fieldTokens, config,
-      if (!config.fastFuzzy) None
-      else Some(readSegments(spark, dir, segPaths, "symspell.parquet", SymSpellSchema)
-        .groupBy("field", "variant", "term").agg(sum("df").as("df"))),
       docRanges, docsScan, Some(termDfScan))
       .persist(cacheDocs)
   }
@@ -1118,10 +1097,6 @@ object IndexStore {
     // computation total instead of re-merging per aggregate
     val written = FileScan.statuses(spark, pairs.flatMap(_.postings).map(f => s"$segDir/$f"))
     writeTermstatsParquet(partialDfs(spark, written), s"$segDir/termstats.parquet")
-    if (config.fastFuzzy)
-      writeSymspellParquet(
-        readSegments(spark, dir, Seq(segName), "termstats.parquet", TermStatsSchema),
-        math.max(1, config.buildPartitions / 4), s"$segDir/symspell.parquet")
     val newFieldTokens = spark.sparkContext.runJob(
         FileScan.scan(spark, written.map(Some(_)), PostingsSchema,
           fieldsOf(PostingsSchema, Seq("field", "sumTf"))),

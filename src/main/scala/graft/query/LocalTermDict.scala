@@ -4,39 +4,37 @@ import java.nio.charset.StandardCharsets
 
 import scala.jdk.CollectionConverters._
 
-import graft.analyze.Levenshtein
+import graft.analyze.{Levenshtein, SymSpell}
+import graft.index.TermDf
 
-/** Bounded in-memory snapshot of the term dictionary (field, term, df):
-  * the Spark-native analogue of tantivy's per-segment FST, which the
-  * reference consults in memory at query-compile time (lnx delegates
-  * term lookups to tantivy's mmap'd term dictionary — no cluster
-  * round-trip per query). When the whole dictionary fits under
-  * `graft.dict.localMaxTerms` (probed with ONE capped collect —
-  * `limit(cap+1)` — so the probe is bounded at any corpus scale), every
-  * dictionary lookup a query compile needs — exact df, prefix / fuzzy /
-  * regex expansion, fast-fuzzy correction — runs driver-side with ZERO
-  * Spark jobs, and novel-query latency collapses to the one scoring
-  * job. Above the cap the distributed lookup jobs run unchanged (the
-  * 100 TB path: the dictionary does not fit on the driver, the capped
-  * in-plan expansions do).
+/** An in-memory term dictionary (field, term, df): the Spark-native
+  * analogue of tantivy's per-segment FST, which the reference consults
+  * in memory at query-compile time (lnx delegates term lookups to
+  * tantivy's mmap'd term dictionary). It is the one implementation of
+  * every compile-time lookup (exact df, prefix / fuzzy / regex
+  * expansion, fast-fuzzy correction). QueryEngine asks a sequence of
+  * pieces and merges their answers on the driver (`merge`): the driver
+  * snapshot of the whole dictionary when it fits the cap, otherwise one
+  * piece per partial-df partition, asked in one job.
   *
-  * Result-identity contract (spec-gated in LocalDictSpec): each lookup
-  * reproduces the distributed plan's semantics exactly —
+  * Each piece applies the same caps and orders to its own terms:
   *  - term order is UTF8-binary (Spark's StringType sort order),
-  *    realized by sorting the snapshot on UTF-8 bytes unsigned;
+  *    realized by sorting on UTF-8 bytes unsigned;
   *  - prefix match is byte-prefix match on that order (UTF-8 is a
   *    prefix code, so it equals UTF8String.startsWith);
   *  - fuzzy admission is Levenshtein.distance (property-pinned equal to
   *    Spark's codepoint-counting builtin, SymSpellSpec), length-banded
-  *    on CODEPOINT counts exactly like the in-plan equi-join band
-  *    (`max(1, n-d) .. n+d`);
+  *    on CODEPOINT counts (`max(1, n-d) .. n+d`);
   *  - caps take the first MaxExpansions under (dist asc, term asc) /
-  *    (term asc) in UTF8-binary term order — the in-plan window /
-  *    TakeOrdered order;
-  *  - regex matching uses the identical `^(?:pattern)$` java.util.regex
-  *    form RLike compiles, with matcher.find() (RLike's call), and the
-  *    same conservative literal-prefix pruning (prefix-range narrowing
-  *    never changes the match set — every match carries the prefix).
+  *    (term asc) in UTF8-binary term order;
+  *  - regex matching uses the `^(?:pattern)$` java.util.regex form
+  *    Spark's RLike compiles, with matcher.find() (RLike's call), and
+  *    conservative literal-prefix pruning (prefix-range narrowing never
+  *    changes the match set: every match carries the prefix).
+  * So a term inside the global cap is inside the local cap of every
+  * piece that holds it, and the merge (sum the partial dfs per term,
+  * re-sort, re-cap) is exact for any split of the partial dfs into
+  * pieces (LocalDictSpec: 1 piece == N pieces).
   */
 final class LocalTermDict private (
     private val fields: java.util.HashMap[String, LocalTermDict.FieldDict]) {
@@ -71,11 +69,10 @@ final class LocalTermDict private (
     out.result()
   }
 
-  /** Fuzzy expansion with the distributed path's exact shape: admitted
-    * set {dist <= maxDist} from the codepoint length band, capped at
-    * `cap` under (dist asc, term asc UTF8) — the in-plan window order —
-    * then the same final (dist, term) re-sort the driver applies after
-    * collect. Returns (term, df, dist).
+  /** Fuzzy expansion: admitted set {dist <= maxDist} from the codepoint
+    * length band, capped at `cap` under (dist asc, term asc UTF8), then
+    * re-sorted by (dist, term) in Java String order. Returns
+    * (term, df, dist).
     */
   def fuzzyCapped(field: String, tok: String, maxDist: Int, cap: Int): Seq[(String, Long, Int)] = {
     val admitted = fuzzyAdmitted(field, tok, maxDist)
@@ -86,10 +83,9 @@ final class LocalTermDict private (
       .sortBy(t => (t._3, t._1))
   }
 
-  /** Uncapped admitted (term, df) set at `maxDist` — the fast-fuzzy
-    * correction candidate set (the variant-prefilter path is complete
-    * for d <= 2 and its pickBestDf verification reduces it to exactly
-    * this set; SymSpellSpec).
+  /** Uncapped admitted (term, df) set at `maxDist`: at
+    * SymSpell.MaxDistance, the fast-fuzzy correction candidates
+    * `SymSpell.pickBestDf` picks from.
     */
   def fuzzyAll(field: String, tok: String, maxDist: Int): Seq[(String, Long)] = {
     val fd = fields.get(field)
@@ -145,12 +141,16 @@ final class LocalTermDict private (
     out.result()
   }
 
-  /** Snapshot size (diagnostics). */
-  def numTerms: Int = {
-    var n = 0
-    val it = fields.values().iterator()
-    while (it.hasNext) n += it.next().terms.length
-    n
+  /** This piece's answers to every lookup of `ask`, each under its cap
+    * and order over this piece's terms alone (`merge` combines pieces). */
+  def answer(ask: DictAsk): DictPartial = {
+    import SearchDefaults.MaxExpansions
+    DictPartial(
+      ask.exact.flatMap(k => df(k._1, k._2).map(k -> _)).toMap,
+      ask.prefix.map(k => k -> prefixCapped(k._1, k._2, MaxExpansions)).toMap,
+      ask.fuzzy.map(k => k -> fuzzyCapped(k._1, k._3, k._2, MaxExpansions)).toMap,
+      ask.correct.map(k => k -> fuzzyAll(k._1, k._2, SymSpell.MaxDistance)).toMap,
+      ask.regex.map(k => k -> regexCapped(k._1, k._2, MaxExpansions)).toMap)
   }
 }
 
@@ -211,19 +211,90 @@ object LocalTermDict {
     true
   }
 
-  /** Build from collected (field, term, df) rows. */
-  def fromRows(rows: Array[(String, String, Long)]): LocalTermDict = {
+  /** UTF8-binary order: unsigned UTF-8 bytes, Spark's StringType order. */
+  private val Unsigned: Ordering[Array[Byte]] =
+    Ordering.comparatorToOrdering((a: Array[Byte], b: Array[Byte]) => java.util.Arrays.compareUnsigned(a, b))
+
+  private def utf8(term: String): Array[Byte] = term.getBytes(StandardCharsets.UTF_8)
+
+  /** A dictionary over (field, term, df) rows holding no (field, term) twice. */
+  def fromRows(rows: IterableOnce[TermDf]): LocalTermDict = {
     val byField = new java.util.HashMap[String, FieldDict]()
-    rows.groupBy(_._1).foreach { case (field, rs) =>
-      val bytes = rs.map(_._2.getBytes(StandardCharsets.UTF_8))
-      val order = (0 until rs.length).sortBy(i => bytes(i))(
-        Ordering.comparatorToOrdering(
-          (a: Array[Byte], b: Array[Byte]) => java.util.Arrays.compareUnsigned(a, b)))
+    rows.iterator.toArray.groupBy(_.field).foreach { case (field, rs) =>
+      val bytes = rs.map(r => utf8(r.term))
+      val order = rs.indices.sortBy(i => bytes(i))(Unsigned)
       byField.put(field, new FieldDict(
-        order.map(i => rs(i)._2).toArray,
+        order.map(i => rs(i).term).toArray,
         order.map(i => bytes(i)).toArray,
-        order.map(i => rs(i)._3).toArray))
+        order.map(i => rs(i).df).toArray))
     }
     new LocalTermDict(byField)
+  }
+
+  /** Every lookup a compile (or a compile batch) needs, asked of each
+    * piece at once: exact (field, term); prefix (field, prefix without
+    * its `*`); fuzzy (field, maxDist, token); correct (field, token),
+    * fast-fuzzy; regex (field, pattern). */
+  final case class DictAsk(
+      exact: Seq[(String, String)] = Nil,
+      prefix: Seq[(String, String)] = Nil,
+      fuzzy: Seq[(String, Int, String)] = Nil,
+      correct: Seq[(String, String)] = Nil,
+      regex: Seq[(String, String)] = Nil) {
+    def isEmpty: Boolean =
+      exact.isEmpty && prefix.isEmpty && fuzzy.isEmpty && correct.isEmpty && regex.isEmpty
+  }
+
+  /** One piece's answers to a DictAsk over its own terms: partial dfs,
+    * capped expansions, and per fast-fuzzy token every term within
+    * SymSpell.MaxDistance. */
+  final case class DictPartial(
+      dfs: Map[(String, String), Long],
+      prefix: Map[(String, String), Seq[(String, Long)]],
+      fuzzy: Map[(String, Int, String), Seq[(String, Long, Int)]],
+      near: Map[(String, String), Seq[(String, Long)]],
+      regex: Map[(String, String), Seq[(String, Long)]])
+
+  /** The answers to a DictAsk over the whole dictionary: the df of every
+    * exact term it holds; per prefix, fuzzy token and regex the capped
+    * expansion (absent or empty when nothing matches); per fast-fuzzy
+    * token its correction with the corrected term's df, None when no
+    * term is within SymSpell.MaxDistance. */
+  final case class DictAnswer(
+      dfs: Map[(String, String), Long],
+      prefix: Map[(String, String), Seq[(String, Long)]],
+      fuzzy: Map[(String, Int, String), Seq[(String, Long, Int)]],
+      corrections: Map[(String, String), Option[(String, Long)]],
+      regex: Map[(String, String), Seq[(String, Long)]])
+
+  object DictAnswer {
+    val empty: DictAnswer = DictAnswer(Map.empty, Map.empty, Map.empty, Map.empty, Map.empty)
+  }
+
+  /** The pieces' answers to `ask` merged into the whole dictionary's:
+    * partial dfs summed per term, then each expansion re-sorted in its
+    * order (UTF8-binary term; (dist, UTF8-binary term) for fuzzy) and
+    * re-capped, which is exact because every piece applied the same cap
+    * and order; then the final orders the compile reads (prefix and
+    * fuzzy in Java String order, regex UTF8-binary). Fast-fuzzy picks
+    * from the summed candidates (`SymSpell.pickBestDf`). */
+  def merge(ask: DictAsk, parts: Seq[DictPartial]): DictAnswer = {
+    import SearchDefaults.MaxExpansions
+    def summed[K](rows: Seq[(K, Long)]): Map[K, Long] = rows.groupMapReduce(_._1)(_._2)(_ + _)
+    def capped(hits: Seq[(String, Long)]): Seq[(String, Long)] =
+      summed(hits).toSeq.sortBy(t => utf8(t._1))(Unsigned).take(MaxExpansions)
+    DictAnswer(
+      summed(parts.flatMap(_.dfs)),
+      ask.prefix.map(k => k -> capped(parts.flatMap(_.prefix.getOrElse(k, Nil))).sortBy(_._1)).toMap,
+      ask.fuzzy.map { k =>
+        val hits = parts.flatMap(_.fuzzy.getOrElse(k, Nil))
+        val dist = hits.map(h => h._1 -> h._3).toMap
+        k -> summed(hits.map(h => h._1 -> h._2)).toSeq.map { case (t, df) => (t, df, dist(t)) }
+          .sortBy(t => (t._3, utf8(t._1)))(Ordering.Tuple2(Ordering.Int, Unsigned))
+          .take(MaxExpansions).sortBy(t => (t._3, t._1))
+      }.toMap,
+      ask.correct.map(k =>
+        k -> SymSpell.pickBestDf(k._2, summed(parts.flatMap(_.near.getOrElse(k, Nil))).toSeq)).toMap,
+      ask.regex.map(k => k -> capped(parts.flatMap(_.regex.getOrElse(k, Nil)))).toMap)
   }
 }

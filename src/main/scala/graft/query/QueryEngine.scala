@@ -9,7 +9,6 @@ import org.apache.spark.sql.types.{DoubleType, FloatType, IntegerType, LongType,
   StructType}
 import org.apache.spark.storage.StorageLevel
 
-import graft.analyze.{Analyzer, Levenshtein, SymSpell}
 import graft.index.{BuiltIndex, DocRange, TermDf}
 
 /** Search clauses: the WHERE-clause surface of the lnx SQL dialect
@@ -57,18 +56,25 @@ final case class MoreLikeThis(field: String, docId: Long, topTerms: Int = 8,
     required: Boolean = true) extends SearchClause
 
 /** Compiles search clauses against an index's term dictionary and runs
-  * them through the distributed scorers. Term-dictionary lookups
-  * (df, prefix/fuzzy/regex expansion, fast-fuzzy correction) answer
-  * from a driver-side snapshot (`LocalTermDict`) whenever the dictionary
-  * fits `graft.dict.localMaxTerms` — the Spark analogue of tantivy
-  * consulting its FST term dictionary at plan time. The snapshot sums
-  * the index's partial dfs (`BuiltIndex.termDfs`) in one job with no
-  * shuffle and no Catalyst plan. Above the cap the lookups run as
-  * capped filters on the termStats frame and collect only the matched
-  * entries.
+  * them through the distributed scorers. Every term-dictionary lookup
+  * (df, prefix/fuzzy/regex expansion, fast-fuzzy correction) runs
+  * `LocalTermDict`: a compile asks a sequence of pieces all its lookups
+  * at once and merges their answers on the driver
+  * (`LocalTermDict.merge`) — the Spark analogue of tantivy consulting
+  * its per-segment FST term dictionaries at plan time. While the
+  * dictionary fits the cap, the sequence is the one driver snapshot and
+  * a compile runs no Spark job; above it, one job asks one piece per
+  * partial-df partition in place (no shuffle, no Catalyst plan).
+  *
+  * @param dictMaxTerms the driver snapshot's term cap
+  *   (`SearchDefaults.LocalDictMaxTerms`); specs lower it to force the
+  *   pieces.
   */
-final class QueryEngine(val index: BuiltIndex) {
+final class QueryEngine private[graft] (val index: BuiltIndex, dictMaxTerms: Int) {
   import SearchDefaults._
+  import LocalTermDict.{DictAnswer, DictAsk}
+
+  def this(index: BuiltIndex) = this(index, SearchDefaults.LocalDictMaxTerms)
 
   /** Driver-side term-dictionary snapshot (the tantivy-FST analogue —
     * see LocalTermDict), built ONCE per engine in one Spark job with no
@@ -79,18 +85,14 @@ final class QueryEngine(val index: BuiltIndex) {
     * partial dfs hold at most `LocalDictPartialRowsPerTerm` x cap rows
     * (`BuiltIndex.termDfRows`, known without a job), so that many rows at
     * most reach the driver at any corpus scale. When the whole
-    * dictionary fits under `graft.dict.localMaxTerms`, every dictionary
-    * lookup below answers driver-side with zero Spark jobs; otherwise
-    * None and the distributed lookup jobs run unchanged (the 100 TB
-    * path). Lazy: engines that never consult the dictionary never pay
-    * the probe. The conf resolves at first use and is pinned for the
-    * engine's lifetime (mutations invalidate by engine replacement,
-    * like both LRUs below).
+    * dictionary fits under the cap, every lookup answers driver-side
+    * with zero Spark jobs; otherwise None and lookups ask the `pieces`.
+    * Lazy: engines that never consult the dictionary never pay the
+    * probe.
     */
   private[graft] lazy val localDict: Option[LocalTermDict] = {
-    val cap = index.spark.conf
-      .get("graft.dict.localMaxTerms", SearchDefaults.LocalDictMaxTerms.toString).toInt
-    if (cap <= 0 || index.termDfRows > LocalDictPartialRowsPerTerm.toLong * cap) None
+    val cap = dictMaxTerms
+    if (index.termDfRows > LocalDictPartialRowsPerTerm.toLong * cap) None
     else {
       val parts = index.spark.sparkContext.runJob(index.termDfs, (it: Iterator[TermDf]) => {
         val held = it.take(cap + 1).toArray
@@ -102,7 +104,7 @@ final class QueryEngine(val index: BuiltIndex) {
         parts.foreach(_.get.foreach(t =>
           dfs.updateWith((t.field, t.term))(df => Some(df.getOrElse(0L) + t.df))))
         if (dfs.size > cap) None
-        else Some(LocalTermDict.fromRows(dfs.iterator.map { case ((f, t), df) => (f, t, df) }.toArray))
+        else Some(LocalTermDict.fromRows(dfs.iterator.map { case ((f, t), df) => TermDf(f, t, df) }))
       }
     }
   }
@@ -111,319 +113,79 @@ final class QueryEngine(val index: BuiltIndex) {
     * the driver-side snapshot (forces the probe). */
   private[graft] def localDictActive: Boolean = localDict.nonEmpty
 
-  /** field -> (term -> df) for an exact term batch. */
-  private def dfLookup(keys: Seq[(String, String)]): Map[(String, String), Long] = {
-    if (keys.isEmpty) return Map.empty
-    localDict match {
-      case Some(d) =>
-        return keys.distinct.flatMap(k => d.df(k._1, k._2).map(df => k -> df)).toMap
+  /** The dictionary above the snapshot's cap: one LocalTermDict per
+    * partial-df partition (`BuiltIndex.termDfs`, no (field, term) twice
+    * in one), built in place with no shuffle by the first lookup's job
+    * and kept for the engine's lifetime (`release`). */
+  @volatile private var piecesUsed = false
+  private lazy val pieces: RDD[LocalTermDict] = {
+    piecesUsed = true
+    index.termDfs.mapPartitions(it => Iterator.single(LocalTermDict.fromRows(it)))
+      .persist(StorageLevel.MEMORY_ONLY)
+  }
+
+  /** Every answer to `ask`, merged over the pieces: the driver snapshot,
+    * or one job over the partition pieces. An empty ask runs nothing. */
+  private def lookup(ask: DictAsk): DictAnswer =
+    if (ask.isEmpty) DictAnswer.empty
+    else LocalTermDict.merge(ask, localDict match {
+      case Some(d) => Seq(d.answer(ask))
       case None =>
-    }
-    val fields = keys.map(_._1).distinct
-    val terms = keys.map(_._2).distinct
-    // Set membership, not Seq.contains: compileMany feeds this the
-    // union of a whole batch's terms, and O(|rows| x |keys|) pair
-    // comparisons on the driver would sit on the throughput path
-    val keySet = keys.toSet
-    index.termStats
-      .filter(col("field").isin(fields: _*) && col("term").isin(terms: _*))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
-      .toMap
-      .filter { case (k, _) => keySet(k) }
-  }
+        index.spark.sparkContext.runJob(pieces,
+          (it: Iterator[LocalTermDict]) => it.next().answer(ask)).toSeq
+    })
 
-  /** Batched prefix expansion: ONE job for all prefix tokens of a
-    * clause (per-token Spark jobs would pay a scheduler round-trip
-    * each). Per-prefix cap + term order run in-plan via a window, so
-    * the driver collects at most (#prefixes x MaxExpansions) rows.
-    */
-  private def prefixExpandAll(field: String,
-      prefixes: Seq[String]): Map[String, Seq[(String, Long)]] = {
-    if (prefixes.isEmpty) return Map.empty
-    localDict match {
-      case Some(d) =>
-        // same shape as the collected-row path below: capped per prefix
-        // in UTF8-binary term order (the in-plan TakeOrdered/window
-        // order), empty prefixes absent from the map, final per-prefix
-        // sort by Java string order mirroring the sortBy on collect
-        return prefixes.distinct
-          .map(p => p -> d.prefixCapped(field, p, MaxExpansions).sortBy(_._1))
-          .filter(_._2.nonEmpty).toMap
-      case None =>
-    }
-    val rows = prefixCandidates(field, prefixes).collect()
-    rows.groupBy(_.getString(0)).map { case (pfx, rs) =>
-      pfx -> rs.map(r => (r.getString(1), r.getLong(2))).sortBy(_._1).toSeq
-    }
-  }
-
-  /** Capped (pfx, term, df) candidate frame for prefix expansion —
-    * package-visible so PlanSpec can assert the plan shape.
-    *
-    * Every prefix is a LITERAL, so each `startsWith` pushes to the
-    * parquet scan as StringStartsWith and their OR prunes row groups of
-    * the term-sorted persisted dictionary — the dataflow analogue of
-    * tantivy's per-prefix FST range scan (tantivy-sstable). The
-    * multi-prefix shape (`fts(name, 'Tim* Mich*')`, apis/mod.rs:221)
-    * previously joined the dictionary on a column-to-column startsWith,
-    * which planned as a BroadcastNestedLoopJoin — a full un-pruned
-    * dictionary scan per clause; now it is the SAME single pushed-down
-    * scan as one prefix, with in-plan tagging instead of a join.
-    */
-  private[graft] def prefixCandidates(field: String, prefixes: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ps = prefixes.distinct
-    if (ps.size == 1) {
-      // single prefix (the common case): no window needed — the term
-      // sort + cap collapse into a TakeOrdered over the pruned scan
-      val pfx = ps.head
-      return index.termStats
-        .filter(col("field") === field && col("term").startsWith(pfx))
-        .orderBy(col("term"))
-        .limit(MaxExpansions)
-        .select(lit(pfx).as("pfx"), col("term"), col("df"))
-    }
-    // a term can extend several prefixes (e.g. 'mer' and 'merge'): tag
-    // it with each in-plan (array of matched prefixes -> explode), then
-    // cap per prefix via the window — one scan, one job, zero joins
-    val anyPfx = ps.map(p => col("term").startsWith(p)).reduce(_ || _)
-    val tags = array(ps.map(p => when(col("term").startsWith(p), lit(p))): _*)
-    val w = Window.partitionBy(col("pfx")).orderBy(col("term").asc)
-    index.termStats
-      .filter(col("field") === field && anyPfx)
-      .withColumn("pfx", explode(filter(tags, _.isNotNull)))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= MaxExpansions)
-      .select(col("pfx"), col("term"), col("df"))
-  }
-
-  /** Distributed fuzzy expansion. For the standard d <= 2 (the lnx
-    * surface), candidates come from the precomputed SymSpell
-    * delete-variant dictionary — two terms within distance 2 always
-    * share a depth-2 delete variant (completeness asserted in
-    * SymSpellSpec), so the expensive levenshtein only runs on the
-    * variant-matched sliver instead of the whole dictionary (the
-    * dataflow analogue of tantivy's levenshtein automata over the FST).
-    * Wider distances fall back to a length-banded dictionary scan. In
-    * both paths the (distance, term) sort + MaxExpansions truncation
-    * happen INSIDE the plan (TakeOrdered), so the driver collects at
-    * most MaxExpansions rows; the banded DP re-verifies driver-side
-    * (built-in and DP must agree).
-    *
-    * Batched fuzzy expansion for ALL tokens of a clause in ONE job.
-    * Candidates are tagged with their query token in-plan (a broadcast
-    * join against the tiny (tok, variant) frame), the levenshtein
-    * verify + per-token (distance, term) cap run in-plan via a window,
-    * and the driver re-verifies with the banded DP (built-in and DP
-    * must agree). At most (#tokens x MaxExpansions) rows are collected.
-    */
-  private def fuzzyExpandAll(field: String, toks: Seq[String],
-      maxDist: Int): Map[String, Seq[(String, Long, Int)]] = {
-    if (toks.isEmpty) return Map.empty
-    localDict match {
-      case Some(d) =>
-        // admitted set, cap and both sort orders mirror the in-plan
-        // window + driver re-verify exactly (LocalTermDict.fuzzyCapped);
-        // tokens with no candidates absent, like the groupBy below
-        return toks.distinct
-          .map(t => t -> d.fuzzyCapped(field, t, maxDist, MaxExpansions))
-          .filter(_._2.nonEmpty).toMap
-      case None =>
-    }
-    val spark = index.spark
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val cand = fuzzyCandidates(field, toks, maxDist)
-    val w = Window.partitionBy(col("tok")).orderBy(col("dist").asc, col("term").asc)
-    val rows = cand
-      .withColumn("dist", levenshtein(col("term"), col("tok")))
-      .filter(col("dist") <= maxDist)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= MaxExpansions)
-      .select(col("tok"), col("term"), col("df"))
-      .collect()
-    rows.groupBy(_.getString(0)).map { case (tok, rs) =>
-      tok -> rs
-        .map(r => (r.getString(1), r.getLong(2), Levenshtein.distance(tok, r.getString(1), maxDist)))
-        .filter(_._3 <= maxDist)
-        .sortBy(t => (t._3, t._1))
-        .toSeq
-    }
-  }
-
-  /** Candidate (tok, term, df) frame for fuzzy expansion — package-
-    * visible so PlanSpec can assert both branches' join shapes.
-    */
-  private[graft] def fuzzyCandidates(field: String, toks: Seq[String],
-      maxDist: Int): DataFrame = {
-    val spark = index.spark
-    import spark.implicits._
-    if (maxDist <= SymSpell.MaxDistance && index.symspell.nonEmpty) {
-        // SymSpell variant prefilter: complete for distance <= 2, so the
-        // levenshtein only runs on the variant-matched sliver (the
-        // dataflow analogue of tantivy's levenshtein automata). Only
-        // taken when the dictionary is the PERSISTED fast-fuzzy artifact
-        // (variant-range-partitioned -> row-group pruning); against the
-        // lazily-built in-memory dict this is a 20x-bigger scan than the
-        // length-banded term scan below (measured at sf0.1)
-        val pairs = toks.distinct.flatMap(t => SymSpell.deletes(t).iterator.map(v => (t, v)))
-        val vdf = pairs.toDF("tok", "variant")
-        symspellDict
-          .filter(col("field") === field)
-          .join(broadcast(vdf), "variant")
-          .select(col("tok"), col("term"), col("df")).distinct()
-      } else {
-        // length-banded dictionary scan as an EQUI-join: each token
-        // explodes to its admissible term lengths [len-d, len+d], so the
-        // join keys on length(term) and plans as a broadcast HASH join —
-        // the `length(term) BETWEEN length(tok)±d` non-equi form plans
-        // as BroadcastNestedLoopJoin, i.e. a full dictionary re-scan per
-        // token (PlanSpec asserts the shape)
-        val pairs = toks.distinct.flatMap { t =>
-          // CODEPOINT count: Spark's length() counts codepoints, and the
-          // band keys on it — t.length (UTF-16 units) would misplace the
-          // band for astral-codepoint tokens and drop exact matches
-          val n = t.codePointCount(0, t.length)
-          (math.max(1, n - maxDist) to (n + maxDist)).map(l => (t, l))
-        }
-        val tdf = pairs.toDF("tok", "len")
-        index.termStats
-          .filter(col("field") === field)
-          .join(broadcast(tdf), length(col("term")) === col("len"))
-          .select(col("tok"), col("term"), col("df"))
-      }
-  }
-
-  private def regexExpand(field: String, pattern: String): Seq[(String, Long)] =
-    localDict match {
-      case Some(d) => d.regexCapped(field, pattern, MaxExpansions)
-      case None =>
-        regexCandidates(field, pattern)
-          .orderBy(col("term"))
-          .limit(MaxExpansions)
-          .collect().map(r => (r.getString(1), r.getLong(2))).toSeq
-    }
-
-  /** Regex candidate frame — package-visible so PlanSpec can assert
-    * the pruned scan shape. `rlike` can never push to parquet, but a
-    * pattern with a required literal prefix (e.g. `foo.*`) admits a
-    * pushable StringStartsWith alongside it, pruning row groups of the
-    * term-sorted dictionary before the regex runs — the dataflow
-    * analogue of tantivy evaluating regexes over the FST, where the
-    * automaton's required prefix bounds the key range walked.
-    */
-  private[graft] def regexCandidates(field: String, pattern: String): DataFrame = {
-    val base = index.termStats.filter(col("field") === field)
-    val pfx = RegexPrefix.literalPrefix(pattern)
-    val pruned = if (pfx.isEmpty) base else base.filter(col("term").startsWith(pfx))
-    pruned.filter(col("term").rlike("^(?:" + pattern + ")$"))
-  }
-
-  /** SymSpell delete-variant dictionary (field, variant, term, df) —
-    * the build-time artifact behind fast-fuzzy. Segments written in
-    * fast-fuzzy mode carry it persisted (variant-range-partitioned for
-    * pushdown, the reference's index-time pre-compute, README.md:28);
-    * otherwise it builds lazily on first use.
-    */
-  private var symspellMaterialized = false
-  lazy val symspellDict: DataFrame = {
-    symspellMaterialized = true
-    index.symspell.getOrElse(
-      SymSpellDict.build(index.termStats).persist(StorageLevel.MEMORY_AND_DISK))
-  }
-
-  /** Release every cached frame this engine pinned: the underlying
-    * index, plus the session-built SymSpell dictionary if it was
-    * materialized (an index-carried dictionary is unpersisted by
-    * index.unpersist() itself). Spark's CacheManager holds persisted
-    * datasets strongly — dropping the engine reference alone leaks the
-    * MEMORY_AND_DISK blocks until executor storage eviction.
+  /** Release every cached block this engine pinned: the index's, plus
+    * the dictionary pieces if a lookup built them. Spark's CacheManager
+    * holds persisted datasets strongly — dropping the engine reference
+    * alone leaks the blocks until executor storage eviction.
     */
   def release(): Unit = {
     index.unpersist()
-    if (symspellMaterialized && index.symspell.isEmpty) symspellDict.unpersist()
+    if (piecesUsed) pieces.unpersist(blocking = false)
   }
 
-  /** Fast-fuzzy correction of ALL query tokens in one lookup job —
-    * fast-fuzzy is the reference's *fast* path (README.md:28,41), so a
-    * per-token Spark job would invert its 30x property on multi-token
-    * queries. All tokens' delete-variants union into a single pushed-
-    * down filter; best-per-token (min distance, max df, lexicographic)
-    * is picked driver-side from the one collected candidate batch.
-    */
-  def correctAll(field: String, toks: Seq[String]): Map[String, String] =
-    correctAllDf(field, toks).map { case (tok, r) => tok -> r.map(_._1).getOrElse(tok) }
+  /** Fast-fuzzy correction of a query token (lnx's pre-computed spell
+    * correction, README.md:28): the dictionary term within
+    * SymSpell.MaxDistance of smallest distance, then largest df, then
+    * least; the token itself when none is. */
+  def correct(field: String, tok: String): String =
+    lookup(DictAsk(correct = Seq((field, tok)))).corrections((field, tok)).fold(tok)(_._1)
 
-  /** As correctAll, also returning the corrected term's dictionary df
-    * (the candidates carry it) — None when the token has no in-dict
-    * candidate at all, which implies the token itself is not a
-    * dictionary term (a term's own 0-delete variant always matches
-    * itself). The single-query fast-fuzzy compile path consumes this
-    * directly, skipping the separate df-lookup Spark job it used to
-    * run for the corrected terms.
-    */
-  def correctAllDf(field: String, toks: Seq[String]): Map[String, Option[(String, Long)]] = {
-    if (toks.isEmpty) return Map.empty
-    localDict match {
-      case Some(d) =>
-        // the variant prefilter is COMPLETE for d <= MaxDistance and
-        // pickBestDf discards everything beyond it (SymSpellSpec), so
-        // the verified candidate set is exactly {terms : dist <= 2} —
-        // which the local length-banded scan produces directly
-        return toks.distinct.map { tok =>
-          tok -> graft.analyze.SymSpell.pickBestDf(
-            tok, d.fuzzyAll(field, tok, SymSpell.MaxDistance))
-        }.toMap
-      case None =>
-    }
-    val variantsByTok: Map[String, Set[String]] =
-      toks.distinct.map(t => t -> SymSpell.deletes(t)).toMap
-    val allVariants = variantsByTok.values.flatten.toSeq.distinct
-    val hits = symspellDict
-      .filter(col("field") === field && col("variant").isin(allVariants: _*))
-      .select(col("variant"), col("term"), col("df")).distinct()
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    val byVariant = hits.groupBy(_._1)
-    variantsByTok.map { case (tok, vars) =>
-      val cands = vars.iterator
-        .flatMap(v => byVariant.getOrElse(v, Array.empty[(String, String, Long)]))
-        .map(h => (h._2, h._3)).toSeq.distinct
-      tok -> SymSpell.pickBestDf(tok, cands)
-    }
-  }
-
-  /** Single-token convenience over correctAll. */
-  def correct(field: String, tok: String): String = correctAll(field, Seq(tok))(tok)
-
-  /** Top tf-idf terms of a seed document (more-like-this). */
-  def seedTerms(field: String, docId: Long, topTerms: Int): Seq[String] = {
+  /** The seed document's (term -> tf) in `field` for more-like-this,
+    * read through lookupDocs' fetch (one job over the docs partition
+    * whose window holds it); empty when no doc has the id. */
+  private def seedCounts(field: String, docId: Long): Map[String, Int] = {
     // fail with a clear contract error rather than a ClassCastException
     // out of getString below when the seed field is a non-text column
-    // (a non-INDEXED text field degrades gracefully to zero terms via
-    // dfLookup; only the type case needs the explicit gate)
+    // (a non-INDEXED text field degrades gracefully to zero terms)
     val dt = index.docs.schema(field).dataType
     // isInstanceOf, not singleton ==: collated StringType still getStrings fine
     require(dt.isInstanceOf[org.apache.spark.sql.types.StringType],
       s"more_like_this: field '$field' is ${dt.simpleString}, not a text column")
-    val rows = index.docs.filter(col("docId") === docId).select(col(field)).collect()
-    if (rows.isEmpty) return Nil
-    val (counts, _) = graft.analyze.Tokenizers.tokenCounts(
-      index.config.tokenizerOf(field), Option(rows(0).getString(0)).getOrElse(""))
-    val dfs = dfLookup(counts.keys.map(t => (field, t)).toSeq)
-    counts.toSeq
-      .flatMap { case (t, tf) =>
-        dfs.get((field, t)).map(df => (tf.toDouble * Bm25.idfF64(df, index.numDocs), t))
-      }
-      .sortBy { case (tfidf, t) => (-tfidf, t) }
-      .take(topTerms)
-      .map(_._2)
+    fetchRows(Seq(docId), Seq(field)).headOption.fold(Map.empty[String, Int]) { r =>
+      graft.analyze.Tokenizers.tokenCounts(index.config.tokenizerOf(field),
+        Option(r.getString(1)).getOrElse(""))._1.toMap
+    }
   }
 
-  /** Compiled-query LRU: dictionary expansions (prefix/fuzzy/regex,
-    * SymSpell correction) run Spark jobs, so repeated queries must not
-    * re-pay them — the engine-side analogue of the reference caching
-    * compiled query parts across requests (apis/mod.rs:68-69). Keyed on
+  /** Top tf-idf terms of a seed document (more-like-this), from its
+    * term counts and the dictionary's dfs. */
+  private def seedTerms(counts: Map[String, Int], field: String, topTerms: Int,
+      dfs: Map[(String, String), Long]): Seq[(String, Long)] =
+    counts.toSeq
+      .flatMap { case (t, tf) =>
+        dfs.get((field, t)).map(df => (tf.toDouble * Bm25.idfF64(df, index.numDocs), t, df))
+      }
+      .sortBy { case (tfidf, t, _) => (-tfidf, t) }
+      .take(topTerms)
+      .map(s => (s._2, s._3))
+
+  /** Compiled-query LRU: dictionary lookups can run Spark jobs (the
+    * snapshot probe, the pieces above its cap, a more-like-this seed
+    * fetch), so repeated queries must not re-pay them — the engine-side
+    * analogue of the reference caching compiled query parts across
+    * requests (apis/mod.rs:68-69). Keyed on
     * the clause list (params are already bound into it); the cache dies
     * with the engine, which mutations invalidate.
     */
@@ -457,49 +219,24 @@ final class QueryEngine(val index: BuiltIndex) {
     * planning; kept (always 0) for callers that report the ratio. */
   @volatile var planCacheHits: Long = 0L
 
-  def compile(clauses: Seq[SearchClause]): CompiledQuery = {
-    compileCache.synchronized {
-      val hit = compileCache.get(clauses)
-      if (hit != null) { compileCacheHits += 1; return hit }
-    }
-    // compile OUTSIDE the lock: dictionary expansion runs Spark jobs,
-    // and holding the LRU lock across them would serialize concurrent
-    // callers behind cluster work
-    val cq = compileUncached(clauses, LookupCtx.empty)
-    compileCache.synchronized { compileCache.put(clauses, cq) }
-    cq
-  }
+  def compile(clauses: Seq[SearchClause]): CompiledQuery = compileMany(Seq(clauses)).head
 
-  /** Pre-fetched dictionary lookups shared by a compile BATCH. `None`
-    * per kind = fall back to the per-query lookup job (the single-query
-    * compile path passes all-None). Keys: dfs (field, term) -> df;
-    * prefix (field, prefix-sans-*) -> capped expansion; fuzzy
-    * (field, maxDist, token) -> capped expansion; corrections
-    * (field, token) -> fast-fuzzy corrected term.
-    */
-  private final case class LookupCtx(
-      dfs: Option[Map[(String, String), Long]],
-      prefix: Option[Map[(String, String), Seq[(String, Long)]]],
-      fuzzy: Option[Map[(String, Int, String), Seq[(String, Long, Int)]]],
-      corrections: Option[Map[(String, String), String]])
-  private object LookupCtx { val empty = LookupCtx(None, None, None, None) }
-
-  /** Compile a BATCH of queries with the dictionary jobs coalesced: one
-    * df-lookup job, one prefix-expansion job per field, one fuzzy
-    * expansion per (field, maxDist), one SymSpell correction batch per
-    * field — independent of batch width. Per-query, a batch compile
-    * produces the identical CompiledQuery as compile() (same helpers,
-    * same caps, same order; BatchSearchSpec gates it), and results land
-    * in the same LRU. Regex / more-like-this clauses keep their
-    * per-query jobs — they are not the high-QPS shape.
+  /** Compile a BATCH of queries. Every query missing from the LRU
+    * contributes its lookups to ONE DictAsk (`lookup`: no job on the
+    * driver snapshot, one job above its cap, independent of batch
+    * width), and each compiles from the merged answer, so a batch
+    * compile produces the identical CompiledQuery as a single one
+    * (BatchSearchSpec gates it); results land in the same LRU. The
+    * lookups run OUTSIDE the LRU lock, so concurrent callers never wait
+    * behind cluster work.
     */
   def compileMany(batch: Seq[Seq[SearchClause]]): Seq[CompiledQuery] = {
     import scala.collection.mutable
     // assemble results OUT OF BAND of the LRU: a batch wider than the
     // cache capacity evicts its own fresh entries, and a final
     // lookup-through-compile() would silently RE-compile the evicted
-    // majority via per-query dictionary jobs (measured: ~384 stray
-    // compile jobs inside one 512-wide timed batch)
+    // majority (measured: ~384 stray compile jobs inside one 512-wide
+    // timed batch)
     val compiled = mutable.HashMap.empty[Seq[SearchClause], CompiledQuery]
     compileCache.synchronized {
       batch.distinct.foreach { q =>
@@ -508,46 +245,33 @@ final class QueryEngine(val index: BuiltIndex) {
       }
     }
     val misses = batch.distinct.filterNot(compiled.contains)
+    misses.foreach(q => require(q.size <= 32, "at most 32 clause groups"))
     if (misses.nonEmpty) {
-      val exactNeeds = mutable.LinkedHashSet.empty[(String, String)]
-      val prefixNeeds = mutable.LinkedHashMap.empty[String, mutable.LinkedHashSet[String]]
-      val fuzzyNeeds = mutable.LinkedHashMap.empty[(String, Int), mutable.LinkedHashSet[String]]
-      val ffNeeds = mutable.LinkedHashMap.empty[String, mutable.LinkedHashSet[String]]
+      val exact = mutable.LinkedHashSet.empty[(String, String)]
+      val prefix = mutable.LinkedHashSet.empty[(String, String)]
+      val fuzzy = mutable.LinkedHashSet.empty[(String, Int, String)]
+      val correct = mutable.LinkedHashSet.empty[(String, String)]
+      val regex = mutable.LinkedHashSet.empty[(String, String)]
+      val seeds = mutable.HashMap.empty[(String, Long), Map[String, Int]]
       misses.flatten.foreach {
         case Fts(field, query, _) =>
           val (prefixToks, exactToks) = ftsTokenParts(field, query)
-          exactToks.foreach(t => exactNeeds += ((field, t)))
-          prefixToks.foreach(p =>
-            prefixNeeds.getOrElseUpdate(field, mutable.LinkedHashSet.empty) += p.dropRight(1))
+          exactToks.foreach(t => exact += ((field, t)))
+          prefixToks.foreach(p => prefix += ((field, p.dropRight(1))))
         case FuzzyC(field, query, maxDist, _, _) =>
-          tokenizeQuery(field, query).foreach(t =>
-            fuzzyNeeds.getOrElseUpdate((field, maxDist), mutable.LinkedHashSet.empty) += t)
+          tokenizeQuery(field, query).foreach(t => fuzzy += ((field, maxDist, t)))
         case LevC(field, query, maxDist, _) =>
-          tokenizeQuery(field, query).foreach(t =>
-            fuzzyNeeds.getOrElseUpdate((field, maxDist), mutable.LinkedHashSet.empty) += t)
+          tokenizeQuery(field, query).foreach(t => fuzzy += ((field, maxDist, t)))
+        case RegexC(field, pattern, _) => regex += ((field, pattern))
         case FastFuzzy(field, query, _) =>
-          tokenizeQuery(field, query).foreach(t =>
-            ffNeeds.getOrElseUpdate(field, mutable.LinkedHashSet.empty) += t)
-        case _ => // RegexC / MoreLikeThis: per-query fallback inside compileUncached
+          tokenizeQuery(field, query).foreach(t => correct += ((field, t)))
+        case MoreLikeThis(field, docId, _, _) =>
+          val counts = seeds.getOrElseUpdate((field, docId), seedCounts(field, docId))
+          counts.keys.foreach(t => exact += ((field, t)))
       }
-      val corrections: Map[(String, String), String] =
-        ffNeeds.iterator.flatMap { case (f, toks) =>
-          correctAll(f, toks.toSeq).iterator.map { case (t, c) => (f, t) -> c }
-        }.toMap
-      // corrected terms need df entries too (FastFuzzy scores them as exact terms)
-      corrections.foreach { case ((f, _), c) => exactNeeds += ((f, c)) }
-      val dfs = dfLookup(exactNeeds.toSeq)
-      val prefix: Map[(String, String), Seq[(String, Long)]] =
-        prefixNeeds.iterator.flatMap { case (f, ps) =>
-          prefixExpandAll(f, ps.toSeq).iterator.map { case (p, ex) => (f, p) -> ex }
-        }.toMap
-      val fuzzy: Map[(String, Int, String), Seq[(String, Long, Int)]] =
-        fuzzyNeeds.iterator.flatMap { case ((f, d), toks) =>
-          fuzzyExpandAll(f, toks.toSeq, d).iterator.map { case (tok, ex) => (f, d, tok) -> ex }
-        }.toMap
-      val ctx = LookupCtx(Some(dfs), Some(prefix), Some(fuzzy), Some(corrections))
+      val answer = lookup(DictAsk(exact.toSeq, prefix.toSeq, fuzzy.toSeq, correct.toSeq, regex.toSeq))
       misses.foreach { q =>
-        val cq = compileUncached(q, ctx)
+        val cq = compileUncached(q, answer, seeds)
         compiled(q) = cq
         compileCache.synchronized { compileCache.put(q, cq) }
       }
@@ -566,9 +290,10 @@ final class QueryEngine(val index: BuiltIndex) {
     else toks.partition(_.endsWith("*"))
   }
 
-  /** Compile clauses to weighted terms. Group ids = clause positions. */
-  private def compileUncached(clauses: Seq[SearchClause], ctx: LookupCtx): CompiledQuery = {
-    require(clauses.size <= 32, "at most 32 clause groups")
+  /** Compile clauses to weighted terms from the dictionary's answers and
+    * the more-like-this seeds' term counts. Group ids = clause positions. */
+  private def compileUncached(clauses: Seq[SearchClause], ans: DictAnswer,
+      seeds: collection.Map[(String, Long), Map[String, Int]]): CompiledQuery = {
     val n = index.numDocs
     val groups = clauses.zipWithIndex.map { case (c, i) =>
       CompiledGroup(i, c.required, c match {
@@ -576,67 +301,36 @@ final class QueryEngine(val index: BuiltIndex) {
         case _ => false
       })
     }
+    def fuzzyOf(field: String, maxDist: Int, tok: String) =
+      ans.fuzzy.getOrElse((field, maxDist, tok), Nil)
     val terms = clauses.zipWithIndex.flatMap { case (c, g) =>
       c match {
         case Fts(field, query, _) =>
           val (prefixToks, exactToks) = ftsTokenParts(field, query)
-          val exact = ctx.dfs match {
-            case Some(m) =>
-              exactToks.distinct.flatMap(t => m.get((field, t)).map(df => (field, t, df, 1.0)))
-            case None =>
-              // query-token order, as the batch path above (not the
-              // lookup's row order, which follows the dictionary layout)
-              val dfs = dfLookup(exactToks.map(t => (field, t)).distinct)
-              exactToks.distinct.flatMap(t => dfs.get((field, t)).map(df => (field, t, df, 1.0)))
-          }
-          val expanded = ctx.prefix match {
-            case Some(m) =>
-              prefixToks.map(p => p.dropRight(1) -> m.getOrElse((field, p.dropRight(1)), Nil)).toMap
-            case None => prefixExpandAll(field, prefixToks.map(_.dropRight(1)))
-          }
-          val pre = prefixToks.flatMap(p => expanded.getOrElse(p.dropRight(1), Nil))
-            .map { case (t, df) => (field, t, df, 1.0) }
-          (exact ++ pre).map { case (f, t, df, m) => mkTerm(f, t, df, m, g, n) }
+          // query-token order, not the dictionary's
+          val exact = exactToks.distinct.flatMap(t => ans.dfs.get((field, t)).map(df => (t, df)))
+          val pre = prefixToks.flatMap(p => ans.prefix.getOrElse((field, p.dropRight(1)), Nil))
+          (exact ++ pre).map { case (t, df) => mkTerm(field, t, df, 1.0, g, n) }
         case FuzzyC(field, query, maxDist, mult, _) =>
-          val toks = tokenizeQuery(field, query)
-          val exp = fuzzyLookups(field, toks, maxDist, ctx)
-          toks.flatMap { tok =>
-            exp.getOrElse(tok, Nil).map { case (t, df, d) =>
+          tokenizeQuery(field, query).flatMap { tok =>
+            fuzzyOf(field, maxDist, tok).map { case (t, df, d) =>
               mkTerm(field, t, df, mult(math.min(d, mult.size - 1)), g, n)
             }
           }
         case LevC(field, query, maxDist, _) =>
-          val toks = tokenizeQuery(field, query)
-          val exp = fuzzyLookups(field, toks, maxDist, ctx)
-          toks.flatMap { tok =>
-            exp.getOrElse(tok, Nil).map { case (t, df, _) => mkTerm(field, t, df, 1.0, g, n) }
+          tokenizeQuery(field, query).flatMap { tok =>
+            fuzzyOf(field, maxDist, tok).map { case (t, df, _) => mkTerm(field, t, df, 1.0, g, n) }
           }
         case RegexC(field, pattern, _) =>
-          regexExpand(field, pattern).map { case (t, df) => mkTerm(field, t, df, 1.0, g, n) }
+          ans.regex.getOrElse((field, pattern), Nil).map { case (t, df) => mkTerm(field, t, df, 1.0, g, n) }
         case FastFuzzy(field, query, _) =>
-          val raw = tokenizeQuery(field, query)
-          ctx.corrections match {
-            case Some(m) =>
-              // batch path: corrections pre-fetched; corrected terms'
-              // dfs ride the batch's ONE coalesced df-lookup job
-              val toks = raw.map(t => m.getOrElse((field, t), t)).distinct
-              val dfs = ctx.dfs.getOrElse(Map.empty)
-              toks.flatMap(t => dfs.get((field, t)).map(df => mkTerm(field, t, df, 1.0, g, n)))
-            case None =>
-              // single-query path: the correction candidates already
-              // carry each term's df — one dictionary job total (a
-              // second dfLookup job per query was pure overhead). A
-              // None result means the token is not a dictionary term
-              // (its own 0-delete variant would have matched), i.e.
-              // exactly the tokens the old df lookup found nothing for.
-              val byTok = correctAllDf(field, raw)
-              raw.flatMap(t => byTok.getOrElse(t, None)).distinct
-                .map { case (t, df) => mkTerm(field, t, df, 1.0, g, n) }
-          }
+          // the correction carries the corrected term's df; a token with
+          // none is not a dictionary term (it would correct to itself)
+          tokenizeQuery(field, query).flatMap(t => ans.corrections.getOrElse((field, t), None))
+            .distinct.map { case (t, df) => mkTerm(field, t, df, 1.0, g, n) }
         case MoreLikeThis(field, docId, topTerms, _) =>
-          val toks = seedTerms(field, docId, topTerms)
-          val dfs = dfLookup(toks.map(t => (field, t)))
-          toks.flatMap(t => dfs.get((field, t)).map(df => mkTerm(field, t, df, 1.0, g, n)))
+          seedTerms(seeds((field, docId)), field, topTerms, ans.dfs)
+            .map { case (t, df) => mkTerm(field, t, df, 1.0, g, n) }
       }
     }
     // dedupe (field, term, group); keep first
@@ -647,16 +341,6 @@ final class QueryEngine(val index: BuiltIndex) {
 
   private def mkTerm(f: String, t: String, df: Long, mult: Double, g: Int, n: Long): CompiledTerm =
     CompiledTerm(f, t, g, Bm25.weightF32(df, n) * mult.toFloat, Bm25.weightF64(df, n) * mult, df)
-
-  /** Fuzzy expansions for a clause's tokens: from the batch ctx when
-    * present, else the per-clause batched job.
-    */
-  private def fuzzyLookups(field: String, toks: Seq[String], maxDist: Int,
-      ctx: LookupCtx): Map[String, Seq[(String, Long, Int)]] =
-    ctx.fuzzy match {
-      case Some(m) => toks.map(t => t -> m.getOrElse((field, maxDist, t), Nil)).toMap
-      case None => fuzzyExpandAll(field, toks, maxDist)
-    }
 
   /** Query tokenization: same tokenizer as the indexed column
     * (apis/mod.rs:211-213), except a trailing `*` survives as a prefix
@@ -748,7 +432,7 @@ final class QueryEngine(val index: BuiltIndex) {
     * (#tasks x #queries x k) rows; the driver collects and merges them
     * per qid (batchTopK), so a batch runs as ONE Spark job with no
     * exchange, and the call returns a local frame with its wandStats
-    * filled. compileMany coalesces the dictionary jobs, so total job
+    * filled. compileMany asks the dictionary once per batch, so job
     * count is O(1) in batch width. Block-max pruning applies PER QUERY
     * on top of the shared decode (Wand.topKMany): every query runs the
     * algorithm the single-query path would pick for it, all queries of
@@ -910,6 +594,12 @@ final class QueryEngine(val index: BuiltIndex) {
     }
   }
 
+  /** lookupDocs' rows, on the driver: with the range table, without a
+    * SQL execution. */
+  private def fetchRows(ids: Seq[Long], docCols: Seq[String]): Array[Row] =
+    if (index.docRanges.isEmpty) lookupDocs(ids, docCols).collect()
+    else fetchRanged(ids, docCols)._2
+
   /** lookupDocs' range-pruned fetch, as the projection's schema and the
     * matched rows. */
   private def fetchRanged(ids: Seq[Long], docCols: Seq[String]): (StructType, Array[Row]) = {
@@ -1064,21 +754,6 @@ private[query] object DocFetch {
   }
 }
 
-/** Builds the SymSpell delete-variant dictionary from a term-stats
-  * frame (field, term, df) — shared by the lazy query-time path and
-  * the index-time fast-fuzzy persist (IndexStore.writeSegment).
-  */
-object SymSpellDict {
-  def build(termStats: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val spark = termStats.sparkSession
-    import spark.implicits._
-    termStats
-      .as[(String, String, Long)]
-      .flatMap { case (f, t, df) => SymSpell.deletes(t).iterator.map(v => (f, v, t, df)) }
-      .toDF("field", "variant", "term", "df")
-  }
-}
-
 /** Extracts the literal prefix a regex REQUIRES of every match when the
   * pattern is anchored at the start (the engine always matches whole
   * terms: `^(?:pattern)$`). Conservative: returns "" whenever the
@@ -1180,16 +855,15 @@ object SearchDefaults {
   /** Term-count cap for the driver-side dictionary snapshot
     * (LocalTermDict). Dictionaries at or under this size serve every
     * compile-time lookup in memory (the tantivy-FST analogue); larger
-    * ones keep the distributed capped-in-plan lookup jobs. 256k terms
-    * is tens of MB of driver heap — comfortably inside any driver
-    * budget and far below the scale where a dictionary stops fitting.
-    * Override with spark conf graft.dict.localMaxTerms (0 disables). */
+    * ones are asked as per-partition pieces in one job. 256k terms is
+    * tens of MB of driver heap — comfortably inside any driver budget
+    * and far below the scale where a dictionary stops fitting. */
   final val LocalDictMaxTerms = 262144
   /** Partial-df rows per term of that cap the snapshot job may bring
     * to the driver (`BuiltIndex.termDfRows`): a term held by several
-    * partitions sends one row from each. Past it the dictionary takes
-    * the distributed path without the job, so at most 4 x 256k rows
-    * (tens of MB) ever reach the driver, whatever the partition count. */
+    * partitions sends one row from each. Past it the dictionary is
+    * asked as pieces without the job, so at most 4 x 256k rows (tens of
+    * MB) ever reach the driver, whatever the partition count. */
   final val LocalDictPartialRowsPerTerm = 4
   /** Largest scored-side cap the engine FORCE-broadcasts in the
     * docId->stored-fields join. A capped scored side is slim

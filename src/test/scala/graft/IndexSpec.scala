@@ -1,9 +1,10 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 import graft.analyze.Analyzer
-import graft.index.{IndexBuilder, IndexConfig}
+import graft.index.{IndexBuilder, IndexConfig, TermDf}
 
 class IndexSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -31,7 +32,9 @@ class IndexSpec extends AnyFunSuite {
     val expected = documents.select(col("doc_id"), explode(Analyzer.tokensCol(col("text"))).as("term"))
       .distinct().groupBy("term").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val got = index.termStats.collect().map(r => r.getString(1) -> r.getLong(2)).toMap
+    val got = spark.createDataset(index.termDfs)(Encoders.product[TermDf])
+      .groupBy("field", "term").agg(sum("df"))
+      .collect().map(r => r.getString(1) -> r.getLong(2)).toMap
     assert(got === expected)
   }
 

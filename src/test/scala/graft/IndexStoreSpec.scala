@@ -165,33 +165,48 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(pendingDeletes(dir) === 0L)
   }
 
-  test("fast-fuzzy mode persists the SymSpell dictionary at index time (README.md:28)") {
+  test("a store written in fast-fuzzy mode loads and corrects like a fresh build; nothing writes symspell.parquet") {
     val dir = tmpDir()
     val corpus = CodeCorpus.generate(spark, 400, 4).cache()
-    val ffConfig = config.copy(fastFuzzy = true)
-    IndexStore.create(corpus, ffConfig, dir, "snap-0")
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(dir, "seg-00000", "symspell.parquet")))
-    val loaded = IndexStore.load(spark, dir)
-    assert(loaded.symspell.nonEmpty)
-    val eFast = new QueryEngine(loaded)
-    // the persisted dictionary must give the identical correction +
-    // results as the lazily-built one
-    val eLazy = new QueryEngine(IndexBuilder.build(corpus, config))
-    assert(eFast.correct("content", "serach") === eLazy.correct("content", "serach"))
-    assert(topDocs(eFast, "serach") === topDocs(eLazy, "serach"))
-    // compaction preserves the artifact
+    IndexStore.create(corpus, config, dir, "snap-0").unpersist()
+    // what such a store holds: the config flag, and its segment's
+    // delete-variant dictionary (field, variant, term, df)
+    editManifest(dir)(_.get("config").asInstanceOf[ObjectNode].put("fastFuzzy", true))
+    locally {
+      import spark.implicits._
+      spark.read.parquet(s"$dir/seg-00000/termstats.parquet").as[(String, String, Long)]
+        .flatMap { case (f, t, df) => graft.analyze.SymSpell.deletes(t).iterator.map(v => (f, v, t, df)) }
+        .toDF("field", "variant", "term", "df").write.parquet(s"$dir/seg-00000/symspell.parquet")
+    }
+    assert(json.readTree(java.nio.file.Files.readAllBytes(manifestPath(dir, IndexStore.currentVersion(dir))))
+      .get("config").get("fastFuzzy").asBoolean())
+    def fastTop(e: QueryEngine): Seq[(Long, Float)] =
+      e.searchF32(Seq(FastFuzzy("content", "serach mrege")), 10).collect()
+        .map(r => (r.getLong(0), r.getFloat(1))).toSeq
+    val old = new QueryEngine(IndexStore.load(spark, dir))
+    val fresh = new QueryEngine(IndexBuilder.build(corpus, config))
+    try {
+      for (tok <- Seq("serach", "mrege", "qqqqqq"))
+        assert(old.correct("content", tok) === fresh.correct("content", tok), tok)
+      assert(fastTop(old).nonEmpty && fastTop(old) === fastTop(fresh))
+    } finally { old.release(); fresh.release() }
+    // an append, a compaction and a gc write no delete-variant dictionary
     val modified = corpus.limit(20)
       .withColumn("content", concat(col("content"), lit(" extraterm")))
     IndexStore.appendEpoch(modified, dir, "snap-1")
     IndexStore.compact(spark, dir)
-    val after = IndexStore.load(spark, dir)
-    assert(after.symspell.nonEmpty)
-    // 'serach' is itself a planted dictionary term (distance 0): the
-    // persisted dictionary must keep resolving it and serving fast-fuzzy
-    assert(new QueryEngine(after).correct("content", "serach") === "serach")
-    assert(new QueryEngine(after)
-      .searchF32(Seq(FastFuzzy("content", "serach")), 10).count() > 0)
+    IndexStore.gc(spark, dir)
+    val segs = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("seg-")).toSet
+    val written = segs - "seg-00000"
+    assert(written.nonEmpty)
+    written.foreach(seg => assert(!new java.io.File(s"$dir/$seg/symspell.parquet").exists(), seg))
+    // 'serach' is itself a planted dictionary term (distance 0)
+    val after = new QueryEngine(IndexStore.load(spark, dir))
+    try {
+      assert(after.correct("content", "serach") === "serach")
+      assert(fastTop(after).nonEmpty)
+    } finally after.release()
+    corpus.unpersist()
   }
 
   test("drop deletes the index directory (bucket delete analogue)") {

@@ -43,69 +43,6 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("wide-distance fuzzy candidates plan as a hash join, not a nested-loop dictionary scan") {
-    val e = SparkEntry.docEngine(spark, TestSpark.sf0001)
-    // maxDist = 3 takes the length-banded fallback; the exploded
-    // (tok, len) frame must key an equi (hash) join on length(term)
-    val cand = e.fuzzyCandidates("text", Seq("serach", "mrege"), 3)
-    val plan = cand.queryExecution.executedPlan.toString
-    assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(2000))
-    assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
-    // and the wide-distance path returns the distance-banded matches
-    val rows = cand.collect().map(r => (r.getString(0), r.getString(1)))
-    assert(rows.nonEmpty)
-    // every candidate obeys the length band
-    rows.foreach { case (tok, term) =>
-      assert(math.abs(term.length - tok.length) <= 3, s"$term vs $tok")
-    }
-    // end-to-end: a distance-3 typo reaches its dictionary term
-    assert(e.searchF32(Seq(FuzzyC("text", "mergeabc", maxDist = 3)), 10).count() > 0)
-  }
-
-  test("multi-prefix expansion is ONE scan with StartsWith predicates: no join anywhere") {
-    val e = SparkEntry.storeEngine(spark, TestSpark.sf0001)
-    val cand = e.prefixCandidates("text", Seq("sor", "mer"))
-    val plan = cand.queryExecution.executedPlan.toString
-    assert(!plan.contains("Join"), s"multi-prefix expansion must not join at all:\n${plan.take(2000)}")
-    // both literal prefixes reach the dictionary SCAN as predicates (the
-    // cached dictionary shows them on InMemoryTableScan, where StartsWith
-    // prunes cached batches by min/max stats; on a raw parquet relation
-    // the same predicates push as StringStartsWith — asserted below)
-    assert(plan.contains("StartsWith(term") && plan.contains(", sor)") && plan.contains(", mer)"),
-      plan.take(2000))
-    // and the per-prefix expansions match the single-prefix branch exactly
-    val multi = cand.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
-    val singles = Seq("sor", "mer").flatMap(p =>
-      e.prefixCandidates("text", Seq(p)).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))).toSet
-    assert(multi == singles)
-  }
-
-  test("OR of literal prefixes pushes to a persisted termstats parquet as StringStartsWith") {
-    // the uncached-dictionary path (a 10^12-doc dictionary won't pin
-    // memory): the exact filter shape prefixCandidates builds must push
-    // through to the parquet row groups of the store's term dictionary
-    val docs = spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
-    val tmp = java.nio.file.Files.createTempDirectory("plantest").toString
-    graft.index.IndexStore.create(docs,
-      graft.index.IndexConfig(Seq("doc_id"), Seq("text"), 1024, 4), tmp).unpersist()
-    val ts = spark.read.parquet(s"$tmp/seg-00000/termstats.parquet")
-      .filter(col("field") === "text" &&
-        (col("term").startsWith("sor") || col("term").startsWith("mer")))
-    val plan = ts.queryExecution.executedPlan.toString
-    assert(plan.contains("StringStartsWith(term,sor)") && plan.contains("StringStartsWith(term,mer)"),
-      plan.take(2000))
-  }
-
-  test("regex with a required literal prefix prunes the dictionary scan via a StartsWith predicate") {
-    val e = SparkEntry.storeEngine(spark, TestSpark.sf0001)
-    val plan = e.regexCandidates("text", "sor.+").queryExecution.executedPlan.toString
-    assert(plan.contains("StartsWith(term") && plan.contains(", sor)"), plan.take(2000))
-    // an alternation has no required prefix: the scan must NOT be pruned
-    val free = e.regexCandidates("text", "b.tch|sc.n").queryExecution.executedPlan.toString
-    assert(!free.contains("StartsWith(term"), free.take(2000))
-  }
-
   test("RegexPrefix.literalPrefix: required-prefix extraction is conservative and exact") {
     import graft.query.RegexPrefix.literalPrefix
     assert(literalPrefix("sor.+") == "sor")

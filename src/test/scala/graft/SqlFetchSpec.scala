@@ -113,7 +113,7 @@ class SqlFetchSpec extends AnyFunSuite {
     val victim = t.engine.get.searchF32(Seq(Fts("title", "alpha")), 5).collect()(2).getLong(0)
     // the same index with one doc's stored fields gone (the ranges still hold)
     val holed = new BuiltIndex(idx.docs.filter(col("docId") =!= victim), idx.shards,
-      idx.termDfRows, idx.numDocs, idx.fieldTokens, idx.config, idx.symspell, idx.docRanges)
+      idx.termDfRows, idx.numDocs, idx.fieldTokens, idx.config, idx.docRanges)
     t.engine = Some(new QueryEngine(holed))
     val e = intercept[IllegalStateException](
       sess.execute("SELECT id FROM docs WHERE fts(title, 'alpha') LIMIT 5").collect())
@@ -270,7 +270,7 @@ class SqlFetchSpec extends AnyFunSuite {
     val cfg = IndexConfig(Seq("repo", "path", "commit"), Seq("content"), shardDocs = 128, buildPartitions = 6)
     val idx = IndexBuilder.build(CodeCorpus.generate(spark, 600, 3), cfg, docIdBase = 100L)
     val noRanges = new BuiltIndex(idx.docs, idx.shards, idx.termDfRows, idx.numDocs,
-      idx.fieldTokens, idx.config, idx.symspell, docRanges = None)
+      idx.fieldTokens, idx.config, docRanges = None)
     // ids from several partitions, a duplicate, and ids outside every range
     val ids = Seq(100L, 101L, 250L, 250L, 420L, 699L, 99L, 700L, 5000L)
     def rows(e: QueryEngine) = e.lookupDocs(ids, Seq("path", "repo")).collect()

@@ -18,7 +18,7 @@ import graft.corpus.CodeCorpus
   *  - postings: every file sorted by (field, term, shard), the rows
   *    those of the build, as a multiset;
   *  - termstats: every file sorted by (field, term), df summed per
-  *    (field, term) over the files equal to the build's termStats.
+  *    (field, term) over the files equal to the build's summed term dfs.
   */
 class SegmentLayoutSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -86,7 +86,9 @@ class SegmentLayoutSpec extends AnyFunSuite {
       case _ =>
     })
     val summed = stats.flatten.groupMapReduce(t => (t._1, t._2))(_._3)(_ + _)
-    val built = idx.termStats.collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    val built = idx.spark.createDataset(idx.termDfs)(Encoders.product[TermDf])
+      .groupBy("field", "term").agg(sum("df"))
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(summed === built, what)
   }
 

@@ -96,8 +96,7 @@ class StoreJobsSpec extends AnyFunSuite {
 
   test("the known read schemas are the ones parquet inference reports") {
     val dir = tmpDir()
-    val ff = config.copy(fastFuzzy = true)
-    IndexStore.create(CodeCorpus.generate(spark, 100, 2), ff, dir, "snap-0").unpersist()
+    IndexStore.create(CodeCorpus.generate(spark, 100, 2), config, dir, "snap-0").unpersist()
     IndexStore.appendEpoch(upsert(1), dir, "snap-1")
     val m = IndexStore.readManifestFile(dir, IndexStore.currentVersion(dir))
     val docSchema = org.apache.spark.sql.types.DataType.fromJson(m.docSchema)
@@ -106,7 +105,6 @@ class StoreJobsSpec extends AnyFunSuite {
       "seg-00000/postings.parquet" -> IndexStore.PostingsSchema,
       "seg-00000/docs.parquet" -> docSchema,
       "seg-00000/termstats.parquet" -> IndexStore.TermStatsSchema,
-      "seg-00000/symspell.parquet" -> IndexStore.SymSpellSchema,
       "_deletes/epoch=1" -> IndexStore.TombstoneSchema)
     files.foreach { case (f, known) =>
       val inferred = spark.read.parquet(s"$dir/$f").schema
