@@ -138,6 +138,11 @@ class LocalDictSpec extends AnyFunSuite {
         assert(n.jobs === 1 && n.sqlExecutions === 0 && n.shuffleMapStages === 0, s"$q: $n")
         assert(cq === engineLocal.compile(q), q)
       }
+      // more-like-this reads its seed doc first: that fetch, then the pieces
+      val mlt = Seq(MoreLikeThis("content", 0L, topTerms = 4))
+      val (cq, n) = SparkEvents.of(spark)(e.compile(mlt))
+      assert(n.jobs === 2 && n.sqlExecutions === 0 && n.shuffleMapStages === 0, n)
+      assert(cq.terms.nonEmpty && cq === engineLocal.compile(mlt))
     } finally e.release()
   }
 
