@@ -83,14 +83,16 @@ class LocalDictSpec extends AnyFunSuite {
   }
 
   test("a distance-3 typo reaches its dictionary term on both paths") {
-    // the docs index is shared with other specs: the pieces engine
-    // beside it is not released (that would drop the shared tables)
-    val local = SparkEntry.docEngine(spark, TestSpark.sf0001)
-    val pieces = new QueryEngine(local.index, 0)
-    val q = Seq(FuzzyC("text", "mergeabc", maxDist = 3))
-    assert(local.compile(q).terms.map(_.term).contains("merge"))
-    assert(pieces.compile(q).terms === local.compile(q).terms)
-    assert(pieces.searchF32(q, 10).count() > 0)
+    val idx = IndexBuilder.build(spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet"),
+      IndexConfig(Seq("doc_id"), Seq("text"), shardDocs = 1024, buildPartitions = 4))
+    val local = new QueryEngine(idx)
+    val pieces = new QueryEngine(idx, 0)
+    try {
+      val q = Seq(FuzzyC("text", "mergeabc", maxDist = 3))
+      assert(local.compile(q).terms.map(_.term).contains("merge"))
+      assert(pieces.compile(q).terms === local.compile(q).terms)
+      assert(pieces.searchF32(q, 10).count() > 0)
+    } finally pieces.release()
   }
 
   test("regex expansion: local == distributed, with and without literal prefix") {
